@@ -1,29 +1,43 @@
 """Radius (range) join: pairs of (grid cell, source) within R metres.
 
 The reference materializes the dense |G|x|S| haversine matrix on the driver
-(/root/reference/scripts/functions.py:229-237, 255-258). The naive Spark
-translation is ``crossJoin + filter(haversine <= R)`` which Catalyst executes
-as BroadcastNestedLoopJoin — fine when one side is tiny, catastrophic at
-scale.
+(its ``scripts/functions.py:229-237, 255-258``). This module has two
+strategies for the same pairs:
 
-``radius_join`` instead bins both sides into square cells of side ~R (in
-degrees), explodes the *smaller* side to its 3x3 neighbor bins, equi-joins on
-(bin_lat, bin_lon) — a shuffled hash / sort-merge join Catalyst and AQE can
-plan, skew-split, and parallelize — then applies the exact haversine
-predicate. Semantics are identical to cross+filter (equivalence-tested in
-tests/test_domain.py); the equi-join prunes the candidate space from
-|G|x|S| to ~9x the co-binned pairs.
+- ``naive_radius_join``: ``crossJoin + filter(haversine <= R)`` with the
+  sources broadcast, which Catalyst runs as a BroadcastNestedLoopJoin. Best
+  when the region is not much larger than R, so nothing can be pruned.
+- ``radius_join``: bin both sides into cells of one maximal pair offset per
+  axis, explode the sources to their 3x3 neighbor bins, equi-join on
+  (bin_lat, bin_lon) — a hash / sort-merge join Catalyst and AQE can plan,
+  skew-split and parallelize — then apply the exact haversine predicate.
 
-At 100 TB: both sides shuffle-partition on the bin key; hot bins (airports)
-are handled by AQE skew-join splitting (enabled in session.py).
+``adaptive_radius_join`` picks one from the region geometry. Both return
+exactly the cross+filter pairs (tests/test_domain.py), provided the
+longitude bins are sized at the most poleward latitude a matched pair can
+reach; pairs across the antimeridian are not handled.
 """
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..constants import DEG2RAD, EARTH_RAD, RAD2DEG
-from ..functions.geo import deg2rad, haversine_m, haversine_m_pre  # noqa: F401 (haversine_m: public API kept for callers)
+from ..functions.geo import deg2rad, haversine_m_pre
+
+# Relative widening of the bin sizes: the bounds are exact in real
+# arithmetic; the slack keeps float rounding from pushing a boundary pair two
+# bins apart. A wider bin only admits candidates, never drops a pair.
+_BIN_SLACK = 1e-9
+
+
+def _lon_bin_deg(radius_m: float, pole_lat: float) -> float:
+    # haversine <= R implies cos φ1 cos φ2 sin²(Δλ/2) <= sin²(R/2Re), and
+    # cos φ1 cos φ2 >= cos² pole_lat: the widest Δλ a matched pair can span
+    ratio = math.sin(radius_m / (2 * EARTH_RAD)) / max(math.cos(pole_lat * DEG2RAD), 1e-300)
+    return 2 * math.asin(ratio) * RAD2DEG if ratio < 1 else 360.0
 
 
 def _bin_cols(lat: Column, lon: Column, bin_deg_lat: float, bin_deg_lon: float):
@@ -37,24 +51,21 @@ def radius_join(
     grid: DataFrame,
     sources: DataFrame,
     radius_m: float,
-    center_lat: float,
-    grid_cols: tuple[str, str] = ("g_lat", "g_lon"),
-    src_cols: tuple[str, str] = ("lat", "lon"),
-    dist_col: str = "dist_m",
+    pole_lat: float,
 ) -> DataFrame:
-    """Inner join of grid x sources where haversine(grid, src) <= radius_m.
+    """Inner join of grid (g_lat, g_lon) x sources (lat, lon) where
+    haversine(grid, src) <= radius_m.
 
-    Result = all grid columns + all source columns + ``dist_col``.
-    ``center_lat`` scales the longitude bin width (degrees of longitude
-    shrink by cos(lat)); correct for any region that doesn't straddle a pole.
+    Result = all grid columns + all source columns + ``dist_m``.
+    ``pole_lat`` sizes the longitude bins (degrees of longitude widen
+    toward the poles): it must bound |lat| of every grid cell and source in
+    a matched pair, else pairs near R_MAX east-west can be missed.
     """
-    import math
+    bin_deg_lat = radius_m / EARTH_RAD * RAD2DEG * (1 + _BIN_SLACK)
+    bin_deg_lon = _lon_bin_deg(radius_m, pole_lat) * (1 + _BIN_SLACK)
 
-    bin_deg_lat = radius_m / EARTH_RAD * RAD2DEG
-    bin_deg_lon = radius_m / (EARTH_RAD * math.cos(center_lat * DEG2RAD)) * RAD2DEG
-
-    g_lat, g_lon = (F.col(c) for c in grid_cols)
-    s_lat, s_lon = (F.col(c) for c in src_cols)
+    g_lat, g_lon = F.col("g_lat"), F.col("g_lon")
+    s_lat, s_lon = F.col("lat"), F.col("lon")
 
     gb_lat, gb_lon = _bin_cols(g_lat, g_lon, bin_deg_lat, bin_deg_lon)
     g = grid.withColumn("__bin_lat", gb_lat).withColumn("__bin_lon", gb_lon)
@@ -83,14 +94,12 @@ def radius_join(
     # |dlat_deg| <= R-in-degrees (meridional distance never exceeds the
     # great-circle distance, and the bound is latitude-independent), while
     # bin candidates can be up to ~2R apart — this halves the haversine
-    # evaluations without touching membership. A longitude analogue is NOT
-    # safe to add statically: its bound tightens with cos(lat).
+    # evaluations without touching membership.
     lat_ok = F.abs(g_lat - s_lat) <= F.lit(bin_deg_lat)
-    dist = _pre_dist("__g", "__s")
     return (
         joined.filter(lat_ok)
-        .withColumn(dist_col, dist)
-        .filter(F.col(dist_col) <= F.lit(radius_m))
+        .withColumn("dist_m", _pre_dist("__g", "__s"))
+        .filter(F.col("dist_m") <= F.lit(radius_m))
         .drop("__bin_lat", "__bin_lon", *_TRIG_COLS("__g"), *_TRIG_COLS("__s"))
     )
 
@@ -119,42 +128,23 @@ def _pre_dist(gp: str, sp: str) -> Column:
     )
 
 
-def naive_radius_join(
-    grid: DataFrame,
-    sources: DataFrame,
-    radius_m: float,
-    grid_cols: tuple[str, str] = ("g_lat", "g_lon"),
-    src_cols: tuple[str, str] = ("lat", "lon"),
-    dist_col: str = "dist_m",
-    broadcast_side: str = "sources",
-) -> DataFrame:
+def naive_radius_join(grid: DataFrame, sources: DataFrame, radius_m: float) -> DataFrame:
     """Reference-shaped crossJoin + filter as a broadcast nested loop.
 
-    Optimal when one side is tiny (broadcast it; the big side streams and
-    the cross+filter runs inside whole-stage codegen with zero shuffle).
-    Also the equivalence baseline for :func:`radius_join` tests.
+    The sources are broadcast, so the grid side streams with its scan's
+    parallelism and the cross+filter runs inside whole-stage codegen with
+    zero shuffle. Also the equivalence baseline for :func:`radius_join`.
     """
-    g_lat, g_lon = (F.col(c) for c in grid_cols)
-    s_lat, s_lon = (F.col(c) for c in src_cols)
     # same per-side trig hoist as radius_join: cos φ / radians once per row
     # below the (nested-loop) join instead of once per pair
-    g = _with_trig(grid, g_lat, g_lon, "__g")
-    s = _with_trig(sources, s_lat, s_lon, "__s")
-    dist = _pre_dist("__g", "__s")
-    if broadcast_side == "grid":
-        joined = s.crossJoin(F.broadcast(g))
-    else:
-        joined = g.crossJoin(F.broadcast(s))
+    g = _with_trig(grid, F.col("g_lat"), F.col("g_lon"), "__g")
+    s = _with_trig(sources, F.col("lat"), F.col("lon"), "__s")
     return (
-        joined.withColumn(dist_col, dist)
-        .filter(F.col(dist_col) <= F.lit(radius_m))
+        g.crossJoin(F.broadcast(s))
+        .withColumn("dist_m", _pre_dist("__g", "__s"))
+        .filter(F.col("dist_m") <= F.lit(radius_m))
         .drop(*_TRIG_COLS("__g"), *_TRIG_COLS("__s"))
     )
-
-
-# Below this many cells the grid side is broadcast and the pair generation
-# stays shuffle-free; above it, bin-partitioned equi-join takes over.
-BROADCAST_CELL_LIMIT = 250_000
 
 
 def adaptive_radius_join(
@@ -162,33 +152,29 @@ def adaptive_radius_join(
     sources: DataFrame,
     radius_m: float,
     center_lat: float,
+    *,
+    region_extent_m: float,
     grid_cells: int | None = None,
-    region_extent_m: float | None = None,
-    **kw,
 ) -> DataFrame:
-    """Strategy selection for the radius join.
+    """Radius join of a square grid of side ``region_extent_m`` centered at
+    ``center_lat``, with the strategy picked from that geometry.
 
-    - grid side statically known to be small -> broadcast nested loop
-      (no shuffle at all; the 'small dim' case).
-    - region not much larger than the radius -> bins cannot prune
-      (every bin neighbors every other): the equi-join would only add a 9x
-      explode, so broadcast the smaller side instead.
-    - otherwise -> binned equi-join (the 100 TB path: shuffle both sides
-      once on the bin key, AQE splits hot bins).
+    - region not much larger than the radius -> bins cannot prune (every
+      bin neighbors every other): broadcast nested loop
+      (:func:`naive_radius_join`).
+    - otherwise -> binned equi-join (:func:`radius_join`; the 100 TB path:
+      shuffle both sides once on the bin key, AQE splits hot bins).
+
+    ``grid_cells`` is accepted and ignored; the choice depends only on the
+    extent-to-radius ratio.
     """
     # Crossover measured at sf0.1 (local[32]): with extent/R <= ~6 the 3x3
     # neighbor coverage spans most of the region, so binning prunes < 4x
     # while paying a 9x explode + shuffle — the broadcast nested loop wins.
     # Past that, candidate count falls quadratically with extent/R and the
     # equi-join dominates.
-    dense_region = (
-        region_extent_m is not None and region_extent_m <= 6.0 * radius_m
-    )
-    if dense_region:
-        # bins cannot prune (every bin neighbors every other): broadcast the
-        # sources side — the streamed grid side keeps the scan's parallelism.
-        # (Broadcasting the grid instead is a trap: the tiny deduped sources
-        # exchange AQE-coalesces to ~1 partition and the nested loop runs on
-        # one core.)
-        return naive_radius_join(grid, sources, radius_m, broadcast_side="sources", **kw)
-    return radius_join(grid, sources, radius_m, center_lat, **kw)
+    if region_extent_m <= 6.0 * radius_m:
+        return naive_radius_join(grid, sources, radius_m)
+    # grid cells reach extent/2 from the center, matched sources R further
+    pole_lat = abs(center_lat) + (region_extent_m / 2 + radius_m) / EARTH_RAD * RAD2DEG
+    return radius_join(grid, sources, radius_m, pole_lat)

@@ -11,17 +11,22 @@ both Spark and DuckDB evaluate bitwise-identically (see ``build_states`` /
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..constants import (
+    DEG2RAD,
+    EARTH_RAD,
     FLAGSHIP_N_STEPS,
     FLAGSHIP_STEP_M,
     MAX_DB,
     NANTES_LAT,
     NANTES_LON,
     R_MAX,
+    RAD2DEG,
 )
-from ..functions.geo import haversine_m, haversine_sql, slant_distance_m
+from ..functions.geo import haversine_sql, slant_distance_m
 from ..functions.noise import (
     attenuated_power,
     attenuated_power_sql,
@@ -139,76 +144,100 @@ FROM deduped WHERE rn = 1
 
 
 # ---------------------------------------------------------------------------
+# The noise pipeline: grid -> radius join -> attenuated power sum -> dB.
+# Every noise-grid query is assembled from noise_power/noise_db, and every
+# oracle for one from noise_sql.
+# ---------------------------------------------------------------------------
+
+
+def noise_power(
+    spark: SparkSession,
+    sources: DataFrame,
+    step_m: float,
+    n_steps: int,
+    by: tuple[str, ...] = (),
+) -> DataFrame:
+    """Attenuated power summed per ``(*by, g_lat, g_lon)`` over the
+    (2n+1)^2 grid around Nantes, from ``sources`` (lat, lon, src_db, *by).
+    Power sums are associative: partial sums over any split of the sources
+    merge by another SUM (``incremental_noise_grid``)."""
+    grid = gen_grid(spark, NANTES_LAT, NANTES_LON, step_m, n_steps)
+    pairs = adaptive_radius_join(
+        grid, sources, R_MAX, NANTES_LAT, region_extent_m=2 * n_steps * step_m
+    )
+    power = attenuated_power(F.col("src_db"), F.col("dist_m"))
+    return pairs.groupBy(*by, "g_lat", "g_lon").agg(F.sum(power).alias("sum_power"))
+
+
+def noise_db(power: DataFrame, by: tuple[str, ...] = ()) -> DataFrame:
+    """dB and heat weight of every cell with positive power. Rounding db to
+    2 dp and weight to 6 dp makes the output insensitive to float summation
+    order."""
+    db = db_from_power(F.col("sum_power"))
+    return power.filter(F.col("sum_power") > 0).select(
+        *by, "g_lat", "g_lon", db.alias("db"), F.round(db / F.lit(MAX_DB), 6).alias("weight")
+    )
+
+
+def noise_sql(
+    sources_sql: str, step_m: float, n_steps: int, by: tuple[str, ...] = ()
+) -> str:
+    """DuckDB oracle of ``noise_db(noise_power(...))``; ``sources_sql``
+    selects (lat, lon, src_db, *by). Grid and sources join on a per-source
+    band that holds every pair within R_MAX — |dlat| <= R/Re and
+    sin(|dlon|/2) <= sin(R/2Re) / cos(|lat| + R/Re), each widened by 1e-9
+    degrees — and the exact haversine decides membership."""
+    from .sqlutil import dlit
+
+    keys = "".join(f"{k}, " for k in by)
+    s_keys = "".join(f"s.{k}, " for k in by)
+    pole = f"(abs(lat) * {dlit(DEG2RAD)} + {dlit(R_MAX / EARTH_RAD)})"
+    dlon = (
+        f"CASE WHEN {pole} < {dlit(math.pi / 2)} THEN asin(least({dlit(1.0)}, "
+        f"{dlit(math.sin(R_MAX / (2 * EARTH_RAD)))} / cos({pole}))) * {dlit(2 * RAD2DEG)}"
+        f" + {dlit(1e-9)} ELSE {dlit(360.0)} END"
+    )
+    dlat = dlit(R_MAX / EARTH_RAD * RAD2DEG + 1e-9)
+    dist = haversine_sql("g.g_lat", "g.g_lon", "s.lat", "s.lon")
+    power = attenuated_power_sql("src_db", "dist_m")
+    db = "round(CAST(10.0 AS DOUBLE) * log10(sum_power), 2)"
+    return f"""
+WITH grid AS ({grid_sql(NANTES_LAT, NANTES_LON, step_m, n_steps)}),
+src AS (SELECT *, {dlon} AS dlon FROM ({sources_sql}) t),
+pairs AS (
+  SELECT {s_keys}g.g_lat, g.g_lon, s.src_db, {dist} AS dist_m
+  FROM grid g JOIN src s
+    ON g.g_lat BETWEEN s.lat - {dlat} AND s.lat + {dlat}
+   AND g.g_lon BETWEEN s.lon - s.dlon AND s.lon + s.dlon
+),
+agg AS (
+  SELECT {keys}g_lat, g_lon, sum({power}) AS sum_power
+  FROM pairs WHERE dist_m <= CAST({R_MAX!r} AS DOUBLE)
+  GROUP BY {keys}g_lat, g_lon
+)
+SELECT {keys}g_lat, g_lon, {db} AS db, round({db} / CAST({MAX_DB!r} AS DOUBLE), 6) AS weight
+FROM agg WHERE sum_power > 0
+"""
+
+
+# ---------------------------------------------------------------------------
 # Flagship: ground-noise grid
 # ---------------------------------------------------------------------------
 
 
-def flagship_noise_grid(
-    spark: SparkSession,
-    sf_dir: str,
-    step_m: float = FLAGSHIP_STEP_M,
-    n_steps: int = FLAGSHIP_N_STEPS,
-) -> DataFrame:
-    """states -> classify -> dedup -> binned radius join -> attenuate ->
+def flagship_noise_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """states -> classify -> dedup -> radius join -> attenuate ->
     groupBy(cell).sum(power) -> dB -> heat weight. One lazy plan, no collect.
     """
-    grid = gen_grid(spark, NANTES_LAT, NANTES_LON, step_m, n_steps)
-    sources = source_levels(spark, sf_dir).select("lat", "lon", "src_db")
-    n_cells = (2 * n_steps + 1) ** 2
-    pairs = adaptive_radius_join(
-        grid,
-        sources,
-        R_MAX,
-        NANTES_LAT,
-        grid_cells=n_cells,
-        region_extent_m=2 * n_steps * step_m,
-    )
-    return _noise_agg(pairs)
+    power = noise_power(spark, source_levels(spark, sf_dir), FLAGSHIP_STEP_M, FLAGSHIP_N_STEPS)
+    return noise_db(power)
 
 
-def _noise_agg(pairs: DataFrame) -> DataFrame:
-    """attenuate -> per-cell power sum -> dB -> heat weight (shared by the
-    flagship and the reference-geometry variant). Rounding db to 2 dp and
-    weight to 6 dp makes the output insensitive to float summation order."""
-    power = attenuated_power(F.col("src_db"), F.col("dist_m"))
-    agg = (
-        pairs.withColumn("power", power)
-        .groupBy("g_lat", "g_lon")
-        .agg(F.sum("power").alias("sum_power"))
-        .filter(F.col("sum_power") > 0)
-    )
-    return agg.select(
-        "g_lat",
-        "g_lon",
-        db_from_power(F.col("sum_power")).alias("db"),
-        F.round(db_from_power(F.col("sum_power")) / F.lit(MAX_DB), 6).alias("weight"),
-    )
+_SOURCE_LEVELS_SRC = f"SELECT lat, lon, src_db FROM ({SOURCE_LEVELS_SQL}) t"
 
 
-def flagship_sql(step_m: float = FLAGSHIP_STEP_M, n_steps: int = FLAGSHIP_N_STEPS) -> str:
-    dist = haversine_sql("g.g_lat", "g.g_lon", "s.lat", "s.lon")
-    power = attenuated_power_sql("src_db", "dist_m")
-    return f"""
-WITH grid AS ({grid_sql(NANTES_LAT, NANTES_LON, step_m, n_steps)}),
-sources AS (SELECT lat, lon, src_db FROM ({SOURCE_LEVELS_SQL}) t),
-pairs AS (
-  SELECT g.g_lat, g.g_lon, s.src_db, {dist} AS dist_m
-  FROM grid g CROSS JOIN sources s
-),
-contrib AS (
-  SELECT g_lat, g_lon, {power} AS power
-  FROM pairs WHERE dist_m <= CAST({R_MAX!r} AS DOUBLE)
-),
-agg AS (
-  SELECT g_lat, g_lon, sum(power) AS sum_power
-  FROM contrib GROUP BY g_lat, g_lon
-  HAVING sum(power) > 0
-)
-SELECT g_lat, g_lon,
-       round(CAST(10.0 AS DOUBLE) * log10(sum_power), 2) AS db,
-       round(round(CAST(10.0 AS DOUBLE) * log10(sum_power), 2) / CAST({MAX_DB!r} AS DOUBLE), 6) AS weight
-FROM agg
-"""
+def flagship_sql() -> str:
+    return noise_sql(_SOURCE_LEVELS_SRC, FLAGSHIP_STEP_M, FLAGSHIP_N_STEPS)
 
 
 # ---------------------------------------------------------------------------
@@ -243,76 +272,13 @@ _REFGEOM_KEEP_SQL = (
 
 
 def refgeom_noise_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    grid = gen_grid(spark, NANTES_LAT, NANTES_LON, REFGEOM_STEP_M, REFGEOM_N_STEPS)
-    sources = (
-        source_levels(spark, sf_dir)
-        .filter(_refgeom_keep(F.col("lat"), F.col("lon")))
-        .select("lat", "lon", "src_db")
-    )
-    n_cells = (2 * REFGEOM_N_STEPS + 1) ** 2
-    pairs = adaptive_radius_join(
-        grid,
-        sources,
-        R_MAX,
-        NANTES_LAT,
-        grid_cells=n_cells,
-        region_extent_m=2 * REFGEOM_N_STEPS * REFGEOM_STEP_M,
-    )
-    return _noise_agg(pairs)
+    sources = source_levels(spark, sf_dir).filter(_refgeom_keep(F.col("lat"), F.col("lon")))
+    return noise_db(noise_power(spark, sources, REFGEOM_STEP_M, REFGEOM_N_STEPS))
 
 
 def refgeom_sql() -> str:
-    """DuckDB oracle for the refgeom query, with the SAME binned-equi-join
-    prefilter the Spark operator uses (the bin join is a pure prefilter — the
-    exact haversine predicate decides membership — so result equivalence to
-    cross+filter holds in either engine; binning just keeps the 1M-cell
-    oracle tractable)."""
-    import math
-
-    from ..constants import DEG2RAD, EARTH_RAD, RAD2DEG
-    from .sqlutil import dlit
-
-    bin_deg_lat = R_MAX / EARTH_RAD * RAD2DEG
-    bin_deg_lon = R_MAX / (EARTH_RAD * math.cos(NANTES_LAT * DEG2RAD)) * RAD2DEG
-    dist = haversine_sql("g.g_lat", "g.g_lon", "s.lat", "s.lon")
-    power = attenuated_power_sql("src_db", "dist_m")
-    return f"""
-WITH grid AS ({grid_sql(NANTES_LAT, NANTES_LON, REFGEOM_STEP_M, REFGEOM_N_STEPS)}),
-src AS (
-  SELECT lat, lon, src_db FROM ({SOURCE_LEVELS_SQL}) t WHERE {_REFGEOM_KEEP_SQL}
-),
-sx AS (
-  SELECT lat, lon, src_db,
-         CAST(floor(lat / {dlit(bin_deg_lat)}) AS BIGINT) + d.dlat AS bin_lat,
-         CAST(floor(lon / {dlit(bin_deg_lon)}) AS BIGINT) + d.dlon AS bin_lon
-  FROM src CROSS JOIN (SELECT a.dlat, b.dlon
-                       FROM (VALUES (-1), (0), (1)) a(dlat),
-                            (VALUES (-1), (0), (1)) b(dlon)) d
-),
-gb AS (
-  SELECT g_lat, g_lon,
-         CAST(floor(g_lat / {dlit(bin_deg_lat)}) AS BIGINT) AS bin_lat,
-         CAST(floor(g_lon / {dlit(bin_deg_lon)}) AS BIGINT) AS bin_lon
-  FROM grid
-),
-pairs AS (
-  SELECT g.g_lat, g.g_lon, s.src_db, {dist} AS dist_m
-  FROM gb g JOIN sx s ON g.bin_lat = s.bin_lat AND g.bin_lon = s.bin_lon
-),
-contrib AS (
-  SELECT g_lat, g_lon, {power} AS power
-  FROM pairs WHERE dist_m <= CAST({R_MAX!r} AS DOUBLE)
-),
-agg AS (
-  SELECT g_lat, g_lon, sum(power) AS sum_power
-  FROM contrib GROUP BY g_lat, g_lon
-  HAVING sum(power) > 0
-)
-SELECT g_lat, g_lon,
-       round(CAST(10.0 AS DOUBLE) * log10(sum_power), 2) AS db,
-       round(round(CAST(10.0 AS DOUBLE) * log10(sum_power), 2) / CAST({MAX_DB!r} AS DOUBLE), 6) AS weight
-FROM agg
-"""
+    sources = f"{_SOURCE_LEVELS_SRC} WHERE {_REFGEOM_KEEP_SQL}"
+    return noise_sql(sources, REFGEOM_STEP_M, REFGEOM_N_STEPS)
 
 
 # ---------------------------------------------------------------------------
@@ -323,13 +289,12 @@ FROM agg
 def incremental_noise_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's production pattern — poll -> update the heatmap —
     as STREAMING MATERIALIZED-VIEW MAINTENANCE: each micro-batch of state
-    observations runs the radius join against the grid and lands its
-    per-cell PARTIAL power sums as an idempotent ``batch=<epoch>``
-    partition (epoch replay overwrites the same directory — exactly-once);
-    the view is the re-aggregation of the partials. Power-domain sums are
-    associative, so the incremental result equals the one-shot batch
-    flagship over all observations (no dedup — every poll contributes),
-    which is exactly what the oracle computes.
+    observations lands its ``noise_power`` partials as an idempotent
+    ``batch=<epoch>`` partition (epoch replay overwrites the same directory
+    — exactly-once); the view is ``noise_db`` over the summed partials.
+    Power-domain sums are associative, so the incremental result equals the
+    one-shot batch flagship over all observations (no dedup — every poll
+    contributes), which is exactly what the oracle computes.
 
     At scale each micro-batch touches only its own sources x nearby cells
     (binned equi radius join), the landed partials are cell-keyed and
@@ -338,6 +303,7 @@ def incremental_noise_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import uuid
 
+    from ..operators.checkpoints import tracked_local_checkpoint
     from ..streaming.events_stream import EVENTS_SCHEMA, _stage_late_batches
 
     d = _stage_late_batches(spark, sf_dir)
@@ -346,34 +312,14 @@ def incremental_noise_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # removes it on EVERY exit path — a failed run must not leak a dir.
     base = f"{d.rstrip('/')}_noise_mv_{uuid.uuid4().hex[:8]}"
 
-    grid = gen_grid(spark, NANTES_LAT, NANTES_LON, FLAGSHIP_STEP_M, FLAGSHIP_N_STEPS)
-    n_cells = (2 * FLAGSHIP_N_STEPS + 1) ** 2
-
     def _update(batch_df: DataFrame, epoch_id: int) -> None:
-        st = states_from_events(batch_df)
-        sources = st.select(
+        sources = states_from_events(batch_df).select(
             F.col("latitude").alias("lat"),
             F.col("longitude").alias("lon"),
             phase_db(F.col("on_ground"), F.col("vertical_rate")).alias("src_db"),
         )
-        pairs = adaptive_radius_join(
-            grid,
-            sources,
-            R_MAX,
-            NANTES_LAT,
-            grid_cells=n_cells,
-            region_extent_m=2 * FLAGSHIP_N_STEPS * FLAGSHIP_STEP_M,
-        )
-        partial = (
-            pairs.withColumn(
-                "power", attenuated_power(F.col("src_db"), F.col("dist_m"))
-            )
-            .groupBy("g_lat", "g_lon")
-            .agg(F.sum("power").alias("sum_power"))
-        )
+        partial = noise_power(spark, sources, FLAGSHIP_STEP_M, FLAGSHIP_N_STEPS)
         partial.write.mode("overwrite").parquet(f"{base}/batch={epoch_id}")
-
-    from ..operators.checkpoints import tracked_local_checkpoint
 
     try:
         src = (
@@ -388,81 +334,25 @@ def incremental_noise_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             q.stop()
 
-        merged = (
-            spark.read.parquet(f"{base}/batch=*")
-            .groupBy("g_lat", "g_lon")
-            .agg(F.sum("sum_power").alias("sum_power"))
-            .filter(F.col("sum_power") > 0)
-        )
-        out = merged.select(
-            "g_lat",
-            "g_lon",
-            db_from_power(F.col("sum_power")).alias("db"),
-            F.round(db_from_power(F.col("sum_power")) / F.lit(MAX_DB), 6).alias(
-                "weight"
-            ),
-        )
+        # partition discovery adds `batch`; the merge's groupBy drops it
+        partials = spark.read.parquet(base)
+        merged = partials.groupBy("g_lat", "g_lon").agg(F.sum("sum_power").alias("sum_power"))
         # materialize (lineage-truncating) so the partials dir can be removed
         # now; the checkpoint is REGISTERED so entry()'s teardown releases
         # its block-manager storage (tests/test_entry.py)
-        out, _ = tracked_local_checkpoint(out, register=True)
+        out, _ = tracked_local_checkpoint(noise_db(merged), register=True)
         return out
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
 
 def incremental_sql() -> str:
-    """Oracle: the one-shot flagship over ALL observations (no dedup), with
-    the same bin prefilter as refgeom_sql to keep the pair count tractable
-    (the exact haversine predicate decides membership either way)."""
-    import math
-
-    from ..constants import DEG2RAD, EARTH_RAD, RAD2DEG
-    from .sqlutil import dlit
-
-    bin_deg_lat = R_MAX / EARTH_RAD * RAD2DEG
-    bin_deg_lon = R_MAX / (EARTH_RAD * math.cos(NANTES_LAT * DEG2RAD)) * RAD2DEG
-    dist = haversine_sql("g.g_lat", "g.g_lon", "s.lat", "s.lon")
-    power = attenuated_power_sql("src_db", "dist_m")
-    return f"""
-WITH grid AS ({grid_sql(NANTES_LAT, NANTES_LON, FLAGSHIP_STEP_M, FLAGSHIP_N_STEPS)}),
-states AS ({STATES_SQL}),
-src AS (
-  SELECT latitude AS lat, longitude AS lon, {phase_db_sql()} AS src_db
-  FROM states
-),
-sx AS (
-  SELECT lat, lon, src_db,
-         CAST(floor(lat / {dlit(bin_deg_lat)}) AS BIGINT) + d.dlat AS bin_lat,
-         CAST(floor(lon / {dlit(bin_deg_lon)}) AS BIGINT) + d.dlon AS bin_lon
-  FROM src CROSS JOIN (SELECT a.dlat, b.dlon
-                       FROM (VALUES (-1), (0), (1)) a(dlat),
-                            (VALUES (-1), (0), (1)) b(dlon)) d
-),
-gb AS (
-  SELECT g_lat, g_lon,
-         CAST(floor(g_lat / {dlit(bin_deg_lat)}) AS BIGINT) AS bin_lat,
-         CAST(floor(g_lon / {dlit(bin_deg_lon)}) AS BIGINT) AS bin_lon
-  FROM grid
-),
-pairs AS (
-  SELECT g.g_lat, g.g_lon, s.src_db, {dist} AS dist_m
-  FROM gb g JOIN sx s ON g.bin_lat = s.bin_lat AND g.bin_lon = s.bin_lon
-),
-contrib AS (
-  SELECT g_lat, g_lon, {power} AS power
-  FROM pairs WHERE dist_m <= CAST({R_MAX!r} AS DOUBLE)
-),
-agg AS (
-  SELECT g_lat, g_lon, sum(power) AS sum_power
-  FROM contrib GROUP BY g_lat, g_lon
-  HAVING sum(power) > 0
-)
-SELECT g_lat, g_lon,
-       round(CAST(10.0 AS DOUBLE) * log10(sum_power), 2) AS db,
-       round(round(CAST(10.0 AS DOUBLE) * log10(sum_power), 2) / CAST({MAX_DB!r} AS DOUBLE), 6) AS weight
-FROM agg
-"""
+    """Oracle: the one-shot flagship over ALL observations (no dedup)."""
+    sources = (
+        f"SELECT latitude AS lat, longitude AS lon, {phase_db_sql()} AS src_db"
+        f" FROM ({STATES_SQL}) t"
+    )
+    return noise_sql(sources, FLAGSHIP_STEP_M, FLAGSHIP_N_STEPS)
 
 
 # ---------------------------------------------------------------------------
@@ -631,36 +521,13 @@ def q_daily_noise_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sources = deduped.select(
         "day", F.col("latitude").alias("lat"), F.col("longitude").alias("lon"), "src_db"
     )
-    grid = gen_grid(spark, NANTES_LAT, NANTES_LON, FLAGSHIP_STEP_M, ROLLUP_N_STEPS)
-    pairs = adaptive_radius_join(
-        grid,
-        sources,
-        R_MAX,
-        NANTES_LAT,
-        grid_cells=(2 * ROLLUP_N_STEPS + 1) ** 2,
-        region_extent_m=2 * ROLLUP_N_STEPS * FLAGSHIP_STEP_M,
-    )
-    power = attenuated_power(F.col("src_db"), F.col("dist_m"))
-    agg = (
-        pairs.withColumn("power", power)
-        .groupBy("day", "g_lat", "g_lon")
-        .agg(F.sum("power").alias("sum_power"))
-        .filter(F.col("sum_power") > 0)
-    )
-    return agg.select(
-        "day",
-        "g_lat",
-        "g_lon",
-        db_from_power(F.col("sum_power")).alias("db"),
-    )
+    power = noise_power(spark, sources, FLAGSHIP_STEP_M, ROLLUP_N_STEPS, by=("day",))
+    return noise_db(power, by=("day",)).drop("weight")
 
 
 def daily_rollup_sql() -> str:
-    dist = haversine_sql("g.g_lat", "g.g_lon", "s.lat", "s.lon")
-    power = attenuated_power_sql("src_db", "dist_m")
-    return f"""
-WITH grid AS ({grid_sql(NANTES_LAT, NANTES_LON, FLAGSHIP_STEP_M, ROLLUP_N_STEPS)}),
-st AS (
+    sources = f"""
+WITH st AS (
   SELECT event_id,
          CAST(epoch_ns(ts) // {_NANOS_PER_DAY} AS BIGINT) AS day,
          {_LAT_SQL} AS latitude,
@@ -676,25 +543,10 @@ deduped AS (
     SELECT *, row_number() OVER (PARTITION BY day, latitude, longitude ORDER BY event_id DESC) AS rn
     FROM st) t
   WHERE rn = 1
-),
-sources AS (SELECT day, latitude AS lat, longitude AS lon, src_db FROM deduped),
-pairs AS (
-  SELECT s.day, g.g_lat, g.g_lon, s.src_db, {dist} AS dist_m
-  FROM grid g CROSS JOIN sources s
-),
-contrib AS (
-  SELECT day, g_lat, g_lon, {power} AS power
-  FROM pairs WHERE dist_m <= CAST({R_MAX!r} AS DOUBLE)
-),
-agg AS (
-  SELECT day, g_lat, g_lon, sum(power) AS sum_power
-  FROM contrib GROUP BY 1, 2, 3
-  HAVING sum(power) > 0
 )
-SELECT day, g_lat, g_lon,
-       round(CAST(10.0 AS DOUBLE) * log10(sum_power), 2) AS db
-FROM agg
-"""
+SELECT day, latitude AS lat, longitude AS lon, src_db FROM deduped"""
+    rollup = noise_sql(sources, FLAGSHIP_STEP_M, ROLLUP_N_STEPS, by=("day",))
+    return f"SELECT day, g_lat, g_lon, db FROM ({rollup}) t"
 
 
 def q_heat_triples(spark: SparkSession, sf_dir: str) -> DataFrame:

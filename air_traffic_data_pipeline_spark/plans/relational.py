@@ -5236,15 +5236,7 @@ def copurchase_pairs(li: DataFrame) -> DataFrame:
     """(pa, pb, cnt) co-purchase pair counts from a (l_orderkey,
     l_partkey) frame — per-ORDER local, so any order-atomic slicing of
     the lineitem stream yields partials that merge by integer SUM (the
-    streaming mirror's state).
-
-    The self-join is pinned at cluster parallelism with one explicit
-    REPARTITION_BY_NUM exchange (shared by both sides via exchange
-    reuse): the pair expansion + count is compute-dense behind a ~10 MB
-    shuffle, so AQE's byte-based coalescing was running it on 3 tasks
-    (measured: a 5.4 s single-digit-task stage at sf0.1)."""
-    par = li.sparkSession.sparkContext.defaultParallelism
-    li = li.repartition(par, "l_orderkey")
+    streaming mirror's state)."""
     return (
         li.alias("a")
         .join(

@@ -146,3 +146,26 @@ def test_radius_join_equals_cross_filter(spark):
     slow_set = {key(r) for r in slow.collect()}
     assert fast_set == slow_set
     assert len(fast_set) > 0
+
+
+@pytest.mark.parametrize("center_lat", [47.15, 70.0])
+def test_adaptive_radius_join_exact_north_of_center(spark, center_lat):
+    """Bin-join ≡ cross-join+filter where longitude degrees are widest: a
+    pair near R_MAX east-west, ~1° north of the grid center, spans more
+    longitude than a bin sized at the center latitude, so the 3x3 neighbor
+    explode can miss it unless bins are sized at the poleward edge."""
+    from air_traffic_data_pipeline_spark.operators.radius_join import adaptive_radius_join
+
+    center_lon, step_m, n_steps = -1.8, 2000.0, 60  # 121x121 cells, extent/R = 12
+    grid = gen_grid(spark, center_lat, center_lon, step_m, n_steps)
+    src = [(center_lat + 0.9 + 0.01 * i, center_lon - 0.5 + 0.05 * i, i) for i in range(20)]
+    src_df = spark.createDataFrame(src, "lat double, lon double, sid long")
+
+    fast = adaptive_radius_join(
+        grid, src_df, R_MAX, center_lat, region_extent_m=2 * n_steps * step_m
+    )
+    slow = naive_radius_join(grid, src_df, R_MAX)
+    key = lambda r: (r.g_lat, r.g_lon, r.sid)
+    slow_set = {key(r) for r in slow.collect()}
+    assert {key(r) for r in fast.collect()} == slow_set
+    assert len(slow_set) > 0

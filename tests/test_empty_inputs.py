@@ -26,8 +26,10 @@ def test_radius_join_empty_sources(spark):
 
     grid = gen_grid(spark, 47.15, -1.6, 2000.0, 5)
     src = source_levels(spark, SF).filter(F.lit(False)).select("lat", "lon", "src_db")
-    for join in (radius_join, adaptive_radius_join):
-        out = join(grid, src, 20000.0, 47.15)
+    for out in (
+        radius_join(grid, src, 20000.0, 47.15),
+        adaptive_radius_join(grid, src, 20000.0, 47.15, region_extent_m=2 * 5 * 2000.0),
+    ):
         assert out.count() == 0
         assert "dist_m" in out.columns
 

@@ -112,7 +112,7 @@ def test_adaptive_radius_join_crossover_property(spark):
                 p,
             ), p
         # strategy flip is result-invariant at the SAME geometry
-        nl = rows(naive_radius_join(grid, src, radius, broadcast_side="sources"))
+        nl = rows(naive_radius_join(grid, src, radius))
         eq = rows(radius_join(grid, src, radius, 47.02))
         assert nl == eq and rows(adaptive) == nl
         assert nl, "crossover geometry must produce matches to compare"
