@@ -9,8 +9,13 @@ strategies for the same pairs:
   when the region is not much larger than R, so nothing can be pruned.
 - ``radius_join``: bin both sides into cells of one maximal pair offset per
   axis, explode the sources to their 3x3 neighbor bins, equi-join on
-  (bin_lat, bin_lon) — a hash / sort-merge join Catalyst and AQE can plan,
-  skew-split and parallelize — then apply the exact haversine predicate.
+  (bin_lat, bin_lon), then apply the exact haversine predicate. Catalyst
+  broadcasts the exploded sources when their size estimate is under the
+  broadcast threshold (a poll of a few hundred aircraft), so the grid is
+  neither shuffled nor sorted; otherwise it shuffles both sides on the bin
+  key (sort-merge join, AQE splits hot bins). The estimate needs a source
+  plan with statistics: an RDD scan, such as ``createDataFrame`` of a
+  Python list, has none and always takes the shuffle.
 
 ``adaptive_radius_join`` picks one from the region geometry. Both return
 exactly the cross+filter pairs (tests/test_domain.py), provided the
@@ -162,8 +167,10 @@ def adaptive_radius_join(
     - region not much larger than the radius -> bins cannot prune (every
       bin neighbors every other): broadcast nested loop
       (:func:`naive_radius_join`).
-    - otherwise -> binned equi-join (:func:`radius_join`; the 100 TB path:
-      shuffle both sides once on the bin key, AQE splits hot bins).
+    - otherwise -> binned equi-join (:func:`radius_join`): a broadcast hash
+      join when the sources' size estimate is small, else both sides
+      shuffled once on the bin key with AQE splitting hot bins (the 100 TB
+      path).
 
     ``grid_cells`` is accepted and ignored; the choice depends only on the
     extent-to-radius ratio.

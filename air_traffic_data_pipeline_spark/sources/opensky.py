@@ -68,21 +68,18 @@ def parse_states_envelope(spark: SparkSession, envelope_json: str) -> DataFrame:
 
     The envelope is ``{"time": ..., "states": [[...17 positional...], ...]}``
     with heterogenous cell types; cells are read as strings and cast to the
-    declared schema. Null/empty ``states`` yields an empty typed frame.
+    declared schema. Null, empty or missing ``states`` yields an empty typed
+    frame; a malformed envelope fails the first action on the frame.
+
+    The envelope is parsed in the JVM from one literal row on a one-row
+    range, so the plan carries a size estimate: Catalyst sees a tiny source
+    side and can broadcast it into a join with the grid. A frame built with
+    ``createDataFrame`` is an RDD scan with no estimate.
     """
     tune_session(spark)
-    data = json.loads(envelope_json)
-    states = data.get("states") or []
-    if not states:
-        return spark.createDataFrame([], states_schema())
-
-    raw = spark.createDataFrame(
-        [(json.dumps(row),) for row in states], "state_json string"
-    )
-    arr = F.from_json(
-        F.col("state_json"), T.ArrayType(T.StringType())
-    ).alias("state")
-    exploded = raw.select(arr)
+    schema = "struct<states: array<array<string>>>"
+    envelope = F.from_json(F.lit(envelope_json), schema, {"mode": "FAILFAST"})
+    exploded = spark.range(1).select(F.explode(envelope.states).alias("state"))
 
     cols = []
     for idx, name, dtype in STATES_FIELDS:

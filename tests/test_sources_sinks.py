@@ -5,14 +5,22 @@ from __future__ import annotations
 import json
 import os
 import tempfile
+from importlib.util import find_spec
 
 import pytest
 from pyspark.sql import functions as F
 
 from air_traffic_data_pipeline_spark.sources.opensky import (
+    STATES_FIELDS,
     bbox_params,
     parse_states_envelope,
     states_schema,
+)
+
+# The sink writes GeoJSON only when folium is absent; with folium it writes
+# an HTML page, whose text these checks do not describe.
+geojson_sink = pytest.mark.skipif(
+    find_spec("folium") is not None, reason="folium installed: the sink writes HTML"
 )
 
 ENVELOPE = {
@@ -46,12 +54,86 @@ def test_parse_states_full_row(spark):
     assert rows["ef9012"].vertical_rate == -3.0
 
 
-@pytest.mark.parametrize("states", [None, []])
+@pytest.mark.parametrize("states", [None, [], "missing"])
 def test_parse_states_empty_guard(spark, states):
-    """S4: null/empty states -> empty typed frame, not an exit."""
-    df = parse_states_envelope(spark, json.dumps({"time": 1, "states": states}))
+    """S4: null/empty/missing states -> empty typed frame, not an exit."""
+    envelope = {"time": 1} if states == "missing" else {"time": 1, "states": states}
+    df = parse_states_envelope(spark, json.dumps(envelope))
     assert df.count() == 0
     assert df.schema == states_schema()
+
+
+def test_parse_states_malformed_envelope_raises(spark):
+    """A truncated response is an error, not an empty poll."""
+    with pytest.raises(Exception, match="(?i)malformed|expecting value"):
+        parse_states_envelope(spark, '{"time": 1, "states": [["ab1234", ').collect()
+
+
+# Raw JSON text, so number spellings reach the parser as written: exponent
+# floats, an integer past 2**53, -0.0, sensors as a JSON array and as the
+# string OpenSky sends, an 18th trailing field (OpenSky's `category`),
+# numbers and booleans sent as strings, empty strings, a number in a string
+# field and a null row.
+EDGE_ENVELOPE = """{"time": 1757030400, "states": [
+ ["aa0001", "EXP1    ", "France", 1757030400, 9007199254740993, 4.72e1, 1e-7,
+  -0.0, false, 150.5, 90, -1E-3, [1, 2, 3], 3.1e3, "7001", true, 0, 4],
+ ["aa0002", "", "", "1757030400", "", "-1.55", "47.2", "3000", "false", "5",
+  "1e2", "", "[1,2,3]", "", "", "true", "2", 17],
+ ["aa0003", 4.72e1, 7001, 1.5, 9007199254740993, 9007199254740993, -0.0,
+  "-0.0", "TRUE", null, "nan", "x", "", "1e-7", 7001, "", "1.0"],
+ ["aa0004", null, null, null, null, null, null, null, null, null, null, null,
+  "[]", null, null, null, null],
+ null
+]}"""
+
+
+def _per_row_decode(spark, envelope_json):
+    """The driver-side decode parse_states_envelope used to run: json.loads,
+    one json.dumps per state row, createDataFrame, per-row from_json."""
+    states = json.loads(envelope_json).get("states") or []
+    raw = spark.createDataFrame([(json.dumps(r),) for r in states], "state_json string")
+    exploded = raw.select(F.from_json("state_json", "array<string>").alias("state"))
+    cols = []
+    for idx, name, dtype in STATES_FIELDS:
+        c = F.col("state")[idx]
+        if name == "sensors":
+            c = F.when(c.isNull(), None).otherwise(
+                F.split(F.regexp_replace(c, r"[\[\]\s]", ""), ",").try_cast(dtype)
+            )
+        else:
+            c = c.try_cast(dtype)
+        cols.append(c.alias(name))
+    return exploded.select(*cols)
+
+
+def test_parse_states_matches_per_row_decode(spark):
+    got = parse_states_envelope(spark, EDGE_ENVELOPE)
+    want = _per_row_decode(spark, EDGE_ENVELOPE)
+    assert got.schema == want.schema == states_schema()
+    got_rows, want_rows = got.collect(), want.collect()
+    assert len(got_rows) == 5
+    # repr tells -0.0 from 0.0, which == does not
+    assert repr(got_rows) == repr(want_rows)
+    r = got_rows[0]
+    assert (r.longitude, r.latitude, r.last_contact) == (47.2, 1e-7, 9007199254740993)
+    assert r.sensors == [1, 2, 3] and got_rows[1].sensors == [1, 2, 3]
+
+
+def test_poll_radius_join_plans_broadcast(spark):
+    """At the reference geometry (1,002,001 cells) the parsed poll is the
+    small side: the binned radius join must plan as a broadcast hash join,
+    not a sort-merge join that shuffles and sorts the whole grid. Plans
+    only; no Spark job runs."""
+    from air_traffic_data_pipeline_spark.constants import NANTES_LAT, NANTES_LON, R_MAX
+    from air_traffic_data_pipeline_spark.operators.grid import gen_grid
+    from air_traffic_data_pipeline_spark.operators.radius_join import adaptive_radius_join
+
+    states = parse_states_envelope(spark, json.dumps(ENVELOPE))
+    sources = states.select(F.col("latitude").alias("lat"), F.col("longitude").alias("lon"))
+    grid = gen_grid(spark, NANTES_LAT, NANTES_LON, 200.0, 500)
+    pairs = adaptive_radius_join(grid, sources, R_MAX, NANTES_LAT, region_extent_m=200_000)
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan, plan
 
 
 def test_bbox_params_order():
@@ -72,6 +154,51 @@ def test_heatmap_sink_fallback_or_folium(spark):
     with open(out) as f:
         content = f.read()
     assert "47.1" in content or "0.5" in content
+
+
+BOUNDS = {"lamin": 47.0, "lomin": -1.9, "lamax": 47.3, "lomax": -1.2}
+
+
+def _sink_geojson(spark, rows, path):
+    from air_traffic_data_pipeline_spark.sinks.heatmap import write_heatmap
+
+    df = spark.createDataFrame(rows, "lat double, lon double, weight double")
+    out = write_heatmap(df, os.path.join(path, "map"), BOUNDS)
+    with open(out) as f:
+        return f.read()
+
+
+@geojson_sink
+def test_heatmap_geojson_bytes_match_json_dump(spark, tmp_path):
+    """The hand-written GeoJSON text is byte-equal to json.dumps of the
+    FeatureCollection dict, on floats whose shortest repr is awkward."""
+    rows = [(47.153123, -1.6044, 1e-05), (0.1 + 0.2, -0.0, 0.5), (47.2, 1e-7, 1.0)]
+    want = json.dumps(
+        {
+            "type": "FeatureCollection",
+            "bbox": [BOUNDS["lomin"], BOUNDS["lamin"], BOUNDS["lomax"], BOUNDS["lamax"]],
+            "features": [
+                {
+                    "type": "Feature",
+                    "geometry": {"type": "Point", "coordinates": [lon, lat]},
+                    "properties": {"weight": w},
+                }
+                for lat, lon, w in rows
+            ],
+        }
+    )
+    assert _sink_geojson(spark, rows, str(tmp_path)) == want
+
+
+@geojson_sink
+def test_heatmap_sink_drops_null_rows(spark, tmp_path):
+    """A row with a null lat, lon or weight is not written: the file stays
+    valid JSON and holds only the complete rows."""
+    rows = [(47.1, -1.6, 0.5), (47.2, None, 0.9), (None, -1.5, 0.9), (47.3, -1.4, None)]
+    feats = json.loads(_sink_geojson(spark, rows, str(tmp_path)))["features"]
+    assert [(f["geometry"]["coordinates"], f["properties"]["weight"]) for f in feats] == [
+        ([-1.6, 47.1], 0.5)
+    ]
 
 
 def test_lake_partitioned_write_prunes(spark):
@@ -145,8 +272,10 @@ def test_bucketed_join_skips_shuffle(spark):
         spark.sql(f"DROP TABLE IF EXISTS {tb_name}")
 
 
+@geojson_sink
 def test_flagship_end_to_end_with_sink(spark):
-    """Full reference pipeline shape: flagship query -> heatmap sink."""
+    """Full reference pipeline shape: flagship query -> heatmap sink. The
+    file holds exactly the query's (lon, lat, weight) triples."""
     from air_traffic_data_pipeline_spark.operators.grid import gen_grid, grid_bounds
     from air_traffic_data_pipeline_spark.constants import (
         FLAGSHIP_N_STEPS,
@@ -163,7 +292,12 @@ def test_flagship_end_to_end_with_sink(spark):
     ).collect()[0]
     bounds = {"lamin": b.lamin, "lomin": b.lomin, "lamax": b.lamax, "lomax": b.lomax}
     out = write_heatmap(triples, os.path.join(tempfile.mkdtemp(), "flagship.html"), bounds)
-    assert os.path.getsize(out) > 100
+    with open(out) as f:
+        feats = json.load(f)["features"]
+    got = [(*f["geometry"]["coordinates"], f["properties"]["weight"]) for f in feats]
+    want = {(r.lon, r.lat, r.weight) for r in triples.collect()}
+    assert len(got) == len(want) > 0
+    assert set(got) == want
 
 
 def test_partition_pruning_skips_directories(spark, tmp_path):
