@@ -43,7 +43,7 @@ _LIVE: dict[str, set[int]] = {}
 # ``checkpoint()`` into a replicated store instead. One switch routes every
 # call-site here:
 #
-#   SPARK_GRAFT_RELIABLE_CHECKPOINT=1   use DataFrame.checkpoint(eager)
+#   SPARK_GRAFT_RELIABLE_CHECKPOINT=1   use an eager DataFrame.checkpoint()
 #   SPARK_GRAFT_CHECKPOINT_DIR=<path>   where to write (HDFS/S3/... in
 #                                       production; required the first time
 #                                       unless the context already has one)
@@ -97,40 +97,31 @@ def _checkpointed_rdd_id(out: DataFrame) -> int | None:
         return None
 
 
-def tracked_local_checkpoint(
-    df: DataFrame, eager: bool = True, register: bool = False
-) -> tuple[DataFrame, set[int]]:
-    """``df.localCheckpoint(eager)`` returning the pinned RDD ids too.
+def tracked_local_checkpoint(df: DataFrame) -> tuple[DataFrame, set[int]]:
+    """Eager ``df.localCheckpoint()`` returning the pinned RDD ids too.
 
-    ``register=True`` additionally records the ids in the session-wide
-    registry so :func:`clear_all` (entry() teardown) releases them.
-    Tracking requires ``eager=True``: a lazy checkpoint pins its RDD only
-    on first action — the plan-derived id would name an RDD that is not
-    yet (and might never be) persisted, so we refuse it.
+    The ids are recorded in the session-wide registry, so :func:`release`
+    frees them when a loop supersedes them and :func:`clear_all` (entry()
+    teardown) frees whatever is still live. Always eager: a lazy checkpoint
+    pins its RDD only on first action, so the plan-derived id would name an
+    RDD that is not yet (and might never be) persisted.
 
     The id comes from the returned plan's ``LogicalRDD`` (exact — immune
     to unrelated caches materializing concurrently); the snapshot diff is
     a fallback only.
     """
-    if not eager:
-        raise ValueError(
-            "tracked_local_checkpoint requires eager=True (a lazy "
-            "checkpoint materializes after the id snapshot, so its RDD "
-            "could never be tracked or released)"
-        )
     spark = df.sparkSession
     if _reliable_requested():
         # cluster posture: reliable checkpoint into the configured dir —
         # fault-tolerant (recomputable from the replicated files after
         # executor loss), nothing pinned in block managers to release
         _ensure_checkpoint_dir(spark)
-        return df.checkpoint(eager=eager), set()
+        return df.checkpoint(), set()
     before = _persistent_ids(spark)
-    out = df.localCheckpoint(eager=eager)
+    out = df.localCheckpoint()
     cid = _checkpointed_rdd_id(out)
     ids = {cid} if cid is not None else _persistent_ids(spark) - before
-    if register:
-        _LIVE.setdefault(spark.sparkContext.applicationId, set()).update(ids)
+    _LIVE.setdefault(spark.sparkContext.applicationId, set()).update(ids)
     return out, ids
 
 

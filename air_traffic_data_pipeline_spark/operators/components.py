@@ -40,7 +40,6 @@ def connected_components(
         und.select(F.col("a").alias("node")).distinct().withColumn(
             "comp", F.col("node")
         ),
-        register=True,
     )
     for _ in range(max_iter):
         nbr_min = (
@@ -58,7 +57,6 @@ def connected_components(
                     "comp"
                 ),
             ),
-            register=True,
         )
         changed = (
             new_labels.alias("n")

@@ -30,21 +30,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def _pin(df: DataFrame, *keys: str) -> DataFrame:
-    """Explicit REPARTITION_BY_NUM on ``keys`` at cluster parallelism.
-
-    The iterative operators below checkpoint their edge/state tables and
-    then join them once per round; the checkpoint stores whatever
-    partitioning its input ENDS with, and for a few-MB edge list AQE's
-    byte-based coalescing leaves 1-3 partitions — capping every
-    subsequent round's join/aggregate compute at 1-3 tasks regardless of
-    cluster size (the work here is CPU-dense per byte, so bytes are the
-    wrong proxy). A user-numbered repartition is never coalesced by AQE
-    and scales with the session (defaultParallelism), not a constant."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(par, *keys)
-
-
 def bellman_ford(
     edges: DataFrame,
     sources: DataFrame,
@@ -65,19 +50,13 @@ def bellman_ford(
     # materialize the edge list once — every round joins it, and without
     # the checkpoint round k would recompute the (possibly expensive) edge
     # derivation k times (measured 16 s -> ~8 s on the sf0.1 co-purchase
-    # graph, whose edges come from a lineitem self-join). The checkpoint
-    # stores whatever partitioning its input ends with — after AQE's
-    # byte-based coalescing that is 1-3 partitions for a few-MB edge list,
-    # which then caps EVERY relaxation round's broadcast-join compute at
-    # 1-3 tasks; the explicit REPARTITION_BY_NUM pins the stored layout
-    # (and so every round) at cluster parallelism.
+    # graph, whose edges come from a lineitem self-join).
     e, _ = tracked_local_checkpoint(
         edges.select(
             F.col(src).alias("e_src"),
             F.col(dst).alias("e_dst"),
             F.col(weight).alias("e_w"),
-        ).transform(lambda d: _pin(d, "e_src")),
-        register=True,
+        ),
     )
     dist, dist_ids = tracked_local_checkpoint(
         sources.select(
@@ -85,7 +64,6 @@ def bellman_ford(
             F.col(source_col).alias("node"),
             F.lit(0.0).alias("dist"),
         ),
-        register=True,
     )
     for _ in range(rounds):
         # the frontier is (|sources| x |reached nodes|)-sized — broadcast it
@@ -99,7 +77,6 @@ def bellman_ford(
             dist.unionByName(relaxed)
             .groupBy("source", "node")
             .agg(F.min("dist").alias("dist")),
-            register=True,
         )
         release(spark, dist_ids)
         dist, dist_ids = new_dist, new_ids
@@ -133,15 +110,11 @@ def label_propagation(
 
     spark = edges.sparkSession
     e, _ = tracked_local_checkpoint(
-        _pin(
-            edges.select(
-                F.col(src).alias("e_src"),
-                F.col(dst).alias("e_dst"),
-                F.col(weight).cast("bigint").alias("e_w"),
-            ),
-            "e_src",
+        edges.select(
+            F.col(src).alias("e_src"),
+            F.col(dst).alias("e_dst"),
+            F.col(weight).cast("bigint").alias("e_w"),
         ),
-        register=True,
     )
     nodes = (
         e.select(F.col("e_src").alias("node"))
@@ -149,12 +122,10 @@ def label_propagation(
         .distinct()
     )
     lab, lab_ids = tracked_local_checkpoint(
-        nodes.select("node", F.col("node").alias("label")), register=True
+        nodes.select("node", F.col("node").alias("label"))
     )
     for _ in range(rounds):
-        new_lab, new_ids = tracked_local_checkpoint(
-            lp_round(e, lab), register=True
-        )
+        new_lab, new_ids = tracked_local_checkpoint(lp_round(e, lab))
         release(spark, lab_ids)
         lab, lab_ids = new_lab, new_ids
     return lab
@@ -243,9 +214,7 @@ def pagerank_integer(
                 " output and their rank mass leaks"
             )
     deg = e0.groupBy("e_src").agg(F.sum("e_w").alias("e_sw"))
-    e, _ = tracked_local_checkpoint(
-        _pin(e0.join(deg, "e_src"), "e_src"), register=True
-    )
+    e, _ = tracked_local_checkpoint(e0.join(deg, "e_src"))
     nodes = e.select(F.col("e_src").alias("node")).distinct()
     n_frame = nodes.groupBy().agg(F.count(F.lit(1)).alias("n"))
     r0 = (
@@ -259,7 +228,7 @@ def pagerank_integer(
             ).alias("base"),
         )
     )
-    rank, rank_ids = tracked_local_checkpoint(r0, register=True)
+    rank, rank_ids = tracked_local_checkpoint(r0)
     # the loop variable is referenced ONCE per round (the contribution
     # join); the round's second input is the STATIC (node, base) frame —
     # read off the r0 checkpoint — so the unrolled plan grows LINEARLY and
@@ -274,7 +243,7 @@ def pagerank_integer(
     for i in range(rounds):
         rank = pr_round(e, rank, damping_pct, nodes_base=nodes_base)
         if (i + 1) % 8 == 0 and (i + 1) < rounds:
-            rank, ids = tracked_local_checkpoint(rank, register=True)
+            rank, ids = tracked_local_checkpoint(rank)
             if mid_ids:
                 release(spark, mid_ids)
             mid_ids = ids
@@ -348,15 +317,11 @@ def bellman_ford_snapshots(
         raise ValueError("snapshot_rounds must name at least one round")
     spark = edges.sparkSession
     e, _ = tracked_local_checkpoint(
-        _pin(
-            edges.select(
-                F.col(src).alias("e_src"),
-                F.col(dst).alias("e_dst"),
-                F.col(weight).alias("e_w"),
-            ),
-            "e_src",
+        edges.select(
+            F.col(src).alias("e_src"),
+            F.col(dst).alias("e_dst"),
+            F.col(weight).alias("e_w"),
         ),
-        register=True,
     )
     dist, dist_ids = tracked_local_checkpoint(
         sources.select(
@@ -364,7 +329,6 @@ def bellman_ford_snapshots(
             F.col(source_col).alias("node"),
             F.lit(0.0).alias("dist"),
         ),
-        register=True,
     )
     wanted = sorted(set(snapshot_rounds))
     snaps: dict[int, DataFrame] = {}
@@ -379,7 +343,6 @@ def bellman_ford_snapshots(
             dist.unionByName(relaxed)
             .groupBy("source", "node")
             .agg(F.min("dist").alias("dist")),
-            register=True,
         )
         if (k - 1) not in snaps:  # keep snapshotted rounds alive
             release(spark, dist_ids)
@@ -429,17 +392,13 @@ def k_core_survivors(
         # assumes a simple graph; dedup here is one extra exchange paid
         # once, cheap relative to the peel rounds, and makes the public
         # operator safe on raw (non-distinct) pair feeds.
-        e, _ = tracked_local_checkpoint(
-            _pin(e.distinct(), "e_src"), register=True
-        )
+        e, _ = tracked_local_checkpoint(e.distinct())
     surv, surv_ids = tracked_local_checkpoint(
-        e.select(F.col("e_src").alias("node")).distinct(), register=True
+        e.select(F.col("e_src").alias("node")).distinct()
     )
     prev, prev_ids = surv, None
     for _ in range(rounds):
-        new_surv, new_ids = tracked_local_checkpoint(
-            kcore_round(e, surv, k), register=True
-        )
+        new_surv, new_ids = tracked_local_checkpoint(kcore_round(e, surv, k))
         if prev_ids is not None:
             release(spark, prev_ids)
         prev, prev_ids = surv, surv_ids
@@ -504,19 +463,15 @@ def core_numbers(
     if checkpoint_edges:
         # same simple-graph discipline as k_core_survivors: degree is
         # count(*) per src, so dedup before counting
-        e, _ = tracked_local_checkpoint(
-            _pin(e.distinct(), "e_src"), register=True
-        )
+        e, _ = tracked_local_checkpoint(e.distinct())
     nodes, _ = tracked_local_checkpoint(
-        e.select(F.col("e_src").alias("node")).distinct(), register=True
+        e.select(F.col("e_src").alias("node")).distinct()
     )
     surv, surv_ids = nodes, None  # never release the node set
     finals = []  # each k's final survivor frame, kept pinned to the end
     for k in range(2, kmax + 1):
         for r in range(rounds):
-            new_surv, new_ids = tracked_local_checkpoint(
-                kcore_round(e, surv, k), register=True
-            )
+            new_surv, new_ids = tracked_local_checkpoint(kcore_round(e, surv, k))
             # release intermediate rounds; k-final frames stay pinned
             # (surv_ids is None for the node set and for each k's final,
             # which was appended to finals below before the loop re-enters)
@@ -551,11 +506,7 @@ def min_label_rounds(
 
     spark = edges.sparkSession
     e, _ = tracked_local_checkpoint(
-        _pin(
-            edges.select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst")),
-            "e_src",
-        ),
-        register=True,
+        edges.select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst")),
     )
     nodes = (
         e.select(F.col("e_src").alias("node"))
@@ -563,7 +514,7 @@ def min_label_rounds(
         .distinct()
     )
     lab, ids = tracked_local_checkpoint(
-        nodes.select("node", F.col("node").alias("lab")), register=True
+        nodes.select("node", F.col("node").alias("lab"))
     )
     for _ in range(rounds):
         prop = lab.join(e, lab["node"] == e["e_src"]).select(
@@ -571,7 +522,6 @@ def min_label_rounds(
         )
         new_lab, new_ids = tracked_local_checkpoint(
             lab.unionByName(prop).groupBy("node").agg(F.min("lab").alias("lab")),
-            register=True,
         )
         release(spark, ids)
         lab, ids = new_lab, new_ids

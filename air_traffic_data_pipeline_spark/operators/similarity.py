@@ -424,21 +424,13 @@ def nsw_finish(fwd: DataFrame, v: DataFrame) -> DataFrame:
         # two-hop self-join + the union leg) — materialize the N*M_DEG-row
         # list once per round so the upstream build (the banded multi-probe
         # join, the heavy subplan) never re-executes
-        edges, _ = tracked_local_checkpoint(edges, register=True)
-        # the two-hop rescore is compute-dense over TINY shuffle bytes
-        # (N*M_DEG^2 exact 64-dim cosines behind a few-MB shuffle), so
-        # AQE's byte-based coalescing squeezes it onto 2-3 tasks; explicit
-        # REPARTITION_BY_NUM exchanges on the join keys pin the dense
-        # stages at cluster parallelism (scale-adaptive: defaultParallelism,
-        # not a constant; AQE never coalesces user-numbered repartitions)
-        par = edges.sparkSession.sparkContext.defaultParallelism
+        edges, _ = tracked_local_checkpoint(edges)
         two_hop = (
             edges.alias("a")
             .join(edges.alias("b"), F.col("a.dst") == F.col("b.src"))
             .filter(F.col("a.src") != F.col("b.dst"))
             .select(F.col("a.src").alias("src"), F.col("b.dst").alias("dst"))
             .distinct()
-            .repartition(par, "src")
         )
         rescored = (
             two_hop.join(
@@ -449,7 +441,6 @@ def nsw_finish(fwd: DataFrame, v: DataFrame) -> DataFrame:
                 ),
                 "src",
             )
-            .repartition(par, "dst")
             .join(
                 vv.select(
                     F.col("vec_id").alias("dst"),
@@ -548,7 +539,7 @@ def _beam_rounds(
         # the beam feeds the NEXT round twice (expansion + union): without a
         # lineage cut the logical plan doubles per round (2^ROUNDS replays
         # of the whole graph build) — checkpoint the Q*BEAM-row frame
-        beam, _ = tracked_local_checkpoint(beam, register=True)
+        beam, _ = tracked_local_checkpoint(beam)
     return beam
 
 
@@ -584,9 +575,7 @@ def nsw_beam_topk(
     if edges is None:
         # the edge list feeds every beam round and its own build is the
         # heavy subplan (banded join + NN-descent) — materialize it ONCE
-        edges, _ = tracked_local_checkpoint(
-            nsw_edges(vectors, dim), register=True
-        )
+        edges, _ = tracked_local_checkpoint(nsw_edges(vectors, dim))
     beam = _entry_beam(corpus, q, NSW_ENTRY_STRIDE)
     beam = _beam_rounds(beam, edges, corpus, q, NSW_ROUNDS)
     return (
@@ -621,13 +610,9 @@ def hnsw_beam_topk(
 
     corpus, q = _search_frames(vectors, queries)
     if base_edges is None:
-        base_edges, _ = tracked_local_checkpoint(
-            nsw_edges(vectors, dim), register=True
-        )
+        base_edges, _ = tracked_local_checkpoint(nsw_edges(vectors, dim))
     upper = vectors.filter(F.col("vec_id") % HNSW_L1_STRIDE == 0)
-    upper_edges, _ = tracked_local_checkpoint(
-        nsw_edges(upper, dim), register=True
-    )
+    upper_edges, _ = tracked_local_checkpoint(nsw_edges(upper, dim))
     # upper-layer entries: the stride-of-strides sample (every entry is an
     # upper-layer member by construction)
     beam = _entry_beam(corpus, q, HNSW_L1_STRIDE * NSW_ENTRY_STRIDE)

@@ -340,7 +340,7 @@ def incremental_noise_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         # materialize (lineage-truncating) so the partials dir can be removed
         # now; the checkpoint is REGISTERED so entry()'s teardown releases
         # its block-manager storage (tests/test_entry.py)
-        out, _ = tracked_local_checkpoint(noise_db(merged), register=True)
+        out, _ = tracked_local_checkpoint(noise_db(merged))
         return out
     finally:
         shutil.rmtree(base, ignore_errors=True)

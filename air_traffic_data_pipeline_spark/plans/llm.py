@@ -781,26 +781,18 @@ def srp_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rows of three ints; bounded at any corpus scale by |tokens| collapsing
     # map-side). Without the barrier the verify legs re-ran the tokenize +
     # count build per consumer (guide §5: materialize reused intermediates).
-    per, _ = tracked_local_checkpoint(_srp_bucket_counts(d), register=True)
+    per, _ = tracked_local_checkpoint(_srp_bucket_counts(d))
     # doc-stats (the 64 BIGINT projections + ssq) feeds the band keys AND
     # both ssq legs of the cosine: build it once and materialize the
     # |docs|-row frame instead of relying on ReuseExchange to match two
     # separately-constructed identical subplans (ADVICE r13).
-    stats, _ = tracked_local_checkpoint(_srp_doc_stats(per), register=True)
+    stats, _ = tracked_local_checkpoint(_srp_doc_stats(per))
     cand = _srp_candidate_pairs(per, stats)
     ssq = stats.select("doc_id", "ssq")
     pa = per.select(F.col("doc_id").alias("doc_a"), "b", F.col("c").alias("ca"))
     pb = per.select(F.col("doc_id").alias("doc_b"), "b", F.col("c").alias("cb"))
-    # the exact-dot verify is compute-dense behind ~2 MB shuffles (each
-    # candidate pair expands to its shared-bucket rows), so AQE's
-    # byte-based coalescing ran it on ONE task (measured 2.3 s + 2.0 s
-    # single-task stages at sf0.1); REPARTITION_BY_NUM pins the two join
-    # stages at cluster parallelism — scale-adaptive, never coalesced
-    par = spark.sparkContext.defaultParallelism
     dots = (
-        cand.repartition(par, "doc_a")
-        .join(pa, "doc_a")
-        .repartition(par, "doc_b", "b")
+        cand.join(pa, "doc_a")
         .join(pb, ["doc_b", "b"])
         .groupBy("doc_a", "doc_b")
         .agg(F.sum(F.col("ca") * F.col("cb")).cast("bigint").alias("dot"))
@@ -1596,7 +1588,6 @@ def blocking_cost_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # result once
     truth, _ = tracked_local_checkpoint(
         prefix_filter_join(spark, sf_dir).select("doc_a", "doc_b"),
-        register=True,
     )
     n_docs = sz.agg(F.count(F.lit(1)).cast("bigint").alias("nd"))
     n_truth = truth.agg(F.count(F.lit(1)).cast("bigint").alias("nt"))
@@ -1631,7 +1622,7 @@ def blocking_cost_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         # each candidate set is consumed twice (volume count + truth
         # semi-join); the sets are pair-sized but their builds are the
         # production blocker subtrees — materialize each once
-        cand, _ = tracked_local_checkpoint(cand, register=True)
+        cand, _ = tracked_local_checkpoint(cand)
         r = (
             cand.agg(F.count(F.lit(1)).cast("bigint").alias("n_candidates"))
             .crossJoin(
@@ -1832,7 +1823,7 @@ def blocking_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpointed: feeds the truth verification AND doubles as the
     # loosest threshold's own prefix_filter candidate row below
     cand0, _ = tracked_local_checkpoint(
-        _pf_candidate_pairs(sh, sz, t_num=lo_num, t_den=lo_den), register=True
+        _pf_candidate_pairs(sh, sz, t_num=lo_num, t_den=lo_den)
     )
     ids = (
         cand0.select(F.col("doc_a").alias("doc_id"))
@@ -1858,7 +1849,7 @@ def blocking_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_a", "doc_b", "n_common", "sz_a", "sz_b")
     )
-    scored, _ = tracked_local_checkpoint(scored, register=True)
+    scored, _ = tracked_local_checkpoint(scored)
 
     def ok(n: int, d: int):
         # exact-integer J >= n/d on (possibly null) joined score columns;
@@ -1876,7 +1867,6 @@ def blocking_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for n, d in BT_THRESHOLDS
             ]
         ),
-        register=True,
     )
     truth = F.broadcast(truth)
     bands = _band_rows(_minhash_doc_tbl(spark, sf_dir))
@@ -1921,7 +1911,6 @@ def blocking_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
                     for n, d in BT_THRESHOLDS
                 ],
             ),
-            register=True,
         )
         for n, d in BT_THRESHOLDS:
             r = wide.crossJoin(truth).select(
@@ -3267,9 +3256,7 @@ def dsir_width_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "documents").select("doc_id", "source", "text")
     )
     assert all(DSIR_REF_B % b == 0 for b in DSIR_WIDTHS)
-    f_ref, _ = tracked_local_checkpoint(
-        dsir_feats(docs, DSIR_REF_B), register=True
-    )
+    f_ref, _ = tracked_local_checkpoint(dsir_feats(docs, DSIR_REF_B))
 
     def wq(b: int) -> DataFrame:
         feats = (
@@ -3291,7 +3278,6 @@ def dsir_width_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("wq").alias("wq_ref"),
             F.col("kept").alias("kept_ref"),
         ),
-        register=True,
     )
     outs = []
     for b in DSIR_WIDTHS:
@@ -3508,9 +3494,7 @@ def dsir_width_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # happens once instead of |widths|+1 times.
     finest = max(set(DSIR_OVL_WIDTHS) | {DSIR_REF_B})
     assert all(finest % b == 0 for b in DSIR_OVL_WIDTHS)
-    f_fine, _ = tracked_local_checkpoint(
-        dsir_feats(docs, finest), register=True
-    )
+    f_fine, _ = tracked_local_checkpoint(dsir_feats(docs, finest))
 
     def feats_at(b: int) -> DataFrame:
         if b == finest:
@@ -3533,7 +3517,6 @@ def dsir_width_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the union's three branches don't re-run the reference kernel
     ref, _ = tracked_local_checkpoint(
         sel(DSIR_REF_B).select("doc_id", F.col("s").alias("s_ref")),
-        register=True,
     )
     outs = []
     for b in DSIR_OVL_WIDTHS:
@@ -5411,7 +5394,7 @@ def graph_centrality_prior(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     ).alias("e")
     sym = pe.select(both).select("e.src", "e.dst", "e.w").distinct()
-    sym, _ = tracked_local_checkpoint(sym, register=True)
+    sym, _ = tracked_local_checkpoint(sym)
     # check_sinks=False: sym is the explicit closure of both directions
     rank = pagerank_integer(sym, GCP_ROUNDS, check_sinks=False)
     docs = load(spark, sf_dir, "documents").select(
@@ -5569,7 +5552,7 @@ def hnsw_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the full-corpus graph is the dominant subplan and BOTH searches need
     # it — build and materialize it once (review finding: calling the two
     # registered queries here built identical edge lists twice)
-    edges, _ = tracked_local_checkpoint(nsw_edges(e, EMB_DIM), register=True)
+    edges, _ = tracked_local_checkpoint(nsw_edges(e, EMB_DIM))
     h = hnsw_beam_topk(e, qs, EMB_DIM, 3, base_edges=edges).select(
         "q_id", "c_id", F.lit(1).alias("h")
     )
@@ -7201,7 +7184,7 @@ def _bpe_train(spark: SparkSession, sf_dir: str):
         if BPE_ROUNDS > 3 and r % 3 == 0 and r < BPE_ROUNDS:
             from ..operators.checkpoints import tracked_local_checkpoint
 
-            vocab, _ = tracked_local_checkpoint(vocab, register=True)
+            vocab, _ = tracked_local_checkpoint(vocab)
     return rows, vocab
 
 
@@ -9415,7 +9398,7 @@ def heaps_fit_from(docs: DataFrame, first: DataFrame) -> DataFrame:
     # BOTH the fit and the output rows consume it — materialize once
     from ..operators.checkpoints import tracked_local_checkpoint
 
-    ck, _ = tracked_local_checkpoint(ck, register=True)
+    ck, _ = tracked_local_checkpoint(ck)
     arr = ck.agg(
         F.array_sort(F.collect_list(F.struct("ckpt", "lx", "ly"))).alias("ts"),
         F.count(F.lit(1)).alias("p"),
@@ -9835,7 +9818,7 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so the corpus-wide top-k subplan doesn't re-execute per step
     from ..operators.checkpoints import tracked_local_checkpoint
 
-    cand, _ = tracked_local_checkpoint(cand, register=True)
+    cand, _ = tracked_local_checkpoint(cand)
     a = cand.select(F.col("c_id").alias("a"), F.col("c_vec").alias("va"))
     b = cand.select(F.col("c_id").alias("b"), F.col("c_vec").alias("vb"))
     ps = (
@@ -9847,7 +9830,7 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the K*K pairwise-sim frame feeds every greedy step — materialize its
     # ~K^2 rows once instead of re-deriving the cross join per step
-    ps, _ = tracked_local_checkpoint(ps, register=True)
+    ps, _ = tracked_local_checkpoint(ps)
     pool = cand.select("c_id", "q_sim")
     lam, inv = F.lit(MMR_LAMBDA), F.lit(1.0 - MMR_LAMBDA)
     selected = (
@@ -9870,7 +9853,7 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         # self-contained once materialized, so the superseded rung is
         # released immediately (the fitter-ladder discipline) instead of
         # pinning MMR_SELECT obsolete frames until teardown.
-        selected, ids = tracked_local_checkpoint(selected, register=True)
+        selected, ids = tracked_local_checkpoint(selected)
         if prev_ids:
             release(spark, prev_ids)
         prev_ids = ids
@@ -10345,13 +10328,6 @@ def winnow_fp_from(
         .orderBy("pos")
         .rowsBetween(W.currentRow, w_win - 1)
     )
-    # pin the window's doc_id exchange at cluster parallelism: the min-key
-    # scan over every gram window is compute-dense behind a ~16 MB shuffle,
-    # so AQE's byte-based coalescing ran it on ~12 tasks (measured 11.2 s
-    # of runtime there at sf0.1); the explicit REPARTITION_BY_NUM satisfies
-    # the window's clustering requirement, so no exchange is added
-    par = d.sparkSession.sparkContext.defaultParallelism
-    grams = grams.repartition(par, "doc_id")
     sel = grams.select(
         "pos",
         "doc_id",

@@ -2722,7 +2722,7 @@ def _exact_median_by_selection(slopes: DataFrame) -> DataFrame:
     Returns (seg, n_pairs_exact, slope_exact)."""
     from ..operators.checkpoints import tracked_local_checkpoint
 
-    slopes, _ = tracked_local_checkpoint(slopes, register=True)
+    slopes, _ = tracked_local_checkpoint(slopes)
     rank = F.lit(0.5) * (F.col("n_pairs_exact") - 1).cast("double")
     stats = (
         slopes.groupBy("seg")
@@ -2843,7 +2843,7 @@ def theil_sen_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the calendar-bounded (seg, day) frame feeds four branches (ranked,
     # exact a/b sides, ndays) — checkpoint once so orders+customer scan once
-    daily, _ = tracked_local_checkpoint(_seg_daily(spark, sf_dir), register=True)
+    daily, _ = tracked_local_checkpoint(_seg_daily(spark, sf_dir))
     return theil_sen_sampled_from_seg_daily(daily)
 
 
@@ -2969,7 +2969,7 @@ def kendall_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact branch is the audit-only CALENDAR²-bounded stage."""
     from ..operators.checkpoints import tracked_local_checkpoint
 
-    daily, _ = tracked_local_checkpoint(_seg_daily(spark, sf_dir), register=True)
+    daily, _ = tracked_local_checkpoint(_seg_daily(spark, sf_dir))
     return kendall_sampled_from_seg_daily(daily)
 
 
@@ -3659,7 +3659,7 @@ def markov_stationary_from_counts(c0: DataFrame, states: DataFrame) -> DataFrame
             F.expr(f"(c * CAST({MARKOV_QSCALE} AS BIGINT)) DIV r").alias("q"),
         )
     )
-    q, _ = tracked_local_checkpoint(q, register=True)
+    q, _ = tracked_local_checkpoint(q)
     # state count rides along as a broadcast 1-row frame — no driver-side
     # action, the plan stays fully lazy (r10 verdict note)
     nn = states.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
@@ -3667,7 +3667,7 @@ def markov_stationary_from_counts(c0: DataFrame, states: DataFrame) -> DataFrame
         F.col("s").alias("state"),
         F.expr(f"CAST({MARKOV_SCALE} AS BIGINT) DIV n").alias("pi"),
     )
-    pi, _ = tracked_local_checkpoint(pi, register=True)
+    pi, _ = tracked_local_checkpoint(pi)
     prev = None
     for _k in range(MARKOV_ROUNDS):
         contrib = (
@@ -3686,7 +3686,7 @@ def markov_stationary_from_counts(c0: DataFrame, states: DataFrame) -> DataFrame
                 F.expr("(pi + coalesce(s, CAST(0 AS BIGINT))) DIV 2").alias("pi"),
             )
         )
-        nxt, _ = tracked_local_checkpoint(nxt, register=True)
+        nxt, _ = tracked_local_checkpoint(nxt)
         prev, pi = pi, nxt
     delta = (
         pi.join(
@@ -5285,7 +5285,7 @@ def shortest_path_from_pairs(pr: DataFrame) -> DataFrame:
     from ..operators.checkpoints import tracked_local_checkpoint
     from ..operators.graph import bellman_ford
 
-    pr, _ = tracked_local_checkpoint(pr.select("pa", "pb", "cnt"), register=True)
+    pr, _ = tracked_local_checkpoint(pr.select("pa", "pb", "cnt"))
     w = F.round(F.lit(1.0) / F.col("cnt").cast("double"), 6)
     both = F.explode(
         F.array(
@@ -5593,7 +5593,7 @@ def kcore_from_pairs(pr: DataFrame) -> DataFrame:
     from ..operators.checkpoints import tracked_local_checkpoint
     from ..operators.graph import k_core_survivors
 
-    e, _ = tracked_local_checkpoint(sym_pair_edges(pr), register=True)
+    e, _ = tracked_local_checkpoint(sym_pair_edges(pr))
     parts = []
     for k in KC_KS:
         prev, fin = k_core_survivors(e, k, KC_ROUNDS, checkpoint_edges=False)
@@ -5706,7 +5706,7 @@ def core_numbers_from_pairs(pr: DataFrame) -> DataFrame:
     from ..operators.checkpoints import tracked_local_checkpoint
     from ..operators.graph import core_numbers
 
-    e, _ = tracked_local_checkpoint(sym_pair_edges(pr), register=True)
+    e, _ = tracked_local_checkpoint(sym_pair_edges(pr))
     # checkpoint_edges=False: copurchase_pairs emits one row per unordered
     # pair, so the symmetrized union is distinct by construction
     return core_numbers(
@@ -5857,7 +5857,6 @@ def two_hop_from_pairs(pr: DataFrame) -> DataFrame:
     # build ONCE instead of re-running the lineitem self-join per reference
     e, _ = tracked_local_checkpoint(
         sym_pair_edges(pr, with_cnt=True).withColumnRenamed("w", "cnt"),
-        register=True,
     )
     w_edge = Window.partitionBy("src").orderBy(F.col("cnt").desc(), F.col("dst"))
     top = (
@@ -11598,7 +11597,6 @@ def logistic_irls(spark: SparkSession, sf_dir: str) -> DataFrame:
                     + (d6("h00") * d6("g1") - d6("h01") * d6("g0")) / det
                 ).alias("b1"),
             ),
-            register=True,
         )
         if beta_ids is not None:
             release(spark, beta_ids)
@@ -11763,7 +11761,6 @@ def boosted_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
         spine.crossJoin(F.broadcast(f0)).select(
             "z", "m1", "m0", F.col("fu0").alias("fu")
         ),
-        register=True,
     )
     w = W.orderBy("z").rowsBetween(W.unboundedPreceding, W.currentRow)
     d = lambda c: F.col(c).cast("double")  # noqa: E731
@@ -11820,7 +11817,6 @@ def boosted_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("b.vl").alias("vl"),
                 F.col("b.vr").alias("vr"),
             ),
-            register=True,
         )
         new_cur, new_ids = tracked_local_checkpoint(
             cur.crossJoin(F.broadcast(best)).select(
@@ -11840,7 +11836,6 @@ def boosted_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("bigint")
                 .alias("fu"),
             ),
-            register=True,
         )
         release(spark, cur_ids)
         cur, cur_ids = new_cur, new_ids
@@ -11868,7 +11863,6 @@ def boosted_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "mse_after"
                 ),
             ),
-            register=True,
         )
         out = row if out is None else out.unionByName(row)
     return out.orderBy("round")
@@ -12206,7 +12200,6 @@ def gaussian_mixture_em(spark: SparkSession, sf_dir: str) -> DataFrame:
                     dd("q2") / dd("n2") - mu2 * mu2, F.lit(EM_VAR_FLOOR)
                 ).alias("v2"),
             ),
-            register=True,
         )
         if params_ids is not None:
             release(spark, params_ids)
@@ -12491,7 +12484,6 @@ def als_rank1(spark: SparkSession, sf_dir: str) -> DataFrame:
         o.join(li, o["o_orderkey"] == li["l_orderkey"])
         .groupBy(F.col("o_custkey").alias("c"), F.col("l_partkey").alias("p"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("r")),
-        register=True,
     )
     d = lambda c: F.col(c).cast("double")  # noqa: E731
     mq = lambda col: F.round(col * F.lit(1e6)).cast("bigint")  # noqa: E731
@@ -12523,17 +12515,13 @@ def als_rank1(spark: SparkSession, sf_dir: str) -> DataFrame:
     # once the frame that DEPENDS on it has itself been checkpointed.
     v_ids = u_ids = None
     for _ in range(ALS_ROUNDS):
-        u, new_u_ids = tracked_local_checkpoint(
-            half(r, v, "c", "p"), register=True
-        )
+        u, new_u_ids = tracked_local_checkpoint(half(r, v, "c", "p"))
         if u_ids is not None:
             release(spark, u_ids)
         u_ids = new_u_ids
         if v_ids is not None:
             release(spark, v_ids)
-        v, v_ids = tracked_local_checkpoint(
-            half(r, u, "p", "c"), register=True
-        )
+        v, v_ids = tracked_local_checkpoint(half(r, u, "p", "c"))
     u = u.select("c", F.col("fu").alias("uu"))
     v = v.select("p", F.col("fu").alias("vu"))
     fit = r.join(u, "c").join(v, "p")

@@ -67,6 +67,11 @@ def fan_out(df: DataFrame) -> DataFrame:
     already yields >= cores partitions and this is a no-op (no shuffle
     added).
 
+    This is the engine's one explicitly sized repartition. Every
+    post-shuffle stage is sized by AQE coalescing (session.py), but AQE
+    cannot split a scan: a single-row-group file is one partition until
+    something shuffles it.
+
     The estimate uses the scan's file list + sizes (driver-side metadata
     only) instead of ``df.rdd.getNumPartitions()``, which would force a
     physical-plan materialization on every query build.

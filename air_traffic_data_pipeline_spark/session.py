@@ -3,8 +3,11 @@ large cluster deployment would be (AQE on, sane shuffle partitioning, Arrow).
 
 On a real 1000-executor cluster the same builder applies; only master/memory
 change. Shuffle partitions default to the local core count — at cluster scale
-set ``spark.sql.shuffle.partitions`` to ~2-3x total cores or rely on AQE
-coalescing, which is enabled here.
+set ``spark.sql.shuffle.partitions`` to ~2-3x total cores.
+
+AQE partition coalescing, enabled here, sizes every post-shuffle stage from
+its measured shuffle bytes. Plans add no per-call-site ``repartition`` to
+size a shuffle; the one scan-side exception is ``plans.tables.fan_out``.
 """
 
 from __future__ import annotations

@@ -163,7 +163,7 @@ def incremental_near_dup_survivors(spark: SparkSession, sf_dir: str) -> DataFram
         out = docs.join(kills, "doc_id", "left_anti").select(
             "doc_id", "lang", "n_chars"
         )
-        out, _ = tracked_local_checkpoint(out, register=True)
+        out, _ = tracked_local_checkpoint(out)
         return out
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -231,7 +231,7 @@ def incremental_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.max_by("url_of_max", "max_doc").alias("kept_url"),
             )
         )
-        out, _ = tracked_local_checkpoint(merged, register=True)
+        out, _ = tracked_local_checkpoint(merged)
         return out
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -310,7 +310,7 @@ def incremental_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n").cast("double").alias("n_docs"),
         )
         tf = spark.read.parquet(f"{post_dir}/batch=*")
-        out, _ = tracked_local_checkpoint(bm25_rank_from(tf, avgdl), register=True)
+        out, _ = tracked_local_checkpoint(bm25_rank_from(tf, avgdl))
         return out
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -486,7 +486,7 @@ def incremental_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             else spark.createDataFrame([], "vec_id long")
         )
         out = e.join(kills, "vec_id", "left_anti").select("vec_id", "label")
-        out, _ = tracked_local_checkpoint(out, register=True)
+        out, _ = tracked_local_checkpoint(out)
         return out
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -581,7 +581,7 @@ def incremental_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         docs = load(spark, sf_dir, "documents").select("doc_id", "text")
         out = repeated_span_accounting(matched, docs)
-        out, _ = tracked_local_checkpoint(out, register=True)
+        out, _ = tracked_local_checkpoint(out)
         return out
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -639,7 +639,7 @@ def incremental_cross_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         merged = spark.read.parquet(f"{part_dir}/batch=*").distinct()
         out = cross_source_matrix(merged)
-        out, _ = tracked_local_checkpoint(out, register=True)
+        out, _ = tracked_local_checkpoint(out)
         return out
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -719,7 +719,7 @@ def incremental_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("rj.score").alias("rejected_score"),
             F.round(F.col("ch.score") - F.col("rj.score"), 6).alias("margin"),
         ).filter(F.col("margin") > 0)
-        out, _ = tracked_local_checkpoint(out, register=True)
+        out, _ = tracked_local_checkpoint(out)
         return out
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -784,9 +784,7 @@ def incremental_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("n_tokens").cast("bigint").alias("n_tokens"),
             )
         )
-        out, _ = tracked_local_checkpoint(
-            token_budget_from_per_source(per), register=True
-        )
+        out, _ = tracked_local_checkpoint(token_budget_from_per_source(per))
         return out
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -831,9 +829,7 @@ def _incremental_stateless(
             q.processAllAvailable()
         finally:
             q.stop()
-        out, _ = tracked_local_checkpoint(
-            spark.read.parquet(f"{part_dir}/batch=*"), register=True
-        )
+        out, _ = tracked_local_checkpoint(spark.read.parquet(f"{part_dir}/batch=*"))
         return out
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -909,7 +905,6 @@ def incremental_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         out, _ = tracked_local_checkpoint(
             calibration_from(spark.read.parquet(f"{part_dir}/batch=*")),
-            register=True,
         )
         return out
     finally:
@@ -959,7 +954,6 @@ def incremental_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         out, _ = tracked_local_checkpoint(
             lm_kn_from_pairs(spark.read.parquet(f"{pairs_dir}/batch=*")),
-            register=True,
         )
         return out
     finally:
@@ -1022,9 +1016,7 @@ def incremental_heaps(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("w")
             .agg(F.min("fd").alias("fd"))
         )
-        out, _ = tracked_local_checkpoint(
-            heaps_fit_from(docs, first), register=True
-        )
+        out, _ = tracked_local_checkpoint(heaps_fit_from(docs, first))
         return out
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -1091,9 +1083,7 @@ def incremental_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("nll_u").cast("bigint").alias("nll_u"),
             )
         )
-        out, _ = tracked_local_checkpoint(
-            temperature_finish(merged), register=True
-        )
+        out, _ = tracked_local_checkpoint(temperature_finish(merged))
         return out
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -1149,7 +1139,7 @@ def incremental_doremi(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.read.parquet(f"{pairs_dir}/batch=*")
         ).select("doc_id", "xent")
         src = spark.read.parquet(f"{src_dir}/batch=*")
-        out, _ = tracked_local_checkpoint(doremi_from(lm, src), register=True)
+        out, _ = tracked_local_checkpoint(doremi_from(lm, src))
         return out
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -1286,7 +1276,7 @@ def incremental_pretrain_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame
         out = pretrain_release_accounting(
             surv.select("doc_id", "lang", F.col("n_words").alias("n_tok"))
         )
-        out, _ = tracked_local_checkpoint(out, register=True)
+        out, _ = tracked_local_checkpoint(out)
         return out
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -1342,7 +1332,6 @@ def incremental_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark.read.parquet(f"{dirs['cls']}/batch=*"),
                 spark.read.parquet(f"{dirs['qtok']}/batch=*"),
             ),
-            register=True,
         )
         return out
     finally:
@@ -1391,7 +1380,6 @@ def incremental_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark.read.parquet(f"{voc_dir}/batch=*"),
                 spark.read.parquet(f"{nd_dir}/batch=*"),
             ),
-            register=True,
         )
         return out
     finally:
@@ -1437,7 +1425,6 @@ def incremental_jsd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         out, _ = tracked_local_checkpoint(
             jsd_from_counts(spark.read.parquet(f"{part_dir}/batch=*")),
-            register=True,
         )
         return out
     finally:
@@ -1564,7 +1551,7 @@ def incremental_srp_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
             .orderBy("doc_a", "doc_b")
         )
-        out, _ = tracked_local_checkpoint(out, register=True)
+        out, _ = tracked_local_checkpoint(out)
         return out
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -1626,7 +1613,7 @@ def incremental_isotonic(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("s").cast("bigint").alias("s"),
             )
         )
-        out, _ = tracked_local_checkpoint(isotonic_from_bins(merged), register=True)
+        out, _ = tracked_local_checkpoint(isotonic_from_bins(merged))
         return out
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -1708,7 +1695,7 @@ def incremental_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("rank") <= PRIO_K)
             .orderBy("source", "rank")
         )
-        out, _ = tracked_local_checkpoint(out, register=True)
+        out, _ = tracked_local_checkpoint(out)
         return out
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -1967,7 +1954,7 @@ def incremental_priority_sample_retract(
             .filter(F.col("rank") <= PRIO_K)
             .orderBy("source", "rank")
         )
-        out, _ = tracked_local_checkpoint(out, register=True)
+        out, _ = tracked_local_checkpoint(out)
         return out
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -2221,7 +2208,7 @@ def incremental_near_dup_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = docs.join(live_kills, "doc_id", "left_anti").select(
             "doc_id", "lang", "n_chars"
         )
-        out, _ = tracked_local_checkpoint(out, register=True)
+        out, _ = tracked_local_checkpoint(out)
         return out
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -2270,7 +2257,6 @@ def incremental_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         out, _ = tracked_local_checkpoint(
             dsir_from_feats(spark.read.parquet(f"{base}/feats/batch=*")),
-            register=True,
         )
         return out
     finally:
@@ -2392,7 +2378,7 @@ def incremental_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             return spark.createDataFrame([], "src long, dst long, e_sim double")
         fwd = spark.read.parquet(f"{fwd_dir}/epoch={max(eps)}")
         v = nsw_prep(load(spark, sf_dir, "embeddings"), EMB_DIM)
-        out, _ = tracked_local_checkpoint(nsw_finish(fwd, v), register=True)
+        out, _ = tracked_local_checkpoint(nsw_finish(fwd, v))
         return out
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -2564,9 +2550,7 @@ def incremental_ann_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
             dead, "vec_id", "left_anti"
         )
         v = nsw_prep(surviving, EMB_DIM)
-        out, _ = tracked_local_checkpoint(
-            nsw_finish(fwd_top_m(pairs), v), register=True
-        )
+        out, _ = tracked_local_checkpoint(nsw_finish(fwd_top_m(pairs), v))
         return out
     finally:
         shutil.rmtree(base, ignore_errors=True)

@@ -633,7 +633,7 @@ def incremental_cms_user_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cms_est",
             (F.col("cms_est") - F.col("exact_freq")).alias("overcount"),
         )
-        out, _ = tracked_local_checkpoint(out, register=True)
+        out, _ = tracked_local_checkpoint(out)
         return out
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -703,7 +703,7 @@ def incremental_topk_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "rank",
             )
         )
-        out, _ = tracked_local_checkpoint(out, register=True)
+        out, _ = tracked_local_checkpoint(out)
         return out
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -802,7 +802,7 @@ def incremental_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = rows[0]
         for r in rows[1:]:
             out = out.unionByName(r)
-        out, _ = tracked_local_checkpoint(out, register=True)
+        out, _ = tracked_local_checkpoint(out)
         return out
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -896,7 +896,7 @@ def incremental_quantile_value(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
         )
-        out, _ = tracked_local_checkpoint(out, register=True)
+        out, _ = tracked_local_checkpoint(out)
         return out
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -1078,7 +1078,7 @@ def incremental_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         states = spark.read.parquet(f"{base}/types/batch=*").distinct()
         out = markov_stationary_from_counts(c0, states)
-        out, _ = tracked_local_checkpoint(out, register=True)
+        out, _ = tracked_local_checkpoint(out)
         return out
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -1371,7 +1371,7 @@ def incremental_markov_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
         )
         out = markov_stationary_from_counts(c0, states)
-        out, _ = tracked_local_checkpoint(out, register=True)
+        out, _ = tracked_local_checkpoint(out)
         return out
     finally:
         shutil.rmtree(base, ignore_errors=True)

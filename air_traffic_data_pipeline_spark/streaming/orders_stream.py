@@ -159,9 +159,7 @@ def incremental_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
             q.stop()
 
         per = rfm_merge_partials(spark.read.parquet(f"{part_dir}/batch=*"))
-        out, _ = tracked_local_checkpoint(
-            rfm_from_per_customer(per), register=True
-        )
+        out, _ = tracked_local_checkpoint(rfm_from_per_customer(per))
         return out
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -302,7 +300,7 @@ def _incremental_from_pair_state(spark: SparkSession, sf_dir: str, tag, kernel) 
             .groupBy("pa", "pb")
             .agg(F.sum("cnt").cast("bigint").alias("cnt"))
         )
-        out, _ = tracked_local_checkpoint(kernel(merged), register=True)
+        out, _ = tracked_local_checkpoint(kernel(merged))
         return out
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -380,9 +378,7 @@ def incremental_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.array_repeat(F.col("x"), _int_count_guarded(F.col("c_big")))
             ).alias("x")
         )
-        out, _ = tracked_local_checkpoint(
-            quantile_sketch_from(xs), register=True
-        )
+        out, _ = tracked_local_checkpoint(quantile_sketch_from(xs))
         return out
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -680,7 +676,7 @@ def incremental_quantile_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.array_repeat(F.col("x"), _int_count_guarded(F.col("c_big")))
             ).alias("x")
         )
-        out, _ = tracked_local_checkpoint(quantile_sketch_from(xs), register=True)
+        out, _ = tracked_local_checkpoint(quantile_sketch_from(xs))
         return out
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -770,9 +766,7 @@ def incremental_rfm_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("c").cast("bigint").alias("freq"),
             F.sum(F.col("p") * F.col("c")).cast("double").alias("monetary"),
         )
-        out, _ = tracked_local_checkpoint(
-            rfm_from_per_customer(per), register=True
-        )
+        out, _ = tracked_local_checkpoint(rfm_from_per_customer(per))
         return out
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -888,9 +882,7 @@ def incremental_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("l_returnflag")
             .agg(*[F.sum(c).cast("decimal(38,0)").alias(c) for c in cols])
         )
-        out, _ = tracked_local_checkpoint(
-            ols_solve_from_moments(merged), register=True
-        )
+        out, _ = tracked_local_checkpoint(ols_solve_from_moments(merged))
         return out
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -992,7 +984,6 @@ def incremental_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark.read.parquet(f"{ex_dir}/batch=*"),
                 spark.read.parquet(f"{rep_dir}/batch=*"),
             ),
-            register=True,
         )
         return out
     finally:
@@ -1044,7 +1035,7 @@ def incremental_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
             q.stop()
 
         merged = spark.read.parquet(f"{mins_dir}/batch=*")
-        out, _ = tracked_local_checkpoint(kmv_from_values(merged), register=True)
+        out, _ = tracked_local_checkpoint(kmv_from_values(merged))
         return out
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -1185,9 +1176,7 @@ def incremental_shortest_path_retract(spark: SparkSession, sf_dir: str) -> DataF
             .agg(F.sum("c").cast("bigint").alias("cnt"))
             .filter(F.col("cnt") > 0)
         )
-        out, _ = tracked_local_checkpoint(
-            shortest_path_from_pairs(net), register=True
-        )
+        out, _ = tracked_local_checkpoint(shortest_path_from_pairs(net))
         return out
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -1243,7 +1232,7 @@ def _incremental_from_daily_state(
                 F.sum("n_orders").cast("bigint").alias("n_orders"),
             )
         )
-        out, _ = tracked_local_checkpoint(kernel(merged), register=True)
+        out, _ = tracked_local_checkpoint(kernel(merged))
         return out
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -1364,9 +1353,7 @@ def incremental_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("o_custkey")
             .agg(F.sum("cents").cast("bigint").alias("cents"))
         )
-        out, _ = tracked_local_checkpoint(
-            gini_from_per_customer(merged), register=True
-        )
+        out, _ = tracked_local_checkpoint(gini_from_per_customer(merged))
         return out
     finally:
         shutil.rmtree(base, ignore_errors=True)
@@ -1412,7 +1399,6 @@ def incremental_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         out, _ = tracked_local_checkpoint(
             km_from_spans(spark.read.parquet(f"{part_dir}/batch=*")),
-            register=True,
         )
         return out
     finally:
@@ -1536,7 +1522,7 @@ def incremental_seasonal_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("n_orders") > 0)
         )
         out, _ = tracked_local_checkpoint(
-            seasonal_from_daily(merged.select("dn", "cents")), register=True
+            seasonal_from_daily(merged.select("dn", "cents"))
         )
         return out
     finally:
@@ -1615,8 +1601,8 @@ def _incremental_from_seg_daily_state(
                 F.sum("n_orders").cast("bigint").alias("n_orders"),
             )
         )
-        merged, _ = tracked_local_checkpoint(merged, register=True)
-        out, _ = tracked_local_checkpoint(kernel(merged), register=True)
+        merged, _ = tracked_local_checkpoint(merged)
+        out, _ = tracked_local_checkpoint(kernel(merged))
         return out
     finally:
         shutil.rmtree(base, ignore_errors=True)

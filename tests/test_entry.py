@@ -129,7 +129,7 @@ def test_reliable_checkpoint_switch(spark, monkeypatch, tmp_path):
     monkeypatch.setenv("SPARK_GRAFT_RELIABLE_CHECKPOINT", "1")
     monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path))
     df = spark.range(32).selectExpr("id", "id * 2 as v")
-    out, ids = checkpoints.tracked_local_checkpoint(df, register=True)
+    out, ids = checkpoints.tracked_local_checkpoint(df)
     assert ids == set()  # nothing to unpersist: the data lives as files
     assert _persistent_rdd_count(spark) == base
     assert sorted(r.v for r in out.collect()) == [2 * i for i in range(32)]

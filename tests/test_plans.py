@@ -5,6 +5,7 @@ be visible in the executed plan, not just hoped for.
 - column pruning reaches the scan (ReadSchema)
 - dimension joins broadcast; the binned radius join is a shuffle equi-join
 - expression pipelines run inside WholeStageCodegen
+- post-shuffle stages are sized by AQE, not by a user-numbered repartition
 """
 
 from __future__ import annotations
@@ -388,7 +389,7 @@ def test_no_query_returns_unhashable_cells(spark, monkeypatch):
     monkeypatch.setattr(
         checkpoints,
         "tracked_local_checkpoint",
-        lambda df, eager=True, register=False: (
+        lambda df: (
             df.sparkSession.createDataFrame([], df.schema),
             set(),
         ),
@@ -932,6 +933,33 @@ def test_shortest_path_rounds_are_joins_not_cartesian(spark):
 
     p = plan(relational.shortest_path(spark, SF), "simple")
     assert "CartesianProduct" not in p and "BatchEvalPython" not in p
+
+
+def test_post_shuffle_stages_are_sized_by_aqe_not_repartition(spark, monkeypatch):
+    """AQE coalescing is the one mechanism that sizes a post-shuffle stage:
+    the SRP verify joins, the winnow window and the Bellman-Ford edge list
+    plan without a user-numbered ``repartition`` (REPARTITION_BY_NUM),
+    which AQE would never coalesce. Planning only, apart from the SRP
+    build's own checkpoints; Bellman-Ford runs with the checkpoint stubbed
+    to identity so its edge frame's plan stays visible."""
+    from air_traffic_data_pipeline_spark.operators import checkpoints
+    from air_traffic_data_pipeline_spark.operators.graph import bellman_ford
+    from air_traffic_data_pipeline_spark.plans import llm
+    from air_traffic_data_pipeline_spark.plans.tables import load
+
+    def executed(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    assert "REPARTITION_BY_NUM" not in executed(llm.srp_near_dup(spark, SF))
+    winnow = llm.winnow_fp_from(load(spark, SF, "documents"))
+    assert "REPARTITION_BY_NUM" not in executed(winnow)
+
+    monkeypatch.setattr(checkpoints, "tracked_local_checkpoint", lambda df: (df, set()))
+    edges = spark.createDataFrame(
+        [(1, 2, 1.0), (2, 3, 0.5), (1, 3, 2.0)], "src long, dst long, w double"
+    )
+    sources = spark.createDataFrame([(1,)], "node long")
+    assert "REPARTITION_BY_NUM" not in executed(bellman_ford(edges, sources, 2))
 
 
 def test_global_shard_plan_never_windows_full_doc_table(spark):

@@ -71,9 +71,9 @@ def main() -> None:
     real_ckpt = checkpoints.tracked_local_checkpoint
     captured: list[str] = []
 
-    def recording_ckpt(df, eager=True, register=False):
+    def recording_ckpt(df):
         captured.append(_fmt(df))
-        return real_ckpt(df, eager=eager, register=register)
+        return real_ckpt(df)
 
     for name in names:
         if name not in qs:
