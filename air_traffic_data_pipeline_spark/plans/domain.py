@@ -300,50 +300,30 @@ def incremental_noise_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     (binned equi radius join), the landed partials are cell-keyed and
     compact, and the final merge re-aggregates partials — never raw pairs.
     """
-    import shutil
-    import uuid
+    from ..streaming.events_stream import (
+        EVENTS_SCHEMA,
+        Landing,
+        _stage_late_batches,
+        fold_stream,
+    )
 
-    from ..operators.checkpoints import tracked_local_checkpoint
-    from ..streaming.events_stream import EVENTS_SCHEMA, _stage_late_batches
-
-    d = _stage_late_batches(spark, sf_dir)
-    # unique dir per invocation: a previously returned (lazy) result must
-    # never see its partials deleted by a later call. The try/finally below
-    # removes it on EVERY exit path — a failed run must not leak a dir.
-    base = f"{d.rstrip('/')}_noise_mv_{uuid.uuid4().hex[:8]}"
-
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
+    def on_batch(batch_df: DataFrame, st: Landing) -> None:
         sources = states_from_events(batch_df).select(
             F.col("latitude").alias("lat"),
             F.col("longitude").alias("lon"),
             phase_db(F.col("on_ground"), F.col("vertical_rate")).alias("src_db"),
         )
-        partial = noise_power(spark, sources, FLAGSHIP_STEP_M, FLAGSHIP_N_STEPS)
-        partial.write.mode("overwrite").parquet(f"{base}/batch={epoch_id}")
+        st.land("power", noise_power(spark, sources, FLAGSHIP_STEP_M, FLAGSHIP_N_STEPS))
 
-    try:
-        src = (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
+    def finish(st: Landing) -> DataFrame:
+        merged = st.landed("power").groupBy("g_lat", "g_lon").agg(
+            F.sum("sum_power").alias("sum_power")
         )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        return noise_db(merged)
 
-        # partition discovery adds `batch`; the merge's groupBy drops it
-        partials = spark.read.parquet(base)
-        merged = partials.groupBy("g_lat", "g_lon").agg(F.sum("sum_power").alias("sum_power"))
-        # materialize (lineage-truncating) so the partials dir can be removed
-        # now; the checkpoint is REGISTERED so entry()'s teardown releases
-        # its block-manager storage (tests/test_entry.py)
-        out, _ = tracked_local_checkpoint(noise_db(merged))
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    return fold_stream(
+        spark, _stage_late_batches(spark, sf_dir), EVENTS_SCHEMA, on_batch, finish
+    )
 
 
 def incremental_sql() -> str:

@@ -21,8 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from ..session import tune_session
-from .events_stream import _STAGE_ROOT
+from .events_stream import _STAGE_ROOT, Landing, fold_stream
 
 DOCS_SCHEMA = T.StructType(
     [
@@ -72,34 +71,18 @@ def _stage_doc_batches(spark: SparkSession, sf_dir: str) -> str:
 def incremental_near_dup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Survivors after streaming incremental near-dup dedup — bitwise equal
     to the one-shot ``near_dup_survivors`` (its SQL is the oracle)."""
-    import os
-    import shutil
-    import uuid as _uuid
-
-    from ..operators.checkpoints import tracked_local_checkpoint
     from ..plans.llm import _band_rows, doc_tbl_from
     from ..plans.tables import load
 
-    tune_session(spark)
-    d = _stage_doc_batches(spark, sf_dir)
-    base = f"{d.rstrip('/')}_state_{_uuid.uuid4().hex[:8]}"
-    state_dir = f"{base}/doc_tbl"
-    kills_dir = f"{base}/kills"
-
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
+    def on_batch(batch_df: DataFrame, st: Landing) -> None:
         # land THIS batch's doc table first, then read both sides back from
         # parquet: the expensive shingle explode + aggregate executes exactly
         # once per batch (the write), instead of once per lazy consumer —
         # the batch sibling of _minhash_doc_tbl's persist (its docstring
-        # measures the recompute at ~2x runtime). mode=overwrite on the
-        # epoch-scoped path makes the state write idempotent under
-        # foreachBatch's at-least-once batch replay (a retry of epoch N
-        # rewrites batch=N instead of duplicating its rows).
-        doc_tbl_from(batch_df).write.mode("overwrite").parquet(
-            f"{state_dir}/batch={epoch_id}"
-        )
-        batch_tbl = spark.read.parquet(f"{state_dir}/batch={epoch_id}")
-        all_tbl = spark.read.parquet(f"{state_dir}/batch=*")
+        # measures the recompute at ~2x runtime).
+        st.land("doc_tbl", doc_tbl_from(batch_df))
+        batch_tbl = st.current("doc_tbl")
+        all_tbl = st.landed("doc_tbl")
         # candidates: any band shared between an incoming doc (b side) and
         # any earlier-id doc already present (corpus or same batch)
         a = _band_rows(all_tbl).alias("a")
@@ -135,38 +118,19 @@ def incremental_near_dup_survivors(spark: SparkSession, sf_dir: str) -> DataFram
             .select("doc_b")
             .distinct()
         )
-        # same idempotence discipline for the kill list: epoch-scoped
-        # overwrite, unioned back with a batch=* glob at the end
-        kills.write.mode("overwrite").parquet(f"{kills_dir}/batch={epoch_id}")
+        st.land("kills", kills)
 
-    try:
-        src = (
-            spark.readStream.schema(DOCS_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
+    def finish(st: Landing) -> DataFrame:
+        kills = st.landed("kills").select(F.col("doc_b").alias("doc_id")).distinct()
+        return (
+            load(spark, sf_dir, "documents")
+            .join(kills, "doc_id", "left_anti")
+            .select("doc_id", "lang", "n_chars")
         )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
 
-        docs = load(spark, sf_dir, "documents")
-        kills = (
-            spark.read.parquet(f"{kills_dir}/batch=*")
-            .select(F.col("doc_b").alias("doc_id"))
-            .distinct()
-            if os.path.isdir(kills_dir)
-            else spark.createDataFrame([], "doc_id long")
-        )
-        out = docs.join(kills, "doc_id", "left_anti").select(
-            "doc_id", "lang", "n_chars"
-        )
-        out, _ = tracked_local_checkpoint(out)
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    return fold_stream(
+        spark, _stage_doc_batches(spark, sf_dir), DOCS_SCHEMA, on_batch, finish
+    )
 
 
 def incremental_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -183,18 +147,9 @@ def incremental_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     their partial rows. Idempotent under foreachBatch replay via the
     epoch-scoped overwrite discipline shared with the streams above.
     """
-    import shutil
-    import uuid as _uuid
-
-    from ..operators.checkpoints import tracked_local_checkpoint
     from ..plans.llm import canonical_url, raw_urls_from
 
-    tune_session(spark)
-    d = _stage_doc_batches(spark, sf_dir)
-    base = f"{d.rstrip('/')}_urls_{_uuid.uuid4().hex[:8]}"
-    part_dir = f"{base}/partials"
-
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
+    def on_batch(batch_df: DataFrame, st: Landing) -> None:
         partial = (
             raw_urls_from(batch_df)
             .select(
@@ -207,23 +162,11 @@ def incremental_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.max_by("url", "doc_id").alias("url_of_max"),
             )
         )
-        partial.write.mode("overwrite").parquet(f"{part_dir}/batch={epoch_id}")
+        st.land("partials", partial)
 
-    try:
-        src = (
-            spark.readStream.schema(DOCS_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
-        )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        merged = (
-            spark.read.parquet(f"{part_dir}/batch=*")
+    def finish(st: Landing) -> DataFrame:
+        return (
+            st.landed("partials")
             .groupBy("canonical_url")
             .agg(
                 F.sum("cnt").cast("bigint").alias("n_crawls"),
@@ -231,10 +174,10 @@ def incremental_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.max_by("url_of_max", "max_doc").alias("kept_url"),
             )
         )
-        out, _ = tracked_local_checkpoint(merged)
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+
+    return fold_stream(
+        spark, _stage_doc_batches(spark, sf_dir), DOCS_SCHEMA, on_batch, finish
+    )
 
 
 def incremental_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -257,19 +200,9 @@ def incremental_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-tokenized — only its posting rows re-aggregate. Epoch-scoped
     overwrite = replay-idempotent like the sibling streams.
     """
-    import shutil
-    import uuid as _uuid
-
-    from ..operators.checkpoints import tracked_local_checkpoint
     from ..plans.llm import BM25_MAX_ID, BM25_TERMS, bm25_rank_from
 
-    tune_session(spark)
-    d = _stage_doc_batches(spark, sf_dir)
-    base = f"{d.rstrip('/')}_bm25_{_uuid.uuid4().hex[:8]}"
-    stats_dir = f"{base}/stats"
-    post_dir = f"{base}/postings"
-
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
+    def on_batch(batch_df: DataFrame, st: Landing) -> None:
         docs = (
             batch_df.filter(F.col("doc_id") < BM25_MAX_ID)
             .select("doc_id", F.split(F.col("text"), " ").alias("ws"))
@@ -279,29 +212,17 @@ def incremental_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n"),
             F.coalesce(F.sum("dl"), F.lit(0)).cast("bigint").alias("sdl"),
         )
-        stats.write.mode("overwrite").parquet(f"{stats_dir}/batch={epoch_id}")
+        st.land("stats", stats)
         tf = (
             docs.select("doc_id", "dl", F.explode("ws").alias("w"))
             .filter(F.col("w").isin(*BM25_TERMS))
             .groupBy("doc_id", "dl", "w")
             .agg(F.count(F.lit(1)).alias("tf"))
         )
-        tf.write.mode("overwrite").parquet(f"{post_dir}/batch={epoch_id}")
+        st.land("postings", tf)
 
-    try:
-        src = (
-            spark.readStream.schema(DOCS_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
-        )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        merged = spark.read.parquet(f"{stats_dir}/batch=*").agg(
+    def finish(st: Landing) -> DataFrame:
+        merged = st.landed("stats").agg(
             F.sum("sdl").cast("bigint").alias("sdl"),
             F.sum("n").cast("bigint").alias("n"),
         )
@@ -309,11 +230,11 @@ def incremental_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("sdl").cast("double") / F.col("n").cast("double")).alias("avgdl"),
             F.col("n").cast("double").alias("n_docs"),
         )
-        tf = spark.read.parquet(f"{post_dir}/batch=*")
-        out, _ = tracked_local_checkpoint(bm25_rank_from(tf, avgdl))
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        return bm25_rank_from(st.landed("postings"), avgdl)
+
+    return fold_stream(
+        spark, _stage_doc_batches(spark, sf_dir), DOCS_SCHEMA, on_batch, finish
+    )
 
 
 EMB_SCHEMA = T.StructType(
@@ -357,7 +278,7 @@ def incremental_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     coarse centroids are trained offline and held fixed while data
     streams in. One setup pass computes the deterministic IVF centroids
     and each cell's subcell arity (ceil(|cell|/TARGET), sized from the
-    reference corpus) and lands them once. Each micro-batch then assigns
+    reference corpus) and checkpoints them once. Each micro-batch then assigns
     ONLY its own vectors to (cell, subcell) with the frozen quantizer
     (identical expressions to the batch query, so assignments are
     bitwise the same), lands them in the accumulated store, and checks
@@ -371,13 +292,10 @@ def incremental_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At 100 TB: per-batch work is (batch rows) ⋈ (store rows) on the
     (cell, subcell) equi-key with in-subcell population capped at the
-    quantizer's TARGET, centroids are a broadcast-sized table read per
-    batch, and old vectors are never re-scored — only their stored
+    quantizer's TARGET, centroids are a broadcast-sized table held for
+    the run, and old vectors are never re-scored — only their stored
     (v, nv, cell, subcell) rows join.
     """
-    import shutil
-    import uuid as _uuid
-
     from pyspark.sql import Window as W
 
     from ..functions.vectors import dot, norm, to_double
@@ -390,13 +308,6 @@ def incremental_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         _SUBCELL_HASH,
     )
     from ..plans.tables import load
-
-    tune_session(spark)
-    d = _stage_emb_batches(spark, sf_dir)
-    base = f"{d.rstrip('/')}_sem_{_uuid.uuid4().hex[:8]}"
-    quant_dir = f"{base}/quant"
-    state_dir = f"{base}/state"
-    kills_dir = f"{base}/kills"
 
     e = load(spark, sf_dir, "embeddings")
 
@@ -422,34 +333,29 @@ def incremental_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     # setup pass: train + freeze the quantizer (centroids and subcell arity)
-    cents = ivf_centroids(e, EMB_DIM).withColumn("ncent", norm(F.col("centroid")))
-    cents.write.mode("overwrite").parquet(f"{quant_dir}/cents")
-    cents_q = spark.read.parquet(f"{quant_dir}/cents")
+    cents, _ = tracked_local_checkpoint(
+        ivf_centroids(e, EMB_DIM).withColumn("ncent", norm(F.col("centroid")))
+    )
     t = SEMDEDUP_TARGET_CELL
-    sizes = (
-        _assign(e, cents_q)
+    sizes, _ = tracked_local_checkpoint(
+        _assign(e, cents)
         .groupBy("cell")
         .agg(F.count(F.lit(1)).alias("cell_n"))
         .withColumn("n_sub", F.expr(f"(cell_n + {t - 1}) div {t}"))
         .select("cell", "n_sub")
     )
-    sizes.write.mode("overwrite").parquet(f"{quant_dir}/sizes")
 
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
-        cents_b = spark.read.parquet(f"{quant_dir}/cents")
-        sizes_b = spark.read.parquet(f"{quant_dir}/sizes")
+    def on_batch(batch_df: DataFrame, st: Landing) -> None:
         assigned = (
-            _assign(batch_df, cents_b)
-            .join(F.broadcast(sizes_b), "cell")
+            _assign(batch_df, cents)
+            .join(F.broadcast(sizes), "cell")
             .withColumn(
                 "subcell", F.expr(_SUBCELL_HASH.format(v="vec_id") + " % n_sub")
             )
             .drop("n_sub")
         )
-        assigned.write.mode("overwrite").parquet(f"{state_dir}/batch={epoch_id}")
-        batch_tbl = spark.read.parquet(f"{state_dir}/batch={epoch_id}")
-        all_tbl = spark.read.parquet(f"{state_dir}/batch=*")
-        a, b = all_tbl.alias("a"), batch_tbl.alias("b")
+        st.land("state", assigned)
+        a, b = st.landed("state").alias("a"), st.current("state").alias("b")
         cos = dot(F.col("a.v"), F.col("b.v")) / (F.col("a.nv") * F.col("b.nv"))
         kills = (
             a.join(
@@ -463,54 +369,30 @@ def incremental_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.greatest(F.col("a.vec_id"), F.col("b.vec_id")).alias("vec_id"))
             .distinct()
         )
-        kills.write.mode("overwrite").parquet(f"{kills_dir}/batch={epoch_id}")
+        st.land("kills", kills)
 
-    try:
-        src = (
-            spark.readStream.schema(EMB_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
-        )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    def finish(st: Landing) -> DataFrame:
+        kills = st.landed("kills").distinct()
+        return e.join(kills, "vec_id", "left_anti").select("vec_id", "label")
 
-        import os
-
-        kills = (
-            spark.read.parquet(f"{kills_dir}/batch=*").distinct()
-            if os.path.isdir(kills_dir)
-            else spark.createDataFrame([], "vec_id long")
-        )
-        out = e.join(kills, "vec_id", "left_anti").select("vec_id", "label")
-        out, _ = tracked_local_checkpoint(out)
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    return fold_stream(
+        spark, _stage_emb_batches(spark, sf_dir), EMB_SCHEMA, on_batch, finish
+    )
 
 
-def _winnow_store_flags(
-    spark: SparkSession, fp_dir: str, flags_dir: str, batch_df: DataFrame, epoch_id: int
-) -> None:
-    """Land THIS batch's winnow fingerprints in the accumulated store and
-    emit matched-site flags for the grams it touched — the ONE home of the
-    incremental span-dedup step (shared by the standalone mirror and the
-    composed pipeline mirror, which must compute the identical matched
+def _winnow_store_flags(batch_df: DataFrame, st: Landing) -> None:
+    """Land THIS batch's winnow fingerprints in the accumulated ``fp`` store
+    and its matched-site ``flags`` for the grams it touched — the ONE home
+    of the incremental span-dedup step (shared by the standalone mirror and
+    the composed pipeline mirror, which must compute the identical matched
     set). Both sites of a late-arriving repeat flag in the later batch,
     so accumulated flags equal the batch query's matched set under ANY
     arrival order; epoch-scoped overwrite = replay-idempotent."""
     from ..plans.llm import winnow_fp_from
 
-    winnow_fp_from(batch_df).write.mode("overwrite").parquet(
-        f"{fp_dir}/batch={epoch_id}"
-    )
-    batch_fp = spark.read.parquet(f"{fp_dir}/batch={epoch_id}")
-    all_fp = spark.read.parquet(f"{fp_dir}/batch=*")
-    touched = all_fp.join(
-        batch_fp.select("h", "gram").distinct(), ["h", "gram"], "leftsemi"
+    st.land("fp", winnow_fp_from(batch_df))
+    touched = st.landed("fp").join(
+        st.current("fp").select("h", "gram").distinct(), ["h", "gram"], "leftsemi"
     )
     repeated = (
         touched.groupBy("h", "gram")
@@ -523,7 +405,7 @@ def _winnow_store_flags(
         .select("doc_id", "fp_pos")
         .distinct()
     )
-    flags.write.mode("overwrite").parquet(f"{flags_dir}/batch={epoch_id}")
+    st.land("flags", flags)
 
 
 def incremental_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -544,47 +426,20 @@ def incremental_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     and flags are (doc_id, pos) pairs. Idempotent under foreachBatch
     replay via epoch-scoped overwrite like the near-dup stream above.
     """
-    import os
-    import shutil
-    import uuid as _uuid
-
-    from ..operators.checkpoints import tracked_local_checkpoint
     from ..plans.llm import repeated_span_accounting
     from ..plans.tables import load
 
-    tune_session(spark)
-    d = _stage_doc_batches(spark, sf_dir)
-    base = f"{d.rstrip('/')}_winnow_{_uuid.uuid4().hex[:8]}"
-    fp_dir = f"{base}/fp"
-    flags_dir = f"{base}/flags"
-
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
-        _winnow_store_flags(spark, fp_dir, flags_dir, batch_df, epoch_id)
-
-    try:
-        src = (
-            spark.readStream.schema(DOCS_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
-        )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        matched = (
-            spark.read.parquet(f"{flags_dir}/batch=*").distinct()
-            if os.path.isdir(flags_dir)
-            else spark.createDataFrame([], "doc_id long, fp_pos long")
-        )
+    def finish(st: Landing) -> DataFrame:
         docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-        out = repeated_span_accounting(matched, docs)
-        out, _ = tracked_local_checkpoint(out)
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        return repeated_span_accounting(st.landed("flags").distinct(), docs)
+
+    return fold_stream(
+        spark,
+        _stage_doc_batches(spark, sf_dir),
+        DOCS_SCHEMA,
+        _winnow_store_flags,
+        finish,
+    )
 
 
 def incremental_cross_source(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -602,19 +457,10 @@ def incremental_cross_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay via the epoch-scoped overwrite discipline shared with the
     streams above.
     """
-    import shutil
-    import uuid as _uuid
-
-    from ..operators.checkpoints import tracked_local_checkpoint
     from ..functions.text import exploded_shingles
     from ..plans.llm import CROSS_SOURCE_K, cross_source_matrix
 
-    tune_session(spark)
-    d = _stage_doc_batches(spark, sf_dir)
-    base = f"{d.rstrip('/')}_xsrc_{_uuid.uuid4().hex[:8]}"
-    part_dir = f"{base}/partials"
-
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
+    def on_batch(batch_df: DataFrame, st: Landing) -> None:
         partial = (
             exploded_shingles(
                 batch_df.select("text", "source"), "text", CROSS_SOURCE_K, "g"
@@ -622,27 +468,15 @@ def incremental_cross_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.md5("g").alias("g"), "source")
             .distinct()
         )
-        partial.write.mode("overwrite").parquet(f"{part_dir}/batch={epoch_id}")
+        st.land("partials", partial)
 
-    try:
-        src = (
-            spark.readStream.schema(DOCS_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
-        )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        merged = spark.read.parquet(f"{part_dir}/batch=*").distinct()
-        out = cross_source_matrix(merged)
-        out, _ = tracked_local_checkpoint(out)
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    return fold_stream(
+        spark,
+        _stage_doc_batches(spark, sf_dir),
+        DOCS_SCHEMA,
+        on_batch,
+        lambda st: cross_source_matrix(st.landed("partials").distinct()),
+    )
 
 
 def incremental_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -660,18 +494,9 @@ def incremental_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     via the epoch-scoped overwrite discipline shared with the streams
     above.
     """
-    import shutil
-    import uuid as _uuid
-
-    from ..operators.checkpoints import tracked_local_checkpoint
     from ..functions.text import quality_score
 
-    tune_session(spark)
-    d = _stage_doc_batches(spark, sf_dir)
-    base = f"{d.rstrip('/')}_pref_{_uuid.uuid4().hex[:8]}"
-    part_dir = f"{base}/partials"
-
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
+    def on_batch(batch_df: DataFrame, st: Landing) -> None:
         key = F.struct(
             quality_score(F.col("text")).alias("score"),
             (-F.col("doc_id")).alias("nid"),
@@ -685,23 +510,11 @@ def incremental_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.min("k").alias("rj"),
             )
         )
-        partial.write.mode("overwrite").parquet(f"{part_dir}/batch={epoch_id}")
+        st.land("partials", partial)
 
-    try:
-        src = (
-            spark.readStream.schema(DOCS_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
-        )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
+    def finish(st: Landing) -> DataFrame:
         merged = (
-            spark.read.parquet(f"{part_dir}/batch=*")
+            st.landed("partials")
             .groupBy("source")
             .agg(
                 F.sum("n_docs").alias("n_docs"),
@@ -710,7 +523,7 @@ def incremental_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .filter(F.col("n_docs") >= 2)
         )
-        out = merged.select(
+        return merged.select(
             "source",
             F.col("n_docs").cast("bigint").alias("n_docs"),
             (-F.col("ch.nid")).cast("bigint").alias("chosen_doc"),
@@ -719,10 +532,10 @@ def incremental_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("rj.score").alias("rejected_score"),
             F.round(F.col("ch.score") - F.col("rj.score"), 6).alias("margin"),
         ).filter(F.col("margin") > 0)
-        out, _ = tracked_local_checkpoint(out)
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+
+    return fold_stream(
+        spark, _stage_doc_batches(spark, sf_dir), DOCS_SCHEMA, on_batch, finish
+    )
 
 
 def incremental_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -737,18 +550,9 @@ def incremental_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     double division is integer arithmetic, so arrival order provably
     cannot change the plan — the easiest possible mergeability proof,
     which is exactly why the re-aggregate pattern applies unchanged."""
-    import shutil
-    import uuid as _uuid
-
-    from ..operators.checkpoints import tracked_local_checkpoint
     from ..plans.llm import mixing_rate_tenths, token_budget_from_per_source
 
-    tune_session(spark)
-    d = _stage_doc_batches(spark, sf_dir)
-    base = f"{d.rstrip('/')}_tokbudget_{_uuid.uuid4().hex[:8]}"
-    part_dir = f"{base}/partials"
-
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
+    def on_batch(batch_df: DataFrame, st: Landing) -> None:
         partial = (
             batch_df.select(
                 "source",
@@ -761,38 +565,25 @@ def incremental_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("n_tok").cast("bigint").alias("n_tokens"),
             )
         )
-        partial.write.mode("overwrite").parquet(f"{part_dir}/batch={epoch_id}")
+        st.land("partials", partial)
 
-    try:
-        src = (
-            spark.readStream.schema(DOCS_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
-        )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
+    def finish(st: Landing) -> DataFrame:
         per = (
-            spark.read.parquet(f"{part_dir}/batch=*")
+            st.landed("partials")
             .groupBy("source", "rate_tenths")
             .agg(
                 F.sum("n_docs").cast("bigint").alias("n_docs"),
                 F.sum("n_tokens").cast("bigint").alias("n_tokens"),
             )
         )
-        out, _ = tracked_local_checkpoint(token_budget_from_per_source(per))
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        return token_budget_from_per_source(per)
+
+    return fold_stream(
+        spark, _stage_doc_batches(spark, sf_dir), DOCS_SCHEMA, on_batch, finish
+    )
 
 
-def _incremental_stateless(
-    spark: SparkSession, sf_dir: str, tag: str, score_batch
-) -> DataFrame:
+def _incremental_stateless(spark: SparkSession, sf_dir: str, score_batch) -> DataFrame:
     """Shared shape for PER-DOC STATELESS streaming mirrors (gopher,
     readability): each micro-batch is scored independently with the batch
     kernel and appended as an epoch-scoped partial; the final answer is
@@ -802,37 +593,13 @@ def _incremental_stateless(
     surface spans the whole range: stateless -> integer re-aggregate
     (token budget) -> distributive state + emission recompute (RFM) ->
     cross-batch store joins (repeated spans / semdedup)."""
-    import shutil
-    import uuid as _uuid
-
-    from ..operators.checkpoints import tracked_local_checkpoint
-
-    tune_session(spark)
-    d = _stage_doc_batches(spark, sf_dir)
-    base = f"{d.rstrip('/')}_{tag}_{_uuid.uuid4().hex[:8]}"
-    part_dir = f"{base}/partials"
-
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
-        score_batch(batch_df).write.mode("overwrite").parquet(
-            f"{part_dir}/batch={epoch_id}"
-        )
-
-    try:
-        src = (
-            spark.readStream.schema(DOCS_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
-        )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        out, _ = tracked_local_checkpoint(spark.read.parquet(f"{part_dir}/batch=*"))
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    return fold_stream(
+        spark,
+        _stage_doc_batches(spark, sf_dir),
+        DOCS_SCHEMA,
+        lambda b, st: st.land("partials", score_batch(b)),
+        lambda st: st.landed("partials"),
+    )
 
 
 def incremental_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -840,7 +607,7 @@ def incremental_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
     (its SQL is the oracle); per-doc stateless, so batch outputs union."""
     from ..plans.llm import gopher_rules_from
 
-    return _incremental_stateless(spark, sf_dir, "gopher", gopher_rules_from)
+    return _incremental_stateless(spark, sf_dir, gopher_rules_from)
 
 
 def incremental_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -848,9 +615,7 @@ def incremental_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     plans.llm.readability_score (its SQL is the oracle)."""
     from ..plans.llm import readability_from
 
-    return _incremental_stateless(
-        spark, sf_dir, "readability", readability_from
-    )
+    return _incremental_stateless(spark, sf_dir, readability_from)
 
 
 def incremental_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -866,49 +631,26 @@ def incremental_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the ECE weights shift with every batch), which is exactly why the
     emission recompute over per-doc partial ROWS (never raw text) is the
     right split. Epoch-scoped overwrite = replay-idempotent."""
-    import shutil
-    import uuid as _uuid
-
-    from ..operators.checkpoints import tracked_local_checkpoint
     from ..plans.llm import (
         calibration_from,
         feature_hashing_from,
         gopher_rules_from,
     )
 
-    tune_session(spark)
-    d = _stage_doc_batches(spark, sf_dir)
-    base = f"{d.rstrip('/')}_calib_{_uuid.uuid4().hex[:8]}"
-    part_dir = f"{base}/scored"
-
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
+    def on_batch(batch_df: DataFrame, st: Landing) -> None:
         clf = feature_hashing_from(batch_df).select("doc_id", "clf_score")
         gop = gopher_rules_from(batch_df).select(
             "doc_id", F.col("passes").cast("bigint").alias("label")
         )
-        clf.join(gop, "doc_id").write.mode("overwrite").parquet(
-            f"{part_dir}/batch={epoch_id}"
-        )
+        st.land("scored", clf.join(gop, "doc_id"))
 
-    try:
-        src = (
-            spark.readStream.schema(DOCS_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
-        )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        out, _ = tracked_local_checkpoint(
-            calibration_from(spark.read.parquet(f"{part_dir}/batch=*")),
-        )
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    return fold_stream(
+        spark,
+        _stage_doc_batches(spark, sf_dir),
+        DOCS_SCHEMA,
+        on_batch,
+        lambda st: calibration_from(st.landed("scored")),
+    )
 
 
 def incremental_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -923,41 +665,15 @@ def incremental_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     drains, so emission re-aggregates and scores through the shared
     ``lm_kn_from_pairs`` kernel; every fold inside it is position-pinned,
     so arrival order cannot move a perplexity."""
-    import shutil
-    import uuid as _uuid
-
-    from ..operators.checkpoints import tracked_local_checkpoint
     from ..plans.llm import lm_bigram_pairs, lm_kn_from_pairs
 
-    tune_session(spark)
-    d = _stage_doc_batches(spark, sf_dir)
-    base = f"{d.rstrip('/')}_kn_{_uuid.uuid4().hex[:8]}"
-    pairs_dir = f"{base}/pairs"
-
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
-        lm_bigram_pairs(batch_df.select("doc_id", "text")).write.mode(
-            "overwrite"
-        ).parquet(f"{pairs_dir}/batch={epoch_id}")
-
-    try:
-        src = (
-            spark.readStream.schema(DOCS_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
-        )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        out, _ = tracked_local_checkpoint(
-            lm_kn_from_pairs(spark.read.parquet(f"{pairs_dir}/batch=*")),
-        )
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    return fold_stream(
+        spark,
+        _stage_doc_batches(spark, sf_dir),
+        DOCS_SCHEMA,
+        lambda b, st: st.land("pairs", lm_bigram_pairs(b.select("doc_id", "text"))),
+        lambda st: lm_kn_from_pairs(st.landed("pairs")),
+    )
 
 
 def incremental_heaps(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -973,53 +689,28 @@ def incremental_heaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the merged max doc_id, so checkpoints are final only when the
     stream drains — the corpus-global posture). Raw text is tokenized
     once; state is doc-count + vocabulary sized, never re-read."""
-    import shutil
-    import uuid as _uuid
-
-    from ..operators.checkpoints import tracked_local_checkpoint
     from ..plans.llm import heaps_fit_from
 
-    tune_session(spark)
-    d = _stage_doc_batches(spark, sf_dir)
-    base = f"{d.rstrip('/')}_heaps_{_uuid.uuid4().hex[:8]}"
-    docs_dir = f"{base}/docs"
-    first_dir = f"{base}/first"
-
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
+    def on_batch(batch_df: DataFrame, st: Landing) -> None:
         b = batch_df.select(
             "doc_id",
             F.filter(F.split("text", " "), lambda x: F.length(x) > 0).alias("ws"),
         )
-        b.select("doc_id", F.size("ws").cast("bigint").alias("n_tok")).write.mode(
-            "overwrite"
-        ).parquet(f"{docs_dir}/batch={epoch_id}")
-        b.select("doc_id", F.explode("ws").alias("w")).groupBy("w").agg(
-            F.min("doc_id").alias("fd")
-        ).write.mode("overwrite").parquet(f"{first_dir}/batch={epoch_id}")
-
-    try:
-        src = (
-            spark.readStream.schema(DOCS_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
-        )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        docs = spark.read.parquet(f"{docs_dir}/batch=*")
-        first = (
-            spark.read.parquet(f"{first_dir}/batch=*")
+        st.land("docs", b.select("doc_id", F.size("ws").cast("bigint").alias("n_tok")))
+        st.land(
+            "first",
+            b.select("doc_id", F.explode("ws").alias("w"))
             .groupBy("w")
-            .agg(F.min("fd").alias("fd"))
+            .agg(F.min("doc_id").alias("fd")),
         )
-        out, _ = tracked_local_checkpoint(heaps_fit_from(docs, first))
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+
+    def finish(st: Landing) -> DataFrame:
+        first = st.landed("first").groupBy("w").agg(F.min("fd").alias("fd"))
+        return heaps_fit_from(st.landed("docs"), first)
+
+    return fold_stream(
+        spark, _stage_doc_batches(spark, sf_dir), DOCS_SCHEMA, on_batch, finish
+    )
 
 
 def incremental_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1035,10 +726,6 @@ def incremental_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     addition is order-free, so arrival order provably cannot move the
     fitted temperature. State is O(|grid| x bins) per batch, independent
     of corpus size; raw text is read once."""
-    import shutil
-    import uuid as _uuid
-
-    from ..operators.checkpoints import tracked_local_checkpoint
     from ..plans.llm import (
         feature_hashing_from,
         gopher_rules_from,
@@ -1046,35 +733,16 @@ def incremental_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
         temperature_finish,
     )
 
-    tune_session(spark)
-    d = _stage_doc_batches(spark, sf_dir)
-    base = f"{d.rstrip('/')}_temp_{_uuid.uuid4().hex[:8]}"
-    part_dir = f"{base}/partials"
-
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
+    def on_batch(batch_df: DataFrame, st: Landing) -> None:
         clf = feature_hashing_from(batch_df).select("doc_id", "clf_score")
         gop = gopher_rules_from(batch_df).select(
             "doc_id", F.col("passes").cast("bigint").alias("label")
         )
-        temperature_bin_partials(clf.join(gop, "doc_id")).write.mode(
-            "overwrite"
-        ).parquet(f"{part_dir}/batch={epoch_id}")
+        st.land("partials", temperature_bin_partials(clf.join(gop, "doc_id")))
 
-    try:
-        src = (
-            spark.readStream.schema(DOCS_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
-        )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
+    def finish(st: Landing) -> DataFrame:
         merged = (
-            spark.read.parquet(f"{part_dir}/batch=*")
+            st.landed("partials")
             .groupBy("t", "bin")
             .agg(
                 F.sum("n_docs").cast("bigint").alias("n_docs"),
@@ -1083,10 +751,11 @@ def incremental_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("nll_u").cast("bigint").alias("nll_u"),
             )
         )
-        out, _ = tracked_local_checkpoint(temperature_finish(merged))
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        return temperature_finish(merged)
+
+    return fold_stream(
+        spark, _stage_doc_batches(spark, sf_dir), DOCS_SCHEMA, on_batch, finish
+    )
 
 
 def incremental_doremi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1102,47 +771,19 @@ def incremental_doremi(spark: SparkSession, sf_dir: str) -> DataFrame:
     + ``doremi_from`` kernels — every fold inside them is pinned, so
     arrival order cannot move a weight. State is posting-sized partials;
     raw text is never re-read."""
-    import shutil
-    import uuid as _uuid
-
-    from ..operators.checkpoints import tracked_local_checkpoint
     from ..plans.llm import doremi_from, lm_bigram_pairs, lm_logprob_from_pairs
 
-    tune_session(spark)
-    d = _stage_doc_batches(spark, sf_dir)
-    base = f"{d.rstrip('/')}_doremi_{_uuid.uuid4().hex[:8]}"
-    pairs_dir = f"{base}/pairs"
-    src_dir = f"{base}/src"
+    def on_batch(batch_df: DataFrame, st: Landing) -> None:
+        st.land("pairs", lm_bigram_pairs(batch_df.select("doc_id", "text")))
+        st.land("src", batch_df.select("doc_id", "source"))
 
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
-        lm_bigram_pairs(batch_df.select("doc_id", "text")).write.mode(
-            "overwrite"
-        ).parquet(f"{pairs_dir}/batch={epoch_id}")
-        batch_df.select("doc_id", "source").write.mode("overwrite").parquet(
-            f"{src_dir}/batch={epoch_id}"
-        )
+    def finish(st: Landing) -> DataFrame:
+        lm = lm_logprob_from_pairs(st.landed("pairs")).select("doc_id", "xent")
+        return doremi_from(lm, st.landed("src"))
 
-    try:
-        src_stream = (
-            spark.readStream.schema(DOCS_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
-        )
-        q = src_stream.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        lm = lm_logprob_from_pairs(
-            spark.read.parquet(f"{pairs_dir}/batch=*")
-        ).select("doc_id", "xent")
-        src = spark.read.parquet(f"{src_dir}/batch=*")
-        out, _ = tracked_local_checkpoint(doremi_from(lm, src))
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    return fold_stream(
+        spark, _stage_doc_batches(spark, sf_dir), DOCS_SCHEMA, on_batch, finish
+    )
 
 
 def incremental_pretrain_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1177,11 +818,7 @@ def incremental_pretrain_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame
     (batch grams) ⋈ (store grams); state is posting/fingerprint/meta rows,
     never raw text; emission re-aggregates tables that are distinct-gram-
     sized, not corpus-sized."""
-    import shutil
-    import uuid as _uuid
-
     from ..functions.text import word_count
-    from ..operators.checkpoints import tracked_local_checkpoint
     from ..plans.llm import (
         PIPE2_MAX_REPEATED,
         XENT_MAX,
@@ -1194,92 +831,63 @@ def incremental_pretrain_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame
         repeated_span_accounting_words,
     )
 
-    tune_session(spark)
-    d = _stage_doc_batches(spark, sf_dir)
-    base = f"{d.rstrip('/')}_pipe2_{_uuid.uuid4().hex[:8]}"
-    url_dir = f"{base}/urls"
-    gop_dir = f"{base}/gopher"
-    pairs_dir = f"{base}/pairs"
-    fp_dir = f"{base}/fp"
-    flags_dir = f"{base}/flags"
-    meta_dir = f"{base}/meta"
-
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
+    def on_batch(batch_df: DataFrame, st: Landing) -> None:
         urls = (
             raw_urls_from(batch_df)
             .select("doc_id", canonical_url(F.col("url")).alias("canonical_url"))
             .groupBy("canonical_url")
             .agg(F.max("doc_id").alias("max_doc"))
         )
-        urls.write.mode("overwrite").parquet(f"{url_dir}/batch={epoch_id}")
+        st.land("urls", urls)
         gop = (
             gopher_rules_from(batch_df)
             .filter(F.col("passes") == 1)
             .select("doc_id")
         )
-        gop.write.mode("overwrite").parquet(f"{gop_dir}/batch={epoch_id}")
-        lm_bigram_pairs(batch_df.select("doc_id", "text")).write.mode(
-            "overwrite"
-        ).parquet(f"{pairs_dir}/batch={epoch_id}")
+        st.land("gopher", gop)
+        st.land("pairs", lm_bigram_pairs(batch_df.select("doc_id", "text")))
         # repeated-span store + per-batch matched-site flags — the shared
         # incremental span-dedup step (one home with the standalone mirror)
-        _winnow_store_flags(spark, fp_dir, flags_dir, batch_df, epoch_id)
+        _winnow_store_flags(batch_df, st)
         meta = batch_df.select(
             "doc_id", "lang", word_count(F.col("text")).alias("n_words")
         )
-        meta.write.mode("overwrite").parquet(f"{meta_dir}/batch={epoch_id}")
+        st.land("meta", meta)
 
-    try:
-        src = (
-            spark.readStream.schema(DOCS_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
-        )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
+    def finish(st: Landing) -> DataFrame:
         url_keep = (
-            spark.read.parquet(f"{url_dir}/batch=*")
+            st.landed("urls")
             .groupBy("canonical_url")
             .agg(F.max("max_doc").alias("doc_id"))
             .select("doc_id")
         )
-        gop = spark.read.parquet(f"{gop_dir}/batch=*")
         ppl = (
-            lm_logprob_from_pairs(spark.read.parquet(f"{pairs_dir}/batch=*"))
+            lm_logprob_from_pairs(st.landed("pairs"))
             .filter(F.col("xent") <= XENT_MAX)
             .select("doc_id")
         )
-        meta = spark.read.parquet(f"{meta_dir}/batch=*")
-        # flags_dir always exists: _update writes (possibly empty) flags
-        # every epoch and the staging always yields >=1 batch — an isdir
-        # fallback here would be dead code (review finding), and the four
-        # sibling reads above are deliberately unguarded for the same reason
-        matched = spark.read.parquet(f"{flags_dir}/batch=*").distinct()
+        meta = st.landed("meta")
         heavy = (
             repeated_span_accounting_words(
-                matched, meta.select("doc_id", F.col("n_words").alias("doc_words"))
+                st.landed("flags").distinct(),
+                meta.select("doc_id", F.col("n_words").alias("doc_words")),
             )
             .filter(F.col("repeated_frac") > PIPE2_MAX_REPEATED)
             .select("doc_id")
         )
         surv = (
             meta.join(url_keep, "doc_id", "leftsemi")
-            .join(gop, "doc_id", "leftsemi")
+            .join(st.landed("gopher"), "doc_id", "leftsemi")
             .join(ppl, "doc_id", "leftsemi")
             .join(heavy, "doc_id", "left_anti")
         )
-        out = pretrain_release_accounting(
+        return pretrain_release_accounting(
             surv.select("doc_id", "lang", F.col("n_words").alias("n_tok"))
         )
-        out, _ = tracked_local_checkpoint(out)
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+
+    return fold_stream(
+        spark, _stage_doc_batches(spark, sf_dir), DOCS_SCHEMA, on_batch, finish
+    )
 
 
 def incremental_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1296,46 +904,23 @@ def incremental_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmax), so emission reruns the shared model-build + scoring kernel
     over merged partials — over token-count ROWS, never raw text.
     Epoch-scoped overwrite = replay-idempotent."""
-    import shutil
-    import uuid as _uuid
-
-    from ..operators.checkpoints import tracked_local_checkpoint
     from ..plans.llm import nb_confusion_from_partials, nb_partials
 
-    tune_session(spark)
-    d = _stage_doc_batches(spark, sf_dir)
-    base = f"{d.rstrip('/')}_nb_{_uuid.uuid4().hex[:8]}"
-    dirs = {k: f"{base}/{k}" for k in ("cnt", "cls", "qtok")}
-
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
+    def on_batch(batch_df: DataFrame, st: Landing) -> None:
         cnt, cls, qtok = nb_partials(batch_df.select("doc_id", "lang", "text"))
-        cnt.write.mode("overwrite").parquet(f"{dirs['cnt']}/batch={epoch_id}")
-        cls.write.mode("overwrite").parquet(f"{dirs['cls']}/batch={epoch_id}")
-        qtok.write.mode("overwrite").parquet(f"{dirs['qtok']}/batch={epoch_id}")
+        st.land("cnt", cnt)
+        st.land("cls", cls)
+        st.land("qtok", qtok)
 
-    try:
-        src = (
-            spark.readStream.schema(DOCS_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
-        )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        out, _ = tracked_local_checkpoint(
-            nb_confusion_from_partials(
-                spark.read.parquet(f"{dirs['cnt']}/batch=*"),
-                spark.read.parquet(f"{dirs['cls']}/batch=*"),
-                spark.read.parquet(f"{dirs['qtok']}/batch=*"),
-            ),
-        )
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    return fold_stream(
+        spark,
+        _stage_doc_batches(spark, sf_dir),
+        DOCS_SCHEMA,
+        on_batch,
+        lambda st: nb_confusion_from_partials(
+            st.landed("cnt"), st.landed("cls"), st.landed("qtok")
+        ),
+    )
 
 
 def incremental_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1346,44 +931,20 @@ def incremental_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials; the VMR and the top-K cutoff are corpus-global (a later
     batch can evict a token from the top-K), so emission reruns the
     shared merge + rank tail."""
-    import shutil
-    import uuid as _uuid
-
-    from ..operators.checkpoints import tracked_local_checkpoint
     from ..plans.llm import burstiness_from_partials, burstiness_partials
 
-    tune_session(spark)
-    d = _stage_doc_batches(spark, sf_dir)
-    base = f"{d.rstrip('/')}_burst_{_uuid.uuid4().hex[:8]}"
-    voc_dir, nd_dir = f"{base}/voc", f"{base}/nd"
-
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
+    def on_batch(batch_df: DataFrame, st: Landing) -> None:
         voc, nd = burstiness_partials(batch_df.select("doc_id", "text"))
-        voc.write.mode("overwrite").parquet(f"{voc_dir}/batch={epoch_id}")
-        nd.write.mode("overwrite").parquet(f"{nd_dir}/batch={epoch_id}")
+        st.land("voc", voc)
+        st.land("nd", nd)
 
-    try:
-        src = (
-            spark.readStream.schema(DOCS_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
-        )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        out, _ = tracked_local_checkpoint(
-            burstiness_from_partials(
-                spark.read.parquet(f"{voc_dir}/batch=*"),
-                spark.read.parquet(f"{nd_dir}/batch=*"),
-            ),
-        )
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    return fold_stream(
+        spark,
+        _stage_doc_batches(spark, sf_dir),
+        DOCS_SCHEMA,
+        on_batch,
+        lambda st: burstiness_from_partials(st.landed("voc"), st.landed("nd")),
+    )
 
 
 def incremental_jsd(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1394,41 +955,15 @@ def incremental_jsd(spark: SparkSession, sf_dir: str) -> DataFrame:
     term move with each batch, so emission reruns the shared
     decomposition over the merged count tables — over COUNT ROWS, never
     raw text (the nb_partials posture)."""
-    import shutil
-    import uuid as _uuid
-
-    from ..operators.checkpoints import tracked_local_checkpoint
     from ..plans.llm import jsd_from_counts, jsd_token_partial
 
-    tune_session(spark)
-    d = _stage_doc_batches(spark, sf_dir)
-    base = f"{d.rstrip('/')}_jsd_{_uuid.uuid4().hex[:8]}"
-    part_dir = f"{base}/counts"
-
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
-        jsd_token_partial(batch_df.select("source", "text")).write.mode(
-            "overwrite"
-        ).parquet(f"{part_dir}/batch={epoch_id}")
-
-    try:
-        src = (
-            spark.readStream.schema(DOCS_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
-        )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        out, _ = tracked_local_checkpoint(
-            jsd_from_counts(spark.read.parquet(f"{part_dir}/batch=*")),
-        )
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    return fold_stream(
+        spark,
+        _stage_doc_batches(spark, sf_dir),
+        DOCS_SCHEMA,
+        lambda b, st: st.land("counts", jsd_token_partial(b.select("source", "text"))),
+        lambda st: jsd_from_counts(st.landed("counts")),
+    )
 
 
 def incremental_srp_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1453,34 +988,18 @@ def incremental_srp_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: per-batch work is batch-sized × bucket-collision-sized;
     state grows linearly in docs (the signature table a production
     deployment materializes anyway)."""
-    import shutil
-    import uuid as _uuid
-
-    from ..operators.checkpoints import tracked_local_checkpoint
     from ..plans.llm import (
         SRP_COS_MIN,
         _srp_band_rows,
         _srp_bucket_counts,
     )
 
-    tune_session(spark)
-    d = _stage_doc_batches(spark, sf_dir)
-    base = f"{d.rstrip('/')}_srp_{_uuid.uuid4().hex[:8]}"
-    per_dir = f"{base}/per"
-    bands_dir = f"{base}/bands"
-    pairs_dir = f"{base}/pairs"
-
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
-        sp = batch_df.sparkSession
-        per_b = _srp_bucket_counts(batch_df.select("doc_id", "text"))
-        per_b.write.mode("overwrite").parquet(f"{per_dir}/batch={epoch_id}")
-        per_b = sp.read.parquet(f"{per_dir}/batch={epoch_id}")
-        _srp_band_rows(per_b).write.mode("overwrite").parquet(
-            f"{bands_dir}/batch={epoch_id}"
-        )
-        bands_b = sp.read.parquet(f"{bands_dir}/batch={epoch_id}")
-        bands_all = sp.read.parquet(f"{bands_dir}/batch=*")
-        per_all = sp.read.parquet(f"{per_dir}/batch=*")
+    def on_batch(batch_df: DataFrame, st: Landing) -> None:
+        st.land("per", _srp_bucket_counts(batch_df.select("doc_id", "text")))
+        st.land("bands", _srp_band_rows(st.current("per")))
+        bands_b = st.current("bands")
+        bands_all = st.landed("bands")
+        per_all = st.landed("per")
         cand = (
             bands_all.select(F.col("doc_id").alias("doc_a"), "band", "key")
             .join(
@@ -1531,30 +1050,15 @@ def incremental_srp_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("cos_sim") >= F.lit(SRP_COS_MIN))
             .select("doc_a", "doc_b", "cos_sim")
         )
-        verified.write.mode("overwrite").parquet(f"{pairs_dir}/batch={epoch_id}")
+        st.land("pairs", verified)
 
-    try:
-        src = (
-            spark.readStream.schema(DOCS_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
-        )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        out = (
-            spark.read.parquet(f"{pairs_dir}/batch=*")
-            .distinct()
-            .orderBy("doc_a", "doc_b")
-        )
-        out, _ = tracked_local_checkpoint(out)
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    return fold_stream(
+        spark,
+        _stage_doc_batches(spark, sf_dir),
+        DOCS_SCHEMA,
+        on_batch,
+        lambda st: st.landed("pairs").distinct().orderBy("doc_a", "doc_b"),
+    )
 
 
 def incremental_isotonic(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1567,10 +1071,6 @@ def incremental_isotonic(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame. The fit is corpus-global (pooling can reach across the whole
     score range), which is exactly why emission recomputes over the
     merged BINS, never raw text."""
-    import shutil
-    import uuid as _uuid
-
-    from ..operators.checkpoints import tracked_local_checkpoint
     from ..plans.llm import (
         feature_hashing_from,
         gopher_rules_from,
@@ -1578,45 +1078,27 @@ def incremental_isotonic(spark: SparkSession, sf_dir: str) -> DataFrame:
         isotonic_from_bins,
     )
 
-    tune_session(spark)
-    d = _stage_doc_batches(spark, sf_dir)
-    base = f"{d.rstrip('/')}_iso_{_uuid.uuid4().hex[:8]}"
-    part_dir = f"{base}/bins"
-
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
+    def on_batch(batch_df: DataFrame, st: Landing) -> None:
         clf = feature_hashing_from(batch_df).select("doc_id", "clf_score")
         gop = gopher_rules_from(batch_df).select(
             "doc_id", F.col("passes").cast("bigint").alias("label")
         )
-        isotonic_bin_partials(clf.join(gop, "doc_id")).write.mode(
-            "overwrite"
-        ).parquet(f"{part_dir}/batch={epoch_id}")
+        st.land("bins", isotonic_bin_partials(clf.join(gop, "doc_id")))
 
-    try:
-        src = (
-            spark.readStream.schema(DOCS_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
-        )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
+    def finish(st: Landing) -> DataFrame:
         merged = (
-            spark.read.parquet(f"{part_dir}/batch=*")
+            st.landed("bins")
             .groupBy("bin")
             .agg(
                 F.sum("n").cast("bigint").alias("n"),
                 F.sum("s").cast("bigint").alias("s"),
             )
         )
-        out, _ = tracked_local_checkpoint(isotonic_from_bins(merged))
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        return isotonic_from_bins(merged)
+
+    return fold_stream(
+        spark, _stage_doc_batches(spark, sf_dir), DOCS_SCHEMA, on_batch, finish
+    )
 
 
 def incremental_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1631,19 +1113,10 @@ def incremental_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-K can carry), and emission re-ranks the concatenated candidates.
     A doc outside its batch's top-K can never enter the global top-K,
     so dropping it at batch time is lossless."""
-    import shutil
-    import uuid as _uuid
-
     from pyspark.sql import Window
 
-    from ..operators.checkpoints import tracked_local_checkpoint
     from ..plans.llm import PRIO_K, PRIO_SCALE
     from ..plans.relational import _kmv_u32
-
-    tune_session(spark)
-    d = _stage_doc_batches(spark, sf_dir)
-    base = f"{d.rstrip('/')}_prio_{_uuid.uuid4().hex[:8]}"
-    part_dir = f"{base}/topk"
 
     def _batch_topk(df: DataFrame) -> DataFrame:
         u = (_kmv_u32(F.col("doc_id").cast("string")) + F.lit(1)).cast("bigint")
@@ -1664,41 +1137,28 @@ def incremental_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             .drop("rn")
         )
 
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
-        _batch_topk(batch_df.select("doc_id", "source", "n_chars")).write.mode(
-            "overwrite"
-        ).parquet(f"{part_dir}/batch={epoch_id}")
-
-    try:
-        src = (
-            spark.readStream.schema(DOCS_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
-        )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        from pyspark.sql import Window
-
-        cand = spark.read.parquet(f"{part_dir}/batch=*")
+    def finish(st: Landing) -> DataFrame:
         rn = F.row_number().over(
             Window.partitionBy("source").orderBy(
                 F.col("priority_q").desc(), F.col("doc_id").asc()
             )
         ).cast("bigint")
-        out = (
-            cand.select("source", "doc_id", "n_chars", "priority_q", rn.alias("rank"))
+        return (
+            st.landed("topk")
+            .select("source", "doc_id", "n_chars", "priority_q", rn.alias("rank"))
             .filter(F.col("rank") <= PRIO_K)
             .orderBy("source", "rank")
         )
-        out, _ = tracked_local_checkpoint(out)
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+
+    return fold_stream(
+        spark,
+        _stage_doc_batches(spark, sf_dir),
+        DOCS_SCHEMA,
+        lambda b, st: st.land(
+            "topk", _batch_topk(b.select("doc_id", "source", "n_chars"))
+        ),
+        finish,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1891,30 +1351,15 @@ def incremental_priority_sample_retract(
     erosion counters — independent of corpus size; under
     transformWithState the kept set is a per-source bounded ListState
     and the pending set a MapState with watermark-aged eviction."""
-    import os
-    import shutil
-    import uuid as _uuid
-
     from pyspark.sql import Window
 
-    from ..operators.checkpoints import tracked_local_checkpoint
     from ..plans.llm import PRIO_K
 
-    tune_session(spark)
-    d = _stage_prio_retraction_batches(spark, sf_dir)
-    base = f"{d.rstrip('/')}_prior_{_uuid.uuid4().hex[:8]}"
-
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
-        s = batch_df.sparkSession
-
-        def rd(tag: str):
-            p = f"{base}/{tag}/epoch={epoch_id - 1}"
-            return s.read.parquet(p) if os.path.exists(p) else None
-
+    def on_batch(batch_df: DataFrame, st: Landing) -> None:
         kept, pend, x = priority_retract_update(
-            rd("kept"),
-            rd("pend"),
-            rd("x"),
+            st.latest("kept"),
+            st.latest("pend"),
+            st.latest("x"),
             batch_df.select("doc_id", "source", "n_chars", "sign"),
             PRIO_K + PRIO_RETRACT_B,
         )
@@ -1924,40 +1369,30 @@ def incremental_priority_sample_retract(
                 f"priority_retract erosion budget exhausted: {over} "
                 f"source(s) exceeded B={PRIO_RETRACT_B} kept-set deletions"
             )
-        kept.write.mode("overwrite").parquet(f"{base}/kept/epoch={epoch_id}")
-        pend.write.mode("overwrite").parquet(f"{base}/pend/epoch={epoch_id}")
-        x.write.mode("overwrite").parquet(f"{base}/x/epoch={epoch_id}")
+        st.land("kept", kept)
+        st.land("pend", pend)
+        st.land("x", x)
 
-    try:
-        src = (
-            spark.readStream.schema(DOCS_RETRACT_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
-        )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        kept = spark.read.parquet(f"{base}/kept/epoch=2")
+    def finish(st: Landing) -> DataFrame:
         rank = F.row_number().over(
             Window.partitionBy("source").orderBy(
                 F.col("priority_q").desc(), F.col("doc_id").asc()
             )
         ).cast("bigint")
-        out = (
-            kept.select(
-                "source", "doc_id", "n_chars", "priority_q", rank.alias("rank")
-            )
+        return (
+            st.latest("kept")
+            .select("source", "doc_id", "n_chars", "priority_q", rank.alias("rank"))
             .filter(F.col("rank") <= PRIO_K)
             .orderBy("source", "rank")
         )
-        out, _ = tracked_local_checkpoint(out)
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+
+    return fold_stream(
+        spark,
+        _stage_prio_retraction_batches(spark, sf_dir),
+        DOCS_RETRACT_SCHEMA,
+        on_batch,
+        finish,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2046,7 +1481,7 @@ def compact_dead_state(
     dirs = sorted(glob.glob(f"{state_dir}/batch=*"))
     if len(dirs) < 2:
         return
-    kept = spark.read.parquet(f"{state_dir}/batch=*")
+    kept = spark.read.parquet(*dirs)
     cols = kept.columns  # using-column joins reorder; restore below
     for c in anti_cols:
         kept = kept.join(
@@ -2093,49 +1528,28 @@ def incremental_near_dup_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     → drop, the signed compactor's crash discipline), so state is
     surviving-rows-sized; everything else is the insert-only mirror's
     banded state."""
-    import os
-    import shutil
-    import uuid as _uuid
-
-    from ..operators.checkpoints import tracked_local_checkpoint
     from ..plans.llm import _band_rows, doc_tbl_from
     from ..plans.tables import load
 
-    tune_session(spark)
-    d = _stage_near_dup_retraction_batches(spark, sf_dir)
-    base = f"{d.rstrip('/')}_ndr_{_uuid.uuid4().hex[:8]}"
-    state_dir = f"{base}/doc_tbl"
-    edges_dir = f"{base}/edges"
-    dead_dir = f"{base}/dead"
-
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
-        s = batch_df.sparkSession
-        prev_dead_p = f"{dead_dir}/epoch={epoch_id - 1}"
-        prev_dead = (
-            s.read.parquet(prev_dead_p)
-            if os.path.exists(prev_dead_p)
-            else s.createDataFrame([], "doc_id bigint")
-        )
-        dead = (
+    def on_batch(batch_df: DataFrame, st: Landing) -> None:
+        prev_dead = st.latest("dead")
+        if prev_dead is None:
+            prev_dead = spark.createDataFrame([], "doc_id bigint")
+        st.land(
+            "dead",
             prev_dead.unionByName(
                 batch_df.filter(F.col("sign") == -1).select("doc_id")
-            )
-            .distinct()
+            ).distinct(),
         )
-        dead.write.mode("overwrite").parquet(f"{dead_dir}/epoch={epoch_id}")
-        dead = s.read.parquet(f"{dead_dir}/epoch={epoch_id}")
+        dead = st.current("dead")
         ins = (
             batch_df.filter(F.col("sign") == 1)
             .select("doc_id", "text", "lang", "n_chars")
             .join(dead, "doc_id", "left_anti")
         )
-        doc_tbl_from(ins).write.mode("overwrite").parquet(
-            f"{state_dir}/batch={epoch_id}"
-        )
-        batch_tbl = s.read.parquet(f"{state_dir}/batch={epoch_id}")
-        all_tbl = s.read.parquet(f"{state_dir}/batch=*").join(
-            dead, "doc_id", "left_anti"
-        )
+        st.land("doc_tbl", doc_tbl_from(ins))
+        batch_tbl = st.current("doc_tbl")
+        all_tbl = st.landed("doc_tbl").join(dead, "doc_id", "left_anti")
         a = _band_rows(all_tbl).alias("a")
         b = _band_rows(batch_tbl).alias("b")
         cand = (
@@ -2175,43 +1589,33 @@ def incremental_near_dup_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("jaccard") >= JACCARD_MIN)
             .select("doc_a", "doc_b")
         )
-        edges.write.mode("overwrite").parquet(f"{edges_dir}/batch={epoch_id}")
-        if epoch_id % ND_COMPACT_EVERY == 1:
-            compact_dead_state(s, state_dir, dead, epoch_id)
+        st.land("edges", edges)
+        if st.epoch % ND_COMPACT_EVERY == 1:
+            compact_dead_state(spark, st.path("doc_tbl"), dead, st.epoch)
             compact_dead_state(
-                s, edges_dir, dead, epoch_id, anti_cols=("doc_a", "doc_b")
+                spark, st.path("edges"), dead, st.epoch, anti_cols=("doc_a", "doc_b")
             )
 
-    try:
-        src = (
-            spark.readStream.schema(DOCS_ND_RETRACT_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
-        )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        dead = spark.read.parquet(f"{dead_dir}/epoch=2")
+    def finish(st: Landing) -> DataFrame:
+        dead = st.latest("dead")
         docs = load(spark, sf_dir, "documents").join(dead, "doc_id", "left_anti")
-        edges = spark.read.parquet(f"{edges_dir}/batch=*")
         live_kills = (
-            edges.join(
-                dead.select(F.col("doc_id").alias("doc_a")), "doc_a", "left_anti"
-            )
+            st.landed("edges")
+            .join(dead.select(F.col("doc_id").alias("doc_a")), "doc_a", "left_anti")
             .select(F.col("doc_b").alias("doc_id"))
             .distinct()
         )
-        out = docs.join(live_kills, "doc_id", "left_anti").select(
+        return docs.join(live_kills, "doc_id", "left_anti").select(
             "doc_id", "lang", "n_chars"
         )
-        out, _ = tracked_local_checkpoint(out)
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+
+    return fold_stream(
+        spark,
+        _stage_near_dup_retraction_batches(spark, sf_dir),
+        DOCS_ND_RETRACT_SCHEMA,
+        on_batch,
+        finish,
+    )
 
 
 def incremental_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2228,39 +1632,17 @@ def incremental_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared ``dsir_from_feats`` kernel over merged partials — over COUNT
     ROWS, never raw text (the nb_partials posture). Epoch-scoped
     overwrite = replay-idempotent."""
-    import shutil
-    import uuid as _uuid
-
-    from ..operators.checkpoints import tracked_local_checkpoint
     from ..plans.llm import dsir_feats, dsir_from_feats
 
-    tune_session(spark)
-    d = _stage_doc_batches(spark, sf_dir)
-    base = f"{d.rstrip('/')}_dsir_{_uuid.uuid4().hex[:8]}"
-
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
-        feats = dsir_feats(batch_df.select("doc_id", "source", "text"))
-        feats.write.mode("overwrite").parquet(f"{base}/feats/batch={epoch_id}")
-
-    try:
-        src = (
-            spark.readStream.schema(DOCS_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
-        )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        out, _ = tracked_local_checkpoint(
-            dsir_from_feats(spark.read.parquet(f"{base}/feats/batch=*")),
-        )
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    return fold_stream(
+        spark,
+        _stage_doc_batches(spark, sf_dir),
+        DOCS_SCHEMA,
+        lambda b, st: st.land(
+            "feats", dsir_feats(b.select("doc_id", "source", "text"))
+        ),
+        lambda st: dsir_from_feats(st.landed("feats")),
+    )
 
 def incremental_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming incremental ANN-index (NSW graph) maintenance — bitwise
@@ -2301,11 +1683,6 @@ def incremental_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-running epoch e rebuilds vecs/batch=e and fwd/epoch=e from the
     same inputs (state chains from the newest epoch BELOW e, never e
     itself)."""
-    import os
-    import shutil
-    import uuid as _uuid
-
-    from ..operators.checkpoints import tracked_local_checkpoint
     from ..operators.similarity import (
         banded_pairs_between,
         fwd_top_m,
@@ -2315,26 +1692,10 @@ def incremental_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..plans.llm import EMB_DIM
     from ..plans.tables import load
 
-    tune_session(spark)
-    d = _stage_emb_batches(spark, sf_dir)
-    base = f"{d.rstrip('/')}_ann_{_uuid.uuid4().hex[:8]}"
-    vecs_dir = f"{base}/vecs"
-    fwd_dir = f"{base}/fwd"
-
-    def _fwd_epochs() -> list[int]:
-        if not os.path.isdir(fwd_dir):
-            return []
-        return sorted(
-            int(p.split("=", 1)[1])
-            for p in os.listdir(fwd_dir)
-            if p.startswith("epoch=")
-        )
-
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
-        prep = nsw_prep(batch_df, EMB_DIM).withColumn("ep", F.lit(epoch_id))
-        prep.write.mode("overwrite").parquet(f"{vecs_dir}/batch={epoch_id}")
-        store = spark.read.parquet(f"{vecs_dir}/batch=*")
-        batch_v = store.filter(F.col("ep") == epoch_id)
+    def on_batch(batch_df: DataFrame, st: Landing) -> None:
+        st.land("vecs", nsw_prep(batch_df, EMB_DIM).withColumn("ep", F.lit(st.epoch)))
+        store = st.landed("vecs")
+        batch_v = store.filter(F.col("ep") == st.epoch)
         # new -> any (both directions of within-batch pairs arise here)
         p_new = banded_pairs_between(batch_v, store)
         # old -> new: mirror the candidates, drop mirrored within-batch
@@ -2350,38 +1711,18 @@ def incremental_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("b_id").alias("dst"),
             F.col("cos_sim").alias("e_sim"),
         )
-        prev_eps = [e for e in _fwd_epochs() if e < epoch_id]
-        if prev_eps:
-            prev = spark.read.parquet(f"{fwd_dir}/epoch={max(prev_eps)}")
-        else:
-            prev = spark.createDataFrame(
-                [], "src long, dst long, e_sim double"
-            )
-        merged = fwd_top_m(prev.unionByName(directed))
-        merged.write.mode("overwrite").parquet(f"{fwd_dir}/epoch={epoch_id}")
+        prev = st.latest("fwd")
+        if prev is None:
+            prev = spark.createDataFrame([], "src long, dst long, e_sim double")
+        st.land("fwd", fwd_top_m(prev.unionByName(directed)))
 
-    try:
-        src = (
-            spark.readStream.schema(EMB_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
-        )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        eps = _fwd_epochs()
-        if not eps:
-            return spark.createDataFrame([], "src long, dst long, e_sim double")
-        fwd = spark.read.parquet(f"{fwd_dir}/epoch={max(eps)}")
+    def finish(st: Landing) -> DataFrame:
         v = nsw_prep(load(spark, sf_dir, "embeddings"), EMB_DIM)
-        out, _ = tracked_local_checkpoint(nsw_finish(fwd, v))
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        return nsw_finish(st.latest("fwd"), v)
+
+    return fold_stream(
+        spark, _stage_emb_batches(spark, sf_dir), EMB_SCHEMA, on_batch, finish
+    )
 
 # ---------------------------------------------------------------------------
 # Retraction-aware ANN-graph maintenance (round 13): vector UN-ingestion
@@ -2459,11 +1800,6 @@ def incremental_ann_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: per-batch contact is (batch x store) on the bucket
     equi-key; the pair state is the banding volume (compacted to
     survivor pairs); the dead set is deletion-contract-sized."""
-    import os
-    import shutil
-    import uuid as _uuid
-
-    from ..operators.checkpoints import tracked_local_checkpoint
     from ..operators.similarity import (
         banded_pairs_between,
         fwd_top_m,
@@ -2473,34 +1809,17 @@ def incremental_ann_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..plans.llm import EMB_DIM
     from ..plans.tables import load
 
-    tune_session(spark)
-    d = _stage_emb_retraction_batches(spark, sf_dir)
-    base = f"{d.rstrip('/')}_annr_{_uuid.uuid4().hex[:8]}"
-    dead_dir = f"{base}/dead"
-    vecs_dir = f"{base}/vecs"
-    pairs_dir = f"{base}/pairs"
-
-    def _read_or_empty(path: str, schema: str) -> DataFrame:
-        if os.path.isdir(path):
-            return spark.read.parquet(f"{path}/batch=*")
-        return spark.createDataFrame([], schema)
-
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
-        tombs = batch_df.filter(F.col("sign") == -1).select("vec_id")
-        tombs.write.mode("overwrite").parquet(f"{dead_dir}/batch={epoch_id}")
-        dead = spark.read.parquet(f"{dead_dir}/batch=*").distinct()
+    def on_batch(batch_df: DataFrame, st: Landing) -> None:
+        st.land("dead", batch_df.filter(F.col("sign") == -1).select("vec_id"))
+        dead = st.landed("dead").distinct()
         ins = (
             batch_df.filter(F.col("sign") == 1)
             .select("vec_id", "embedding")
             .join(dead, "vec_id", "left_anti")
         )
-        prep = nsw_prep(ins, EMB_DIM).withColumn("ep", F.lit(epoch_id))
-        prep.write.mode("overwrite").parquet(f"{vecs_dir}/batch={epoch_id}")
-        store = (
-            spark.read.parquet(f"{vecs_dir}/batch=*")
-            .join(dead, "vec_id", "left_anti")
-        )
-        batch_v = store.filter(F.col("ep") == epoch_id)
+        st.land("vecs", nsw_prep(ins, EMB_DIM).withColumn("ep", F.lit(st.epoch)))
+        store = st.landed("vecs").join(dead, "vec_id", "left_anti")
+        batch_v = store.filter(F.col("ep") == st.epoch)
         p_new = banded_pairs_between(batch_v, store)
         batch_ids = batch_v.select(F.col("vec_id").alias("a_id"))
         p_old = p_new.select(
@@ -2513,34 +1832,20 @@ def incremental_ann_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("b_id").alias("dst"),
             F.col("cos_sim").alias("e_sim"),
         )
-        directed.write.mode("overwrite").parquet(
-            f"{pairs_dir}/batch={epoch_id}"
-        )
-        if epoch_id % ANN_COMPACT_EVERY == 1:
+        st.land("pairs", directed)
+        if st.epoch % ANN_COMPACT_EVERY == 1:
             dead_dd = dead.select(F.col("vec_id").alias("doc_id"))
             compact_dead_state(
-                spark, pairs_dir, dead_dd, epoch_id, anti_cols=("src", "dst")
+                spark, st.path("pairs"), dead_dd, st.epoch, anti_cols=("src", "dst")
             )
             compact_dead_state(
-                spark, vecs_dir, dead_dd, epoch_id, anti_cols=("vec_id",)
+                spark, st.path("vecs"), dead_dd, st.epoch, anti_cols=("vec_id",)
             )
 
-    try:
-        src = (
-            spark.readStream.schema(EMB_RETRACT_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
-        )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        dead = _read_or_empty(dead_dir, "vec_id long").distinct()
+    def finish(st: Landing) -> DataFrame:
+        dead = st.landed("dead").distinct()
         pairs = (
-            _read_or_empty(pairs_dir, "src long, dst long, e_sim double")
+            st.landed("pairs")
             .join(dead.select(F.col("vec_id").alias("src")), "src", "left_anti")
             .join(dead.select(F.col("vec_id").alias("dst")), "dst", "left_anti")
             .select("src", "dst", "e_sim")
@@ -2550,7 +1855,12 @@ def incremental_ann_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
             dead, "vec_id", "left_anti"
         )
         v = nsw_prep(surviving, EMB_DIM)
-        out, _ = tracked_local_checkpoint(nsw_finish(fwd_top_m(pairs), v))
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        return nsw_finish(fwd_top_m(pairs), v)
+
+    return fold_stream(
+        spark,
+        _stage_emb_retraction_batches(spark, sf_dir),
+        EMB_RETRACT_SCHEMA,
+        on_batch,
+        finish,
+    )

@@ -91,6 +91,96 @@ def _write_single(df: DataFrame, dest: str) -> None:
     shutil.rmtree(tmp)
 
 
+class Landing:
+    """The named parquet states of one ``fold_stream`` run, all under one
+    landing dir: ``<root>/<name>/batch=<epoch>`` per micro-batch."""
+
+    def __init__(self, spark: SparkSession, root: str) -> None:
+        self.spark = spark
+        self.root = root
+        self.epoch = -1
+
+    def path(self, name: str) -> str:
+        return f"{self.root}/{name}"
+
+    def land(self, name: str, df: DataFrame) -> None:
+        """Write ``df`` as this epoch's partition of ``name``. The
+        epoch-scoped overwrite makes a replayed epoch rewrite its own
+        partition instead of appending duplicates (exactly-once)."""
+        df.write.mode("overwrite").parquet(f"{self.path(name)}/batch={self.epoch}")
+
+    def current(self, name: str) -> DataFrame:
+        """This epoch's partition of ``name``, read back."""
+        return self.spark.read.parquet(f"{self.path(name)}/batch={self.epoch}")
+
+    def landed(self, name: str) -> DataFrame:
+        """Every landed partition of ``name`` (compaction folds included).
+        Partition discovery adds a ``batch`` column; it is dropped, so a
+        whole-row ``distinct()`` merges equal rows across batches."""
+        return self.spark.read.parquet(self.path(name)).drop("batch")
+
+    def latest(self, name: str) -> DataFrame | None:
+        """The newest partition of ``name`` landed before this epoch (in
+        ``finish``, the last one), or None: per-epoch snapshot state chains
+        from it and never reads the epoch being (re)written."""
+        import os
+
+        p = self.path(name)
+        eps = [
+            int(e[6:])
+            for e in (os.listdir(p) if os.path.isdir(p) else [])
+            if e.startswith("batch=") and e[6:].isdigit() and int(e[6:]) < self.epoch
+        ]
+        return self.spark.read.parquet(f"{p}/batch={max(eps)}") if eps else None
+
+
+def fold_stream(
+    spark: SparkSession, stage_dir: str, schema: T.StructType, on_batch, finish
+) -> DataFrame:
+    """Replay ``stage_dir`` as a maxFilesPerTrigger=1 parquet file stream
+    into ``on_batch(batch_df, landing)`` (one call per micro-batch, with
+    ``landing.epoch`` set), then return ``finish(landing)`` materialized by
+    a tracked local checkpoint — the one lifecycle of every incremental
+    materialized view.
+
+    The landing dir is unique per call and sits next to ``stage_dir``, not
+    under it (the file source lists its dir recursively). The stream's
+    checkpoint lives inside it, and it is removed on every exit path, so a
+    returned result never depends on files a later call deletes and a
+    failed run leaves nothing behind."""
+    import math
+    import shutil
+
+    from ..operators.checkpoints import tracked_local_checkpoint
+
+    tune_session(spark)
+    st = Landing(spark, f"{stage_dir.rstrip('/')}_fold_{uuid.uuid4().hex[:8]}")
+
+    def _batch(batch_df: DataFrame, epoch_id: int) -> None:
+        st.epoch = epoch_id
+        on_batch(batch_df, st)
+
+    try:
+        q = (
+            spark.readStream.schema(schema)
+            .format("parquet")
+            .option("maxFilesPerTrigger", "1")
+            .load(stage_dir)
+            .writeStream.foreachBatch(_batch)
+            .option("checkpointLocation", st.path("_checkpoint"))
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        st.epoch = math.inf
+        out, _ = tracked_local_checkpoint(finish(st))
+        return out
+    finally:
+        shutil.rmtree(st.root, ignore_errors=True)
+
+
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune_session(spark)
     return (
@@ -300,46 +390,31 @@ def foreach_batch_last_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     delivers the oldest rows in the LAST batch), which is what makes an
     exact batch oracle possible. At scale the window partitions per user
     (no global sort) and the per-batch writes are append-shaped."""
-    import shutil
-
-    tune_session(spark)
-    d = _stage_late_batches(spark, sf_dir)
-    # NOT under `d`: the file-stream source lists its dir recursively and
-    # would ingest (and conflict with) the sink's partition layout.
-    base = d.rstrip("/") + "_fb_state"
-    shutil.rmtree(base, ignore_errors=True)
-
-    def _land(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(f"{base}/batch={epoch_id}")
-
-    src = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(d)
-    )
-    q = src.writeStream.foreachBatch(_land).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
     from pyspark.sql import Window
 
-    landed = spark.read.parquet(f"{base}/batch=*")
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    return (
-        landed.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(
-            "user_id",
-            F.col("event_id").alias("last_event_id"),
-            F.col("event_type").alias("last_event_type"),
-            F.expr("ts div 1000000000").alias("last_ts_sec"),
-            F.round("value", 2).alias("last_value"),
+    def finish(st: Landing) -> DataFrame:
+        w = Window.partitionBy("user_id").orderBy(
+            F.col("ts").desc(), F.col("event_id").desc()
         )
+        return (
+            st.landed("events")
+            .withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") == 1)
+            .select(
+                "user_id",
+                F.col("event_id").alias("last_event_id"),
+                F.col("event_type").alias("last_event_type"),
+                F.expr("ts div 1000000000").alias("last_ts_sec"),
+                F.round("value", 2).alias("last_value"),
+            )
+        )
+
+    return fold_stream(
+        spark,
+        _stage_late_batches(spark, sf_dir),
+        EVENTS_SCHEMA,
+        lambda b, st: st.land("events", b),
+        finish,
     )
 
 
@@ -587,56 +662,31 @@ def incremental_cms_user_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw events), and the heavy-user probe is a bounded broadcast join —
     continuous frequency monitoring with constant memory.
     """
-    import shutil
-    import uuid as _uuid
-
-    from ..operators.checkpoints import tracked_local_checkpoint
     from ..operators.sketches import cms_cells, cms_estimate
 
-    tune_session(spark)
-    d = _stage_late_batches(spark, sf_dir)
-    base = f"{d.rstrip('/')}_cms_{_uuid.uuid4().hex[:8]}"
+    def on_batch(b: DataFrame, st: Landing) -> None:
+        st.land("cells", cms_cells(b.select(F.col("user_id").cast("string").alias("w"))))
 
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
-        items = batch_df.select(F.col("user_id").cast("string").alias("w"))
-        cms_cells(items).write.mode("overwrite").parquet(f"{base}/batch={epoch_id}")
-
-    try:
-        src = (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
-        )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        merged = (
-            spark.read.parquet(f"{base}/batch=*")
-            .groupBy("r", "pos")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
-        ev = _load_canonical_events(spark, sf_dir)
+    def finish(st: Landing) -> DataFrame:
+        merged = st.landed("cells").groupBy("r", "pos").agg(F.sum("cnt").alias("cnt"))
         exact = (
-            ev.select(F.col("user_id").cast("string").alias("w"))
+            _load_canonical_events(spark, sf_dir)
+            .select(F.col("user_id").cast("string").alias("w"))
             .groupBy("w")
             .agg(F.count(F.lit(1)).alias("exact_freq"))
             .orderBy(F.col("exact_freq").desc(), "w")
             .limit(20)
         )
-        out = cms_estimate(exact, merged).select(
+        return cms_estimate(exact, merged).select(
             F.col("w").cast("bigint").alias("user_id"),
             "exact_freq",
             "cms_est",
             (F.col("cms_est") - F.col("exact_freq")).alias("overcount"),
         )
-        out, _ = tracked_local_checkpoint(out)
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+
+    return fold_stream(
+        spark, _stage_late_batches(spark, sf_dir), EVENTS_SCHEMA, on_batch, finish
+    )
 
 
 def incremental_topk_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -655,45 +705,24 @@ def incremental_topk_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge): top-k cannot be merged rank-wise, so the partials must stay at
     key granularity — exactly what this plan keeps bounded.
     """
-    import shutil
-    import uuid as _uuid
-
     from pyspark.sql import Window
 
-    from ..operators.checkpoints import tracked_local_checkpoint
-
-    tune_session(spark)
-    d = _stage_late_batches(spark, sf_dir)
-    base = f"{d.rstrip('/')}_topk_{_uuid.uuid4().hex[:8]}"
-
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
-        part = batch_df.groupBy("event_type", "user_id").agg(
-            F.sum(F.col("value").cast("decimal(18,2)")).alias("v")
+    def on_batch(b: DataFrame, st: Landing) -> None:
+        st.land(
+            "sums",
+            b.groupBy("event_type", "user_id").agg(
+                F.sum(F.col("value").cast("decimal(18,2)")).alias("v")
+            ),
         )
-        part.write.mode("overwrite").parquet(f"{base}/batch={epoch_id}")
 
-    try:
-        src = (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
-        )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        merged = (
-            spark.read.parquet(f"{base}/batch=*")
-            .groupBy("event_type", "user_id")
-            .agg(F.sum("v").alias("v"))
+    def finish(st: Landing) -> DataFrame:
+        merged = st.landed("sums").groupBy("event_type", "user_id").agg(
+            F.sum("v").alias("v")
         )
         w = Window.partitionBy("event_type").orderBy(
             F.col("v").desc(), F.col("user_id")
         )
-        out = (
+        return (
             merged.withColumn("rank", F.row_number().over(w).cast("bigint"))
             .filter(F.col("rank") <= 3)
             .select(
@@ -703,10 +732,10 @@ def incremental_topk_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "rank",
             )
         )
-        out, _ = tracked_local_checkpoint(out)
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+
+    return fold_stream(
+        spark, _stage_late_batches(spark, sf_dir), EVENTS_SCHEMA, on_batch, finish
+    )
 
 
 QUANT_BIN_WIDTH = 5.0
@@ -732,37 +761,17 @@ def incremental_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     newest-first (the late-data staging), so the equality proves arrival
     order cannot matter. Epoch-scoped overwrite = replay-idempotent.
     """
-    import shutil
-    import uuid as _uuid
 
-    from ..operators.checkpoints import tracked_local_checkpoint
-
-    tune_session(spark)
-    d = _stage_late_batches(spark, sf_dir)
-    base = f"{d.rstrip('/')}_funnel_{_uuid.uuid4().hex[:8]}"
-
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
-        part = (
-            batch_df.filter(F.col("event_type").isin(*FUNNEL_TYPES))
+    def on_batch(b: DataFrame, st: Landing) -> None:
+        st.land(
+            "funnel",
+            b.filter(F.col("event_type").isin(*FUNNEL_TYPES))
             .select("user_id", "event_type", "ts")
-            .distinct()
+            .distinct(),
         )
-        part.write.mode("overwrite").parquet(f"{base}/batch={epoch_id}")
 
-    try:
-        src = (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
-        )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        ev = spark.read.parquet(f"{base}/batch=*").distinct()
+    def finish(st: Landing) -> DataFrame:
+        ev = st.landed("funnel").distinct()
         t1 = (
             ev.filter(F.col("event_type") == "view")
             .groupBy("user_id")
@@ -802,10 +811,11 @@ def incremental_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = rows[0]
         for r in rows[1:]:
             out = out.unionByName(r)
-        out, _ = tracked_local_checkpoint(out)
         return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+
+    return fold_stream(
+        spark, _stage_late_batches(spark, sf_dir), EVENTS_SCHEMA, on_batch, finish
+    )
 
 
 def incremental_quantile_value(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -825,64 +835,31 @@ def incremental_quantile_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     and shifts the cumulative counts without replaying history. All rank
     arithmetic is exact integers; the only floats are the bin edges.
     """
-    import shutil
-    import uuid as _uuid
-
     from pyspark.sql import Window
 
-    from ..operators.checkpoints import tracked_local_checkpoint
-
-    tune_session(spark)
-    d = _stage_late_batches(spark, sf_dir)
-    base = f"{d.rstrip('/')}_quant_{_uuid.uuid4().hex[:8]}"
-
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
-        part = (
-            batch_df.filter(F.col("value").isNotNull())
-            .select(
-                F.floor(F.col("value") / F.lit(QUANT_BIN_WIDTH)).alias("bin")
-            )
+    def on_batch(b: DataFrame, st: Landing) -> None:
+        st.land(
+            "hist",
+            b.filter(F.col("value").isNotNull())
+            .select(F.floor(F.col("value") / F.lit(QUANT_BIN_WIDTH)).alias("bin"))
             .groupBy("bin")
-            .agg(F.count(F.lit(1)).alias("cnt"))
+            .agg(F.count(F.lit(1)).alias("cnt")),
         )
-        part.write.mode("overwrite").parquet(f"{base}/batch={epoch_id}")
 
-    try:
-        src = (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
-        )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        hist = (
-            spark.read.parquet(f"{base}/batch=*")
-            .groupBy("bin")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
-        cum = hist.withColumn(
-            "cum", F.sum("cnt").over(Window.orderBy("bin"))
-        )
+    def finish(st: Landing) -> DataFrame:
+        hist = st.landed("hist").groupBy("bin").agg(F.sum("cnt").alias("cnt"))
+        cum = hist.withColumn("cum", F.sum("cnt").over(Window.orderBy("bin")))
         total = hist.agg(F.sum("cnt").alias("n"))
         qs = spark.range(1).select(
-            F.explode(
-                F.array(*[F.lit(float(qv)) for qv in QUANT_QS])
-            ).alias("q")
+            F.explode(F.array(*[F.lit(float(qv)) for qv in QUANT_QS])).alias("q")
         )
         tgt = qs.crossJoin(F.broadcast(total)).select(
             "q",
             F.col("n").alias("n_total"),
-            F.ceil(F.col("q") * F.col("n").cast("double")).alias(
-                "target_rank"
-            ),
+            F.ceil(F.col("q") * F.col("n").cast("double")).alias("target_rank"),
         )
         w = Window.partitionBy("q").orderBy("bin")
-        out = (
+        return (
             tgt.join(cum, F.col("cum") >= F.col("target_rank"))
             .withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
@@ -891,15 +868,13 @@ def incremental_quantile_value(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_total",
                 "target_rank",
                 "bin",
-                (F.col("bin").cast("double") * F.lit(QUANT_BIN_WIDTH)).alias(
-                    "bin_lo"
-                ),
+                (F.col("bin").cast("double") * F.lit(QUANT_BIN_WIDTH)).alias("bin_lo"),
             )
         )
-        out, _ = tracked_local_checkpoint(out)
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+
+    return fold_stream(
+        spark, _stage_late_batches(spark, sf_dir), EVENTS_SCHEMA, on_batch, finish
+    )
 
 
 def _stage_time_ordered_batches(
@@ -1029,59 +1004,24 @@ def incremental_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
     of stream length; the carried-users anti-join is user-keyed and
     would be a keyed state-store lookup under foreachBatch-free
     transformWithState."""
-    import shutil
-    import uuid as _uuid
-
-    from pyspark.sql import Window
-
-    from ..operators.checkpoints import tracked_local_checkpoint
     from ..plans.relational import markov_stationary_from_counts
 
-    tune_session(spark)
-    d = _stage_time_ordered_batches(spark, sf_dir)
-    base = f"{d.rstrip('/')}_markov_{_uuid.uuid4().hex[:8]}"
-
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
-        import os
-
+    def on_batch(batch_df: DataFrame, st: Landing) -> None:
         b = batch_df.select("user_id", "ts", "event_id", "event_type")
-        prev_path = f"{base}/state/epoch={epoch_id - 1}"
-        prev = (
-            batch_df.sparkSession.read.parquet(prev_path)
-            if os.path.exists(prev_path)
-            else None
-        )
-        counts, new_state = markov_batch_partial(b, prev)
-        counts.write.mode("overwrite").parquet(f"{base}/batch={epoch_id}")
-        b.select(F.col("event_type").alias("s")).distinct().write.mode(
-            "overwrite"
-        ).parquet(f"{base}/types/batch={epoch_id}")
-        new_state.write.mode("overwrite").parquet(f"{base}/state/epoch={epoch_id}")
+        counts, new_state = markov_batch_partial(b, st.latest("state"))
+        st.land("counts", counts)
+        st.land("types", b.select(F.col("event_type").alias("s")).distinct())
+        st.land("state", new_state)
 
-    try:
-        src = (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
+    def finish(st: Landing) -> DataFrame:
+        c0 = st.landed("counts").groupBy("src", "dst").agg(
+            F.sum("c").cast("bigint").alias("c")
         )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        return markov_stationary_from_counts(c0, st.landed("types").distinct())
 
-        c0 = (
-            spark.read.parquet(f"{base}/batch=*")
-            .groupBy("src", "dst")
-            .agg(F.sum("c").cast("bigint").alias("c"))
-        )
-        states = spark.read.parquet(f"{base}/types/batch=*").distinct()
-        out = markov_stationary_from_counts(c0, states)
-        out, _ = tracked_local_checkpoint(out)
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    return fold_stream(
+        spark, _stage_time_ordered_batches(spark, sf_dir), EVENTS_SCHEMA, on_batch, finish
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1276,48 +1216,25 @@ def incremental_markov_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     |users| rows, finalized counts |types|² — none grow with stream
     length. Under transformWithState the buffer would be a per-user
     ListState with the freeze on the event-time timer."""
-    import os
-    import shutil
-    import uuid as _uuid
-
-    from ..operators.checkpoints import tracked_local_checkpoint
     from ..plans.relational import markov_stationary_from_counts
 
-    tune_session(spark)
-    d = _stage_markov_retraction_batches(spark, sf_dir)
-    base = f"{d.rstrip('/')}_mkvr_{_uuid.uuid4().hex[:8]}"
-
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
-        s = batch_df.sparkSession
+    def on_batch(batch_df: DataFrame, st: Landing) -> None:
         b = batch_df.select(
             "user_id", "ts", "event_id", "event_type",
             F.col("sign").cast("bigint").alias("net"),
         )
-        prev_buf = f"{base}/buf/epoch={epoch_id - 1}"
+        prev_buf = st.latest("buf")
         merged = (
-            s.read.parquet(prev_buf).unionByName(b)
-            if os.path.exists(prev_buf)
-            else b
-        )
-        merged = (
-            merged.groupBy("user_id", "ts", "event_id", "event_type")
+            (b if prev_buf is None else prev_buf.unionByName(b))
+            .groupBy("user_id", "ts", "event_id", "event_type")
             .agg(F.sum("net").cast("bigint").alias("net"))
             .filter(F.col("net") != 0)
         )
-        prev_hwm_p = f"{base}/hwm/epoch={epoch_id - 1}"
-        prev_hwm = (
-            s.read.parquet(prev_hwm_p).collect()[0][0]
-            if os.path.exists(prev_hwm_p)
-            else None
-        )
+        prev_hwm = st.latest("hwm")
         bmax = b.agg(F.max("ts").alias("m")).collect()[0][0]
-        hwm = bmax if prev_hwm is None else max(prev_hwm, bmax)
-        prev_lf_p = f"{base}/lastfin/epoch={epoch_id - 1}"
-        prev_lastfin = (
-            s.read.parquet(prev_lf_p) if os.path.exists(prev_lf_p) else None
-        )
+        hwm = bmax if prev_hwm is None else max(prev_hwm.collect()[0][0], bmax)
         counts, new_lastfin, keep, types, violations = markov_retract_freeze(
-            merged, prev_lastfin, hwm - MARKOV_RETRACT_W_NS
+            merged, st.latest("lastfin"), hwm - MARKOV_RETRACT_W_NS
         )
         nviol = violations.count()
         if nviol:
@@ -1326,39 +1243,19 @@ def incremental_markov_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "event(s) froze with net != +1 (insert or tombstone "
                 f"arrived more than {MARKOV_RETRACT_W_NS} ns late)"
             )
-        counts.write.mode("overwrite").parquet(f"{base}/fin/batch={epoch_id}")
-        types.write.mode("overwrite").parquet(f"{base}/types/batch={epoch_id}")
-        keep.write.mode("overwrite").parquet(f"{base}/buf/epoch={epoch_id}")
-        new_lastfin.write.mode("overwrite").parquet(
-            f"{base}/lastfin/epoch={epoch_id}"
-        )
-        s.createDataFrame([(int(hwm),)], "hwm bigint").write.mode(
-            "overwrite"
-        ).parquet(f"{base}/hwm/epoch={epoch_id}")
+        st.land("fin", counts)
+        st.land("types", types)
+        st.land("buf", keep)
+        st.land("lastfin", new_lastfin)
+        st.land("hwm", spark.createDataFrame([(int(hwm),)], "hwm bigint"))
 
-    try:
-        src = (
-            spark.readStream.schema(MARKOV_RETRACT_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
+    def finish(st: Landing) -> DataFrame:
+        fin = st.landed("fin").groupBy("src", "dst").agg(
+            F.sum("c").cast("bigint").alias("c")
         )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        last = MARKOV_RETRACT_BATCHES - 1
-        fin = (
-            spark.read.parquet(f"{base}/fin/batch=*")
-            .groupBy("src", "dst")
-            .agg(F.sum("c").cast("bigint").alias("c"))
-        )
-        buf = spark.read.parquet(f"{base}/buf/epoch={last}")
-        lastfin = spark.read.parquet(f"{base}/lastfin/epoch={last}")
+        buf = st.latest("buf")
         tail, _ = markov_batch_partial(
-            buf.select("user_id", "ts", "event_id", "event_type"), lastfin
+            buf.select("user_id", "ts", "event_id", "event_type"), st.latest("lastfin")
         )
         c0 = (
             fin.unionByName(tail)
@@ -1366,12 +1263,16 @@ def incremental_markov_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum("c").cast("bigint").alias("c"))
         )
         states = (
-            spark.read.parquet(f"{base}/types/batch=*")
+            st.landed("types")
             .unionByName(buf.select(F.col("event_type").alias("s")))
             .distinct()
         )
-        out = markov_stationary_from_counts(c0, states)
-        out, _ = tracked_local_checkpoint(out)
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        return markov_stationary_from_counts(c0, states)
+
+    return fold_stream(
+        spark,
+        _stage_markov_retraction_batches(spark, sf_dir),
+        MARKOV_RETRACT_SCHEMA,
+        on_batch,
+        finish,
+    )

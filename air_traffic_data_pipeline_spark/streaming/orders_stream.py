@@ -33,8 +33,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from ..session import tune_session
-from .events_stream import _STAGE_ROOT, _stage_ordered
+from .events_stream import _STAGE_ROOT, Landing, _stage_ordered, fold_stream
 
 def _int_count_guarded(c_big):
     """Cast a bigint multiplicity to int for array_repeat, raising on
@@ -129,40 +128,15 @@ def rfm_merge_partials(partials: DataFrame) -> DataFrame:
 def incremental_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming incremental RFM — bitwise equal to
     ``plans.relational.rfm_segments`` (its SQL is the oracle)."""
-    import shutil
-    import uuid as _uuid
-
-    from ..operators.checkpoints import tracked_local_checkpoint
     from ..plans.relational import rfm_from_per_customer
 
-    tune_session(spark)
-    d = _stage_order_batches(spark, sf_dir)
-    base = f"{d.rstrip('/')}_rfm_{_uuid.uuid4().hex[:8]}"
-    part_dir = f"{base}/partials"
-
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
-        rfm_partial(batch_df).write.mode("overwrite").parquet(
-            f"{part_dir}/batch={epoch_id}"
-        )
-
-    try:
-        src = (
-            spark.readStream.schema(ORDERS_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
-        )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        per = rfm_merge_partials(spark.read.parquet(f"{part_dir}/batch=*"))
-        out, _ = tracked_local_checkpoint(rfm_from_per_customer(per))
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    return fold_stream(
+        spark,
+        _stage_order_batches(spark, sf_dir),
+        ORDERS_SCHEMA,
+        lambda b, st: st.land("partials", rfm_partial(b)),
+        lambda st: rfm_from_per_customer(rfm_merge_partials(st.landed("partials"))),
+    )
 
 
 def rfm_from_per_customer_partials_check(
@@ -255,7 +229,7 @@ def _stage_lineitem_batches(spark: SparkSession, sf_dir: str) -> str:
     )
 
 
-def _incremental_from_pair_state(spark: SparkSession, sf_dir: str, tag, kernel) -> DataFrame:
+def _incremental_from_pair_state(spark: SparkSession, sf_dir: str, kernel) -> DataFrame:
     """The shared scaffolding of the graph-family mirrors: stage
     order-atomic lineitem batches, land per-batch (pa, pb, cnt)
     co-purchase pair partials via Structured Streaming (the pair kernel
@@ -266,44 +240,22 @@ def _incremental_from_pair_state(spark: SparkSession, sf_dir: str, tag, kernel) 
     community reads cnt as the vote weight, centrality reads cnt as the
     transition weight — which is exactly the point: at 100 TB you land
     the distinct-pair-sized state once and fan the kernels out over it."""
-    import shutil
-    import uuid as _uuid
-
-    from ..operators.checkpoints import tracked_local_checkpoint
     from ..plans.relational import copurchase_pairs
 
-    tune_session(spark)
-    d = _stage_lineitem_batches(spark, sf_dir)
-    base = f"{d.rstrip('/')}_{tag}_{_uuid.uuid4().hex[:8]}"
-    pairs_dir = f"{base}/pairs"
-
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
-        copurchase_pairs(batch_df).write.mode("overwrite").parquet(
-            f"{pairs_dir}/batch={epoch_id}"
-        )
-
-    try:
-        src = (
-            spark.readStream.schema(LINEITEM_PAIR_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
-        )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        merged = (
-            spark.read.parquet(f"{pairs_dir}/batch=*")
+    def finish(st: Landing) -> DataFrame:
+        return kernel(
+            st.landed("pairs")
             .groupBy("pa", "pb")
             .agg(F.sum("cnt").cast("bigint").alias("cnt"))
         )
-        out, _ = tracked_local_checkpoint(kernel(merged))
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+
+    return fold_stream(
+        spark,
+        _stage_lineitem_batches(spark, sf_dir),
+        LINEITEM_PAIR_SCHEMA,
+        lambda b, st: st.land("pairs", copurchase_pairs(b)),
+        finish,
+    )
 
 
 def incremental_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -318,7 +270,7 @@ def incremental_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     mirrors, with distinct-pair-sized state and lineitems read once."""
     from ..plans.relational import shortest_path_from_pairs
 
-    return _incremental_from_pair_state(spark, sf_dir, "sp", shortest_path_from_pairs)
+    return _incremental_from_pair_state(spark, sf_dir, shortest_path_from_pairs)
 
 
 def incremental_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -337,40 +289,18 @@ def incremental_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch binning bitwise. (For continuous domains the production
     variant freezes [lo, hi] up front — the semdedup frozen-quantizer
     posture — and bin partials merge directly.)"""
-    import shutil
-    import uuid as _uuid
-
-    from ..operators.checkpoints import tracked_local_checkpoint
     from ..plans.relational import quantile_sketch_from
 
-    tune_session(spark)
-    d = _stage_order_batches(spark, sf_dir)
-    base = f"{d.rstrip('/')}_qsk_{_uuid.uuid4().hex[:8]}"
-    vals_dir = f"{base}/vals"
-
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.groupBy(F.col("o_totalprice").alias("x")).agg(
-            F.count(F.lit(1)).cast("bigint").alias("c")
-        ).write.mode("overwrite").parquet(f"{vals_dir}/batch={epoch_id}")
-
-    try:
-        src = (
-            spark.readStream.schema(ORDERS_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
+    def on_batch(b: DataFrame, st: Landing) -> None:
+        st.land(
+            "vals",
+            b.groupBy(F.col("o_totalprice").alias("x")).agg(
+                F.count(F.lit(1)).cast("bigint").alias("c")
+            ),
         )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
 
-        merged = (
-            spark.read.parquet(f"{vals_dir}/batch=*")
-            .groupBy("x")
-            .agg(F.sum("c").alias("c_big"))
-        )
+    def finish(st: Landing) -> DataFrame:
+        merged = st.landed("vals").groupBy("x").agg(F.sum("c").alias("c_big"))
         # array_repeat needs an int count; keep the merged sum as bigint
         # and fail loudly on 2^31 overflow instead of silently wrapping.
         xs = merged.select(
@@ -378,10 +308,11 @@ def incremental_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.array_repeat(F.col("x"), _int_count_guarded(F.col("c_big")))
             ).alias("x")
         )
-        out, _ = tracked_local_checkpoint(quantile_sketch_from(xs))
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        return quantile_sketch_from(xs)
+
+    return fold_stream(
+        spark, _stage_order_batches(spark, sf_dir), ORDERS_SCHEMA, on_batch, finish
+    )
 
 
 def incremental_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -400,7 +331,7 @@ def incremental_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     so emission runs the shared peel kernel over the merged pairs."""
     from ..plans.relational import kcore_from_pairs
 
-    return _incremental_from_pair_state(spark, sf_dir, "kc", kcore_from_pairs)
+    return _incremental_from_pair_state(spark, sf_dir, kcore_from_pairs)
 
 
 def incremental_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -415,9 +346,7 @@ def incremental_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame
     are the same property that makes the merged state exact here."""
     from ..plans.relational import label_propagation_from_pairs
 
-    return _incremental_from_pair_state(
-        spark, sf_dir, "lp", label_propagation_from_pairs
-    )
+    return _incremental_from_pair_state(spark, sf_dir, label_propagation_from_pairs)
 
 
 def incremental_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -432,7 +361,7 @@ def incremental_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     query engine-bitwise are order-free over the merged state too."""
     from ..plans.relational import pagerank_from_pairs
 
-    return _incremental_from_pair_state(spark, sf_dir, "pg", pagerank_from_pairs)
+    return _incremental_from_pair_state(spark, sf_dir, pagerank_from_pairs)
 
 
 def incremental_core_numbers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -447,9 +376,7 @@ def incremental_core_numbers(spark: SparkSession, sf_dir: str) -> DataFrame:
     peel-sharing decomposition kernel over the merged pairs."""
     from ..plans.relational import core_numbers_from_pairs
 
-    return _incremental_from_pair_state(
-        spark, sf_dir, "cn", core_numbers_from_pairs
-    )
+    return _incremental_from_pair_state(spark, sf_dir, core_numbers_from_pairs)
 
 
 RETRACT_SCHEMA = T.StructType(
@@ -630,42 +557,24 @@ def incremental_quantile_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     ever happened, which is the point: retractions are a STATE-layer
     concern, not a kernel concern. State is distinct-price-sized; a
     value cancelled down to zero leaves the state entirely."""
-    import shutil
-    import uuid as _uuid
-
-    from ..operators.checkpoints import tracked_local_checkpoint
     from ..plans.relational import quantile_sketch_from
 
-    tune_session(spark)
-    d = _stage_retraction_batches(spark, sf_dir)
-    base = f"{d.rstrip('/')}_qr_{_uuid.uuid4().hex[:8]}"
-    vals_dir = f"{base}/vals"
-
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.groupBy(F.col("o_totalprice").alias("x")).agg(
-            F.sum("sign").cast("bigint").alias("c")
-        ).write.mode("overwrite").parquet(f"{vals_dir}/batch={epoch_id}")
-        if epoch_id % COMPACT_EVERY == 1:
-            compact_signed_state(spark, vals_dir, ["x"], epoch_id)
-
-    try:
-        src = (
-            spark.readStream.schema(RETRACT_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
+    def on_batch(b: DataFrame, st: Landing) -> None:
+        st.land(
+            "vals",
+            b.groupBy(F.col("o_totalprice").alias("x")).agg(
+                F.sum("sign").cast("bigint").alias("c")
+            ),
         )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        if st.epoch % COMPACT_EVERY == 1:
+            compact_signed_state(spark, st.path("vals"), ["x"], st.epoch)
 
+    def finish(st: Landing) -> DataFrame:
         # net multiset: every cancellation matches an insert, so net
         # counts are >= 0 once the stream drains; the filter makes the
         # zero-count drop explicit (array_repeat(x, 0) would also vanish)
         merged = (
-            spark.read.parquet(f"{vals_dir}/batch=*")
+            st.landed("vals")
             .groupBy("x")
             .agg(F.sum("c").alias("c_big"))
             .filter(F.col("c_big") > 0)
@@ -676,10 +585,11 @@ def incremental_quantile_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.array_repeat(F.col("x"), _int_count_guarded(F.col("c_big")))
             ).alias("x")
         )
-        out, _ = tracked_local_checkpoint(quantile_sketch_from(xs))
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        return quantile_sketch_from(xs)
+
+    return fold_stream(
+        spark, _stage_retraction_batches(spark, sf_dir), RETRACT_SCHEMA, on_batch, finish
+    )
 
 
 RFM_RETRACT_SCHEMA = T.StructType(
@@ -712,51 +622,28 @@ def incremental_rfm_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     State is distinct-(customer, date, price)-sized; a customer whose
     every order is cancelled leaves the state (and the answer) entirely,
     exactly as the batch filter drops them."""
-    import shutil
-    import uuid as _uuid
-
-    from ..operators.checkpoints import tracked_local_checkpoint
     from ..plans.relational import rfm_from_per_customer
 
-    tune_session(spark)
-    d = _stage_retraction_batches(
-        spark,
-        sf_dir,
-        cols=("o_custkey", "o_orderdate", "o_totalprice"),
-        name="orders_rfm_retract",
-    )
-    base = f"{d.rstrip('/')}_rr_{_uuid.uuid4().hex[:8]}"
-    part_dir = f"{base}/partials"
-
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.select(
-            "o_custkey",
-            F.to_date("o_orderdate").alias("d"),
-            F.col("o_totalprice").cast("decimal(18,2)").alias("p"),
-            "sign",
-        ).groupBy("o_custkey", "d", "p").agg(
-            F.sum("sign").cast("bigint").alias("c")
-        ).write.mode("overwrite").parquet(f"{part_dir}/batch={epoch_id}")
-        if epoch_id % COMPACT_EVERY == 1:
+    def on_batch(b: DataFrame, st: Landing) -> None:
+        st.land(
+            "partials",
+            b.select(
+                "o_custkey",
+                F.to_date("o_orderdate").alias("d"),
+                F.col("o_totalprice").cast("decimal(18,2)").alias("p"),
+                "sign",
+            )
+            .groupBy("o_custkey", "d", "p")
+            .agg(F.sum("sign").cast("bigint").alias("c")),
+        )
+        if st.epoch % COMPACT_EVERY == 1:
             compact_signed_state(
-                spark, part_dir, ["o_custkey", "d", "p"], epoch_id
+                spark, st.path("partials"), ["o_custkey", "d", "p"], st.epoch
             )
 
-    try:
-        src = (
-            spark.readStream.schema(RFM_RETRACT_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
-        )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
+    def finish(st: Landing) -> DataFrame:
         net = (
-            spark.read.parquet(f"{part_dir}/batch=*")
+            st.landed("partials")
             .groupBy("o_custkey", "d", "p")
             .agg(F.sum("c").cast("bigint").alias("c"))
             .filter(F.col("c") > 0)
@@ -766,10 +653,15 @@ def incremental_rfm_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("c").cast("bigint").alias("freq"),
             F.sum(F.col("p") * F.col("c")).cast("double").alias("monetary"),
         )
-        out, _ = tracked_local_checkpoint(rfm_from_per_customer(per))
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        return rfm_from_per_customer(per)
+
+    d = _stage_retraction_batches(
+        spark,
+        sf_dir,
+        cols=("o_custkey", "o_orderdate", "o_totalprice"),
+        name="orders_rfm_retract",
+    )
+    return fold_stream(spark, d, RFM_RETRACT_SCHEMA, on_batch, finish)
 
 
 LINEITEM_OLS_SCHEMA = T.StructType(
@@ -820,16 +712,7 @@ def incremental_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact addition under any arrival order — and emission runs the shared
     Cramer solve on the merged moments. The model retrains continuously
     with O(groups x moments) state, never a second pass over history."""
-    import shutil
-    import uuid as _uuid
-
-    from ..operators.checkpoints import tracked_local_checkpoint
     from ..plans.relational import ols_solve_from_moments
-
-    tune_session(spark)
-    d = _stage_lineitem_ols_batches(spark, sf_dir)
-    base = f"{d.rstrip('/')}_ols_{_uuid.uuid4().hex[:8]}"
-    mom_dir = f"{base}/moments"
 
     def _moments(df: DataFrame) -> DataFrame:
         li = df.select(
@@ -858,34 +741,22 @@ def incremental_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
         )
 
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
-        _moments(batch_df).write.mode("overwrite").parquet(
-            f"{mom_dir}/batch={epoch_id}"
-        )
-
-    try:
-        src = (
-            spark.readStream.schema(LINEITEM_OLS_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
-        )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
+    def finish(st: Landing) -> DataFrame:
         cols = ["n", "sx1", "sx2", "sx11", "sx22", "sx12", "sy", "sx1y", "sx2y", "syy"]
         merged = (
-            spark.read.parquet(f"{mom_dir}/batch=*")
+            st.landed("moments")
             .groupBy("l_returnflag")
             .agg(*[F.sum(c).cast("decimal(38,0)").alias(c) for c in cols])
         )
-        out, _ = tracked_local_checkpoint(ols_solve_from_moments(merged))
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        return ols_solve_from_moments(merged)
+
+    return fold_stream(
+        spark,
+        _stage_lineitem_ols_batches(spark, sf_dir),
+        LINEITEM_OLS_SCHEMA,
+        lambda b, st: st.land("moments", _moments(b)),
+        finish,
+    )
 
 
 LINEITEM_BOOT_SCHEMA = T.StructType(
@@ -941,10 +812,6 @@ def incremental_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch lands its |groups|·B weighted-sum partial and the CI
     retrains continuously by exact BIGINT merge. State is
     O(groups · B) numbers, independent of stream length."""
-    import shutil
-    import uuid as _uuid
-
-    from ..operators.checkpoints import tracked_local_checkpoint
     from ..plans.relational import (
         boot_exact_partial,
         boot_rep_partial,
@@ -952,42 +819,18 @@ def incremental_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
         bootstrap_ci_from_partials,
     )
 
-    tune_session(spark)
-    d = _stage_lineitem_boot_batches(spark, sf_dir)
-    base = f"{d.rstrip('/')}_boot_{_uuid.uuid4().hex[:8]}"
-    ex_dir, rep_dir = f"{base}/exact", f"{base}/reps"
+    def on_batch(b: DataFrame, st: Landing) -> None:
+        li = boot_rev_projection(b)
+        st.land("exact", boot_exact_partial(li))
+        st.land("reps", boot_rep_partial(li))
 
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
-        li = boot_rev_projection(batch_df)
-        boot_exact_partial(li).write.mode("overwrite").parquet(
-            f"{ex_dir}/batch={epoch_id}"
-        )
-        boot_rep_partial(li).write.mode("overwrite").parquet(
-            f"{rep_dir}/batch={epoch_id}"
-        )
-
-    try:
-        src = (
-            spark.readStream.schema(LINEITEM_BOOT_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
-        )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        out, _ = tracked_local_checkpoint(
-            bootstrap_ci_from_partials(
-                spark.read.parquet(f"{ex_dir}/batch=*"),
-                spark.read.parquet(f"{rep_dir}/batch=*"),
-            ),
-        )
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    return fold_stream(
+        spark,
+        _stage_lineitem_boot_batches(spark, sf_dir),
+        LINEITEM_BOOT_SCHEMA,
+        on_batch,
+        lambda st: bootstrap_ci_from_partials(st.landed("exact"), st.landed("reps")),
+    )
 
 
 def incremental_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1000,45 +843,24 @@ def incremental_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     by distinct-union + re-take-K, sound because the K smallest of a
     union are contained in the union of per-part K smallest. Emission
     runs the shared take-K + estimate tail."""
-    import shutil
-    import uuid as _uuid
-
-    from ..operators.checkpoints import tracked_local_checkpoint
     from ..plans.relational import KMV_KMAX, _kmv_u32, kmv_from_values
 
-    tune_session(spark)
-    d = _stage_lineitem_batches(spark, sf_dir)
-    base = f"{d.rstrip('/')}_kmv_{_uuid.uuid4().hex[:8]}"
-    mins_dir = f"{base}/kmins"
-
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_df.select(_kmv_u32(F.col("l_partkey")).alias("u"))
+    def on_batch(b: DataFrame, st: Landing) -> None:
+        st.land(
+            "kmins",
+            b.select(_kmv_u32(F.col("l_partkey")).alias("u"))
             .distinct()
             .orderBy("u")
-            .limit(KMV_KMAX)
-            .write.mode("overwrite")
-            .parquet(f"{mins_dir}/batch={epoch_id}")
+            .limit(KMV_KMAX),
         )
 
-    try:
-        src = (
-            spark.readStream.schema(LINEITEM_PAIR_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
-        )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        merged = spark.read.parquet(f"{mins_dir}/batch=*")
-        out, _ = tracked_local_checkpoint(kmv_from_values(merged))
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    return fold_stream(
+        spark,
+        _stage_lineitem_batches(spark, sf_dir),
+        LINEITEM_PAIR_SCHEMA,
+        on_batch,
+        lambda st: kmv_from_values(st.landed("kmins")),
+    )
 
 
 def incremental_two_hop_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1053,7 +875,7 @@ def incremental_two_hop_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged exact counts."""
     from ..plans.relational import two_hop_from_pairs
 
-    return _incremental_from_pair_state(spark, sf_dir, "th", two_hop_from_pairs)
+    return _incremental_from_pair_state(spark, sf_dir, two_hop_from_pairs)
 
 
 LINEITEM_RETRACT_SCHEMA = T.StructType(
@@ -1128,20 +950,12 @@ def incremental_shortest_path_retract(spark: SparkSession, sf_dir: str) -> DataF
     Emission recomputes weights from the exact net counts and runs the
     shared relaxation kernel; nothing downstream knows deletions ever
     happened."""
-    import shutil
-    import uuid as _uuid
-
-    from ..operators.checkpoints import tracked_local_checkpoint
     from ..plans.relational import shortest_path_from_pairs
 
-    tune_session(spark)
-    d = _stage_lineitem_retraction_batches(spark, sf_dir)
-    base = f"{d.rstrip('/')}_spr_{_uuid.uuid4().hex[:8]}"
-    pairs_dir = f"{base}/pairs"
-
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
+    def on_batch(batch_df: DataFrame, st: Landing) -> None:
         a, b = batch_df.alias("a"), batch_df.alias("b")
-        (
+        st.land(
+            "pairs",
             a.join(
                 b,
                 (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
@@ -1150,40 +964,31 @@ def incremental_shortest_path_retract(spark: SparkSession, sf_dir: str) -> DataF
             .groupBy(
                 F.col("a.l_partkey").alias("pa"), F.col("b.l_partkey").alias("pb")
             )
-            .agg(F.sum("a.sign").cast("bigint").alias("c"))
-            .write.mode("overwrite")
-            .parquet(f"{pairs_dir}/batch={epoch_id}")
+            .agg(F.sum("a.sign").cast("bigint").alias("c")),
         )
-        if epoch_id % COMPACT_EVERY == 1:
-            compact_signed_state(spark, pairs_dir, ["pa", "pb"], epoch_id)
+        if st.epoch % COMPACT_EVERY == 1:
+            compact_signed_state(spark, st.path("pairs"), ["pa", "pb"], st.epoch)
 
-    try:
-        src = (
-            spark.readStream.schema(LINEITEM_RETRACT_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
-        )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
+    def finish(st: Landing) -> DataFrame:
         net = (
-            spark.read.parquet(f"{pairs_dir}/batch=*")
+            st.landed("pairs")
             .groupBy("pa", "pb")
             .agg(F.sum("c").cast("bigint").alias("cnt"))
             .filter(F.col("cnt") > 0)
         )
-        out, _ = tracked_local_checkpoint(shortest_path_from_pairs(net))
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        return shortest_path_from_pairs(net)
+
+    return fold_stream(
+        spark,
+        _stage_lineitem_retraction_batches(spark, sf_dir),
+        LINEITEM_RETRACT_SCHEMA,
+        on_batch,
+        finish,
+    )
 
 
 def _incremental_from_daily_state(
-    spark: SparkSession, sf_dir: str, tag: str, kernel
+    spark: SparkSession, sf_dir: str, kernel
 ) -> DataFrame:
     """Shared daily-revenue state for the time-series mirror family
     (seasonal decomposition, Mann-Whitney, BinSeg changepoint) — the
@@ -1195,47 +1000,25 @@ def _incremental_from_daily_state(
     (ranks, moving windows, prefix sums), which is exactly why emission
     recomputes over the merged DAILY rows — calendar-bounded, ~2.4k —
     never over raw orders."""
-    import shutil
-    import uuid as _uuid
-
-    from ..operators.checkpoints import tracked_local_checkpoint
     from ..plans.relational import daily_revenue_partial
 
-    tune_session(spark)
-    d = _stage_order_batches(spark, sf_dir)
-    base = f"{d.rstrip('/')}_{tag}_{_uuid.uuid4().hex[:8]}"
-    part_dir = f"{base}/daily"
-
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
-        daily_revenue_partial(batch_df).write.mode("overwrite").parquet(
-            f"{part_dir}/batch={epoch_id}"
-        )
-
-    try:
-        src = (
-            spark.readStream.schema(ORDERS_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
-        )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        merged = (
-            spark.read.parquet(f"{part_dir}/batch=*")
+    def finish(st: Landing) -> DataFrame:
+        return kernel(
+            st.landed("daily")
             .groupBy("dn")
             .agg(
                 F.sum("cents").cast("bigint").alias("cents"),
                 F.sum("n_orders").cast("bigint").alias("n_orders"),
             )
         )
-        out, _ = tracked_local_checkpoint(kernel(merged))
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+
+    return fold_stream(
+        spark,
+        _stage_order_batches(spark, sf_dir),
+        ORDERS_SCHEMA,
+        lambda b, st: st.land("daily", daily_revenue_partial(b)),
+        finish,
+    )
 
 
 def incremental_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1246,9 +1029,7 @@ def incremental_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     emission reruns the windowed kernel over the merged series."""
     from ..plans.relational import seasonal_from_daily
 
-    return _incremental_from_daily_state(
-        spark, sf_dir, "seas", seasonal_from_daily
-    )
+    return _incremental_from_daily_state(spark, sf_dir, seasonal_from_daily)
 
 
 def incremental_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1258,9 +1039,7 @@ def incremental_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     emission re-ranks the merged series."""
     from ..plans.relational import mann_whitney_from_daily
 
-    return _incremental_from_daily_state(
-        spark, sf_dir, "mw", mann_whitney_from_daily
-    )
+    return _incremental_from_daily_state(spark, sf_dir, mann_whitney_from_daily)
 
 
 def incremental_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1270,9 +1049,7 @@ def incremental_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     every split statistic), so emission re-sweeps the merged series."""
     from ..plans.relational import changepoint_from_daily
 
-    return _incremental_from_daily_state(
-        spark, sf_dir, "chg", changepoint_from_daily
-    )
+    return _incremental_from_daily_state(spark, sf_dir, changepoint_from_daily)
 
 
 def incremental_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1283,9 +1060,7 @@ def incremental_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cents, n_orders) series."""
     from ..plans.relational import spearman_from_daily
 
-    return _incremental_from_daily_state(
-        spark, sf_dir, "spear", spearman_from_daily
-    )
+    return _incremental_from_daily_state(spark, sf_dir, spearman_from_daily)
 
 
 def incremental_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1296,7 +1071,7 @@ def incremental_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged series."""
     from ..plans.relational import acf_from_daily
 
-    return _incremental_from_daily_state(spark, sf_dir, "acf", acf_from_daily)
+    return _incremental_from_daily_state(spark, sf_dir, acf_from_daily)
 
 
 def incremental_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1307,9 +1082,7 @@ def incremental_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded pairs however long the stream runs."""
     from ..plans.relational import theil_sen_from_daily
 
-    return _incremental_from_daily_state(
-        spark, sf_dir, "tsen", theil_sen_from_daily
-    )
+    return _incremental_from_daily_state(spark, sf_dir, theil_sen_from_daily)
 
 
 def incremental_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1319,44 +1092,22 @@ def incremental_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     rfm_partial posture — customer-dimension state); the Lorenz ranks
     are global order statistics, so emission re-ranks the merged
     customer totals."""
-    import shutil
-    import uuid as _uuid
-
-    from ..operators.checkpoints import tracked_local_checkpoint
     from ..plans.relational import customer_cents_partial, gini_from_per_customer
 
-    tune_session(spark)
-    d = _stage_order_batches(spark, sf_dir)
-    base = f"{d.rstrip('/')}_gini_{_uuid.uuid4().hex[:8]}"
-    part_dir = f"{base}/per_cust"
-
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
-        customer_cents_partial(batch_df).write.mode("overwrite").parquet(
-            f"{part_dir}/batch={epoch_id}"
-        )
-
-    try:
-        src = (
-            spark.readStream.schema(ORDERS_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
-        )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        merged = (
-            spark.read.parquet(f"{part_dir}/batch=*")
+    def finish(st: Landing) -> DataFrame:
+        return gini_from_per_customer(
+            st.landed("per_cust")
             .groupBy("o_custkey")
             .agg(F.sum("cents").cast("bigint").alias("cents"))
         )
-        out, _ = tracked_local_checkpoint(gini_from_per_customer(merged))
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+
+    return fold_stream(
+        spark,
+        _stage_order_batches(spark, sf_dir),
+        ORDERS_SCHEMA,
+        lambda b, st: st.land("per_cust", customer_cents_partial(b)),
+        finish,
+    )
 
 
 def incremental_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1368,41 +1119,15 @@ def incremental_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     a customer's next order extends their span and can flip them from
     churned to censored — so emission reruns the shared product-limit
     tail over the merged customer dimension."""
-    import shutil
-    import uuid as _uuid
-
-    from ..operators.checkpoints import tracked_local_checkpoint
     from ..plans.relational import km_from_spans, km_span_partial
 
-    tune_session(spark)
-    d = _stage_order_batches(spark, sf_dir)
-    base = f"{d.rstrip('/')}_km_{_uuid.uuid4().hex[:8]}"
-    part_dir = f"{base}/spans"
-
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
-        km_span_partial(batch_df).write.mode("overwrite").parquet(
-            f"{part_dir}/batch={epoch_id}"
-        )
-
-    try:
-        src = (
-            spark.readStream.schema(ORDERS_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
-        )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        out, _ = tracked_local_checkpoint(
-            km_from_spans(spark.read.parquet(f"{part_dir}/batch=*")),
-        )
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    return fold_stream(
+        spark,
+        _stage_order_batches(spark, sf_dir),
+        ORDERS_SCHEMA,
+        lambda b, st: st.land("spans", km_span_partial(b)),
+        lambda st: km_from_spans(st.landed("spans")),
+    )
 
 
 def incremental_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1413,9 +1138,7 @@ def incremental_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts, so emission re-pairs the merged calendar-bounded series."""
     from ..plans.relational import kendall_from_daily
 
-    return _incremental_from_daily_state(
-        spark, sf_dir, "ktau", kendall_from_daily
-    )
+    return _incremental_from_daily_state(spark, sf_dir, kendall_from_daily)
 
 
 SEAS_RETRACT_SCHEMA = T.StructType(
@@ -1452,23 +1175,9 @@ def incremental_seasonal_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: state is calendar-sized (days, not orders) however large
     the stream; compaction keeps it net-days-sized; the kernel rerun
     touches ~2.4k rows."""
-    import shutil
-    import uuid as _uuid
-
-    from ..operators.checkpoints import tracked_local_checkpoint
     from ..plans.relational import SEAS_ANCHOR, seasonal_from_daily
 
-    tune_session(spark)
-    d = _stage_retraction_batches(
-        spark,
-        sf_dir,
-        cols=("o_totalprice", "o_orderdate"),
-        name="orders_retract_seas",
-    )
-    base = f"{d.rstrip('/')}_seasr_{_uuid.uuid4().hex[:8]}"
-    daily_dir = f"{base}/daily"
-
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
+    def on_batch(batch_df: DataFrame, st: Landing) -> None:
         dn = F.datediff(
             F.col("o_orderdate").cast("date"), F.to_date(F.lit(SEAS_ANCHOR))
         ).cast("bigint")
@@ -1487,31 +1196,19 @@ def incremental_seasonal_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("sn").cast("bigint").alias("n_orders"),
             )
         )
-        part.write.mode("overwrite").parquet(f"{daily_dir}/batch={epoch_id}")
-        if epoch_id % COMPACT_EVERY == 1:
+        st.land("daily", part)
+        if st.epoch % COMPACT_EVERY == 1:
             compact_signed_state(
                 spark,
-                daily_dir,
+                st.path("daily"),
                 ["dn"],
-                epoch_id,
+                st.epoch,
                 val_cols=("cents", "n_orders"),
             )
 
-    try:
-        src = (
-            spark.readStream.schema(SEAS_RETRACT_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
-        )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
+    def finish(st: Landing) -> DataFrame:
         merged = (
-            spark.read.parquet(f"{daily_dir}/batch=*")
+            st.landed("daily")
             .groupBy("dn")
             .agg(
                 F.sum("cents").cast("bigint").alias("cents"),
@@ -1521,16 +1218,19 @@ def incremental_seasonal_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
             # load-bearing: it can break a 7-day trend window)
             .filter(F.col("n_orders") > 0)
         )
-        out, _ = tracked_local_checkpoint(
-            seasonal_from_daily(merged.select("dn", "cents"))
-        )
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        return seasonal_from_daily(merged.select("dn", "cents"))
+
+    d = _stage_retraction_batches(
+        spark,
+        sf_dir,
+        cols=("o_totalprice", "o_orderdate"),
+        name="orders_retract_seas",
+    )
+    return fold_stream(spark, d, SEAS_RETRACT_SCHEMA, on_batch, finish)
 
 
 def _incremental_from_seg_daily_state(
-    spark: SparkSession, sf_dir: str, tag: str, kernel
+    spark: SparkSession, sf_dir: str, kernel
 ) -> DataFrame:
     """KEYED daily-revenue state for the sampled-trend mirror family
     (per-segment Theil-Sen / Kendall): `_incremental_from_daily_state`
@@ -1543,23 +1243,16 @@ def _incremental_from_seg_daily_state(
     (md5 of (seg, day-index, draw)), so the sampled pair set — and both
     audit branches — are arrival-order-free by construction; emission
     reruns the shared kernel over the merged |segments|·calendar rows."""
-    import shutil
-    import uuid as _uuid
-
     from ..operators.checkpoints import tracked_local_checkpoint
     from ..plans.relational import SEAS_ANCHOR
     from ..plans.tables import load
 
-    tune_session(spark)
-    d = _stage_order_batches(spark, sf_dir)
-    base = f"{d.rstrip('/')}_{tag}_{_uuid.uuid4().hex[:8]}"
-    part_dir = f"{base}/segdaily"
     cust = load(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("o_custkey"),
         F.col("c_mktsegment").alias("seg"),
     )
 
-    def _update(batch_df: DataFrame, epoch_id: int) -> None:
+    def on_batch(batch_df: DataFrame, st: Landing) -> None:
         dn = F.datediff(
             F.col("o_orderdate").cast("date"), F.to_date(F.lit(SEAS_ANCHOR))
         ).cast("bigint")
@@ -1578,23 +1271,11 @@ def _incremental_from_seg_daily_state(
                 F.count(F.lit(1)).cast("bigint").alias("n_orders"),
             )
         )
-        part.write.mode("overwrite").parquet(f"{part_dir}/batch={epoch_id}")
+        st.land("segdaily", part)
 
-    try:
-        src = (
-            spark.readStream.schema(ORDERS_SCHEMA)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(d)
-        )
-        q = src.writeStream.foreachBatch(_update).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
+    def finish(st: Landing) -> DataFrame:
         merged = (
-            spark.read.parquet(f"{part_dir}/batch=*")
+            st.landed("segdaily")
             .groupBy("seg", "dn")
             .agg(
                 F.sum("cents").cast("bigint").alias("cents"),
@@ -1602,10 +1283,11 @@ def _incremental_from_seg_daily_state(
             )
         )
         merged, _ = tracked_local_checkpoint(merged)
-        out, _ = tracked_local_checkpoint(kernel(merged))
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        return kernel(merged)
+
+    return fold_stream(
+        spark, _stage_order_batches(spark, sf_dir), ORDERS_SCHEMA, on_batch, finish
+    )
 
 
 def incremental_theil_sen_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1618,7 +1300,7 @@ def incremental_theil_sen_sampled(spark: SparkSession, sf_dir: str) -> DataFrame
     from ..plans.relational import theil_sen_sampled_from_seg_daily
 
     return _incremental_from_seg_daily_state(
-        spark, sf_dir, "tss", theil_sen_sampled_from_seg_daily
+        spark, sf_dir, theil_sen_sampled_from_seg_daily
     )
 
 
@@ -1631,5 +1313,5 @@ def incremental_kendall_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..plans.relational import kendall_sampled_from_seg_daily
 
     return _incremental_from_seg_daily_state(
-        spark, sf_dir, "kts", kendall_sampled_from_seg_daily
+        spark, sf_dir, kendall_sampled_from_seg_daily
     )

@@ -7,6 +7,7 @@ import math
 
 import numpy as np
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import Row, functions as F
 
 from air_traffic_data_pipeline_spark.constants import EARTH_RAD, NANTES_LAT, NANTES_LON, R_MAX
@@ -148,6 +149,15 @@ def test_radius_join_equals_cross_filter(spark):
     assert len(fast_set) > 0
 
 
+_RJ_LON0, _RJ_STEP_M, _RJ_N = -1.8, 2000.0, 60  # 121x121 cells, 240 km across
+_RJ_EXTENT_M = 2 * _RJ_N * _RJ_STEP_M
+
+
+def _rj_reach_deg(radius_m):
+    # grid cells reach extent/2 from the center, matched sources R further
+    return math.degrees((_RJ_EXTENT_M / 2 + radius_m) / EARTH_RAD)
+
+
 @pytest.mark.parametrize("center_lat", [47.15, 70.0])
 def test_adaptive_radius_join_exact_north_of_center(spark, center_lat):
     """Bin-join ≡ cross-join+filter where longitude degrees are widest: a
@@ -169,3 +179,41 @@ def test_adaptive_radius_join_exact_north_of_center(spark, center_lat):
     slow_set = {key(r) for r in slow.collect()}
     assert {key(r) for r in fast.collect()} == slow_set
     assert len(slow_set) > 0
+
+
+@settings(max_examples=6, deadline=None)
+@given(
+    center_lat=st.sampled_from([0.0, 47.15, -47.15, 70.0, 80.0]),
+    # one grid step to the full extent, log-spaced so most draws stay
+    # below extent/6 and take the binned path
+    radius_m=st.integers(0, 100).map(lambda k: _RJ_STEP_M * (2 * _RJ_N) ** (k / 100)),
+    fracs=st.lists(
+        st.tuples(st.floats(-1.1, 1.1), st.floats(-1.1, 1.1)), min_size=1, max_size=20
+    ),
+)
+def test_adaptive_radius_join_equals_naive(spark, center_lat, radius_m, fracs):
+    """Bin-join == cross-join+filter for any source layout around the grid,
+    at any latitude the join accepts (east of the antimeridian) and any
+    radius from one grid step to the grid extent. Sources sit up to 1.1x
+    the reach (extent/2 + R) from the center, so pairs near R east-west
+    and poleward of the center, where longitude degrees are widest, are
+    drawn."""
+    from air_traffic_data_pipeline_spark.operators.radius_join import adaptive_radius_join
+
+    r = _rj_reach_deg(radius_m)
+    k = math.cos(math.radians(center_lat))
+    src = [
+        (center_lat + fy * r, _RJ_LON0 + fx * r / k, i) for i, (fy, fx) in enumerate(fracs)
+    ]
+    grid = gen_grid(spark, center_lat, _RJ_LON0, _RJ_STEP_M, _RJ_N)
+    src_df = spark.createDataFrame(src, "lat double, lon double, sid long")
+    cols = ("g_lat", "g_lon", "sid")
+    fast = adaptive_radius_join(
+        grid, src_df, radius_m, center_lat, region_extent_m=_RJ_EXTENT_M
+    ).select(*cols, F.lit("fast").alias("side"))
+    slow = naive_radius_join(grid, src_df, radius_m).select(*cols, F.lit("slow").alias("side"))
+    # one action per example: Spark job latency dominates this test
+    rows = fast.unionByName(slow).collect()
+    got = {(x.g_lat, x.g_lon, x.sid) for x in rows if x.side == "fast"}
+    want = {(x.g_lat, x.g_lon, x.sid) for x in rows if x.side == "slow"}
+    assert got == want

@@ -252,6 +252,67 @@ def test_foreach_batch_sink_is_idempotent_and_batch_order_free(spark):
     assert {u: e for u, (e, _) in first.items()} == expect
 
 
+def test_foreach_batch_result_survives_a_later_call(spark):
+    """A returned result must not read files a later call of the same
+    query deletes: each call lands in its own dir and returns a
+    checkpointed frame."""
+    from air_traffic_data_pipeline_spark.streaming.events_stream import (
+        foreach_batch_last_state,
+    )
+
+    sf = "/root/testdata/sf0.001"
+    a = foreach_batch_last_state(spark, sf)
+    b = foreach_batch_last_state(spark, sf)
+    b.count()
+    a.count()
+    assert sorted(a.collect()) == sorted(b.collect())
+
+
+def _fold_dirs(stage):
+    import glob
+
+    return glob.glob(f"{stage}_fold_*")
+
+
+def test_fold_stream_removes_landing_dir(spark, tmp_path):
+    """fold_stream leaves nothing on disk: not after a successful run (the
+    checkpointed result still reads), and not after an on_batch that
+    raises."""
+    import pytest
+
+    from air_traffic_data_pipeline_spark.streaming.events_stream import (
+        _stage_ordered,
+        fold_stream,
+    )
+
+    schema = T.StructType([T.StructField("x", T.LongType())])
+    stage = str(tmp_path / "stage")
+    _stage_ordered(
+        stage,
+        ["01.parquet", "02.parquet"],
+        lambda: [spark.createDataFrame([(i,)], schema) for i in (1, 2)],
+    )
+
+    out = fold_stream(
+        spark,
+        stage,
+        schema,
+        lambda b, st: st.land("xs", b),
+        lambda st: st.landed("xs"),
+    )
+    assert not _fold_dirs(stage)
+    assert sorted(r.x for r in out.collect()) == [1, 2]
+    assert out.columns == ["x"]  # the `batch` partition column is dropped
+
+    def boom(b, st):
+        st.land("xs", b)
+        raise ValueError("on_batch failed")
+
+    with pytest.raises(Exception, match="on_batch failed"):
+        fold_stream(spark, stage, schema, boom, lambda st: st.landed("xs"))
+    assert not _fold_dirs(stage)
+
+
 def test_dedup_watermark_query_matches_batch_distinct(spark):
     """dropDuplicatesWithinWatermark over the 3-batch replay == batch
     distinct when the delay exceeds the data span (no state eviction)."""
