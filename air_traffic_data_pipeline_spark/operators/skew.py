@@ -18,7 +18,7 @@ raise instead of silently corrupting.
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
@@ -65,30 +65,6 @@ def salted_join(
         how,
     )
     return joined.drop("__salt")
-
-
-def salted_agg_sum(
-    df: DataFrame,
-    keys: Sequence[str],
-    sums: Mapping[str, Column],
-    n_salts: int = 8,
-) -> DataFrame:
-    """Two-phase sum aggregation: partial on (keys, salt), final on keys.
-
-    ``sums`` maps output alias -> column expression summed in both phases
-    (sum-of-sums; exact for decimal/int inputs regardless of salt
-    assignment). Spark's hash aggregate already combines map-side, so this
-    pays off only when the partial state is big or reducer skew is extreme.
-    """
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(n_salts))
-    partial = (
-        df.withColumn("__salt", salt)
-        .groupBy(*keys, "__salt")
-        .agg(*[F.sum(c).alias(a) for a, c in sums.items()])
-    )
-    return partial.groupBy(*keys).agg(
-        *[F.sum(a).alias(a) for a in sums.keys()]
-    )
 
 
 def salted_group_topk(

@@ -540,7 +540,7 @@ def heat_triples_sql() -> str:
     return f"SELECT g_lat AS lat, g_lon AS lon, weight FROM ({flagship_sql()}) t"
 
 
-def domain_queries() -> dict:
+def queries() -> dict:
     return {
         "noise_grid_flagship": flagship_noise_grid,
         "noise_phase_classify": q_phase_classify,
@@ -556,7 +556,7 @@ def domain_queries() -> dict:
     }
 
 
-def domain_oracles() -> dict:
+def oracles() -> dict:
     return {
         "noise_grid_flagship": flagship_sql(),
         "noise_phase_classify": PHASE_CLASSIFY_SQL,

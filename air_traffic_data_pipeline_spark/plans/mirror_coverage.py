@@ -4,7 +4,10 @@ not (r11 VERDICT item 4 — the 54-of-335 mirror surface and its
 deliberate exclusions were prose-only; this makes them inspectable and
 pytest-enforced).
 
-Three artifacts derive from this module:
+Four artifacts derive from this module:
+- ``plans/streaming_plans.py`` takes the oracle of every mirror with no
+  SQL of its own (marked ``TWIN`` there) from its batch twin named in
+  ``MIRRORS``; a twin without an oracle fails that import;
 - ``tools/mirror_coverage_report.py`` renders MIRRORS.md;
 - ``tests/test_mirror_coverage.py`` asserts the catalog is a PARTITION
   of the live registry (no batch query silently unclassified, no stale
@@ -22,10 +25,12 @@ pytest immediately re-checks against the registry.
 from __future__ import annotations
 
 # ---------------------------------------------------------------------------
-# Mirror -> batch target. None = standalone mirror: its oracle is its own
-# batch SQL over the same lake (events-domain sketches with no single
-# batch twin). Retraction variants map to the same batch query as their
-# insert-only sibling (the oracle restricts to surviving rows).
+# Mirror -> batch target, whose oracle is the mirror's oracle unless
+# streaming_plans gives explicit SQL. None = standalone mirror: its oracle
+# is its own batch SQL over the same lake (events-domain sketches with no
+# single batch twin). Retraction variants map to the same batch query as
+# their insert-only sibling (their explicit oracle restricts the twin's
+# SQL to the surviving rows).
 MIRRORS: dict[str, str | None] = {
     "stream_incremental_acf": "rel_autocorrelation",
     "stream_incremental_ann_ingest": None,

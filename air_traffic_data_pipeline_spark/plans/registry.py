@@ -176,7 +176,7 @@ def _current_src_hashes() -> dict[str, str | None]:
     (r7 ADVICE). The QUERY_HASHES.json snapshot is deliberately NOT
     memoized: it is tiny, and tests (and tools) swap it out."""
     if not _SRC_HASH_CACHE:
-        for name, fn in _collect_queries().items():
+        for name, fn in _collect()[0].items():
             _SRC_HASH_CACHE[name] = _query_src_hash(fn)
     return _SRC_HASH_CACHE
 
@@ -358,59 +358,24 @@ def _window_order(d: dict[str, object]) -> dict[str, object]:
     return out
 
 
-def _collect_queries() -> dict[str, QueryFn]:
-    """Raw name -> fn map in module order, BEFORE window ordering (the
-    ordering itself needs this map to hash function sources)."""
-    out: dict[str, QueryFn] = {}
-    from . import domain
+def _collect() -> tuple[dict[str, QueryFn], dict[str, str]]:
+    """Raw name -> fn and name -> oracle SQL maps in module order, BEFORE
+    window ordering (the ordering itself needs the fn map to hash function
+    sources). No import is guarded: a plan module that fails to import
+    fails the registry instead of silently dropping its queries."""
+    from . import domain, llm, relational, streaming_plans
 
-    out.update(domain.domain_queries())
-    try:
-        from . import relational
-
-        out.update(relational.queries())
-    except ImportError:
-        pass
-    try:
-        from . import llm
-
-        out.update(llm.queries())
-    except ImportError:
-        pass
-    try:
-        from . import streaming_plans
-
-        out.update(streaming_plans.queries())
-    except ImportError:
-        pass
-    return out
+    queries: dict[str, QueryFn] = {}
+    oracles: dict[str, str] = {}
+    for mod in (domain, relational, llm, streaming_plans):
+        queries.update(mod.queries())
+        oracles.update(mod.oracles())
+    return queries, oracles
 
 
 def all_queries() -> dict[str, QueryFn]:
-    return _window_order(_collect_queries())
+    return _window_order(_collect()[0])
 
 
 def all_oracles() -> dict[str, str]:
-    out: dict[str, str] = {}
-    from . import domain
-
-    out.update(domain.domain_oracles())
-    try:
-        from . import relational
-
-        out.update(relational.oracles())
-    except ImportError:
-        pass
-    try:
-        from . import llm
-
-        out.update(llm.oracles())
-    except ImportError:
-        pass
-    try:
-        from . import streaming_plans
-
-        out.update(streaming_plans.oracles())
-    except ImportError:
-        pass
-    return _window_order({k: v for k, v in out.items() if v is not None})
+    return _window_order(_collect()[1])

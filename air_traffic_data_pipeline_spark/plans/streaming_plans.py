@@ -7,6 +7,15 @@ promises. Session windows additionally exist as a batch gaps-and-islands
 operator (``sessionize_events``) so the merge semantics are oracle-checked
 too.
 
+``_SPECS`` registers the implementing functions of ``streaming/*.py``
+themselves, so the registry's source hash is the hash of the code that
+runs. An incremental mirror whose oracle is its batch twin's SQL (one
+DataFrame plan serves batch and streaming callers) marks its oracle
+``TWIN``; the twin is named once, in ``mirror_coverage.MIRRORS``.
+Explicit SQL remains only where it differs from the twin's: the
+event-stream queries, the standalone mirrors and the retraction mirrors
+(whose oracles restrict the twin to the surviving rows).
+
 Window-start determinism: Spark tumbling windows align to the epoch, so
 win_start = epoch_us // size * size — the DuckDB oracle computes the same
 integer arithmetic on epoch_ns.
@@ -16,26 +25,16 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
-from ..streaming.events_stream import (
-    STREAM_STREAM_JOIN_SQL,
-    foreach_batch_last_state,
-    session_window_counts,
-    sliding_counts,
-    stateful_user_stats,
-    stream_static_join_counts,
-    stream_stream_join_pairs,
-    streaming_dedup_count,
-    transform_with_state_stats,
-    tumbling_counts,
-    watermarked_dedup_count,
-)
+from ..operators.similarity import NSW_NND_ROUNDS, lsh_bucket_sql
+from ..operators.sketches import CMS_ROWS_VALUES_SQL, cms_pos_sql
+from ..streaming import documents_stream, events_stream, orders_stream
+from ..streaming.documents_stream import PRIO_RETRACT_MOD, PRIO_RETRACT_RES
+from . import llm, relational
+from .mirror_coverage import MIRRORS
 from .tables import load
 
-_HOUR_NS = 3_600_000_000_000
-
-
-def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tumbling_counts(spark, sf_dir)
+# Oracle marker: "this mirror's oracle is its batch twin's oracle".
+TWIN = object()
 
 
 TUMBLING_SQL = """
@@ -44,10 +43,6 @@ SELECT strftime(to_timestamp(CAST(epoch_ns(ts) // 3600000000000 AS BIGINT) * 360
        CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
 FROM events GROUP BY 1, 2
 """
-
-
-def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return sliding_counts(spark, sf_dir)
 
 
 SLIDING_SQL = """
@@ -61,10 +56,6 @@ SELECT strftime(to_timestamp(win_hour * 3600), '%Y-%m-%d %H:%M:%S') AS win_start
        count(*) AS n
 FROM w GROUP BY 1
 """
-
-
-def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return session_window_counts(spark, sf_dir)
 
 
 SESSION_WINDOW_SQL = """
@@ -87,10 +78,6 @@ SELECT user_id,
        count(*) AS n
 FROM sess GROUP BY user_id, sess_id
 """
-
-
-def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return streaming_dedup_count(spark, sf_dir)
 
 
 STREAM_DEDUP_SQL = """
@@ -145,10 +132,6 @@ FROM sess GROUP BY user_id, sess_id
 """
 
 
-def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return watermarked_dedup_count(spark, sf_dir)
-
-
 # Within the finite replay the 35-day delay exceeds the data span, so the
 # watermark-scoped dedup equals global dedup (see watermarked_dedup_count).
 DEDUP_WATERMARK_SQL = """
@@ -156,10 +139,6 @@ SELECT event_type, count(*) AS n_users
 FROM (SELECT DISTINCT user_id, event_type FROM events) t
 GROUP BY event_type
 """
-
-
-def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return foreach_batch_last_state(spark, sf_dir)
 
 
 # Last-wins keyed by (ts, event_id) — data properties, not arrival order —
@@ -179,10 +158,6 @@ WHERE rn = 1
 """
 
 
-def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return stream_static_join_counts(spark, sf_dir)
-
-
 STREAM_STATIC_JOIN_SQL = """
 SELECT c.c_nationkey, count(*) AS n_events
 FROM events e JOIN customer c ON e.user_id = c.c_custkey
@@ -190,20 +165,10 @@ GROUP BY 1
 """
 
 
-def stream_stateful_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return stateful_user_stats(spark, sf_dir)
-
-
 STATEFUL_STATS_SQL = """
 SELECT user_id, count(*) AS n, max(value) AS max_value, min(value) AS min_value
 FROM events GROUP BY 1
 """
-
-
-def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.events_stream import late_data_drop_counts
-
-    return late_data_drop_counts(spark, sf_dir)
 
 
 # Replays the watermark algebra: batch 1 = newer half by (ts, event_id);
@@ -231,10 +196,6 @@ WHERE (wh + 1) * 3600000000 <= w
 """
 
 
-def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return transform_with_state_stats(spark, sf_dir)
-
-
 TWS_STATS_SQL = """
 SELECT event_type, count(*) AS n, max(value) AS max_value, min(value) AS min_value
 FROM events GROUP BY 1
@@ -255,17 +216,9 @@ def _tws_available() -> bool:
         return False
 
 
-def stream_incremental_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.events_stream import incremental_cms_user_freq
-
-    return incremental_cms_user_freq(spark, sf_dir)
-
-
 def _incremental_cms_sql() -> str:
     """One-shot batch CMS over all events — per-batch integer cell partials
     merged by summation are bitwise-identical (operators/sketches.py)."""
-    from ..operators.sketches import CMS_ROWS_VALUES_SQL, cms_pos_sql
-
     pos = cms_pos_sql("w")
     return f"""
 WITH toks AS (SELECT CAST(user_id AS VARCHAR) AS w FROM events),
@@ -284,83 +237,6 @@ FROM est
 """
 
 
-def stream_incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.documents_stream import incremental_near_dup_survivors
-
-    return incremental_near_dup_survivors(spark, sf_dir)
-
-
-def _survivors_sql() -> str:
-    """The streaming incremental dedup must equal the one-shot batch
-    survivors bitwise — so the batch query's SQL IS the oracle."""
-    from .llm import _SURVIVORS_SQL
-
-    return _SURVIVORS_SQL
-
-
-def stream_incremental_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.documents_stream import incremental_repeated_spans
-
-    return incremental_repeated_spans(spark, sf_dir)
-
-
-def _repeated_spans_sql() -> str:
-    """Streaming incremental span detection must equal the one-shot batch
-    repeated_spans bitwise — so the batch query's SQL IS the oracle."""
-    from .llm import _REPEATED_SPANS_SQL
-
-    return _REPEATED_SPANS_SQL
-
-
-def stream_incremental_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.documents_stream import incremental_url_dedup
-
-    return incremental_url_dedup(spark, sf_dir)
-
-
-def _url_dedup_sql() -> str:
-    """The streaming merge of per-batch canonical-URL partials must equal
-    the one-shot batch dedup bitwise — so the batch query's SQL IS the
-    oracle."""
-    from .llm import _URL_DEDUP_SQL
-
-    return _URL_DEDUP_SQL
-
-
-def stream_incremental_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.documents_stream import incremental_bm25
-
-    return incremental_bm25(spark, sf_dir)
-
-
-def _bm25_sql() -> str:
-    """The streaming posting/stats merge must equal the one-shot BM25
-    ranking bitwise — so the batch query's SQL IS the oracle."""
-    from .llm import _BM25_SQL
-
-    return _BM25_SQL
-
-
-def stream_incremental_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.documents_stream import incremental_semdedup
-
-    return incremental_semdedup(spark, sf_dir)
-
-
-def _semdedup_sql() -> str:
-    """Streaming incremental semantic dedup must equal the one-shot batch
-    semdedup_cells bitwise — so the batch query's SQL IS the oracle."""
-    from .llm import _semdedup_cells_sql
-
-    return _semdedup_cells_sql()
-
-
-def stream_incremental_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.events_stream import incremental_topk_user_value
-
-    return incremental_topk_user_value(spark, sf_dir)
-
-
 INCREMENTAL_TOPK_SQL = """
 WITH agg AS (
   SELECT event_type, user_id, sum(CAST(value AS DECIMAL(18,2))) AS v
@@ -374,27 +250,6 @@ ranked AS (
 SELECT event_type, user_id, total_value, CAST(rank AS BIGINT) AS rank
 FROM ranked WHERE rank <= 3
 """
-
-
-def stream_incremental_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.events_stream import incremental_funnel
-
-    return incremental_funnel(spark, sf_dir)
-
-
-def _funnel_sql() -> str:
-    """The merged funnel-slice state must reproduce the one-shot
-    strictly-after min-chain bitwise — the batch query's SQL IS the
-    oracle."""
-    from .relational import FUNNEL_SQL
-
-    return FUNNEL_SQL
-
-
-def stream_incremental_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.events_stream import incremental_quantile_value
-
-    return incremental_quantile_value(spark, sf_dir)
 
 
 INCREMENTAL_QUANTILE_SQL = """
@@ -425,609 +280,6 @@ FROM hit
 """
 
 
-
-def stream_incremental_cross_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.documents_stream import incremental_cross_source
-
-    return incremental_cross_source(spark, sf_dir)
-
-
-def _cross_source_sql() -> str:
-    """The merged distinct (gram, source) state must reproduce the batch
-    pair matrix bitwise — the batch query's SQL IS the oracle."""
-    from .llm import _CROSS_SOURCE_SQL
-
-    return _CROSS_SOURCE_SQL
-
-
-
-def stream_incremental_pref_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.documents_stream import incremental_preference_pairs
-
-    return incremental_preference_pairs(spark, sf_dir)
-
-
-def _pref_pairs_sql() -> str:
-    """Merged per-source struct extremes must reproduce the one-shot pair
-    mining bitwise — the batch query's SQL IS the oracle."""
-    from .llm import _PREF_PAIRS_SQL
-
-    return _PREF_PAIRS_SQL
-
-
-def stream_incremental_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.orders_stream import incremental_rfm
-
-    return incremental_rfm(spark, sf_dir)
-
-
-def _rfm_oracle_sql() -> str:
-    """Exact mergeable per-customer state + emission-time boundary
-    recompute must reproduce the one-shot segmentation bitwise — the
-    batch query's SQL IS the oracle (see streaming/orders_stream.py for
-    the sketch-vs-exact boundary tradeoff discussion)."""
-    from .relational import _rfm_sql
-
-    return _rfm_sql()
-
-
-def stream_incremental_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.documents_stream import incremental_token_budget
-
-    return incremental_token_budget(spark, sf_dir)
-
-
-def _token_budget_sql() -> str:
-    """Integer-sum partials re-aggregated must reproduce the one-shot
-    planner bitwise — the batch query's SQL IS the oracle."""
-    from .llm import _TOKEN_BUDGET_SQL
-
-    return _TOKEN_BUDGET_SQL
-
-
-def stream_incremental_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.documents_stream import incremental_gopher
-
-    return incremental_gopher(spark, sf_dir)
-
-
-def _gopher_sql() -> str:
-    from .llm import _gopher_rules_sql
-
-    return _gopher_rules_sql()
-
-
-def stream_incremental_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.documents_stream import incremental_readability
-
-    return incremental_readability(spark, sf_dir)
-
-
-def _readability_sql() -> str:
-    from .llm import _READABILITY_SQL
-
-    return _READABILITY_SQL
-
-
-def stream_incremental_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.documents_stream import incremental_calibration
-
-    return incremental_calibration(spark, sf_dir)
-
-
-def _calibration_oracle_sql() -> str:
-    """Stateless per-doc score/label partials re-binned at emission must
-    reproduce the one-shot reliability diagram bitwise — the batch
-    query's SQL IS the oracle."""
-    from .llm import _calibration_sql
-
-    return _calibration_sql()
-
-
-def stream_incremental_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.orders_stream import incremental_shortest_path
-
-    return incremental_shortest_path(spark, sf_dir)
-
-
-def _shortest_path_oracle_sql() -> str:
-    """Order-atomic per-batch pair partials merged by integer SUM, weights
-    recomputed at emission, through the shared relaxation kernel — must
-    reproduce the one-shot distances bitwise; the batch query's SQL IS the
-    oracle."""
-    from .relational import _shortest_path_sql
-
-    return _shortest_path_sql()
-
-
-def stream_incremental_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.orders_stream import incremental_kcore
-
-    return incremental_kcore(spark, sf_dir)
-
-
-def _kcore_oracle_sql() -> str:
-    """The same staged pair state as the shortest-path mirror, consumed
-    for its SUPPORT only (degrees ignore counts), through the shared peel
-    kernel — must reproduce the one-shot per-k core table bitwise; the
-    batch query's SQL IS the oracle."""
-    from .relational import _kcore_sql
-
-    return _kcore_sql()
-
-
-def stream_incremental_shortest_path_retract(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from ..streaming.orders_stream import incremental_shortest_path_retract
-
-    return incremental_shortest_path_retract(spark, sf_dir)
-
-
-def _shortest_path_retract_oracle_sql() -> str:
-    """SIGNED pair partials (a cancelled order retracts its co-purchase
-    pairs; net-zero pairs leave the graph, partial support keeps the
-    surviving count — and the 1/cnt weight moves with it) merged by
-    signed sum, then the shared relaxation kernel: must reproduce the
-    one-shot Bellman-Ford over surviving orders bitwise."""
-    from .relational import _shortest_path_surviving_sql
-
-    return _shortest_path_surviving_sql()
-
-
-def stream_incremental_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.orders_stream import incremental_ols
-
-    return incremental_ols(spark, sf_dir)
-
-
-def _ols_oracle_sql() -> str:
-    """Per-batch DECIMAL(38,0) moment partials merged by exact addition
-    feed the shared Cramer solve — must reproduce the one-shot regression
-    bitwise; the batch query's SQL IS the oracle."""
-    from .relational import OLS_SQL
-
-    return OLS_SQL
-
-
-def stream_incremental_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.documents_stream import incremental_naive_bayes
-
-    return incremental_naive_bayes(spark, sf_dir)
-
-
-def stream_incremental_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.documents_stream import incremental_dsir
-
-    return incremental_dsir(spark, sf_dir)
-
-
-def _dsir_oracle_sql() -> str:
-    """The one-shot DSIR SQL is the oracle: merged per-batch feature
-    partials equal the batch feature table row-for-row (documents live
-    wholly in one batch; counts are exact integers), and emission reruns
-    the shared dsir_from_feats kernel."""
-    from .llm import _dsir_sql
-
-    return _dsir_sql()
-
-
-def _naive_bayes_oracle_sql() -> str:
-    """Integer count-table partials (per-class token counts, class doc
-    counts, held-out per-doc token counts) merge by BIGINT addition and
-    feed the shared model-build + scoring kernel at emission — the
-    retrained classifier must reproduce the one-shot confusion matrix
-    bitwise; the batch query's SQL IS the oracle."""
-    from .llm import _NB_LANGID_SQL
-
-    return _NB_LANGID_SQL
-
-
-def stream_incremental_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.orders_stream import incremental_bootstrap
-
-    return incremental_bootstrap(spark, sf_dir)
-
-
-def _bootstrap_oracle_sql() -> str:
-    """Per-batch (group, replicate) weighted-sum partials — the Poisson
-    weight is a pure function of (row identity, replicate), never of
-    batch membership — merged by exact BIGINT addition feed the shared
-    nearest-rank tail; must reproduce the one-shot CI bitwise."""
-    from .relational import POISSON_BOOTSTRAP_SQL
-
-    return POISSON_BOOTSTRAP_SQL
-
-
-def stream_incremental_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.orders_stream import incremental_seasonal
-
-    return incremental_seasonal(spark, sf_dir)
-
-
-def _seasonal_oracle_sql() -> str:
-    """Per-batch (dn, cents) daily partials merged by BIGINT addition
-    feed the shared windowed decomposition kernel — must reproduce the
-    one-shot decomposition bitwise (trend eligibility is corpus-global:
-    late batches can fill calendar gaps)."""
-    from .relational import SEASONAL_SQL
-
-    return SEASONAL_SQL
-
-
-def stream_incremental_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.orders_stream import incremental_mann_whitney
-
-    return incremental_mann_whitney(spark, sf_dir)
-
-
-def _mann_whitney_oracle_sql() -> str:
-    """Same shared daily state as the seasonal mirror; ranks are global
-    order statistics, so emission re-ranks the merged series — must
-    reproduce the one-shot rank-sum test bitwise."""
-    from .relational import MANN_WHITNEY_SQL
-
-    return MANN_WHITNEY_SQL
-
-
-def stream_incremental_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.orders_stream import incremental_changepoint
-
-    return incremental_changepoint(spark, sf_dir)
-
-
-def _changepoint_oracle_sql() -> str:
-    """Same shared daily state; every split statistic moves with a late
-    batch, so emission re-sweeps the merged prefix sums — must reproduce
-    the one-shot argmax (ties included) bitwise."""
-    from .relational import CHANGEPOINT_SQL
-
-    return CHANGEPOINT_SQL
-
-
-def stream_incremental_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.orders_stream import incremental_spearman
-
-    return incremental_spearman(spark, sf_dir)
-
-
-def _spearman_oracle_sql() -> str:
-    """Shared daily state; both rank columns are global order statistics
-    — emission re-ranks the merged (cents, n_orders) series; must
-    reproduce the one-shot rank correlation bitwise."""
-    from .relational import SPEARMAN_SQL
-
-    return SPEARMAN_SQL
-
-
-def stream_incremental_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.orders_stream import incremental_acf
-
-    return incremental_acf(spark, sf_dir)
-
-
-def _acf_oracle_sql() -> str:
-    """Shared daily state; the corpus mean and every lag pair move with
-    a late batch — emission recomputes the exact integer ACF forms over
-    the merged series; must reproduce the one-shot ACF bitwise."""
-    from .relational import ACF_SQL
-
-    return ACF_SQL
-
-
-def stream_incremental_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.orders_stream import incremental_theil_sen
-
-    return incremental_theil_sen(spark, sf_dir)
-
-
-def _theil_sen_oracle_sql() -> str:
-    """Shared daily state; every pair involving a new day shifts the
-    slope median — emission re-pairs the merged calendar-bounded series;
-    must reproduce the one-shot Theil-Sen fit bitwise."""
-    from .relational import THEIL_SEN_SQL
-
-    return THEIL_SEN_SQL
-
-
-def stream_incremental_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.orders_stream import incremental_gini
-
-    return incremental_gini(spark, sf_dir)
-
-
-def _gini_oracle_sql() -> str:
-    """Per-customer cent partials merge by BIGINT addition (customer-
-    dimension state); the Lorenz ranks re-rank at emission — must
-    reproduce the one-shot Gini and top shares bitwise."""
-    from .relational import _gini_sql
-
-    return _gini_sql()
-
-
-def stream_incremental_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.orders_stream import incremental_kaplan_meier
-
-    return incremental_kaplan_meier(spark, sf_dir)
-
-
-def _kaplan_meier_oracle_sql() -> str:
-    """Per-customer span partials merge by min/max; the censoring anchor
-    and every lifetime are corpus-global (a new order can flip churned
-    to censored), so emission reruns the shared product-limit tail —
-    must reproduce the one-shot survival curve bitwise."""
-    from .relational import KAPLAN_MEIER_SQL
-
-    return KAPLAN_MEIER_SQL
-
-
-def stream_incremental_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.documents_stream import incremental_burstiness
-
-    return incremental_burstiness(spark, sf_dir)
-
-
-def _burstiness_oracle_sql() -> str:
-    """Per-batch vocab-moment partials (docs are batch-local) merge by
-    BIGINT addition; VMR and the top-K cutoff are corpus-global, so
-    emission reruns the shared rank tail — must reproduce the one-shot
-    burstiness table bitwise."""
-    from .llm import _BURSTINESS_SQL
-
-    return _BURSTINESS_SQL
-
-
-def stream_incremental_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.orders_stream import incremental_kendall
-
-    return incremental_kendall(spark, sf_dir)
-
-
-def _kendall_oracle_sql() -> str:
-    """Shared daily state; every pair involving a new day changes the
-    concordance counts — emission re-pairs the merged series; must
-    reproduce the one-shot tau-b decomposition bitwise."""
-    from .relational import KENDALL_SQL
-
-    return KENDALL_SQL
-
-
-def stream_incremental_jsd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.documents_stream import incremental_jsd
-
-    return incremental_jsd(spark, sf_dir)
-
-
-def _jsd_oracle_sql() -> str:
-    """Per-(source, token) count partials merge by BIGINT addition; the
-    distributions, shared-token sets and exact correction all move per
-    batch, so emission reruns the decomposition over merged counts —
-    must reproduce the one-shot JSD matrix bitwise."""
-    from .llm import _JSD_SQL
-
-    return _JSD_SQL
-
-
-def stream_incremental_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.orders_stream import incremental_kmv
-
-    return incremental_kmv(spark, sf_dir)
-
-
-def _kmv_oracle_sql() -> str:
-    """Per-batch K-min partials merged by distinct-union + re-take-K (the
-    KMV mergeability property) must reproduce the one-shot sketch and
-    estimates bitwise; the batch query's SQL IS the oracle."""
-    from .relational import KMV_SQL
-
-    return KMV_SQL
-
-
-def stream_incremental_two_hop_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.orders_stream import incremental_two_hop_recs
-
-    return incremental_two_hop_recs(spark, sf_dir)
-
-
-def _two_hop_recs_oracle_sql() -> str:
-    """Merged pair counts feed the shared cap + expand + score kernel
-    (both the top-M cap order and the path-weight scores are corpus-
-    global); must reproduce the one-shot recommendation table bitwise;
-    the batch query's SQL IS the oracle."""
-    from .relational import _two_hop_recs_sql
-
-    return _two_hop_recs_sql()
-
-
-def stream_incremental_core_numbers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.orders_stream import incremental_core_numbers
-
-    return incremental_core_numbers(spark, sf_dir)
-
-
-def _core_numbers_oracle_sql() -> str:
-    """Merged pair support feeds the shared peel-sharing decomposition
-    kernel (coreness is corpus-global — a later batch can rescue a peeled
-    node); must reproduce the one-shot per-node coreness table bitwise;
-    the batch query's SQL IS the oracle."""
-    from .relational import _core_numbers_sql
-
-    return _core_numbers_sql()
-
-
-def stream_incremental_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.orders_stream import incremental_label_propagation
-
-    return incremental_label_propagation(spark, sf_dir)
-
-
-def _label_propagation_oracle_sql() -> str:
-    """Merged pair counts feed the shared synchronous-vote kernel (vote
-    weights are corpus-global counts — a later batch can flip a
-    plurality); must reproduce the one-shot community table bitwise; the
-    batch query's SQL IS the oracle."""
-    from .relational import _label_propagation_sql
-
-    return _label_propagation_sql()
-
-
-def stream_incremental_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.orders_stream import incremental_pagerank
-
-    return incremental_pagerank(spark, sf_dir)
-
-
-def _pagerank_oracle_sql() -> str:
-    """Merged pair counts feed the shared micro-unit fixed-point kernel
-    (transition weights and out-weight normalizers are corpus-global);
-    must reproduce the one-shot top-k bitwise; the batch query's SQL IS
-    the oracle."""
-    from .relational import _pagerank_sql
-
-    return _pagerank_sql()
-
-
-def stream_incremental_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.orders_stream import incremental_quantile_sketch
-
-    return incremental_quantile_sketch(spark, sf_dir)
-
-
-def _quantile_sketch_oracle_sql() -> str:
-    """Exact (value, count) multiset partials merged by SUM, re-expanded
-    through the shared sketch tail — must reproduce the one-shot
-    data-dependent binning bitwise; the batch query's SQL IS the
-    oracle."""
-    from .relational import _quantile_sketch_sql
-
-    return _quantile_sketch_sql()
-
-
-def stream_incremental_priority_sample(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from ..streaming.documents_stream import incremental_priority_sample
-
-    return incremental_priority_sample(spark, sf_dir)
-
-
-def _priority_sample_oracle_sql() -> str:
-    """Row-intrinsic priorities make top-K mergeable: per-batch
-    |sources|·K candidate rows, re-ranked at emission — the batch
-    query's SQL IS the oracle."""
-    from .llm import _priority_sample_sql
-
-    return _priority_sample_sql()
-
-
-def stream_incremental_isotonic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.documents_stream import incremental_isotonic
-
-    return incremental_isotonic(spark, sf_dir)
-
-
-def _isotonic_oracle_sql() -> str:
-    """Bins-sized integer partials merged by addition, the minimax tail
-    rerun at emission — the batch query's SQL IS the oracle."""
-    from .llm import _isotonic_sql
-
-    return _isotonic_sql()
-
-
-def stream_incremental_srp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.documents_stream import incremental_srp_near_dup
-
-    return incremental_srp_near_dup(spark, sf_dir)
-
-
-def _srp_oracle_sql() -> str:
-    """Per-doc stateless SRP signatures landed once per arrival batch;
-    batch-vs-landed band-keyed candidates verified by the exact
-    integer-dot cosine — must equal the one-shot SRP join bitwise; the
-    batch query's SQL IS the oracle."""
-    from .llm import _SRP_NEAR_DUP_SQL
-
-    return _SRP_NEAR_DUP_SQL
-
-
-def stream_incremental_theil_sen_sampled(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from ..streaming.orders_stream import incremental_theil_sen_sampled
-
-    return incremental_theil_sen_sampled(spark, sf_dir)
-
-
-def _theil_sen_sampled_oracle_sql() -> str:
-    """Keyed (seg, day) daily partials merged by integer SUM; the
-    deterministic pair sampler and both audit medians rerun over the
-    merged series at emission — must equal the one-shot sampled fit
-    bitwise; the batch query's SQL IS the oracle."""
-    from .relational import THEIL_SEN_SAMPLED_SQL
-
-    return THEIL_SEN_SAMPLED_SQL
-
-
-def stream_incremental_kendall_sampled(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from ..streaming.orders_stream import incremental_kendall_sampled
-
-    return incremental_kendall_sampled(spark, sf_dir)
-
-
-def _kendall_sampled_oracle_sql() -> str:
-    """Same keyed daily state, concordance kernel at emission — the batch
-    query's SQL IS the oracle."""
-    from .relational import KENDALL_SAMPLED_SQL
-
-    return KENDALL_SAMPLED_SQL
-
-
-def stream_incremental_seasonal_retract(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from ..streaming.orders_stream import incremental_seasonal_retract
-
-    return incremental_seasonal_retract(spark, sf_dir)
-
-
-def _seasonal_retract_oracle_sql() -> str:
-    """Signed (cents, n_orders) daily partials with tombstone compaction,
-    fully-cancelled days dropped from the net series, the shared windowed
-    kernel rerun at emission — must equal the one-shot decomposition over
-    the surviving orders bitwise."""
-    from .relational import _seasonal_retract_sql
-
-    return _seasonal_retract_sql()
-
-
-def stream_incremental_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.events_stream import incremental_markov
-
-    return incremental_markov(spark, sf_dir)
-
-
-def _markov_oracle_sql() -> str:
-    """Per-batch transition partials with boundary-stitched pairs from the
-    per-user last-event state, merged by integer SUM under the ORDERED
-    delivery contract (batches slice the global (ts, event_id) order —
-    the one mirror whose state merge is not arrival-order-free, see
-    incremental_markov's docstring and the counterexample pytest), then
-    the shared quantize/iterate tail — must reproduce the one-shot
-    stationary distribution bitwise; the batch query's SQL IS the
-    oracle."""
-    from .relational import _markov_sql
-
-    return _markov_sql()
-
-
-def stream_incremental_markov_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.events_stream import incremental_markov_retract
-
-    return incremental_markov_retract(spark, sf_dir)
-
-
 def _markov_retract_oracle_sql() -> str:
     """The retraction-aware Markov mirror (watermark-bounded signed event
     buffer in front of the unchanged ordered freeze kernel — see
@@ -1036,19 +288,9 @@ def _markov_retract_oracle_sql() -> str:
     stationary distribution over the SURVIVING (never-cancelled) events
     bitwise; the batch query's SQL restricted to survivors IS the
     oracle."""
-    from .relational import RETRACT_MOD, RETRACT_RES, _markov_sql
-
-    return _markov_sql(
-        where=f"WHERE event_id % {RETRACT_MOD} <> {RETRACT_RES}"
+    return relational._markov_sql(
+        where=f"WHERE event_id % {relational.RETRACT_MOD} <> {relational.RETRACT_RES}"
     )
-
-
-def stream_incremental_priority_sample_retract(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from ..streaming.documents_stream import incremental_priority_sample_retract
-
-    return incremental_priority_sample_retract(spark, sf_dir)
 
 
 def _priority_sample_retract_oracle_sql() -> str:
@@ -1058,23 +300,9 @@ def _priority_sample_retract_oracle_sql() -> str:
     absorb deletions) must reproduce the one-shot priority sample over
     the SURVIVING documents bitwise; the batch query's SQL restricted to
     survivors IS the oracle."""
-    from ..streaming.documents_stream import (
-        PRIO_RETRACT_MOD,
-        PRIO_RETRACT_RES,
-    )
-    from .llm import _priority_sample_sql
-
-    return _priority_sample_sql(
+    return llm._priority_sample_sql(
         where=f"WHERE doc_id % {PRIO_RETRACT_MOD} <> {PRIO_RETRACT_RES}"
     )
-
-
-def stream_incremental_near_dup_retract(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from ..streaming.documents_stream import incremental_near_dup_retract
-
-    return incremental_near_dup_retract(spark, sf_dir)
 
 
 def _near_dup_retract_oracle_sql() -> str:
@@ -1084,130 +312,11 @@ def _near_dup_retract_oracle_sql() -> str:
     evaluated over the surviving corpus, expressed by shadowing the
     `documents` view with a survivor-filtered CTE (main.documents is the
     schema-qualified base — DuckDB's sanctioned same-name idiom)."""
-    from ..streaming.documents_stream import (
-        PRIO_RETRACT_MOD,
-        PRIO_RETRACT_RES,
-    )
-    from .llm import _SURVIVORS_SQL
-
     shadow = (
         "WITH documents AS (SELECT * FROM main.documents "
         f"WHERE doc_id % {PRIO_RETRACT_MOD} <> {PRIO_RETRACT_RES}), pairs AS"
     )
-    return _SURVIVORS_SQL.replace("WITH pairs AS", shadow, 1)
-
-
-def stream_incremental_quantile_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.orders_stream import incremental_quantile_retract
-
-    return incremental_quantile_retract(spark, sf_dir)
-
-
-def _quantile_retract_oracle_sql() -> str:
-    """Signed (+1 insert / -1 cancellation) per-batch multiset partials
-    merged by SIGNED integer sum — the retraction-aware member of the
-    family; the net state must land exactly on the sketch over the
-    surviving orders, so THAT batch SQL is the oracle."""
-    from .relational import _quantile_sketch_retract_sql
-
-    return _quantile_sketch_retract_sql()
-
-
-def stream_incremental_rfm_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.orders_stream import incremental_rfm_retract
-
-    return incremental_rfm_retract(spark, sf_dir)
-
-
-def _rfm_retract_oracle_sql() -> str:
-    """Keyed retraction: per-customer SIGNED (date, price) multiset state
-    — max() is monotone and cannot retract, so the state stays one level
-    less aggregated and every scoring input is recomputed at emission;
-    must land exactly on the RFM scoring over the surviving orders."""
-    from .relational import _rfm_retract_sql
-
-    return _rfm_retract_sql()
-
-
-def stream_incremental_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.documents_stream import incremental_kneser_ney
-
-    return incremental_kneser_ney(spark, sf_dir)
-
-
-def _kneser_ney_oracle_sql() -> str:
-    """The merged bigram stream re-scored through the shared KN kernel
-    must reproduce the one-shot scores bitwise — the batch query's SQL IS
-    the oracle."""
-    from .llm import _LM_KN_SQL
-
-    return _LM_KN_SQL
-
-
-def stream_incremental_heaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.documents_stream import incremental_heaps
-
-    return incremental_heaps(spark, sf_dir)
-
-
-def _heaps_oracle_sql() -> str:
-    """Unioned per-doc token partials + MIN-merged first occurrences
-    through the shared fit tail must reproduce the one-shot fit bitwise —
-    the batch query's SQL IS the oracle."""
-    from .llm import _HEAPS_SQL
-
-    return _HEAPS_SQL
-
-
-def stream_incremental_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.documents_stream import incremental_temperature
-
-    return incremental_temperature(spark, sf_dir)
-
-
-def _temperature_oracle_sql() -> str:
-    """Per-batch (t, bin) INTEGER partials merged by exact addition at
-    emission must reproduce the one-shot grid fit bitwise — the batch
-    query's SQL IS the oracle."""
-    from .llm import _temperature_sql
-
-    return _temperature_sql()
-
-
-def stream_incremental_doremi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.documents_stream import incremental_doremi
-
-    return incremental_doremi(spark, sf_dir)
-
-
-def _doremi_oracle_sql() -> str:
-    """The merged bigram stream re-scored through the shared LM +
-    reweighting kernels must reproduce the one-shot weights bitwise — the
-    batch query's SQL IS the oracle."""
-    from .llm import _doremi_sql
-
-    return _doremi_sql()
-
-
-def stream_incremental_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.documents_stream import incremental_pretrain_pipeline
-
-    return incremental_pretrain_pipeline(spark, sf_dir)
-
-
-def _pipeline_v2_oracle_sql() -> str:
-    """The five per-stage partial families, merged and composed through the
-    shared gate/release kernels, must reproduce the one-shot composed
-    pipeline bitwise — the batch query's SQL IS the oracle."""
-    from .llm import _pipeline_v2_sql
-
-    return _pipeline_v2_sql()
-
-
-def stream_incremental_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.documents_stream import incremental_ann_ingest
-
-    return incremental_ann_ingest(spark, sf_dir)
+    return llm._SURVIVORS_SQL.replace("WITH pairs AS", shadow, 1)
 
 
 def _ann_ingest_oracle_sql() -> str:
@@ -1215,21 +324,12 @@ def _ann_ingest_oracle_sql() -> str:
     union of all batches — the oracle is the same deterministic graph
     CTE chain the ANN search queries replay, emitting the final
     refined edge list (src, dst, e_sim)."""
-    from ..operators.similarity import NSW_NND_ROUNDS
-    from .llm import _NSW_WB_CTE, _nsw_graph_ctes
-
-    ctes = [_NSW_WB_CTE] + _nsw_graph_ctes("", "wb")
+    ctes = [llm._NSW_WB_CTE] + llm._nsw_graph_ctes("", "wb")
     return (
         "WITH "
         + ",\n".join(ctes)
         + f"\nSELECT src, dst, e_sim FROM e{NSW_NND_ROUNDS}"
     )
-
-
-def stream_incremental_ann_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.documents_stream import incremental_ann_retract
-
-    return incremental_ann_retract(spark, sf_dir)
 
 
 def _ann_retract_oracle_sql() -> str:
@@ -1238,19 +338,12 @@ def _ann_retract_oracle_sql() -> str:
     deletion set (vec_id % MOD == RES) filtered out of the member table,
     so a deleted vector's crowding-out is undone (re-election) and its
     own edges are gone."""
-    from ..operators.similarity import NSW_NND_ROUNDS, lsh_bucket_sql
-    from ..streaming.documents_stream import (
-        PRIO_RETRACT_MOD,
-        PRIO_RETRACT_RES,
-    )
-    from .llm import EMB_DIM, _nsw_graph_ctes
-
     wb = f"""wb AS MATERIALIZED (
   SELECT vec_id, embedding::DOUBLE[] AS vec,
-         {lsh_bucket_sql("(embedding::DOUBLE[])", EMB_DIM)} AS bucket
+         {lsh_bucket_sql("(embedding::DOUBLE[])", llm.EMB_DIM)} AS bucket
   FROM embeddings
   WHERE vec_id % {PRIO_RETRACT_MOD} != {PRIO_RETRACT_RES})"""
-    ctes = [wb] + _nsw_graph_ctes("", "wb")
+    ctes = [wb] + llm._nsw_graph_ctes("", "wb")
     return (
         "WITH "
         + ",\n".join(ctes)
@@ -1258,83 +351,91 @@ def _ann_retract_oracle_sql() -> str:
     )
 
 
-_SPECS: list[tuple[str, object, str | None]] = [
-    ("stream_late_data_drop", stream_late_data_drop, LATE_DROP_SQL),
-    ("stream_tumbling_agg", stream_tumbling, TUMBLING_SQL),
-    ("stream_sliding_agg", stream_sliding, SLIDING_SQL),
-    ("stream_session_window", stream_session_window, SESSION_WINDOW_SQL),
-    ("stream_dedup", stream_dedup, STREAM_DEDUP_SQL),
-    ("stream_dedup_watermark", stream_dedup_watermark, DEDUP_WATERMARK_SQL),
-    ("stream_foreach_batch_sink", stream_foreach_batch, FOREACH_BATCH_SQL),
-    ("stream_static_join", stream_static_join, STREAM_STATIC_JOIN_SQL),
-    ("stream_stream_join", stream_stream_join_pairs, STREAM_STREAM_JOIN_SQL),
-    ("stream_stateful_user_stats", stream_stateful_stats, STATEFUL_STATS_SQL),
+_SPECS: list[tuple[str, object, object]] = [
+    ("stream_late_data_drop", events_stream.late_data_drop_counts, LATE_DROP_SQL),
+    ("stream_tumbling_agg", events_stream.tumbling_counts, TUMBLING_SQL),
+    ("stream_sliding_agg", events_stream.sliding_counts, SLIDING_SQL),
+    ("stream_session_window", events_stream.session_window_counts, SESSION_WINDOW_SQL),
+    ("stream_dedup", events_stream.streaming_dedup_count, STREAM_DEDUP_SQL),
+    ("stream_dedup_watermark", events_stream.watermarked_dedup_count, DEDUP_WATERMARK_SQL),
+    ("stream_foreach_batch_sink", events_stream.foreach_batch_last_state, FOREACH_BATCH_SQL),
+    ("stream_static_join", events_stream.stream_static_join_counts, STREAM_STATIC_JOIN_SQL),
+    ("stream_stream_join", events_stream.stream_stream_join_pairs, events_stream.STREAM_STREAM_JOIN_SQL),
+    ("stream_stateful_user_stats", events_stream.stateful_user_stats, STATEFUL_STATS_SQL),
     ("stream_sessionize_batch", sessionize_events, SESSIONIZE_SQL),
-    ("stream_incremental_cms", stream_incremental_cms, _incremental_cms_sql()),
-    ("stream_incremental_near_dup", stream_incremental_near_dup, _survivors_sql()),
-    ("stream_incremental_topk", stream_incremental_topk, INCREMENTAL_TOPK_SQL),
-    ("stream_incremental_quantile", stream_incremental_quantile, INCREMENTAL_QUANTILE_SQL),
-    ("stream_incremental_repeated_spans", stream_incremental_repeated_spans, _repeated_spans_sql()),
-    ("stream_incremental_url_dedup", stream_incremental_url_dedup, _url_dedup_sql()),
-    ("stream_incremental_semdedup", stream_incremental_semdedup, _semdedup_sql()),
-    ("stream_incremental_bm25", stream_incremental_bm25, _bm25_sql()),
-    ("stream_incremental_funnel", stream_incremental_funnel, _funnel_sql()),
-    ("stream_incremental_cross_source", stream_incremental_cross_source, _cross_source_sql()),
-    ("stream_incremental_pref_pairs", stream_incremental_pref_pairs, _pref_pairs_sql()),
-    ("stream_incremental_rfm", stream_incremental_rfm, _rfm_oracle_sql()),
-    ("stream_incremental_token_budget", stream_incremental_token_budget, _token_budget_sql()),
-    ("stream_incremental_gopher", stream_incremental_gopher, _gopher_sql()),
-    ("stream_incremental_readability", stream_incremental_readability, _readability_sql()),
-    ("stream_incremental_pipeline_v2", stream_incremental_pipeline_v2, _pipeline_v2_oracle_sql()),
-    ("stream_incremental_doremi", stream_incremental_doremi, _doremi_oracle_sql()),
-    ("stream_incremental_calibration", stream_incremental_calibration, _calibration_oracle_sql()),
-    ("stream_incremental_temperature", stream_incremental_temperature, _temperature_oracle_sql()),
-    ("stream_incremental_kneser_ney", stream_incremental_kneser_ney, _kneser_ney_oracle_sql()),
-    ("stream_incremental_heaps", stream_incremental_heaps, _heaps_oracle_sql()),
-    ("stream_incremental_shortest_path", stream_incremental_shortest_path, _shortest_path_oracle_sql()),
-    ("stream_incremental_quantile_sketch", stream_incremental_quantile_sketch, _quantile_sketch_oracle_sql()),
-    ("stream_incremental_kcore", stream_incremental_kcore, _kcore_oracle_sql()),
-    ("stream_incremental_core_numbers", stream_incremental_core_numbers, _core_numbers_oracle_sql()),
-    ("stream_incremental_two_hop_recs", stream_incremental_two_hop_recs, _two_hop_recs_oracle_sql()),
-    ("stream_incremental_kmv", stream_incremental_kmv, _kmv_oracle_sql()),
-    ("stream_incremental_ols", stream_incremental_ols, _ols_oracle_sql()),
-    ("stream_incremental_bootstrap", stream_incremental_bootstrap, _bootstrap_oracle_sql()),
-    ("stream_incremental_naive_bayes", stream_incremental_naive_bayes, _naive_bayes_oracle_sql()),
-    ("stream_incremental_dsir", stream_incremental_dsir, _dsir_oracle_sql()),
-    ("stream_incremental_seasonal", stream_incremental_seasonal, _seasonal_oracle_sql()),
-    ("stream_incremental_mann_whitney", stream_incremental_mann_whitney, _mann_whitney_oracle_sql()),
-    ("stream_incremental_changepoint", stream_incremental_changepoint, _changepoint_oracle_sql()),
-    ("stream_incremental_spearman", stream_incremental_spearman, _spearman_oracle_sql()),
-    ("stream_incremental_acf", stream_incremental_acf, _acf_oracle_sql()),
-    ("stream_incremental_theil_sen", stream_incremental_theil_sen, _theil_sen_oracle_sql()),
-    ("stream_incremental_gini", stream_incremental_gini, _gini_oracle_sql()),
-    ("stream_incremental_kaplan_meier", stream_incremental_kaplan_meier, _kaplan_meier_oracle_sql()),
-    ("stream_incremental_burstiness", stream_incremental_burstiness, _burstiness_oracle_sql()),
-    ("stream_incremental_kendall", stream_incremental_kendall, _kendall_oracle_sql()),
-    ("stream_incremental_jsd", stream_incremental_jsd, _jsd_oracle_sql()),
-    ("stream_incremental_label_propagation", stream_incremental_label_propagation, _label_propagation_oracle_sql()),
-    ("stream_incremental_pagerank", stream_incremental_pagerank, _pagerank_oracle_sql()),
-    ("stream_incremental_markov", stream_incremental_markov, _markov_oracle_sql()),
-    ("stream_incremental_markov_retract", stream_incremental_markov_retract, _markov_retract_oracle_sql()),
-    ("stream_incremental_priority_sample_retract", stream_incremental_priority_sample_retract, _priority_sample_retract_oracle_sql()),
-    ("stream_incremental_near_dup_retract", stream_incremental_near_dup_retract, _near_dup_retract_oracle_sql()),
-    ("stream_incremental_seasonal_retract", stream_incremental_seasonal_retract, _seasonal_retract_oracle_sql()),
-    ("stream_incremental_srp", stream_incremental_srp, _srp_oracle_sql()),
-    ("stream_incremental_isotonic", stream_incremental_isotonic, _isotonic_oracle_sql()),
-    ("stream_incremental_priority_sample", stream_incremental_priority_sample, _priority_sample_oracle_sql()),
-    ("stream_incremental_theil_sen_sampled", stream_incremental_theil_sen_sampled, _theil_sen_sampled_oracle_sql()),
-    ("stream_incremental_kendall_sampled", stream_incremental_kendall_sampled, _kendall_sampled_oracle_sql()),
-    ("stream_incremental_quantile_retract", stream_incremental_quantile_retract, _quantile_retract_oracle_sql()),
-    ("stream_incremental_rfm_retract", stream_incremental_rfm_retract, _rfm_retract_oracle_sql()),
-    ("stream_incremental_shortest_path_retract", stream_incremental_shortest_path_retract, _shortest_path_retract_oracle_sql()),
-    ("stream_incremental_ann_ingest", stream_incremental_ann_ingest, _ann_ingest_oracle_sql()),
-    ("stream_incremental_ann_retract", stream_incremental_ann_retract, _ann_retract_oracle_sql()),
+    ("stream_incremental_cms", events_stream.incremental_cms_user_freq, _incremental_cms_sql()),
+    ("stream_incremental_near_dup", documents_stream.incremental_near_dup_survivors, TWIN),
+    ("stream_incremental_topk", events_stream.incremental_topk_user_value, INCREMENTAL_TOPK_SQL),
+    ("stream_incremental_quantile", events_stream.incremental_quantile_value, INCREMENTAL_QUANTILE_SQL),
+    ("stream_incremental_repeated_spans", documents_stream.incremental_repeated_spans, TWIN),
+    ("stream_incremental_url_dedup", documents_stream.incremental_url_dedup, TWIN),
+    ("stream_incremental_semdedup", documents_stream.incremental_semdedup, TWIN),
+    ("stream_incremental_bm25", documents_stream.incremental_bm25, TWIN),
+    ("stream_incremental_funnel", events_stream.incremental_funnel, TWIN),
+    ("stream_incremental_cross_source", documents_stream.incremental_cross_source, TWIN),
+    ("stream_incremental_pref_pairs", documents_stream.incremental_preference_pairs, TWIN),
+    ("stream_incremental_rfm", orders_stream.incremental_rfm, TWIN),
+    ("stream_incremental_token_budget", documents_stream.incremental_token_budget, TWIN),
+    ("stream_incremental_gopher", documents_stream.incremental_gopher, TWIN),
+    ("stream_incremental_readability", documents_stream.incremental_readability, TWIN),
+    ("stream_incremental_pipeline_v2", documents_stream.incremental_pretrain_pipeline, TWIN),
+    ("stream_incremental_doremi", documents_stream.incremental_doremi, TWIN),
+    ("stream_incremental_calibration", documents_stream.incremental_calibration, TWIN),
+    ("stream_incremental_temperature", documents_stream.incremental_temperature, TWIN),
+    ("stream_incremental_kneser_ney", documents_stream.incremental_kneser_ney, TWIN),
+    ("stream_incremental_heaps", documents_stream.incremental_heaps, TWIN),
+    ("stream_incremental_shortest_path", orders_stream.incremental_shortest_path, TWIN),
+    ("stream_incremental_quantile_sketch", orders_stream.incremental_quantile_sketch, TWIN),
+    ("stream_incremental_kcore", orders_stream.incremental_kcore, TWIN),
+    ("stream_incremental_core_numbers", orders_stream.incremental_core_numbers, TWIN),
+    ("stream_incremental_two_hop_recs", orders_stream.incremental_two_hop_recs, TWIN),
+    ("stream_incremental_kmv", orders_stream.incremental_kmv, TWIN),
+    ("stream_incremental_ols", orders_stream.incremental_ols, TWIN),
+    ("stream_incremental_bootstrap", orders_stream.incremental_bootstrap, TWIN),
+    ("stream_incremental_naive_bayes", documents_stream.incremental_naive_bayes, TWIN),
+    ("stream_incremental_dsir", documents_stream.incremental_dsir, TWIN),
+    ("stream_incremental_seasonal", orders_stream.incremental_seasonal, TWIN),
+    ("stream_incremental_mann_whitney", orders_stream.incremental_mann_whitney, TWIN),
+    ("stream_incremental_changepoint", orders_stream.incremental_changepoint, TWIN),
+    ("stream_incremental_spearman", orders_stream.incremental_spearman, TWIN),
+    ("stream_incremental_acf", orders_stream.incremental_acf, TWIN),
+    ("stream_incremental_theil_sen", orders_stream.incremental_theil_sen, TWIN),
+    ("stream_incremental_gini", orders_stream.incremental_gini, TWIN),
+    ("stream_incremental_kaplan_meier", orders_stream.incremental_kaplan_meier, TWIN),
+    ("stream_incremental_burstiness", documents_stream.incremental_burstiness, TWIN),
+    ("stream_incremental_kendall", orders_stream.incremental_kendall, TWIN),
+    ("stream_incremental_jsd", documents_stream.incremental_jsd, TWIN),
+    ("stream_incremental_label_propagation", orders_stream.incremental_label_propagation, TWIN),
+    ("stream_incremental_pagerank", orders_stream.incremental_pagerank, TWIN),
+    ("stream_incremental_markov", events_stream.incremental_markov, TWIN),
+    ("stream_incremental_markov_retract", events_stream.incremental_markov_retract, _markov_retract_oracle_sql()),
+    ("stream_incremental_priority_sample_retract", documents_stream.incremental_priority_sample_retract, _priority_sample_retract_oracle_sql()),
+    ("stream_incremental_near_dup_retract", documents_stream.incremental_near_dup_retract, _near_dup_retract_oracle_sql()),
+    ("stream_incremental_seasonal_retract", orders_stream.incremental_seasonal_retract, relational._seasonal_retract_sql()),
+    ("stream_incremental_srp", documents_stream.incremental_srp_near_dup, TWIN),
+    ("stream_incremental_isotonic", documents_stream.incremental_isotonic, TWIN),
+    ("stream_incremental_priority_sample", documents_stream.incremental_priority_sample, TWIN),
+    ("stream_incremental_theil_sen_sampled", orders_stream.incremental_theil_sen_sampled, TWIN),
+    ("stream_incremental_kendall_sampled", orders_stream.incremental_kendall_sampled, TWIN),
+    ("stream_incremental_quantile_retract", orders_stream.incremental_quantile_retract, relational._quantile_sketch_retract_sql()),
+    ("stream_incremental_rfm_retract", orders_stream.incremental_rfm_retract, relational._rfm_retract_sql()),
+    ("stream_incremental_shortest_path_retract", orders_stream.incremental_shortest_path_retract, relational._shortest_path_surviving_sql()),
+    ("stream_incremental_ann_ingest", documents_stream.incremental_ann_ingest, _ann_ingest_oracle_sql()),
+    ("stream_incremental_ann_retract", documents_stream.incremental_ann_retract, _ann_retract_oracle_sql()),
 ]
 
 if _tws_available():
     _SPECS.append(
-        ("stream_transform_with_state", stream_transform_with_state, TWS_STATS_SQL)
+        ("stream_transform_with_state", events_stream.transform_with_state_stats, TWS_STATS_SQL)
     )
+
+# A TWIN whose batch twin has no oracle raises KeyError here, at import,
+# instead of silently dropping the mirror's oracle.
+_BATCH_ORACLES = {**relational.oracles(), **llm.oracles()}
+_ORACLES = {
+    name: _BATCH_ORACLES[MIRRORS[name]] if sql is TWIN else sql
+    for name, _, sql in _SPECS
+}
 
 
 def queries() -> dict:
@@ -1342,4 +443,4 @@ def queries() -> dict:
 
 
 def oracles() -> dict:
-    return {name: sql for name, _, sql in _SPECS if sql is not None}
+    return dict(_ORACLES)

@@ -147,7 +147,12 @@ def fold_stream(
     under it (the file source lists its dir recursively). The stream's
     checkpoint lives inside it, and it is removed on every exit path, so a
     returned result never depends on files a later call deletes and a
-    failed run leaves nothing behind."""
+    failed run leaves nothing behind.
+
+    Spark turns AQE off for the stream's own plan (the one ``WARN
+    ResolveWriteToStream`` per call), but the plans ``on_batch`` builds
+    from ``batch_df`` run in a session clone with AQE on, so their
+    post-shuffle stages are coalesced like any batch query's."""
     import math
     import shutil
 
@@ -262,9 +267,6 @@ def session_window_counts(
         ),
         "n",
     )
-
-
-HOUR_NS = 3_600_000_000_000
 
 
 def _stage_late_batches(spark: SparkSession, sf_dir: str) -> str:

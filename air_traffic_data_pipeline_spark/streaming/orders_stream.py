@@ -127,7 +127,10 @@ def rfm_merge_partials(partials: DataFrame) -> DataFrame:
 
 def incremental_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming incremental RFM — bitwise equal to
-    ``plans.relational.rfm_segments`` (its SQL is the oracle)."""
+    ``plans.relational.rfm_segments`` (its SQL is the oracle): exact
+    mergeable per-customer state, quintile boundaries recomputed at
+    emission (the module docstring weighs this against a quantile
+    sketch)."""
     from ..plans.relational import rfm_from_per_customer
 
     return fold_stream(

@@ -84,13 +84,13 @@ def test_streaming_dedup_within_watermark(spark):
 
 def test_session_window_stream_matches_batch_islands(spark):
     """Streaming session_window (complete mode) == batch gaps-and-islands."""
-    from air_traffic_data_pipeline_spark.plans.streaming_plans import (
-        sessionize_events,
-        stream_session_window,
+    from air_traffic_data_pipeline_spark.plans.streaming_plans import sessionize_events
+    from air_traffic_data_pipeline_spark.streaming.events_stream import (
+        session_window_counts,
     )
 
     sf = "/root/testdata/sf0.001"
-    streamed = stream_session_window(spark, sf)
+    streamed = session_window_counts(spark, sf)
     batch = sessionize_events(spark, sf)
     assert streamed.count() == batch.count()
     s_totals = streamed.agg(F.sum("n")).collect()[0][0]
@@ -192,13 +192,13 @@ def test_late_data_drop_discards_old_half(spark):
     and counts never include late rows."""
     from pyspark.sql import functions as F
 
-    from air_traffic_data_pipeline_spark.plans.streaming_plans import (
-        stream_late_data_drop,
-    )
     from air_traffic_data_pipeline_spark.plans.tables import load
+    from air_traffic_data_pipeline_spark.streaming.events_stream import (
+        late_data_drop_counts,
+    )
 
     sf = "/root/testdata/sf0.001"
-    got = stream_late_data_drop(spark, sf)
+    got = late_data_drop_counts(spark, sf)
     ev = load(spark, sf, "events")
     n = ev.count()
     from pyspark.sql import Window
@@ -313,16 +313,48 @@ def test_fold_stream_removes_landing_dir(spark, tmp_path):
     assert not _fold_dirs(stage)
 
 
+def test_fold_stream_batch_plans_run_with_aqe(spark, tmp_path):
+    """Spark disables AQE for the stream's own plan (one WARN
+    ResolveWriteToStream per stream), but the plans on_batch builds from
+    batch_df run in a session clone with AQE on."""
+    from air_traffic_data_pipeline_spark.streaming.events_stream import (
+        _stage_ordered,
+        fold_stream,
+    )
+
+    schema = T.StructType([T.StructField("x", T.LongType())])
+    stage = str(tmp_path / "stage")
+    _stage_ordered(
+        stage,
+        ["01.parquet", "02.parquet"],
+        lambda: [spark.createDataFrame([(i,)], schema) for i in (1, 2)],
+    )
+    seen = []
+
+    def on_batch(b, st):
+        agg = b.groupBy("x").count()
+        agg.collect()
+        plan = agg._jdf.queryExecution().executedPlan().toString()
+        seen.append((b.sparkSession.conf.get("spark.sql.adaptive.enabled"), plan))
+        st.land("agg", agg)
+
+    fold_stream(spark, stage, schema, on_batch, lambda st: st.landed("agg"))
+    assert len(seen) == 2
+    for conf, plan in seen:
+        assert conf == "true"
+        assert plan.startswith("AdaptiveSparkPlan isFinalPlan=true"), plan
+
+
 def test_dedup_watermark_query_matches_batch_distinct(spark):
     """dropDuplicatesWithinWatermark over the 3-batch replay == batch
     distinct when the delay exceeds the data span (no state eviction)."""
-    from air_traffic_data_pipeline_spark.plans.streaming_plans import (
-        stream_dedup_watermark,
-    )
     from air_traffic_data_pipeline_spark.plans.tables import load
+    from air_traffic_data_pipeline_spark.streaming.events_stream import (
+        watermarked_dedup_count,
+    )
 
     sf = "/root/testdata/sf0.001"
-    got = {r.event_type: r.n_users for r in stream_dedup_watermark(spark, sf).collect()}
+    got = {r.event_type: r.n_users for r in watermarked_dedup_count(spark, sf).collect()}
     ev = load(spark, sf, "events")
     want = {
         r.event_type: r.n

@@ -39,7 +39,7 @@ def main() -> int:
     from air_traffic_data_pipeline_spark.plans import registry
 
     rounds = registry._driver_green_rounds() or {}
-    fns = registry._collect_queries()
+    fns = registry._collect()[0]
 
     try:
         with open(PATH) as fh:

@@ -120,7 +120,7 @@ def main() -> int:
 
     spark = get_spark("scaling-curve")
     queries = {
-        "noise_grid_refgeom": domain.domain_queries()["noise_grid_refgeom"],
+        "noise_grid_refgeom": domain.refgeom_noise_grid,
         "llm_minhash_near_dup_pairs": llm.minhash_near_dup_pairs,
         "llm_semdedup_cells": llm.semdedup_cells,
         # round-7 additions: corpus-internal span dedup (winnow window +
