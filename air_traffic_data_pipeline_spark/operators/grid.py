@@ -6,6 +6,12 @@ The reference builds a (2n+1)^2 NumPy lattice on the driver
 distributed; at much larger n the cross join parallelizes across executors
 (each side is a one-column range, the product is generated, never shuffled).
 
+Latitude rows come in a Weyl order: range id k is row ``(k·p mod (2n+1)) − n``,
+p coprime to 2n+1 and nearest (2n+1)/φ. Each contiguous range split then
+holds rows spread over the whole span, so sources clustered near the center
+load every task about equally at any split count; in south-to-north order
+only the splits covering the center got pairs. Rows keep their indices.
+
 Coordinates are rounded to 6 decimal places (≈0.11 m) immediately after
 generation so downstream group-by keys are bitwise-stable across engines
 (cos() differs in the last ulp between libm implementations).
@@ -20,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..constants import DEG2RAD, EARTH_RAD, RAD2DEG
 
 GRID_ROUND_DP = 6
+_PHI = (1 + math.sqrt(5)) / 2
 
 
 def gen_grid(
@@ -38,12 +45,14 @@ def gen_grid(
     lon0 = center_lon * DEG2RAD
     m_per_rad_lon = EARTH_RAD * math.cos(lat0)
 
-    idx = spark.range(-n_steps, n_steps + 1)
-    lats = idx.select(
-        F.round(
-            (F.lit(lat0) + F.col("id") * (step_m / EARTH_RAD)) * F.lit(RAD2DEG),
-            GRID_ROUND_DP,
-        ).alias("g_lat")
+    rows = 2 * n_steps + 1
+    stride = max(1, round(rows / _PHI))
+    while math.gcd(stride, rows) != 1:
+        stride += 1
+    i = F.col("id") * stride % rows - n_steps
+    lats = spark.range(rows).select(
+        F.round((F.lit(lat0) + i * (step_m / EARTH_RAD)) * F.lit(RAD2DEG), GRID_ROUND_DP)
+        .alias("g_lat")
     )
     lons = spark.range(-n_steps, n_steps + 1).select(
         F.round(

@@ -12895,48 +12895,32 @@ def pretrain_release_accounting(surv: DataFrame) -> DataFrame:
     above and the streaming composition mirror — every aggregate here is
     a count or an int64 sum, so it commutes with any slicing of how the
     survivor set was assembled."""
-    per = surv.groupBy("lang").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_after_gates")
-    )
-    # n_total = Σ of the per-lang counts: the same BIGINT value as a second
-    # surv.agg(count) pass, derived from the lang-sized aggregate instead of
-    # re-evaluating the whole gated survivor subtree for one scalar — at
-    # 100 TB that second pass was a full extra documents scan through all
-    # four gate joins. The sum rides an unpartitioned window over the
-    # lang-sized frame (ONE extra single-partition exchange of ≤|langs|
-    # rows) instead of a separate agg + crossJoin tail, so `per` is
-    # consumed exactly once and no serial two-stage scalar branch remains
-    # (r13 VERDICT item 4).
-    n_total = F.sum("n_after_gates").over(W.partitionBy()).cast("bigint")
-    rate = F.least(
-        F.lit(1.0),
-        F.lit(LANG_TEMP_BASE)
-        * F.sqrt(n_total.cast("double") / F.col("n_after_gates").cast("double")),
-    )
-    rated = per.select(
-        "lang", "n_after_gates", F.round(rate, 6).alias("keep_rate")
-    )
+    # Consume `surv` ONCE: every further consumer re-runs the whole gated
+    # subtree (four gate joins over the documents scan). It is aggregated
+    # to (lang, hv), at most |langs| x 65,536 rows; n_after_gates is a
+    # per-lang window sum over that frame, n_total an unpartitioned one,
+    # and the kept totals are conditional sums under the rate.
     hv = _hex4_to_int(
         F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":"), F.col("lang")))
     )
-    kept = (
-        surv.select("doc_id", "lang", hv.alias("hv"), "n_tok")
-        .join(F.broadcast(rated.select("lang", "keep_rate")), "lang")
-        .filter(F.col("hv") / F.lit(65536.0) < F.col("keep_rate"))
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_kept"),
-            F.sum("n_tok").cast("bigint").alias("n_tokens_kept"),
-        )
+    by_hv = surv.groupBy("lang", hv.alias("hv")).agg(
+        F.count(F.lit(1)).alias("n"), F.sum("n_tok").alias("tok")
     )
-    return rated.join(kept, "lang", "left").select(
-        "lang",
-        "n_after_gates",
-        "keep_rate",
-        F.coalesce(F.col("n_kept"), F.lit(0)).cast("bigint").alias("n_kept"),
-        F.coalesce(F.col("n_tokens_kept"), F.lit(0))
-        .cast("bigint")
-        .alias("n_tokens_kept"),
+    n_after = F.sum("n").over(W.partitionBy("lang")).cast("bigint")
+    n_total = F.sum("n").over(W.partitionBy()).cast("bigint")
+    rate = F.least(
+        F.lit(1.0),
+        F.lit(LANG_TEMP_BASE) * F.sqrt(n_total.cast("double") / n_after.cast("double")),
+    )
+    keep = F.col("hv") / F.lit(65536.0) < F.col("keep_rate")
+
+    def kept(c: str) -> Column:
+        return F.coalesce(F.sum(F.when(keep, F.col(c))), F.lit(0)).cast("bigint")
+
+    return (
+        by_hv.select("*", n_after.alias("n_after_gates"), F.round(rate, 6).alias("keep_rate"))
+        .groupBy("lang", "n_after_gates", "keep_rate")
+        .agg(kept("n").alias("n_kept"), kept("tok").alias("n_tokens_kept"))
     )
 
 

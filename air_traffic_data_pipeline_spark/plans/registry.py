@@ -79,7 +79,6 @@ _FORCE_RECHECK: dict[str, int] = {
     "llm_repeated_spans": 8,
     "llm_span_scrub_apply": 8,
     "stream_incremental_repeated_spans": 8,
-    "llm_pretrain_pipeline_v2": 8,
     # r8: scoring kernels extracted for the new streaming mirrors
     # (rfm_from_per_customer / token_budget_from_per_source) — bitwise
     # verified via oracle_check; re-entered on principle
@@ -117,6 +116,16 @@ _FORCE_RECHECK: dict[str, int] = {
     "stream_incremental_rfm_retract": 12,
     "stream_incremental_seasonal_retract": 12,
     "stream_incremental_shortest_path_retract": 12,
+    # r15: gen_grid rows in Weyl order, one-select radius join (same cells, same dist_m bits)
+    "noise_grid_flagship": 15,
+    "noise_grid_bounds": 15,
+    "noise_heat_triples": 15,
+    "noise_grid_refgeom": 15,
+    "noise_grid_incremental": 15,
+    "noise_daily_rollup": 15,
+    # r15: pretrain_release_accounting reads the survivor set once (same counts and sums)
+    "llm_pretrain_pipeline_v2": 15,
+    "stream_incremental_pipeline_v2": 15,
 }
 
 

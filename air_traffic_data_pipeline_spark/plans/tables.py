@@ -20,9 +20,54 @@ TABLES = (
 )
 
 
+# Confs that change what parquet schema inference returns.
+_INFER_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+# table path -> (fingerprint, inferred schema); see _fingerprint
+_SCHEMAS: dict[str, tuple[tuple, T.StructType]] = {}
+
+
+def _fingerprint(spark: SparkSession, path: str) -> tuple | None:
+    """The inference confs plus the relative name, size and mtime_ns of
+    every file under a local table path: any rewrite of the table in place
+    changes it. None for a remote path (never cached)."""
+    import os
+
+    if "://" in path or not os.path.exists(path):
+        return None
+    files = []
+    try:
+        for root, _, names in os.walk(path):
+            for n in names:
+                f = os.path.join(root, n)
+                st = os.stat(f)
+                files.append((os.path.relpath(f, path), st.st_size, st.st_mtime_ns))
+        if not files:
+            st = os.stat(path)
+            files.append((".", st.st_size, st.st_mtime_ns))
+    except OSError:  # a file vanished mid-walk: infer afresh
+        return None
+    return tuple(spark.conf.get(k, None) for k in _INFER_CONFS), tuple(sorted(files))
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """A lake table. Parquet schema inference runs a Spark job, so the
+    inferred schema is reused while the table's files are unchanged: a warm
+    load runs no job."""
     tune_session(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    key = _fingerprint(spark, path)
+    seen, schema = _SCHEMAS.get(path, (None, None))
+    if key is not None and key == seen:
+        df = spark.read.schema(schema).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        if key is not None:
+            _SCHEMAS[path] = (key, df.schema)
     if name == "events":
         df = _canonical_event_time(df)
     return df

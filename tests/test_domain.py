@@ -149,6 +149,48 @@ def test_radius_join_equals_cross_filter(spark):
     assert len(fast_set) > 0
 
 
+@pytest.mark.parametrize("n_steps", [0, 1, 10, 100])
+def test_gen_grid_cells_equal_duckdb_grid_sql(spark, n_steps):
+    """The Weyl row order only permutes rows: the lattice holds the same
+    (g_lat, g_lon) values, bit for bit, as the DuckDB oracle's ordered
+    generate_series lattice, each cell once."""
+    import duckdb
+
+    from air_traffic_data_pipeline_spark.operators.grid import grid_sql
+
+    got = gen_grid(spark, NANTES_LAT, NANTES_LON, 200.0, n_steps).collect()
+    want = duckdb.sql(grid_sql(NANTES_LAT, NANTES_LON, 200.0, n_steps)).fetchall()
+    bits = lambda rows: sorted((la.hex(), lo.hex()) for la, lo in rows)
+    assert bits(got) == bits(want)
+    assert len(set(bits(got))) == (2 * n_steps + 1) ** 2
+
+
+def test_radius_join_loads_every_lattice_split_evenly(spark):
+    """Sources within 10 km of the center reach only the middle third of
+    the latitude rows. The lattice's Weyl row order spreads those rows over
+    every range split, so each task of the (broadcast, unshuffled) radius
+    join gets about the same number of pairs: max/mean <= 1.3 whenever the
+    lattice has >= 2 splits. In south-to-north row order the middle splits
+    took every pair (max/mean ~2 at 4 splits)."""
+    from air_traffic_data_pipeline_spark.operators.radius_join import adaptive_radius_join
+
+    n_steps, step_m = 100, 1000.0  # 201x201 cells, 200 km across: binned join
+    # 20 sources on a sunflower spiral; spark.range gives them a size
+    # estimate, so the join broadcasts them and keeps the grid's splits
+    k, r = F.col("id"), F.sqrt(F.col("id") / 20) * (10_000 / EARTH_RAD)
+    src = spark.range(20).select(
+        (F.lit(NANTES_LAT) + F.degrees(r * F.sin(k * 2.4))).alias("lat"),
+        (F.lit(NANTES_LON) + F.degrees(r * F.cos(k * 2.4)) / math.cos(math.radians(NANTES_LAT)))
+        .alias("lon"),
+    )
+    grid = gen_grid(spark, NANTES_LAT, NANTES_LON, step_m, n_steps)
+    pairs = adaptive_radius_join(grid, src, R_MAX, NANTES_LAT, region_extent_m=2 * n_steps * step_m)
+    assert "BroadcastHashJoin" in pairs._jdf.queryExecution().executedPlan().toString()
+    splits = pairs.rdd.getNumPartitions()
+    counts = [r["count"] for r in pairs.groupBy(F.spark_partition_id()).count().collect()]
+    assert max(counts) / (sum(counts) / splits) <= 1.3, (splits, sorted(counts))
+
+
 _RJ_LON0, _RJ_STEP_M, _RJ_N = -1.8, 2000.0, 60  # 121x121 cells, 240 km across
 _RJ_EXTENT_M = 2 * _RJ_N * _RJ_STEP_M
 

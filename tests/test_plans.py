@@ -962,6 +962,26 @@ def test_post_shuffle_stages_are_sized_by_aqe_not_repartition(spark, monkeypatch
     assert "REPARTITION_BY_NUM" not in executed(bellman_ford(edges, sources, 2))
 
 
+def test_pretrain_pipeline_scans_the_survivor_set_once(spark, monkeypatch):
+    """llm_pretrain_pipeline_v2's release tail consumes the gated survivor
+    set once: the query's plan holds no more parquet scans than the
+    survivor subtree itself (a per-lang count, a hash-gated join and the
+    rate broadcast each re-planned it: 3x the scans). Planning only, apart
+    from the gates' own build-time jobs."""
+    from air_traffic_data_pipeline_spark.plans import llm
+
+    survivors, kernel = [], llm.pretrain_release_accounting
+    monkeypatch.setattr(
+        llm, "pretrain_release_accounting", lambda surv: kernel(survivors.append(surv) or surv)
+    )
+
+    def scans(df):
+        return df._jdf.queryExecution().executedPlan().toString().count("FileScan parquet")
+
+    n = scans(llm.pretrain_pipeline_v2(spark, SF))
+    assert n == scans(survivors[0]) > 0
+
+
 def test_global_shard_plan_never_windows_full_doc_table(spark):
     """The two-level prefix-sum's scale claim: the window that touches
     DOC rows is partitioned by bucket; the only unpartitioned (global

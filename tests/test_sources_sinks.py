@@ -162,7 +162,9 @@ BOUNDS = {"lamin": 47.0, "lomin": -1.9, "lamax": 47.3, "lomax": -1.2}
 def _sink_geojson(spark, rows, path):
     from air_traffic_data_pipeline_spark.sinks.heatmap import write_heatmap
 
-    df = spark.createDataFrame(rows, "lat double, lon double, weight double")
+    # three slices: the sink's Arrow table arrives in several chunks
+    rdd = spark.sparkContext.parallelize(rows, 3)
+    df = spark.createDataFrame(rdd, "lat double, lon double, weight double")
     out = write_heatmap(df, os.path.join(path, "map"), BOUNDS)
     with open(out) as f:
         return f.read()
@@ -172,7 +174,16 @@ def _sink_geojson(spark, rows, path):
 def test_heatmap_geojson_bytes_match_json_dump(spark, tmp_path):
     """The hand-written GeoJSON text is byte-equal to json.dumps of the
     FeatureCollection dict, on floats whose shortest repr is awkward."""
-    rows = [(47.153123, -1.6044, 1e-05), (0.1 + 0.2, -0.0, 0.5), (47.2, 1e-7, 1.0)]
+    rows = [
+        (47.153123, -1.6044, 1e-05),
+        (0.1 + 0.2, -0.0, 0.5),
+        (47.2, 1e-7, 1.0),
+        (-89.999999, 179.99999999999997, 0.123456),
+        (1e300, -5e-324, 0.0),
+        (47.1, -1.5, 2.0 / 3.0),
+    ]
+    chunks = spark.sparkContext.parallelize(rows, 3).toDF("lat double, lon double, weight double")
+    assert chunks.toArrow().column("lat").num_chunks >= 2
     want = json.dumps(
         {
             "type": "FeatureCollection",
@@ -452,6 +463,37 @@ def test_zorder_clustered_write_shrinks_file_ranges(spark, tmp_path):
         # resolution on the sparse tail and the raw-range shrink is smaller
         # than uniform user_id's — still a ~2x stats-pruning win.
         assert c < factor * p, (col, c, p)
+
+
+def test_warm_table_load_runs_no_spark_job(spark, tmp_path):
+    """Parquet schema inference runs a Spark job; a second load of an
+    unchanged table reuses the inferred schema and runs none."""
+    from air_traffic_data_pipeline_spark.plans.tables import load
+
+    spark.range(5).withColumn("a", F.col("id") * 2).write.parquet(str(tmp_path / "t.parquet"))
+    st = spark.sparkContext.statusTracker()
+    cold = load(spark, str(tmp_path), "t")
+    before = set(st.getJobIdsForGroup(None))
+    warm = load(spark, str(tmp_path), "t")
+    after = set(st.getJobIdsForGroup(None))
+    spark.range(1).count()  # this thread's jobs do land in the None group
+    assert after == before != set(st.getJobIdsForGroup(None))
+    assert warm.schema == cold.schema
+
+
+def test_table_load_sees_a_table_rewritten_in_place(spark, tmp_path):
+    """The cached schema is keyed on the table's files: overwriting a table
+    with one more column shows that column at the next load."""
+    from air_traffic_data_pipeline_spark.plans.tables import load
+
+    base = spark.range(5).withColumn("a", F.col("id") * 2)
+    base.write.parquet(str(tmp_path / "t.parquet"))
+    assert load(spark, str(tmp_path), "t").columns == ["id", "a"]
+    assert load(spark, str(tmp_path), "t").columns == ["id", "a"]
+    base.withColumn("b", F.lit("x")).write.mode("overwrite").parquet(str(tmp_path / "t.parquet"))
+    df = load(spark, str(tmp_path), "t")
+    assert df.columns == ["id", "a", "b"]
+    assert sorted(df.collect()) == [(i, 2 * i, "x") for i in range(5)]
 
 
 def test_parquet_schema_evolution_merge(spark, tmp_path):

@@ -11,12 +11,13 @@ Usage: python tools/oracle_check.py [sf_dir] [name_substring ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def duck_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
