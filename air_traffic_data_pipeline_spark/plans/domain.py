@@ -302,10 +302,11 @@ def incremental_noise_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..streaming.events_stream import (
         EVENTS_SCHEMA,
+        LATE_BATCHES,
         Landing,
-        _stage_late_batches,
         fold_stream,
     )
+    from ..streaming.staging import stage_batches
 
     def on_batch(batch_df: DataFrame, st: Landing) -> None:
         sources = states_from_events(batch_df).select(
@@ -322,7 +323,7 @@ def incremental_noise_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         return noise_db(merged)
 
     return fold_stream(
-        spark, _stage_late_batches(spark, sf_dir), EVENTS_SCHEMA, on_batch, finish
+        spark, stage_batches(spark, sf_dir, *LATE_BATCHES), EVENTS_SCHEMA, on_batch, finish
     )
 
 

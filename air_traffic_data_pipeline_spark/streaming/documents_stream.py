@@ -21,7 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from .events_stream import _STAGE_ROOT, Landing, fold_stream
+from .events_stream import Landing, fold_stream
+from .staging import Batches, stage_batches
 
 DOCS_SCHEMA = T.StructType(
     [
@@ -36,36 +37,8 @@ DOCS_SCHEMA = T.StructType(
 JACCARD_MIN = 0.2  # same verify threshold as plans.llm.minhash_near_dup_pairs
 
 
-def _stage_doc_batches(spark: SparkSession, sf_dir: str) -> str:
-    """Three mtime-ordered batches partitioning documents by doc_id
-    terciles (maxFilesPerTrigger=1 -> one file per micro-batch, in id
-    order). Id-ordered arrival makes every a<b pair land in b's batch."""
-    import hashlib
-
-    from ..plans.tables import load
-    from .events_stream import _stage_ordered
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    d = f"{_STAGE_ROOT}/docs_{key}"
-
-    def build():
-        from pyspark.sql import Window
-
-        docs = load(spark, sf_dir, "documents")
-        n = docs.count()
-        lo, hi = n // 3, 2 * n // 3
-        ranked = docs.withColumn(
-            "rn", F.row_number().over(Window.orderBy("doc_id"))
-        )
-        return [
-            ranked.filter(F.col("rn") <= lo).drop("rn"),
-            ranked.filter((F.col("rn") > lo) & (F.col("rn") <= hi)).drop("rn"),
-            ranked.filter(F.col("rn") > hi).drop("rn"),
-        ]
-
-    return _stage_ordered(
-        d, ["01_lo.parquet", "02_mid.parquet", "03_hi.parquet"], build
-    )
+# three doc_id terciles in id order: every a<b pair lands in b's batch
+DOC_BATCHES = Batches("documents", None, ("rank", ("doc_id",), 3))
 
 
 def incremental_near_dup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -128,9 +101,8 @@ def incremental_near_dup_survivors(spark: SparkSession, sf_dir: str) -> DataFram
             .select("doc_id", "lang", "n_chars")
         )
 
-    return fold_stream(
-        spark, _stage_doc_batches(spark, sf_dir), DOCS_SCHEMA, on_batch, finish
-    )
+    d = stage_batches(spark, sf_dir, *DOC_BATCHES)
+    return fold_stream(spark, d, DOCS_SCHEMA, on_batch, finish)
 
 
 def incremental_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -175,9 +147,8 @@ def incremental_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return fold_stream(
-        spark, _stage_doc_batches(spark, sf_dir), DOCS_SCHEMA, on_batch, finish
-    )
+    d = stage_batches(spark, sf_dir, *DOC_BATCHES)
+    return fold_stream(spark, d, DOCS_SCHEMA, on_batch, finish)
 
 
 def incremental_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -232,9 +203,8 @@ def incremental_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return bm25_rank_from(st.landed("postings"), avgdl)
 
-    return fold_stream(
-        spark, _stage_doc_batches(spark, sf_dir), DOCS_SCHEMA, on_batch, finish
-    )
+    d = stage_batches(spark, sf_dir, *DOC_BATCHES)
+    return fold_stream(spark, d, DOCS_SCHEMA, on_batch, finish)
 
 
 EMB_SCHEMA = T.StructType(
@@ -246,27 +216,9 @@ EMB_SCHEMA = T.StructType(
 )
 
 
-def _stage_emb_batches(spark: SparkSession, sf_dir: str) -> str:
-    """Three mtime-ordered micro-batches partitioning embeddings by
-    vec_id MODULO 3 (arriving 1, 2, 0) — deliberately NOT id-ordered, so
-    a pair's higher id routinely arrives before its lower id and the
-    kill logic must be arrival-order independent (the pytest and oracle
-    would catch a second-member-only formulation)."""
-    import hashlib
-
-    from ..plans.tables import load
-    from .events_stream import _stage_ordered
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    d = f"{_STAGE_ROOT}/emb_{key}"
-
-    def build():
-        e = load(spark, sf_dir, "embeddings")
-        return [e.filter(F.col("vec_id") % 3 == m) for m in (1, 2, 0)]
-
-    return _stage_ordered(
-        d, ["01_m1.parquet", "02_m2.parquet", "03_m0.parquet"], build
-    )
+# vec_id % 3 classes arriving 1, 2, 0: a pair's higher id routinely
+# arrives first, so the kill logic must be arrival-order independent
+EMB_BATCHES = Batches("embeddings", None, ("mod3", ("vec_id",)))
 
 
 def incremental_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -375,9 +327,8 @@ def incremental_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         kills = st.landed("kills").distinct()
         return e.join(kills, "vec_id", "left_anti").select("vec_id", "label")
 
-    return fold_stream(
-        spark, _stage_emb_batches(spark, sf_dir), EMB_SCHEMA, on_batch, finish
-    )
+    d = stage_batches(spark, sf_dir, *EMB_BATCHES)
+    return fold_stream(spark, d, EMB_SCHEMA, on_batch, finish)
 
 
 def _winnow_store_flags(batch_df: DataFrame, st: Landing) -> None:
@@ -433,13 +384,8 @@ def incremental_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs = load(spark, sf_dir, "documents").select("doc_id", "text")
         return repeated_span_accounting(st.landed("flags").distinct(), docs)
 
-    return fold_stream(
-        spark,
-        _stage_doc_batches(spark, sf_dir),
-        DOCS_SCHEMA,
-        _winnow_store_flags,
-        finish,
-    )
+    d = stage_batches(spark, sf_dir, *DOC_BATCHES)
+    return fold_stream(spark, d, DOCS_SCHEMA, _winnow_store_flags, finish)
 
 
 def incremental_cross_source(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -472,7 +418,7 @@ def incremental_cross_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return fold_stream(
         spark,
-        _stage_doc_batches(spark, sf_dir),
+        stage_batches(spark, sf_dir, *DOC_BATCHES),
         DOCS_SCHEMA,
         on_batch,
         lambda st: cross_source_matrix(st.landed("partials").distinct()),
@@ -533,9 +479,8 @@ def incremental_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("ch.score") - F.col("rj.score"), 6).alias("margin"),
         ).filter(F.col("margin") > 0)
 
-    return fold_stream(
-        spark, _stage_doc_batches(spark, sf_dir), DOCS_SCHEMA, on_batch, finish
-    )
+    d = stage_batches(spark, sf_dir, *DOC_BATCHES)
+    return fold_stream(spark, d, DOCS_SCHEMA, on_batch, finish)
 
 
 def incremental_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -578,9 +523,8 @@ def incremental_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return token_budget_from_per_source(per)
 
-    return fold_stream(
-        spark, _stage_doc_batches(spark, sf_dir), DOCS_SCHEMA, on_batch, finish
-    )
+    d = stage_batches(spark, sf_dir, *DOC_BATCHES)
+    return fold_stream(spark, d, DOCS_SCHEMA, on_batch, finish)
 
 
 def _incremental_stateless(spark: SparkSession, sf_dir: str, score_batch) -> DataFrame:
@@ -595,7 +539,7 @@ def _incremental_stateless(spark: SparkSession, sf_dir: str, score_batch) -> Dat
     cross-batch store joins (repeated spans / semdedup)."""
     return fold_stream(
         spark,
-        _stage_doc_batches(spark, sf_dir),
+        stage_batches(spark, sf_dir, *DOC_BATCHES),
         DOCS_SCHEMA,
         lambda b, st: st.land("partials", score_batch(b)),
         lambda st: st.landed("partials"),
@@ -646,7 +590,7 @@ def incremental_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return fold_stream(
         spark,
-        _stage_doc_batches(spark, sf_dir),
+        stage_batches(spark, sf_dir, *DOC_BATCHES),
         DOCS_SCHEMA,
         on_batch,
         lambda st: calibration_from(st.landed("scored")),
@@ -669,7 +613,7 @@ def incremental_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return fold_stream(
         spark,
-        _stage_doc_batches(spark, sf_dir),
+        stage_batches(spark, sf_dir, *DOC_BATCHES),
         DOCS_SCHEMA,
         lambda b, st: st.land("pairs", lm_bigram_pairs(b.select("doc_id", "text"))),
         lambda st: lm_kn_from_pairs(st.landed("pairs")),
@@ -708,9 +652,8 @@ def incremental_heaps(spark: SparkSession, sf_dir: str) -> DataFrame:
         first = st.landed("first").groupBy("w").agg(F.min("fd").alias("fd"))
         return heaps_fit_from(st.landed("docs"), first)
 
-    return fold_stream(
-        spark, _stage_doc_batches(spark, sf_dir), DOCS_SCHEMA, on_batch, finish
-    )
+    d = stage_batches(spark, sf_dir, *DOC_BATCHES)
+    return fold_stream(spark, d, DOCS_SCHEMA, on_batch, finish)
 
 
 def incremental_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -753,9 +696,8 @@ def incremental_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return temperature_finish(merged)
 
-    return fold_stream(
-        spark, _stage_doc_batches(spark, sf_dir), DOCS_SCHEMA, on_batch, finish
-    )
+    d = stage_batches(spark, sf_dir, *DOC_BATCHES)
+    return fold_stream(spark, d, DOCS_SCHEMA, on_batch, finish)
 
 
 def incremental_doremi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -781,9 +723,8 @@ def incremental_doremi(spark: SparkSession, sf_dir: str) -> DataFrame:
         lm = lm_logprob_from_pairs(st.landed("pairs")).select("doc_id", "xent")
         return doremi_from(lm, st.landed("src"))
 
-    return fold_stream(
-        spark, _stage_doc_batches(spark, sf_dir), DOCS_SCHEMA, on_batch, finish
-    )
+    d = stage_batches(spark, sf_dir, *DOC_BATCHES)
+    return fold_stream(spark, d, DOCS_SCHEMA, on_batch, finish)
 
 
 def incremental_pretrain_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -885,9 +826,8 @@ def incremental_pretrain_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame
             surv.select("doc_id", "lang", F.col("n_words").alias("n_tok"))
         )
 
-    return fold_stream(
-        spark, _stage_doc_batches(spark, sf_dir), DOCS_SCHEMA, on_batch, finish
-    )
+    d = stage_batches(spark, sf_dir, *DOC_BATCHES)
+    return fold_stream(spark, d, DOCS_SCHEMA, on_batch, finish)
 
 
 def incremental_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -914,7 +854,7 @@ def incremental_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return fold_stream(
         spark,
-        _stage_doc_batches(spark, sf_dir),
+        stage_batches(spark, sf_dir, *DOC_BATCHES),
         DOCS_SCHEMA,
         on_batch,
         lambda st: nb_confusion_from_partials(
@@ -940,7 +880,7 @@ def incremental_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return fold_stream(
         spark,
-        _stage_doc_batches(spark, sf_dir),
+        stage_batches(spark, sf_dir, *DOC_BATCHES),
         DOCS_SCHEMA,
         on_batch,
         lambda st: burstiness_from_partials(st.landed("voc"), st.landed("nd")),
@@ -959,7 +899,7 @@ def incremental_jsd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return fold_stream(
         spark,
-        _stage_doc_batches(spark, sf_dir),
+        stage_batches(spark, sf_dir, *DOC_BATCHES),
         DOCS_SCHEMA,
         lambda b, st: st.land("counts", jsd_token_partial(b.select("source", "text"))),
         lambda st: jsd_from_counts(st.landed("counts")),
@@ -1054,7 +994,7 @@ def incremental_srp_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return fold_stream(
         spark,
-        _stage_doc_batches(spark, sf_dir),
+        stage_batches(spark, sf_dir, *DOC_BATCHES),
         DOCS_SCHEMA,
         on_batch,
         lambda st: st.landed("pairs").distinct().orderBy("doc_a", "doc_b"),
@@ -1096,9 +1036,8 @@ def incremental_isotonic(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return isotonic_from_bins(merged)
 
-    return fold_stream(
-        spark, _stage_doc_batches(spark, sf_dir), DOCS_SCHEMA, on_batch, finish
-    )
+    d = stage_batches(spark, sf_dir, *DOC_BATCHES)
+    return fold_stream(spark, d, DOCS_SCHEMA, on_batch, finish)
 
 
 def incremental_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1152,7 +1091,7 @@ def incremental_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return fold_stream(
         spark,
-        _stage_doc_batches(spark, sf_dir),
+        stage_batches(spark, sf_dir, *DOC_BATCHES),
         DOCS_SCHEMA,
         lambda b, st: st.land(
             "topk", _batch_topk(b.select("doc_id", "source", "n_chars"))
@@ -1203,31 +1142,13 @@ DOCS_RETRACT_SCHEMA = T.StructType(
 )
 
 
-def _stage_prio_retraction_batches(spark: SparkSession, sf_dir: str) -> str:
-    """Three doc_id-tercile insert slices with a -1 tombstone for every
-    doc_id % PRIO_RETRACT_MOD == PRIO_RETRACT_RES document, scheduled
-    adversarially: even (doc_id DIV MOD) tombstones one batch EARLY
-    (delete-before-insert — the pending-tombstone path), odd ones one
-    batch LATE (delete-after-insert — the frontier-erosion path);
-    boundary slices fold edge tombstones into their own batch."""
-    import hashlib
-
-    from ..plans.tables import load
-    from .events_stream import _STAGE_ROOT, _stage_adversarial_retraction
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    return _stage_adversarial_retraction(
-        d=f"{_STAGE_ROOT}/docs_prio_retract_{key}",
-        frame_fn=lambda: load(spark, sf_dir, "documents").select(
-            "doc_id", "source", "n_chars"
-        ),
-        order_cols=("doc_id",),
-        id_col="doc_id",
-        mod=PRIO_RETRACT_MOD,
-        res=PRIO_RETRACT_RES,
-        nb=3,
-        cols=("doc_id", "source", "n_chars"),
-    )
+# EARLY tombstones exercise the pending-tombstone path, LATE ones the
+# frontier-erosion path
+PRIO_RETRACT_BATCHES = Batches(
+    "documents",
+    ("doc_id", "source", "n_chars"),
+    ("adversarial", ("doc_id",), 3, PRIO_RETRACT_MOD, PRIO_RETRACT_RES),
+)
 
 
 def priority_retract_update(
@@ -1386,13 +1307,8 @@ def incremental_priority_sample_retract(
             .orderBy("source", "rank")
         )
 
-    return fold_stream(
-        spark,
-        _stage_prio_retraction_batches(spark, sf_dir),
-        DOCS_RETRACT_SCHEMA,
-        on_batch,
-        finish,
-    )
+    d = stage_batches(spark, sf_dir, *PRIO_RETRACT_BATCHES)
+    return fold_stream(spark, d, DOCS_RETRACT_SCHEMA, on_batch, finish)
 
 
 # ---------------------------------------------------------------------------
@@ -1412,32 +1328,13 @@ DOCS_ND_RETRACT_SCHEMA = T.StructType(
 )
 
 
-def _stage_near_dup_retraction_batches(spark: SparkSession, sf_dir: str) -> str:
-    """Three doc_id-tercile insert slices with a -1 tombstone for every
-    doc_id % PRIO_RETRACT_MOD == PRIO_RETRACT_RES document (the same
-    source-uniform deletion set the priority retract mirror uses),
-    scheduled adversarially: even (doc_id DIV MOD) tombstones one batch
-    EARLY (the never-ingest path), odd one batch LATE (the
-    kill-then-void path)."""
-    import hashlib
-
-    from ..plans.tables import load
-    from .events_stream import _STAGE_ROOT, _stage_adversarial_retraction
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    return _stage_adversarial_retraction(
-        d=f"{_STAGE_ROOT}/docs_nd_retract_{key}",
-        frame_fn=lambda: load(spark, sf_dir, "documents").select(
-            "doc_id", "text", "lang", "n_chars"
-        ),
-        order_cols=("doc_id",),
-        id_col="doc_id",
-        mod=PRIO_RETRACT_MOD,
-        res=PRIO_RETRACT_RES,
-        nb=3,
-        cols=("doc_id", "text", "lang", "n_chars"),
-    )
-
+# the priority mirror's source-uniform deletion set: EARLY tombstones
+# exercise the never-ingest path, LATE ones the kill-then-void path
+ND_RETRACT_BATCHES = Batches(
+    "documents",
+    ("doc_id", "text", "lang", "n_chars"),
+    ("adversarial", ("doc_id",), 3, PRIO_RETRACT_MOD, PRIO_RETRACT_RES),
+)
 
 ND_COMPACT_EVERY = 2  # fold the batch-partial prefix every N epochs
 
@@ -1609,13 +1506,8 @@ def incremental_near_dup_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", "lang", "n_chars"
         )
 
-    return fold_stream(
-        spark,
-        _stage_near_dup_retraction_batches(spark, sf_dir),
-        DOCS_ND_RETRACT_SCHEMA,
-        on_batch,
-        finish,
-    )
+    d = stage_batches(spark, sf_dir, *ND_RETRACT_BATCHES)
+    return fold_stream(spark, d, DOCS_ND_RETRACT_SCHEMA, on_batch, finish)
 
 
 def incremental_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1636,7 +1528,7 @@ def incremental_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return fold_stream(
         spark,
-        _stage_doc_batches(spark, sf_dir),
+        stage_batches(spark, sf_dir, *DOC_BATCHES),
         DOCS_SCHEMA,
         lambda b, st: st.land(
             "feats", dsir_feats(b.select("doc_id", "source", "text"))
@@ -1720,9 +1612,8 @@ def incremental_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         v = nsw_prep(load(spark, sf_dir, "embeddings"), EMB_DIM)
         return nsw_finish(st.latest("fwd"), v)
 
-    return fold_stream(
-        spark, _stage_emb_batches(spark, sf_dir), EMB_SCHEMA, on_batch, finish
-    )
+    d = stage_batches(spark, sf_dir, *EMB_BATCHES)
+    return fold_stream(spark, d, EMB_SCHEMA, on_batch, finish)
 
 # ---------------------------------------------------------------------------
 # Retraction-aware ANN-graph maintenance (round 13): vector UN-ingestion
@@ -1742,29 +1633,13 @@ EMB_RETRACT_SCHEMA = T.StructType(
 ANN_COMPACT_EVERY = 2  # fold the pair/vector state every N epochs
 
 
-def _stage_emb_retraction_batches(spark: SparkSession, sf_dir: str) -> str:
-    """Three vec_id-tercile insert slices with a -1 tombstone for every
-    vec_id % PRIO_RETRACT_MOD == PRIO_RETRACT_RES vector, scheduled
-    adversarially (even (id DIV MOD) tombstones one batch EARLY — the
-    never-ingest path; odd one batch LATE — the ingest-then-void path)."""
-    import hashlib
-
-    from ..plans.tables import load
-    from .events_stream import _STAGE_ROOT, _stage_adversarial_retraction
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    return _stage_adversarial_retraction(
-        d=f"{_STAGE_ROOT}/emb_retract_{key}",
-        frame_fn=lambda: load(spark, sf_dir, "embeddings").select(
-            "vec_id", "embedding", "label"
-        ),
-        order_cols=("vec_id",),
-        id_col="vec_id",
-        mod=PRIO_RETRACT_MOD,
-        res=PRIO_RETRACT_RES,
-        nb=3,
-        cols=("vec_id", "embedding", "label"),
-    )
+# EARLY tombstones exercise the never-ingest path, LATE ones the
+# ingest-then-void path
+EMB_RETRACT_BATCHES = Batches(
+    "embeddings",
+    ("vec_id", "embedding", "label"),
+    ("adversarial", ("vec_id",), 3, PRIO_RETRACT_MOD, PRIO_RETRACT_RES),
+)
 
 
 def incremental_ann_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1857,10 +1732,5 @@ def incremental_ann_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
         v = nsw_prep(surviving, EMB_DIM)
         return nsw_finish(fwd_top_m(pairs), v)
 
-    return fold_stream(
-        spark,
-        _stage_emb_retraction_batches(spark, sf_dir),
-        EMB_RETRACT_SCHEMA,
-        on_batch,
-        finish,
-    )
+    d = stage_batches(spark, sf_dir, *EMB_RETRACT_BATCHES)
+    return fold_stream(spark, d, EMB_RETRACT_SCHEMA, on_batch, finish)

@@ -20,11 +20,10 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from ..plans.relational import RETRACT_MOD, RETRACT_RES
+from ..plans.tables import load
 from ..session import tune_session
-
-# staging root; bump the version suffix when the staged representation
-# changes (v2 = ts canonicalized to int64 epoch nanos at stage time)
-_STAGE_ROOT = "/tmp/spark_graft_stream_v2"
+from .staging import Batches, stage_batches
 
 EVENTS_SCHEMA = T.StructType(
     [
@@ -37,58 +36,12 @@ EVENTS_SCHEMA = T.StructType(
     ]
 )
 
-
-def _load_canonical_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..plans.tables import load
-
-    return load(spark, sf_dir, "events")
-
-
-def _stage_dir(spark: SparkSession, sf_dir: str) -> str:
-    """The parquet file-stream source requires a directory; stage a per-sf
-    scratch dir holding the events table with ``ts`` canonicalized to
-    int64 epoch nanos (the staged copy IS the canonical form, so the
-    stream schema is stable whatever the lake's physical ts type)."""
-    import hashlib
-    import os
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    d = f"{_STAGE_ROOT}/{key}"
-    if not os.path.exists(f"{d}/events.parquet"):
-        _write_single(_load_canonical_events(spark, sf_dir), f"{d}/events.parquet")
-    return d
-
-
-def _stage_ordered(d: str, names: list[str], build_frames) -> str:
-    """Write named single-file parquet batches under ``d`` with ascending
-    mtimes, so a maxFilesPerTrigger=1 file stream replays them as
-    micro-batches in exactly this order. Idempotent per directory;
-    ``build_frames()`` (returning one DataFrame per name) only runs when
-    the batches are missing."""
-    import os
-
-    if all(os.path.exists(f"{d}/{f}") for f in names):
-        return d
-    os.makedirs(d, exist_ok=True)
-    for name, df in zip(names, build_frames()):
-        _write_single(df, f"{d}/{name}")
-    for i, f in enumerate(names):
-        os.utime(f"{d}/{f}", (1_700_000_000 + 100 * i, 1_700_000_000 + 100 * i))
-    return d
-
-
-def _write_single(df: DataFrame, dest: str) -> None:
-    import os
-    import shutil
-
-    os.makedirs(os.path.dirname(dest), exist_ok=True)
-    tmp = f"{dest}.tmp"
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    part = next(
-        f for f in os.listdir(tmp) if f.endswith(".parquet") and f.startswith("part-")
-    )
-    shutil.move(f"{tmp}/{part}", dest)
-    shutil.rmtree(tmp)
+EVENTS_BATCHES = Batches("events", None, ("whole", ()))
+# the watermark replay; its newest-first order also proves the order-free
+# mirrors arrival-order independent
+LATE_BATCHES = Batches("events", None, ("late", ("ts", "event_id")))
+# the Markov mirror's ordered-stitch contract: batches in event-time order
+TIME_BATCHES = Batches("events", None, ("rank", ("ts", "event_id"), 4))
 
 
 class Landing:
@@ -191,7 +144,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         spark.readStream.schema(EVENTS_SCHEMA)
         .format("parquet")
-        .load(_stage_dir(spark, sf_dir))
+        .load(stage_batches(spark, sf_dir, *EVENTS_BATCHES))
     )
 
 
@@ -269,48 +222,6 @@ def session_window_counts(
     )
 
 
-def _stage_late_batches(spark: SparkSession, sf_dir: str) -> str:
-    """Three-batch staging for watermark semantics, ordered by file mtime
-    (maxFilesPerTrigger=1 makes each file one micro-batch):
-
-      01 — the newer half of events (by (ts, event_id) order) MINUS the
-           single globally-newest row,
-      02 — that single newest row,
-      03 — the older half (every row far behind the watermark).
-
-    Measured on this Spark version, the late-row filter applies the
-    watermark with a one-batch lag (batch N filters with the watermark
-    derived from batch N-1's data; progress metrics show the monotonic
-    committed value instead). The middle single-row batch pins the filter
-    watermark at (global max - delay) before the late batch arrives, so
-    batch 03 is fully dropped under BOTH the documented semantics and the
-    observed lagged one — keeping the oracle deterministic. Batch 02's own
-    row can never be late: its window ends above every candidate watermark.
-    Test scaffolding only — a real deployment reads an unbounded source."""
-    import hashlib
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    d = f"{_STAGE_ROOT}/late_{key}"
-
-    def build():
-        from pyspark.sql import Window
-
-        ev = _load_canonical_events(spark, sf_dir)
-        n = ev.count()
-        ranked = ev.withColumn(
-            "rn", F.row_number().over(Window.orderBy("ts", "event_id"))
-        )
-        return [
-            ranked.filter((F.col("rn") > n // 2) & (F.col("rn") < n)).drop("rn"),
-            ranked.filter(F.col("rn") == n).drop("rn"),
-            ranked.filter(F.col("rn") <= n // 2).drop("rn"),
-        ]
-
-    return _stage_ordered(
-        d, ["01_new.parquet", "02_peak.parquet", "03_old.parquet"], build
-    )
-
-
 def late_data_drop_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermark late-data semantics, exercised over REAL micro-batches:
     hourly tumbling counts with a 1-hour watermark in append mode. Batch 1
@@ -321,7 +232,7 @@ def late_data_drop_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     order, so the result is value-checked against a batch oracle that
     replays the same watermark algebra."""
     tune_session(spark)
-    d = _stage_late_batches(spark, sf_dir)
+    d = stage_batches(spark, sf_dir, *LATE_BATCHES)
     src = (
         spark.readStream.schema(EVENTS_SCHEMA)
         .format("parquet")
@@ -365,7 +276,7 @@ def watermarked_dedup_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan holds with a horizon-sized delay (state ∝ keys per horizon).
     """
     tune_session(spark)
-    d = _stage_late_batches(spark, sf_dir)
+    d = stage_batches(spark, sf_dir, *LATE_BATCHES)
     src = (
         spark.readStream.schema(EVENTS_SCHEMA)
         .format("parquet")
@@ -413,7 +324,7 @@ def foreach_batch_last_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return fold_stream(
         spark,
-        _stage_late_batches(spark, sf_dir),
+        stage_batches(spark, sf_dir, *LATE_BATCHES),
         EVENTS_SCHEMA,
         lambda b, st: st.land("events", b),
         finish,
@@ -672,7 +583,7 @@ def incremental_cms_user_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     def finish(st: Landing) -> DataFrame:
         merged = st.landed("cells").groupBy("r", "pos").agg(F.sum("cnt").alias("cnt"))
         exact = (
-            _load_canonical_events(spark, sf_dir)
+            load(spark, sf_dir, "events")
             .select(F.col("user_id").cast("string").alias("w"))
             .groupBy("w")
             .agg(F.count(F.lit(1)).alias("exact_freq"))
@@ -686,9 +597,8 @@ def incremental_cms_user_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("cms_est") - F.col("exact_freq")).alias("overcount"),
         )
 
-    return fold_stream(
-        spark, _stage_late_batches(spark, sf_dir), EVENTS_SCHEMA, on_batch, finish
-    )
+    d = stage_batches(spark, sf_dir, *LATE_BATCHES)
+    return fold_stream(spark, d, EVENTS_SCHEMA, on_batch, finish)
 
 
 def incremental_topk_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -735,9 +645,8 @@ def incremental_topk_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return fold_stream(
-        spark, _stage_late_batches(spark, sf_dir), EVENTS_SCHEMA, on_batch, finish
-    )
+    d = stage_batches(spark, sf_dir, *LATE_BATCHES)
+    return fold_stream(spark, d, EVENTS_SCHEMA, on_batch, finish)
 
 
 QUANT_BIN_WIDTH = 5.0
@@ -815,9 +724,8 @@ def incremental_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             out = out.unionByName(r)
         return out
 
-    return fold_stream(
-        spark, _stage_late_batches(spark, sf_dir), EVENTS_SCHEMA, on_batch, finish
-    )
+    d = stage_batches(spark, sf_dir, *LATE_BATCHES)
+    return fold_stream(spark, d, EVENTS_SCHEMA, on_batch, finish)
 
 
 def incremental_quantile_value(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -874,45 +782,8 @@ def incremental_quantile_value(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return fold_stream(
-        spark, _stage_late_batches(spark, sf_dir), EVENTS_SCHEMA, on_batch, finish
-    )
-
-
-def _stage_time_ordered_batches(
-    spark: SparkSession, sf_dir: str, n_batches: int = 4
-) -> str:
-    """Stage the events table as ``n_batches`` micro-batches sliced on the
-    GLOBAL (ts, event_id) order — every row of batch i+1 sorts strictly
-    after every row of batch i. This is the ordered-stitch delivery
-    contract the Markov mirror requires (see ``incremental_markov``):
-    sequence-valued state (the per-user LAST event) only merges correctly
-    when batches arrive in event-time order. Unlike ``_stage_late_batches``
-    (which deliberately replays newest-first to prove order-freeness),
-    this staging asserts the opposite property and says so."""
-    import hashlib
-
-    key = hashlib.md5(f"{sf_dir}:{n_batches}".encode()).hexdigest()[:10]
-    d = f"{_STAGE_ROOT}/ordered_{key}"
-
-    def build():
-        from pyspark.sql import Window
-
-        ev = _load_canonical_events(spark, sf_dir)
-        n = ev.count()
-        ranked = ev.withColumn(
-            "rn", F.row_number().over(Window.orderBy("ts", "event_id"))
-        )
-        cuts = [round(i * n / n_batches) for i in range(n_batches + 1)]
-        return [
-            ranked.filter(
-                (F.col("rn") > cuts[i]) & (F.col("rn") <= cuts[i + 1])
-            ).drop("rn")
-            for i in range(n_batches)
-        ]
-
-    names = [f"{i + 1:02d}.parquet" for i in range(n_batches)]
-    return _stage_ordered(d, names, build)
+    d = stage_batches(spark, sf_dir, *LATE_BATCHES)
+    return fold_stream(spark, d, EVENTS_SCHEMA, on_batch, finish)
 
 
 def markov_batch_partial(
@@ -1021,16 +892,30 @@ def incremental_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return markov_stationary_from_counts(c0, st.landed("types").distinct())
 
-    return fold_stream(
-        spark, _stage_time_ordered_batches(spark, sf_dir), EVENTS_SCHEMA, on_batch, finish
-    )
+    d = stage_batches(spark, sf_dir, *TIME_BATCHES)
+    return fold_stream(spark, d, EVENTS_SCHEMA, on_batch, finish)
 
 
 # ---------------------------------------------------------------------------
 # Retraction-aware Markov mirror (round 12): the watermark-bounded buffer
 # that closes the one retraction gap the ordered-stitch contract left open.
 
-MARKOV_RETRACT_BATCHES = 6
+# Tombstones scheduled ADVERSARIALLY within the watermark bound: an EARLY
+# one arrives before its insert (transient net -1), a LATE one after it
+# (net +1 then cancelled). Both directions stay inside MARKOV_RETRACT_W_NS
+# of the high-water mark, so a correct watermark buffer absorbs them;
+# anything later would be a contract violation the freeze kernel rejects.
+# Density caveat: slices are row-count slices, so the "2 of 6 batch spans
+# ≤ 10 days < W" bound assumes roughly uniform event-time density (true of
+# this lake); a heavily time-skewed lake could stretch two adjacent slices
+# past W and trip the mirror's DETECTED violation — the correct response
+# there is a larger W (a deployment sizes W from its lateness SLA, not
+# from batch geometry), never a silent result.
+MARKOV_RETRACT_BATCHES = Batches(
+    "events",
+    ("user_id", "ts", "event_id", "event_type"),
+    ("adversarial", ("ts", "event_id"), 6, RETRACT_MOD, RETRACT_RES),
+)
 
 # Watermark delay (event-time ns): inserts AND tombstones may arrive
 # disordered by at most this much behind the high-water mark. The staged
@@ -1050,105 +935,6 @@ MARKOV_RETRACT_SCHEMA = T.StructType(
         T.StructField("sign", T.IntegerType()),
     ]
 )
-
-
-def _stage_adversarial_retraction(
-    d: str,
-    frame_fn,
-    order_cols: tuple[str, ...],
-    id_col: str,
-    mod: int,
-    res: int,
-    nb: int,
-    cols: tuple[str, ...],
-) -> str:
-    """The SHARED adversarial-tombstone staging behind all three
-    retraction mirrors (markov/priority-sample/near-dup — one
-    implementation of the subtle boundary-fold schedule instead of three
-    drifting copies): slice ``frame_fn()`` into ``nb`` row-count slices
-    ordered by ``order_cols``; every row with ``id_col % mod == res``
-    gets a −1 tombstone, scheduled by parity of (id DIV mod) — EVEN one
-    batch EARLY (delete-before-insert), ODD one batch LATE
-    (delete-after-insert); boundary slices fold their edge tombstones
-    into their own batch. Inserts carry sign +1 over ``cols``."""
-
-    def build():
-        from pyspark.sql import Window
-
-        frame = frame_fn()
-        n = frame.count()
-        cuts = [round(i * n / nb) for i in range(nb + 1)]
-        ranked = frame.withColumn(
-            "rn", F.row_number().over(Window.orderBy(*order_cols))
-        )
-        slices = [
-            ranked.filter(
-                (F.col("rn") > cuts[i]) & (F.col("rn") <= cuts[i + 1])
-            ).drop("rn")
-            for i in range(nb)
-        ]
-
-        def ins(df: DataFrame) -> DataFrame:
-            return df.select(*cols, F.lit(1).alias("sign"))
-
-        def tomb(df: DataFrame, early: bool) -> DataFrame:
-            cancelled = df.filter(F.col(id_col) % mod == res)
-            parity = (F.col(id_col) / mod).cast("bigint") % 2
-            return cancelled.filter(parity == (0 if early else 1)).select(
-                *cols, F.lit(-1).alias("sign")
-            )
-
-        out = []
-        for i in range(nb):
-            b = ins(slices[i])
-            if i + 1 < nb:
-                b = b.unionByName(tomb(slices[i + 1], early=True))
-            if i == 0:
-                b = b.unionByName(tomb(slices[0], early=True))
-            if i > 0:
-                b = b.unionByName(tomb(slices[i - 1], early=False))
-            if i == nb - 1:
-                b = b.unionByName(tomb(slices[i], early=False))
-            out.append(b)
-        return out
-
-    names = [f"{i + 1:02d}.parquet" for i in range(nb)]
-    return _stage_ordered(d, names, build)
-
-
-def _stage_markov_retraction_batches(spark: SparkSession, sf_dir: str) -> str:
-    """Six time-ordered insert slices (global (ts, event_id) order) with a
-    -1 tombstone for every event whose event_id % RETRACT_MOD ==
-    RETRACT_RES, scheduled ADVERSARIALLY within the watermark bound.
-    Density caveat: slices are row-count terciles, so the "2 of 6 batch
-    spans ≤ 10 days < W" bound assumes roughly uniform event-time density
-    (true of this lake); a heavily time-skewed lake could stretch two
-    adjacent slices past W and trip the mirror's DETECTED violation — the
-    correct response there is a larger W (a deployment sizes W from its
-    lateness SLA, not from batch geometry), never a silent result:
-    cancelled events with even (event_id DIV RETRACT_MOD) tombstone one
-    batch EARLY (retraction arrives before its insert — transient net -1),
-    odd ones one batch LATE (net +1 then cancelled). Both directions stay
-    inside MARKOV_RETRACT_W_NS of the high-water mark, so a correct
-    watermark buffer absorbs them; anything later would be a contract
-    violation the freeze kernel rejects."""
-    import hashlib
-
-    from ..plans.relational import RETRACT_MOD, RETRACT_RES
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    return _stage_adversarial_retraction(
-        d=f"{_STAGE_ROOT}/markov_retract_{key}",
-        frame_fn=lambda: _load_canonical_events(spark, sf_dir).select(
-            "user_id", "ts", "event_id", "event_type"
-        ),
-        order_cols=("ts", "event_id"),
-        id_col="event_id",
-        mod=RETRACT_MOD,
-        res=RETRACT_RES,
-        nb=MARKOV_RETRACT_BATCHES,
-        cols=("user_id", "ts", "event_id", "event_type"),
-    )
 
 
 def markov_retract_freeze(
@@ -1271,10 +1057,5 @@ def incremental_markov_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return markov_stationary_from_counts(c0, states)
 
-    return fold_stream(
-        spark,
-        _stage_markov_retraction_batches(spark, sf_dir),
-        MARKOV_RETRACT_SCHEMA,
-        on_batch,
-        finish,
-    )
+    d = stage_batches(spark, sf_dir, *MARKOV_RETRACT_BATCHES)
+    return fold_stream(spark, d, MARKOV_RETRACT_SCHEMA, on_batch, finish)

@@ -33,7 +33,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from .events_stream import _STAGE_ROOT, Landing, _stage_ordered, fold_stream
+from ..plans.relational import RETRACT_MOD, RETRACT_RES
+from .events_stream import Landing, fold_stream
+from .staging import Batches, stage_batches
+
 
 def _int_count_guarded(c_big):
     """Cast a bigint multiplicity to int for array_repeat, raising on
@@ -62,35 +65,9 @@ ORDERS_SCHEMA = T.StructType(
 )
 
 
-def _stage_order_batches(spark: SparkSession, sf_dir: str) -> str:
-    """Three mtime-ordered batches splitting orders by o_orderkey terciles
-    — id-ordered arrival; the adversarial-order pytest re-runs the merge
-    on shuffled partials instead of restaging."""
-    import hashlib
-
-    from ..plans.tables import load
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    d = f"{_STAGE_ROOT}/orders_{key}"
-
-    def build():
-        from pyspark.sql import Window
-
-        o = load(spark, sf_dir, "orders")
-        n = o.count()
-        lo, hi = n // 3, 2 * n // 3
-        ranked = o.withColumn(
-            "rn", F.row_number().over(Window.orderBy("o_orderkey"))
-        )
-        return [
-            ranked.filter(F.col("rn") <= lo).drop("rn"),
-            ranked.filter((F.col("rn") > lo) & (F.col("rn") <= hi)).drop("rn"),
-            ranked.filter(F.col("rn") > hi).drop("rn"),
-        ]
-
-    return _stage_ordered(
-        d, ["01_lo.parquet", "02_mid.parquet", "03_hi.parquet"], build
-    )
+# the adversarial-order pytest re-runs the merge on shuffled partials
+# instead of restaging
+ORDER_BATCHES = Batches("orders", None, ("rank", ("o_orderkey",), 3))
 
 
 def rfm_partial(batch_df: DataFrame) -> DataFrame:
@@ -135,7 +112,7 @@ def incremental_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return fold_stream(
         spark,
-        _stage_order_batches(spark, sf_dir),
+        stage_batches(spark, sf_dir, *ORDER_BATCHES),
         ORDERS_SCHEMA,
         lambda b, st: st.land("partials", rfm_partial(b)),
         lambda st: rfm_from_per_customer(rfm_merge_partials(st.landed("partials"))),
@@ -198,38 +175,9 @@ LINEITEM_PAIR_SCHEMA = T.StructType(
 )
 
 
-def _stage_lineitem_batches(spark: SparkSession, sf_dir: str) -> str:
-    """Three mtime-ordered batches splitting the (l_orderkey, l_partkey)
-    projection by l_orderkey terciles — ORDER-ATOMIC slicing (an order's
-    lineitems never straddle a batch), the transactional unit a lineitem
-    source actually emits, and the property that makes per-batch
-    co-purchase pair counting exact."""
-    import hashlib
-
-    from ..plans.tables import load
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    d = f"{_STAGE_ROOT}/lineitem_{key}"
-
-    def build():
-        li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-        # Tercile cut points via approxQuantile (relativeError=0 → exact,
-        # computed distributed): TWO scalars reach the driver instead of
-        # every distinct orderkey. The mirrors are arrival-order-free by
-        # design, so the cut points may sit anywhere — order-atomicity
-        # (an order never straddles a batch) is preserved because both
-        # filters compare the full l_orderkey.
-        ks = li.select("l_orderkey").distinct()
-        lo, hi = ks.approxQuantile("l_orderkey", [1 / 3, 2 / 3], 0.0)
-        return [
-            li.filter(F.col("l_orderkey") <= lo),
-            li.filter((F.col("l_orderkey") > lo) & (F.col("l_orderkey") <= hi)),
-            li.filter(F.col("l_orderkey") > hi),
-        ]
-
-    return _stage_ordered(
-        d, ["01_lo.parquet", "02_mid.parquet", "03_hi.parquet"], build
-    )
+LINEITEM_BATCHES = Batches(
+    "lineitem", ("l_orderkey", "l_partkey"), ("key_terciles", ("l_orderkey",))
+)
 
 
 def _incremental_from_pair_state(spark: SparkSession, sf_dir: str, kernel) -> DataFrame:
@@ -254,7 +202,7 @@ def _incremental_from_pair_state(spark: SparkSession, sf_dir: str, kernel) -> Da
 
     return fold_stream(
         spark,
-        _stage_lineitem_batches(spark, sf_dir),
+        stage_batches(spark, sf_dir, *LINEITEM_BATCHES),
         LINEITEM_PAIR_SCHEMA,
         lambda b, st: st.land("pairs", copurchase_pairs(b)),
         finish,
@@ -313,9 +261,8 @@ def incremental_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return quantile_sketch_from(xs)
 
-    return fold_stream(
-        spark, _stage_order_batches(spark, sf_dir), ORDERS_SCHEMA, on_batch, finish
-    )
+    d = stage_batches(spark, sf_dir, *ORDER_BATCHES)
+    return fold_stream(spark, d, ORDERS_SCHEMA, on_batch, finish)
 
 
 def incremental_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -388,62 +335,8 @@ RETRACT_SCHEMA = T.StructType(
         T.StructField("sign", T.IntegerType()),
     ]
 )
-
-
-def _stage_retraction_batches(
-    spark: SparkSession,
-    sf_dir: str,
-    cols: tuple[str, ...] = ("o_totalprice",),
-    name: str = "orders_retract",
-) -> str:
-    """Four mtime-ordered batches: the three order terciles as
-    (*cols, +1) INSERT rows plus a CANCELLATIONS batch carrying the same
-    rows at sign -1 for every order with
-    o_orderkey % RETRACT_MOD == RETRACT_RES — staged SECOND, so two
-    thirds of the retractions arrive BEFORE the inserts they cancel
-    (transient negative net counts mid-stream: the adversarial schedule
-    a signed-sum state must shrug off)."""
-    import hashlib
-
-    from ..plans.relational import RETRACT_MOD, RETRACT_RES
-    from ..plans.tables import load
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    d = f"{_STAGE_ROOT}/{name}_{key}"
-
-    def build():
-        from pyspark.sql import Window
-
-        o = load(spark, sf_dir, "orders").select("o_orderkey", *cols)
-        n = o.count()
-        lo, hi = n // 3, 2 * n // 3
-        ranked = o.withColumn(
-            "rn", F.row_number().over(Window.orderBy("o_orderkey"))
-        )
-
-        def ins(df: DataFrame) -> DataFrame:
-            return df.select(*cols, F.lit(1).alias("sign"))
-
-        cancel = o.filter(
-            F.col("o_orderkey") % RETRACT_MOD == RETRACT_RES
-        ).select(*cols, F.lit(-1).alias("sign"))
-        return [
-            ins(ranked.filter(F.col("rn") <= lo)),
-            cancel,
-            ins(ranked.filter((F.col("rn") > lo) & (F.col("rn") <= hi))),
-            ins(ranked.filter(F.col("rn") > hi)),
-        ]
-
-    return _stage_ordered(
-        d,
-        [
-            "01_lo.parquet",
-            "02_cancel.parquet",
-            "03_mid.parquet",
-            "04_hi.parquet",
-        ],
-        build,
-    )
+_ORDER_CANCEL = ("cancel", ("o_orderkey",), RETRACT_MOD, RETRACT_RES)
+ORDERS_RETRACT_BATCHES = Batches("orders", ("o_totalprice",), _ORDER_CANCEL)
 
 
 COMPACT_EVERY = 2  # fold the batch-partial prefix every N epochs
@@ -590,9 +483,8 @@ def incremental_quantile_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return quantile_sketch_from(xs)
 
-    return fold_stream(
-        spark, _stage_retraction_batches(spark, sf_dir), RETRACT_SCHEMA, on_batch, finish
-    )
+    d = stage_batches(spark, sf_dir, *ORDERS_RETRACT_BATCHES)
+    return fold_stream(spark, d, RETRACT_SCHEMA, on_batch, finish)
 
 
 RFM_RETRACT_SCHEMA = T.StructType(
@@ -602,6 +494,9 @@ RFM_RETRACT_SCHEMA = T.StructType(
         T.StructField("o_totalprice", T.DoubleType()),
         T.StructField("sign", T.IntegerType()),
     ]
+)
+RFM_RETRACT_BATCHES = Batches(
+    "orders", ("o_custkey", "o_orderdate", "o_totalprice"), _ORDER_CANCEL
 )
 
 
@@ -658,12 +553,7 @@ def incremental_rfm_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return rfm_from_per_customer(per)
 
-    d = _stage_retraction_batches(
-        spark,
-        sf_dir,
-        cols=("o_custkey", "o_orderdate", "o_totalprice"),
-        name="orders_rfm_retract",
-    )
+    d = stage_batches(spark, sf_dir, *RFM_RETRACT_BATCHES)
     return fold_stream(spark, d, RFM_RETRACT_SCHEMA, on_batch, finish)
 
 
@@ -678,32 +568,11 @@ LINEITEM_OLS_SCHEMA = T.StructType(
 )
 
 
-def _stage_lineitem_ols_batches(spark: SparkSession, sf_dir: str) -> str:
-    """Three mtime-ordered batches of the OLS feature projection, split by
-    l_orderkey terciles (approxQuantile cuts — two scalars to the driver)."""
-    import hashlib
-
-    from ..plans.tables import load
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    d = f"{_STAGE_ROOT}/lineitem_ols_{key}"
-
-    def build():
-        li = load(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_returnflag", "l_quantity", "l_discount",
-            "l_extendedprice",
-        )
-        ks = li.select("l_orderkey").distinct()
-        lo, hi = ks.approxQuantile("l_orderkey", [1 / 3, 2 / 3], 0.0)
-        return [
-            li.filter(F.col("l_orderkey") <= lo),
-            li.filter((F.col("l_orderkey") > lo) & (F.col("l_orderkey") <= hi)),
-            li.filter(F.col("l_orderkey") > hi),
-        ]
-
-    return _stage_ordered(
-        d, ["01_lo.parquet", "02_mid.parquet", "03_hi.parquet"], build
-    )
+LINEITEM_OLS_BATCHES = Batches(
+    "lineitem",
+    ("l_orderkey", "l_returnflag", "l_quantity", "l_discount", "l_extendedprice"),
+    ("key_terciles", ("l_orderkey",)),
+)
 
 
 def incremental_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -755,7 +624,7 @@ def incremental_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return fold_stream(
         spark,
-        _stage_lineitem_ols_batches(spark, sf_dir),
+        stage_batches(spark, sf_dir, *LINEITEM_OLS_BATCHES),
         LINEITEM_OLS_SCHEMA,
         lambda b, st: st.land("moments", _moments(b)),
         finish,
@@ -773,33 +642,12 @@ LINEITEM_BOOT_SCHEMA = T.StructType(
 )
 
 
-def _stage_lineitem_boot_batches(spark: SparkSession, sf_dir: str) -> str:
-    """Three mtime-ordered batches of the bootstrap projection (the OLS
-    feed plus l_linenumber — the pseudo-Poisson draws hash the full row
-    identity), split by l_orderkey terciles via approxQuantile."""
-    import hashlib
-
-    from ..plans.tables import load
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    d = f"{_STAGE_ROOT}/lineitem_boot_{key}"
-
-    def build():
-        li = load(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_linenumber", "l_returnflag", "l_discount",
-            "l_extendedprice",
-        )
-        ks = li.select("l_orderkey").distinct()
-        lo, hi = ks.approxQuantile("l_orderkey", [1 / 3, 2 / 3], 0.0)
-        return [
-            li.filter(F.col("l_orderkey") <= lo),
-            li.filter((F.col("l_orderkey") > lo) & (F.col("l_orderkey") <= hi)),
-            li.filter(F.col("l_orderkey") > hi),
-        ]
-
-    return _stage_ordered(
-        d, ["01_lo.parquet", "02_mid.parquet", "03_hi.parquet"], build
-    )
+# l_linenumber: the pseudo-Poisson draws hash the full row identity
+LINEITEM_BOOT_BATCHES = Batches(
+    "lineitem",
+    ("l_orderkey", "l_linenumber", "l_returnflag", "l_discount", "l_extendedprice"),
+    ("key_terciles", ("l_orderkey",)),
+)
 
 
 def incremental_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -829,7 +677,7 @@ def incremental_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return fold_stream(
         spark,
-        _stage_lineitem_boot_batches(spark, sf_dir),
+        stage_batches(spark, sf_dir, *LINEITEM_BOOT_BATCHES),
         LINEITEM_BOOT_SCHEMA,
         on_batch,
         lambda st: bootstrap_ci_from_partials(st.landed("exact"), st.landed("reps")),
@@ -859,7 +707,7 @@ def incremental_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return fold_stream(
         spark,
-        _stage_lineitem_batches(spark, sf_dir),
+        stage_batches(spark, sf_dir, *LINEITEM_BATCHES),
         LINEITEM_PAIR_SCHEMA,
         on_batch,
         lambda st: kmv_from_values(st.landed("kmins")),
@@ -890,46 +738,12 @@ LINEITEM_RETRACT_SCHEMA = T.StructType(
 )
 
 
-def _stage_lineitem_retraction_batches(spark: SparkSession, sf_dir: str) -> str:
-    """Four mtime-ordered SIGNED lineitem batches: the three order
-    terciles as (+1) inserts plus a CANCELLATIONS batch carrying the
-    lineitems of every order with l_orderkey % RETRACT_MOD == RETRACT_RES
-    at sign -1 — staged SECOND, so two thirds of the retractions arrive
-    before the inserts they cancel (transient negative net pair counts,
-    the adversarial schedule). Order-atomic slicing as in
-    _stage_lineitem_batches: an order's lineitems never straddle a batch,
-    so per-batch SIGNED pair partials are exact."""
-    import hashlib
-
-    from ..plans.relational import RETRACT_MOD, RETRACT_RES
-    from ..plans.tables import load
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    d = f"{_STAGE_ROOT}/lineitem_retract_{key}"
-
-    def build():
-        li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-        ks = li.select("l_orderkey").distinct()
-        lo, hi = ks.approxQuantile("l_orderkey", [1 / 3, 2 / 3], 0.0)
-
-        def ins(df: DataFrame) -> DataFrame:
-            return df.select("l_orderkey", "l_partkey", F.lit(1).alias("sign"))
-
-        cancel = li.filter(
-            F.col("l_orderkey") % RETRACT_MOD == RETRACT_RES
-        ).select("l_orderkey", "l_partkey", F.lit(-1).alias("sign"))
-        return [
-            ins(li.filter(F.col("l_orderkey") <= lo)),
-            cancel,
-            ins(li.filter((F.col("l_orderkey") > lo) & (F.col("l_orderkey") <= hi))),
-            ins(li.filter(F.col("l_orderkey") > hi)),
-        ]
-
-    return _stage_ordered(
-        d,
-        ["01_lo.parquet", "02_cancel.parquet", "03_mid.parquet", "04_hi.parquet"],
-        build,
-    )
+# order-atomic, so per-batch SIGNED pair partials are exact
+LINEITEM_RETRACT_BATCHES = Batches(
+    "lineitem",
+    ("l_orderkey", "l_partkey"),
+    ("cancel", ("l_orderkey",), RETRACT_MOD, RETRACT_RES, "key_terciles"),
+)
 
 
 def incremental_shortest_path_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -981,13 +795,8 @@ def incremental_shortest_path_retract(spark: SparkSession, sf_dir: str) -> DataF
         )
         return shortest_path_from_pairs(net)
 
-    return fold_stream(
-        spark,
-        _stage_lineitem_retraction_batches(spark, sf_dir),
-        LINEITEM_RETRACT_SCHEMA,
-        on_batch,
-        finish,
-    )
+    d = stage_batches(spark, sf_dir, *LINEITEM_RETRACT_BATCHES)
+    return fold_stream(spark, d, LINEITEM_RETRACT_SCHEMA, on_batch, finish)
 
 
 def _incremental_from_daily_state(
@@ -1017,7 +826,7 @@ def _incremental_from_daily_state(
 
     return fold_stream(
         spark,
-        _stage_order_batches(spark, sf_dir),
+        stage_batches(spark, sf_dir, *ORDER_BATCHES),
         ORDERS_SCHEMA,
         lambda b, st: st.land("daily", daily_revenue_partial(b)),
         finish,
@@ -1106,7 +915,7 @@ def incremental_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return fold_stream(
         spark,
-        _stage_order_batches(spark, sf_dir),
+        stage_batches(spark, sf_dir, *ORDER_BATCHES),
         ORDERS_SCHEMA,
         lambda b, st: st.land("per_cust", customer_cents_partial(b)),
         finish,
@@ -1126,7 +935,7 @@ def incremental_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return fold_stream(
         spark,
-        _stage_order_batches(spark, sf_dir),
+        stage_batches(spark, sf_dir, *ORDER_BATCHES),
         ORDERS_SCHEMA,
         lambda b, st: st.land("spans", km_span_partial(b)),
         lambda st: km_from_spans(st.landed("spans")),
@@ -1151,6 +960,7 @@ SEAS_RETRACT_SCHEMA = T.StructType(
         T.StructField("sign", T.IntegerType()),
     ]
 )
+SEAS_RETRACT_BATCHES = Batches("orders", ("o_totalprice", "o_orderdate"), _ORDER_CANCEL)
 
 
 def incremental_seasonal_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1223,12 +1033,7 @@ def incremental_seasonal_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return seasonal_from_daily(merged.select("dn", "cents"))
 
-    d = _stage_retraction_batches(
-        spark,
-        sf_dir,
-        cols=("o_totalprice", "o_orderdate"),
-        name="orders_retract_seas",
-    )
+    d = stage_batches(spark, sf_dir, *SEAS_RETRACT_BATCHES)
     return fold_stream(spark, d, SEAS_RETRACT_SCHEMA, on_batch, finish)
 
 
@@ -1288,9 +1093,8 @@ def _incremental_from_seg_daily_state(
         merged, _ = tracked_local_checkpoint(merged)
         return kernel(merged)
 
-    return fold_stream(
-        spark, _stage_order_batches(spark, sf_dir), ORDERS_SCHEMA, on_batch, finish
-    )
+    d = stage_batches(spark, sf_dir, *ORDER_BATCHES)
+    return fold_stream(spark, d, ORDERS_SCHEMA, on_batch, finish)
 
 
 def incremental_theil_sen_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:

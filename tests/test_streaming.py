@@ -7,6 +7,7 @@ import datetime as dt
 import tempfile
 import uuid
 
+import pytest
 from pyspark.sql import functions as F, types as T
 
 SCHEMA = T.StructType(
@@ -274,25 +275,26 @@ def _fold_dirs(stage):
     return glob.glob(f"{stage}_fold_*")
 
 
+def _stage_xs(spark, lake):
+    """A one-column lake table {1, 2} staged as two rank batches."""
+    from air_traffic_data_pipeline_spark.streaming.staging import stage_batches
+
+    schema = T.StructType([T.StructField("x", T.LongType())])
+    spark.createDataFrame([(1,), (2,)], schema).coalesce(1).write.parquet(
+        str(lake / "xs.parquet")
+    )
+    return schema, stage_batches(spark, str(lake), "xs", None, ("rank", ("x",), 2))
+
+
 def test_fold_stream_removes_landing_dir(spark, tmp_path):
     """fold_stream leaves nothing on disk: not after a successful run (the
     checkpointed result still reads), and not after an on_batch that
     raises."""
-    import pytest
+    import shutil
 
-    from air_traffic_data_pipeline_spark.streaming.events_stream import (
-        _stage_ordered,
-        fold_stream,
-    )
+    from air_traffic_data_pipeline_spark.streaming.events_stream import fold_stream
 
-    schema = T.StructType([T.StructField("x", T.LongType())])
-    stage = str(tmp_path / "stage")
-    _stage_ordered(
-        stage,
-        ["01.parquet", "02.parquet"],
-        lambda: [spark.createDataFrame([(i,)], schema) for i in (1, 2)],
-    )
-
+    schema, stage = _stage_xs(spark, tmp_path)
     out = fold_stream(
         spark,
         stage,
@@ -311,24 +313,18 @@ def test_fold_stream_removes_landing_dir(spark, tmp_path):
     with pytest.raises(Exception, match="on_batch failed"):
         fold_stream(spark, stage, schema, boom, lambda st: st.landed("xs"))
     assert not _fold_dirs(stage)
+    shutil.rmtree(stage)
 
 
 def test_fold_stream_batch_plans_run_with_aqe(spark, tmp_path):
     """Spark disables AQE for the stream's own plan (one WARN
     ResolveWriteToStream per stream), but the plans on_batch builds from
     batch_df run in a session clone with AQE on."""
-    from air_traffic_data_pipeline_spark.streaming.events_stream import (
-        _stage_ordered,
-        fold_stream,
-    )
+    import shutil
 
-    schema = T.StructType([T.StructField("x", T.LongType())])
-    stage = str(tmp_path / "stage")
-    _stage_ordered(
-        stage,
-        ["01.parquet", "02.parquet"],
-        lambda: [spark.createDataFrame([(i,)], schema) for i in (1, 2)],
-    )
+    from air_traffic_data_pipeline_spark.streaming.events_stream import fold_stream
+
+    schema, stage = _stage_xs(spark, tmp_path)
     seen = []
 
     def on_batch(b, st):
@@ -339,10 +335,107 @@ def test_fold_stream_batch_plans_run_with_aqe(spark, tmp_path):
         st.land("agg", agg)
 
     fold_stream(spark, stage, schema, on_batch, lambda st: st.landed("agg"))
+    shutil.rmtree(stage)
     assert len(seen) == 2
     for conf, plan in seen:
         assert conf == "true"
         assert plan.startswith("AdaptiveSparkPlan isFinalPlan=true"), plan
+
+
+def _staging_specs():
+    """Every ``Batches`` spec the streaming mirrors stage, by module.name."""
+    from air_traffic_data_pipeline_spark.streaming import (
+        documents_stream,
+        events_stream,
+        orders_stream,
+    )
+    from air_traffic_data_pipeline_spark.streaming.staging import Batches
+
+    return {
+        f"{m.__name__.rsplit('.', 1)[1]}.{k}": v
+        for m in (events_stream, documents_stream, orders_stream)
+        for k, v in vars(m).items()
+        if isinstance(v, Batches)
+    }
+
+
+def test_stage_batches_restages_a_lake_rewritten_in_place(spark, tmp_path):
+    """The stage dir is keyed on the table's files, not the lake's path: a
+    lake whose orders.parquet is rewritten in place streams the new orders
+    (the same count as that content at a fresh path), and the superseded
+    content dir of the slot is removed."""
+    import glob
+    import shutil
+
+    from conftest import SF_ORACLE, SF_SMOKE
+
+    from air_traffic_data_pipeline_spark.streaming.orders_stream import (
+        ORDER_BATCHES,
+        incremental_rfm,
+    )
+    from air_traffic_data_pipeline_spark.streaming.staging import stage_batches
+
+    lake, fresh = tmp_path / "lake", tmp_path / "fresh"
+    shutil.copytree(SF_SMOKE, lake)
+    before = incremental_rfm(spark, str(lake)).count()
+    shutil.copy(f"{SF_ORACLE}/orders.parquet", lake / "orders.parquet")
+    after = incremental_rfm(spark, str(lake)).count()
+    shutil.copytree(lake, fresh)
+    assert after == incremental_rfm(spark, str(fresh)).count() != before
+
+    dirs = [stage_batches(spark, str(p), *ORDER_BATCHES) for p in (lake, fresh)]
+    slot = dirs[0].rsplit("_", 1)[0]
+    assert [p for p in glob.glob(f"{slot}_*") if "_fold_" not in p] == [dirs[0]]
+    for d in dirs:
+        shutil.rmtree(d)
+
+
+@pytest.mark.parametrize("name", sorted(_staging_specs()))
+def test_stage_batches_split_contract(spark, name):
+    """Each staged spec replays its table projection: insert-only splits
+    cover it exactly with no row in two batches; signed splits net out to
+    the survivors (id % MOD != RES); files arrive in file-name order."""
+    import glob
+    import os
+    from functools import reduce
+
+    from conftest import SF_SMOKE
+
+    from air_traffic_data_pipeline_spark.plans.tables import load
+    from air_traffic_data_pipeline_spark.streaming.staging import stage_batches
+
+    spec = _staging_specs()[name]
+    d = stage_batches(spark, SF_SMOKE, *spec)
+    assert stage_batches(spark, SF_SMOKE, *spec) == d  # unchanged lake: reused
+    files = sorted(glob.glob(f"{d}/*.parquet"))
+    mtimes = [os.stat(f).st_mtime_ns for f in files]
+    assert mtimes == sorted(set(mtimes))
+    batches = [spark.read.parquet(f) for f in files]
+    table = load(spark, SF_SMOKE, spec.table)
+    cols = list(spec.cols or table.columns)
+    kind, key = spec.split[:2]
+    if kind in ("cancel", "adversarial"):
+        mod, res = spec.split[2:4] if kind == "cancel" else spec.split[3:5]
+        net = (
+            reduce(lambda a, b: a.unionByName(b), batches)
+            .groupBy(*cols)
+            .agg(F.sum("sign").alias("c"))
+            .filter(F.col("c") != 0)
+        )
+        want = (
+            table.filter(F.col(key[-1]) % mod != res)
+            .groupBy(*cols)
+            .agg(F.count(F.lit(1)).alias("c"))
+        )
+    else:
+        net = reduce(lambda a, b: a.unionByName(b), batches)
+        want = table.select(*cols)
+        for i, a in enumerate(batches):
+            for b in batches[i + 1 :]:
+                assert a.intersect(b).count() == 0
+    assert net.columns == want.columns
+    assert net.exceptAll(want).count() == 0
+    assert want.exceptAll(net).count() == 0
 
 
 def test_dedup_watermark_query_matches_batch_distinct(spark):
@@ -412,12 +505,13 @@ def test_trigger_available_now_drains_and_stops(spark):
     from air_traffic_data_pipeline_spark.plans.tables import load
     from air_traffic_data_pipeline_spark.streaming.events_stream import (
         EVENTS_SCHEMA,
-        _stage_late_batches,
+        LATE_BATCHES,
         with_event_time,
     )
+    from air_traffic_data_pipeline_spark.streaming.staging import stage_batches
 
     sf = "/root/testdata/sf0.001"
-    d = _stage_late_batches(spark, sf)  # 3 staged files -> 3 micro-batches
+    d = stage_batches(spark, sf, *LATE_BATCHES)  # 3 staged files -> 3 micro-batches
     src = (
         spark.readStream.schema(EVENTS_SCHEMA)
         .format("parquet")
@@ -546,23 +640,21 @@ def test_incremental_cms_matches_oneshot_sketch(spark):
     bitwise-identical to the one-shot batch sketch, and the estimate can
     never undercount."""
     from air_traffic_data_pipeline_spark.operators.sketches import cms_cells
+    from air_traffic_data_pipeline_spark.plans.tables import load
     from air_traffic_data_pipeline_spark.streaming.events_stream import (
-        _load_canonical_events,
         incremental_cms_user_freq,
     )
 
     sf = "/root/testdata/sf0.001"
     out = incremental_cms_user_freq(spark, sf).collect()
-    n_users = (
-        _load_canonical_events(spark, sf).select("user_id").distinct().count()
-    )
+    n_users = load(spark, sf, "events").select("user_id").distinct().count()
     assert len(out) == min(20, n_users)
     for r in out:
         assert r.cms_est >= r.exact_freq
         assert r.overcount == r.cms_est - r.exact_freq
 
     # merged streaming cells == one-shot cells (integer-exact merge)
-    ev = _load_canonical_events(spark, sf)
+    ev = load(spark, sf, "events")
     oneshot = {
         (r.r, r.pos): r.cnt
         for r in cms_cells(
@@ -615,8 +707,8 @@ def test_incremental_topk_equals_batch(spark):
     associative — batch slicing can't change the totals)."""
     from decimal import ROUND_HALF_UP, Decimal
 
+    from air_traffic_data_pipeline_spark.plans.tables import load
     from air_traffic_data_pipeline_spark.streaming.events_stream import (
-        _load_canonical_events,
         incremental_topk_user_value,
     )
 
@@ -626,9 +718,7 @@ def test_incremental_topk_equals_batch(spark):
         for r in incremental_topk_user_value(spark, sf).collect()
     )
 
-    ev = _load_canonical_events(spark, sf).select(
-        "event_type", "user_id", "value"
-    ).collect()
+    ev = load(spark, sf, "events").select("event_type", "user_id", "value").collect()
     totals = {}
     for r in ev:
         k = (r.event_type, r.user_id)
@@ -659,9 +749,9 @@ def test_incremental_quantile_equals_batch(spark):
     from air_traffic_data_pipeline_spark.streaming.events_stream import (
         QUANT_BIN_WIDTH,
         QUANT_QS,
-        _load_canonical_events,
         incremental_quantile_value,
     )
+    from air_traffic_data_pipeline_spark.plans.tables import load
 
     sf = "/root/testdata/sf0.001"
     got = {
@@ -670,7 +760,7 @@ def test_incremental_quantile_equals_batch(spark):
     }
     vals = [
         r.value
-        for r in _load_canonical_events(spark, sf).select("value").collect()
+        for r in load(spark, sf, "events").select("value").collect()
         if r.value is not None
     ]
     hist = {}

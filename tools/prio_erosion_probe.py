@@ -25,11 +25,12 @@ def probe(spark, sf_dir: str) -> None:
     from air_traffic_data_pipeline_spark.plans.llm import PRIO_K
     from air_traffic_data_pipeline_spark.streaming.documents_stream import (
         PRIO_RETRACT_B,
-        _stage_prio_retraction_batches,
+        PRIO_RETRACT_BATCHES,
         priority_retract_update,
     )
+    from air_traffic_data_pipeline_spark.streaming.staging import stage_batches
 
-    d = _stage_prio_retraction_batches(spark, sf_dir)
+    d = stage_batches(spark, sf_dir, *PRIO_RETRACT_BATCHES)
     files = sorted(
         os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")
     )

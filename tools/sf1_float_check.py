@@ -139,7 +139,7 @@ def build_sf1(spark, base: str, out: str, m: int) -> None:
         # scaling_curve lot-densification model) so the co-purchase graph
         # queries see a genuinely 10x lineitem, not a copy-through
         lis.append(li.withColumn("l_orderkey", F.col("l_orderkey") + F.lit(i * ID_OFFSET)))
-    from air_traffic_data_pipeline_spark.streaming.events_stream import _write_single
+    from air_traffic_data_pipeline_spark.streaming.staging import _write_single
 
     for name, parts in (
         ("events", evs),
