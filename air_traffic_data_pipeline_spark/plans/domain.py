@@ -300,13 +300,8 @@ def incremental_noise_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     (binned equi radius join), the landed partials are cell-keyed and
     compact, and the final merge re-aggregates partials — never raw pairs.
     """
-    from ..streaming.events_stream import (
-        EVENTS_SCHEMA,
-        LATE_BATCHES,
-        Landing,
-        fold_stream,
-    )
-    from ..streaming.staging import stage_batches
+    from ..streaming.events_stream import LATE_BATCHES, Landing, fold_stream
+    from ..streaming.staging import replay
 
     def on_batch(batch_df: DataFrame, st: Landing) -> None:
         sources = states_from_events(batch_df).select(
@@ -322,9 +317,7 @@ def incremental_noise_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return noise_db(merged)
 
-    return fold_stream(
-        spark, stage_batches(spark, sf_dir, *LATE_BATCHES), EVENTS_SCHEMA, on_batch, finish
-    )
+    return fold_stream(replay(spark, sf_dir, LATE_BATCHES), on_batch, finish)
 
 
 def incremental_sql() -> str:

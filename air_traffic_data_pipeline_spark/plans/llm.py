@@ -54,7 +54,7 @@ from ..operators.similarity import (
     nsw_beam_topk,
 )
 from .sqlutil import dlit
-from .tables import fan_out, load
+from .tables import _fingerprint, fan_out, load
 
 EMB_DIM = 64
 
@@ -272,12 +272,36 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _minhash_sig(spark, sf_dir)
 
 
-# Persisted per-(session, sf_dir) minhash doc tables. Persisting inside
-# minhash_near_dup_pairs on every call would accumulate executor memory/disk
-# over a long-lived session (the oracle sweep + near_dup_survivors + the
-# bench warm-up each re-invoke it); caching the DataFrame here means one
-# persisted copy per lake dir, reused by every caller in the session.
-_DOC_TBL_CACHE: dict[tuple[str, str], DataFrame] = {}
+# (app, sf_dir, tag) -> (fingerprint of the lake's documents files,
+# persisted table): the per-lake intermediates that several queries or
+# branches re-read (minhash doc table, contamination shingles, LM bigram
+# counts). Persisting inside each query on every call would accumulate
+# executor memory/disk over a long-lived session; one persisted copy per
+# lake content is reused by every caller. Keyed on applicationId so a
+# DataFrame bound to a stopped SparkContext never reaches a fresh session,
+# and on the files like ``tables._SCHEMAS`` so a lake rewritten in place is
+# read afresh. Dropped by clear_caches().
+_PERSISTED: dict[tuple[str, str, str], tuple[tuple | None, DataFrame]] = {}
+
+
+def _persisted(spark: SparkSession, sf_dir: str, tag: str, build) -> DataFrame:
+    """``build()`` persisted MEMORY_AND_DISK, reused while the lake's
+    documents files are unchanged. A rewrite unpersists the superseded
+    table and builds a new one; a lake that cannot be fingerprinted
+    (remote) gets a table for this call only, released by the next call
+    or clear_caches()."""
+    from pyspark import StorageLevel
+
+    key = (spark.sparkContext.applicationId, sf_dir, tag)
+    fp = _fingerprint(spark, f"{sf_dir}/documents.parquet")
+    seen, df = _PERSISTED.get(key, (None, None))
+    if df is not None:
+        if fp is not None and fp == seen:
+            return df
+        df.unpersist()
+    df = build().persist(StorageLevel.MEMORY_AND_DISK)
+    _PERSISTED[key] = (fp, df)
+    return df
 
 
 def _minhash_doc_tbl(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -295,16 +319,12 @@ def _minhash_doc_tbl(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the DuckDB oracle computes distinct-string counts independently, so
     a collision would surface as a hash mismatch, not hide).
     """
-    from pyspark import StorageLevel
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _DOC_TBL_CACHE.get(key)
-    if cached is not None:
-        return cached
-    d = fan_out(load(spark, sf_dir, "documents"))
-    doc_tbl = doc_tbl_from(d).persist(StorageLevel.MEMORY_AND_DISK)
-    _DOC_TBL_CACHE[key] = doc_tbl
-    return doc_tbl
+    return _persisted(
+        spark,
+        sf_dir,
+        "doc_tbl",
+        lambda: doc_tbl_from(fan_out(load(spark, sf_dir, "documents"))),
+    )
 
 
 def doc_tbl_from(d: DataFrame) -> DataFrame:
@@ -3774,17 +3794,15 @@ def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist the distinct shingle table: it feeds THREE branches (bench
     # set, per-doc totals, hit join) and Catalyst's ReusedExchange does not
     # cover multi-branch reuse of the explode subtree (measured on the
-    # minhash pipeline — recomputation roughly doubles runtime). Cached per
-    # (app, lake) and dropped by clear_caches().
-    key = (spark.sparkContext.applicationId, sf_dir, "contam_sh")
-    sh = _PERSIST_CACHE.get(key)
-    if sh is None:
-        from pyspark import StorageLevel
-
-        d = fan_out(load(spark, sf_dir, "documents"))
-        sh = exploded_shingles(d.select("doc_id", "text")).distinct()
-        sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
-        _PERSIST_CACHE[key] = sh
+    # minhash pipeline — recomputation roughly doubles runtime).
+    sh = _persisted(
+        spark,
+        sf_dir,
+        "contam_sh",
+        lambda: exploded_shingles(
+            fan_out(load(spark, sf_dir, "documents")).select("doc_id", "text")
+        ).distinct(),
+    )
     bench = (
         sh.filter(F.col("doc_id") < CONTAM_BENCH_MAX_ID).select("s").distinct()
     )
@@ -5671,38 +5689,22 @@ FROM bg JOIN tg ON bg.doc_id = tg.doc_id
 
 LM_ALPHA = 0.5  # add-alpha smoothing for the bigram LM
 
-# (app, sf_dir, tag) -> persisted intermediate tables (LM bigram counts,
-# contamination shingles); see
-# clear_caches(). Persisting is what makes the corpus tokenize/explode run
-# ONCE — the model tables (c12/c1/V) and the scoring join all re-read it.
-# CONTRACT: entries are keyed by (applicationId, sf_dir), NOT by lake
-# content — rewriting the lake at sf_dir within one Spark application
-# returns stale cached tables. Callers that mutate a lake in-app must call
-# clear_caches() first (entry() does this on teardown).
-_PERSIST_CACHE: dict[tuple[str, ...], DataFrame] = {}
-
-
 def _lm_per_doc_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # keyed on applicationId like _minhash_doc_tbl: a cached DataFrame bound
-    # to a stopped SparkContext must never be returned to a fresh session
-    key = (spark.sparkContext.applicationId, sf_dir, "lm_per")
-    cached = _PERSIST_CACHE.get(key)
-    if cached is not None:
-        return cached
-    d = fan_out(load(spark, sf_dir, "documents"))
-    w = F.split(F.col("text"), " ")
-    lhs = F.concat(F.array(F.lit("<s>")), w)
-    rhs = F.concat(w, F.array(F.lit("</s>")))
-    bg = d.select(
-        "doc_id",
-        F.explode(F.arrays_zip(lhs.alias("w1"), rhs.alias("w2"))).alias("b"),
-    ).select("doc_id", F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2"))
-    from pyspark import StorageLevel
+    """Per-doc bigram counts, persisted: the corpus tokenize/explode runs
+    ONCE — the model tables (c12/c1/V) and the scoring join all re-read it."""
 
-    per = bg.groupBy("doc_id", "w1", "w2").agg(F.count(F.lit(1)).alias("n"))
-    per = per.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSIST_CACHE[key] = per
-    return per
+    def build() -> DataFrame:
+        d = fan_out(load(spark, sf_dir, "documents"))
+        w = F.split(F.col("text"), " ")
+        lhs = F.concat(F.array(F.lit("<s>")), w)
+        rhs = F.concat(w, F.array(F.lit("</s>")))
+        bg = d.select(
+            "doc_id",
+            F.explode(F.arrays_zip(lhs.alias("w1"), rhs.alias("w2"))).alias("b"),
+        ).select("doc_id", F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2"))
+        return bg.groupBy("doc_id", "w1", "w2").agg(F.count(F.lit(1)).alias("n"))
+
+    return _persisted(spark, sf_dir, "lm_per", build)
 
 
 def lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -16193,13 +16195,12 @@ def clear_caches() -> None:
     """Unpersist and drop all cached tables (minhash doc tables, LM bigram
     tables) — bench hygiene: guarantees a timed run is cold and a long
     session doesn't accumulate executor storage."""
-    for cache in (_DOC_TBL_CACHE, _PERSIST_CACHE):
-        for tbl in cache.values():
-            try:
-                tbl.unpersist()
-            except Exception:
-                pass
-        cache.clear()
+    for _, tbl in _PERSISTED.values():
+        try:
+            tbl.unpersist()
+        except Exception:
+            pass
+    _PERSISTED.clear()
 
 
 def queries() -> dict:

@@ -4,11 +4,12 @@ driver checks rows-only).
 
 Registry ORDER is part of the driver contract: the correctness gate checks
 the first N (observed: 50) entries. Ordering is three tiers: (1) the
-``_WINDOW_PRIORITY`` names that are still never-driver-green, (2) all other
-never-green queries in module order, (3) queries with a green driver row in
-any recorded round, last — ordered stalest row first, so once everything is
-green the window becomes a rolling re-verification of the oldest evidence
-(full tail re-checked every ~ceil(N/50) rounds). Tier membership is
+never-driver-green queries in module order, (2) green queries whose source
+changed since their green row, stalest first, (3) the other queries with a
+green driver row in any recorded round, last — ordered stalest row first,
+so once everything is green the window becomes a rolling re-verification
+of the oldest evidence (full tail re-checked every ~ceil(N/50) rounds).
+Tier membership is
 computed from the driver's own
 CORRECTNESS_r*.json artifacts (``_driver_green``), so the window
 self-rotates: each round the freshly-greened queries fall to the tail and
@@ -23,15 +24,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
-
-# Hand-ordered names that jump the never-green tier (highest information per
-# window slot). DRAINED as of round 8: every name the round-4 list carried has
-# a green driver row (CORRECTNESS_r4–r7), so each was filtered out by the
-# ``name not in green`` guard below and the list was dead weight in the
-# rotation math — new queries already self-prioritize through the never-green
-# tier in module order. Re-populate only to hand-rank WITHIN that tier.
-_WINDOW_PRIORITY: tuple[str, ...] = ()
-
 
 # Queries whose implementation (or oracle) changed AFTER they last earned a
 # green driver row, mapped to the round the change landed in. A green row
@@ -217,9 +209,8 @@ def _driver_green_rounds() -> dict[str, int] | None:
     that green tail, oldest round FIRST, so in the all-green steady state the
     50-slot window re-verifies the 50 stalest rows each round and a silent
     regression anywhere in the tail is re-checked within ~ceil(228/50)
-    rounds. Anything the driver has never checked — including every query
-    added after _WINDOW_PRIORITY was written — sorts between the priority
-    block and this tail, in module order. Reading the artifacts (instead of a
+    rounds. Anything the driver has never checked sorts ahead of this
+    tail, in module order. Reading the artifacts (instead of a
     hand-maintained list) makes the rotation self-updating: each round the
     freshly-checked queries drop to the END of the tail and the stalest ones
     move up. A ``_FORCE_RECHECK`` name only counts as green from a row
@@ -344,14 +335,7 @@ def _window_order(d: dict[str, object]) -> dict[str, object]:
         if rounds is not None
         else _R1_GREEN - set(_FORCE_RECHECK)
     )
-    out = {
-        name: d[name]
-        for name in _WINDOW_PRIORITY
-        if name in d and name not in green
-    }
-    out.update(
-        {name: v for name, v in d.items() if name not in out and name not in green}
-    )
+    out = {name: v for name, v in d.items() if name not in green}
     # Green-but-source-changed block: green rows describing code that has
     # since changed jump the tail (stalest first), right after the
     # never-green queries — the git-aware recheck hook.

@@ -29,9 +29,22 @@ def _shuffle_partitions() -> str:
     )
 
 
+def _driver_memory() -> str:
+    """Driver heap: ``SPARK_GRAFT_DRIVER_MEM`` if set, else half the host's
+    physical memory, never above 64g. A heap sized past the host lets the
+    JVM grow instead of collecting until the kernel kills it."""
+    if os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):  # no sysconf: keep the cap
+        return "64g"
+    return f"{min(phys // 2, 64 << 30) >> 20}m"
+
+
 def get_spark(app_name: str = "air-traffic-engine") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 4)
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "64g")
+    driver_mem = _driver_memory()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

@@ -19,20 +19,10 @@ kill list is digest-sized. Nothing reprocesses old raw text.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .events_stream import Landing, fold_stream
-from .staging import Batches, stage_batches
-
-DOCS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("source", T.StringType()),
-        T.StructField("n_chars", T.LongType()),
-    ]
-)
+from .staging import Batches, replay
 
 JACCARD_MIN = 0.2  # same verify threshold as plans.llm.minhash_near_dup_pairs
 
@@ -101,8 +91,7 @@ def incremental_near_dup_survivors(spark: SparkSession, sf_dir: str) -> DataFram
             .select("doc_id", "lang", "n_chars")
         )
 
-    d = stage_batches(spark, sf_dir, *DOC_BATCHES)
-    return fold_stream(spark, d, DOCS_SCHEMA, on_batch, finish)
+    return fold_stream(replay(spark, sf_dir, DOC_BATCHES), on_batch, finish)
 
 
 def incremental_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -147,8 +136,7 @@ def incremental_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    d = stage_batches(spark, sf_dir, *DOC_BATCHES)
-    return fold_stream(spark, d, DOCS_SCHEMA, on_batch, finish)
+    return fold_stream(replay(spark, sf_dir, DOC_BATCHES), on_batch, finish)
 
 
 def incremental_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -203,17 +191,7 @@ def incremental_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return bm25_rank_from(st.landed("postings"), avgdl)
 
-    d = stage_batches(spark, sf_dir, *DOC_BATCHES)
-    return fold_stream(spark, d, DOCS_SCHEMA, on_batch, finish)
-
-
-EMB_SCHEMA = T.StructType(
-    [
-        T.StructField("vec_id", T.LongType()),
-        T.StructField("embedding", T.ArrayType(T.FloatType())),
-        T.StructField("label", T.IntegerType()),
-    ]
-)
+    return fold_stream(replay(spark, sf_dir, DOC_BATCHES), on_batch, finish)
 
 
 # vec_id % 3 classes arriving 1, 2, 0: a pair's higher id routinely
@@ -327,8 +305,7 @@ def incremental_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         kills = st.landed("kills").distinct()
         return e.join(kills, "vec_id", "left_anti").select("vec_id", "label")
 
-    d = stage_batches(spark, sf_dir, *EMB_BATCHES)
-    return fold_stream(spark, d, EMB_SCHEMA, on_batch, finish)
+    return fold_stream(replay(spark, sf_dir, EMB_BATCHES), on_batch, finish)
 
 
 def _winnow_store_flags(batch_df: DataFrame, st: Landing) -> None:
@@ -384,8 +361,7 @@ def incremental_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs = load(spark, sf_dir, "documents").select("doc_id", "text")
         return repeated_span_accounting(st.landed("flags").distinct(), docs)
 
-    d = stage_batches(spark, sf_dir, *DOC_BATCHES)
-    return fold_stream(spark, d, DOCS_SCHEMA, _winnow_store_flags, finish)
+    return fold_stream(replay(spark, sf_dir, DOC_BATCHES), _winnow_store_flags, finish)
 
 
 def incremental_cross_source(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -417,9 +393,7 @@ def incremental_cross_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         st.land("partials", partial)
 
     return fold_stream(
-        spark,
-        stage_batches(spark, sf_dir, *DOC_BATCHES),
-        DOCS_SCHEMA,
+        replay(spark, sf_dir, DOC_BATCHES),
         on_batch,
         lambda st: cross_source_matrix(st.landed("partials").distinct()),
     )
@@ -479,8 +453,7 @@ def incremental_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("ch.score") - F.col("rj.score"), 6).alias("margin"),
         ).filter(F.col("margin") > 0)
 
-    d = stage_batches(spark, sf_dir, *DOC_BATCHES)
-    return fold_stream(spark, d, DOCS_SCHEMA, on_batch, finish)
+    return fold_stream(replay(spark, sf_dir, DOC_BATCHES), on_batch, finish)
 
 
 def incremental_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -523,8 +496,7 @@ def incremental_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return token_budget_from_per_source(per)
 
-    d = stage_batches(spark, sf_dir, *DOC_BATCHES)
-    return fold_stream(spark, d, DOCS_SCHEMA, on_batch, finish)
+    return fold_stream(replay(spark, sf_dir, DOC_BATCHES), on_batch, finish)
 
 
 def _incremental_stateless(spark: SparkSession, sf_dir: str, score_batch) -> DataFrame:
@@ -538,9 +510,7 @@ def _incremental_stateless(spark: SparkSession, sf_dir: str, score_batch) -> Dat
     (token budget) -> distributive state + emission recompute (RFM) ->
     cross-batch store joins (repeated spans / semdedup)."""
     return fold_stream(
-        spark,
-        stage_batches(spark, sf_dir, *DOC_BATCHES),
-        DOCS_SCHEMA,
+        replay(spark, sf_dir, DOC_BATCHES),
         lambda b, st: st.land("partials", score_batch(b)),
         lambda st: st.landed("partials"),
     )
@@ -589,9 +559,7 @@ def incremental_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         st.land("scored", clf.join(gop, "doc_id"))
 
     return fold_stream(
-        spark,
-        stage_batches(spark, sf_dir, *DOC_BATCHES),
-        DOCS_SCHEMA,
+        replay(spark, sf_dir, DOC_BATCHES),
         on_batch,
         lambda st: calibration_from(st.landed("scored")),
     )
@@ -612,9 +580,7 @@ def incremental_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..plans.llm import lm_bigram_pairs, lm_kn_from_pairs
 
     return fold_stream(
-        spark,
-        stage_batches(spark, sf_dir, *DOC_BATCHES),
-        DOCS_SCHEMA,
+        replay(spark, sf_dir, DOC_BATCHES),
         lambda b, st: st.land("pairs", lm_bigram_pairs(b.select("doc_id", "text"))),
         lambda st: lm_kn_from_pairs(st.landed("pairs")),
     )
@@ -652,8 +618,7 @@ def incremental_heaps(spark: SparkSession, sf_dir: str) -> DataFrame:
         first = st.landed("first").groupBy("w").agg(F.min("fd").alias("fd"))
         return heaps_fit_from(st.landed("docs"), first)
 
-    d = stage_batches(spark, sf_dir, *DOC_BATCHES)
-    return fold_stream(spark, d, DOCS_SCHEMA, on_batch, finish)
+    return fold_stream(replay(spark, sf_dir, DOC_BATCHES), on_batch, finish)
 
 
 def incremental_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -696,8 +661,7 @@ def incremental_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return temperature_finish(merged)
 
-    d = stage_batches(spark, sf_dir, *DOC_BATCHES)
-    return fold_stream(spark, d, DOCS_SCHEMA, on_batch, finish)
+    return fold_stream(replay(spark, sf_dir, DOC_BATCHES), on_batch, finish)
 
 
 def incremental_doremi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -723,8 +687,7 @@ def incremental_doremi(spark: SparkSession, sf_dir: str) -> DataFrame:
         lm = lm_logprob_from_pairs(st.landed("pairs")).select("doc_id", "xent")
         return doremi_from(lm, st.landed("src"))
 
-    d = stage_batches(spark, sf_dir, *DOC_BATCHES)
-    return fold_stream(spark, d, DOCS_SCHEMA, on_batch, finish)
+    return fold_stream(replay(spark, sf_dir, DOC_BATCHES), on_batch, finish)
 
 
 def incremental_pretrain_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -826,8 +789,7 @@ def incremental_pretrain_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame
             surv.select("doc_id", "lang", F.col("n_words").alias("n_tok"))
         )
 
-    d = stage_batches(spark, sf_dir, *DOC_BATCHES)
-    return fold_stream(spark, d, DOCS_SCHEMA, on_batch, finish)
+    return fold_stream(replay(spark, sf_dir, DOC_BATCHES), on_batch, finish)
 
 
 def incremental_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -853,9 +815,7 @@ def incremental_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
         st.land("qtok", qtok)
 
     return fold_stream(
-        spark,
-        stage_batches(spark, sf_dir, *DOC_BATCHES),
-        DOCS_SCHEMA,
+        replay(spark, sf_dir, DOC_BATCHES),
         on_batch,
         lambda st: nb_confusion_from_partials(
             st.landed("cnt"), st.landed("cls"), st.landed("qtok")
@@ -879,9 +839,7 @@ def incremental_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
         st.land("nd", nd)
 
     return fold_stream(
-        spark,
-        stage_batches(spark, sf_dir, *DOC_BATCHES),
-        DOCS_SCHEMA,
+        replay(spark, sf_dir, DOC_BATCHES),
         on_batch,
         lambda st: burstiness_from_partials(st.landed("voc"), st.landed("nd")),
     )
@@ -898,9 +856,7 @@ def incremental_jsd(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..plans.llm import jsd_from_counts, jsd_token_partial
 
     return fold_stream(
-        spark,
-        stage_batches(spark, sf_dir, *DOC_BATCHES),
-        DOCS_SCHEMA,
+        replay(spark, sf_dir, DOC_BATCHES),
         lambda b, st: st.land("counts", jsd_token_partial(b.select("source", "text"))),
         lambda st: jsd_from_counts(st.landed("counts")),
     )
@@ -993,9 +949,7 @@ def incremental_srp_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         st.land("pairs", verified)
 
     return fold_stream(
-        spark,
-        stage_batches(spark, sf_dir, *DOC_BATCHES),
-        DOCS_SCHEMA,
+        replay(spark, sf_dir, DOC_BATCHES),
         on_batch,
         lambda st: st.landed("pairs").distinct().orderBy("doc_a", "doc_b"),
     )
@@ -1036,8 +990,7 @@ def incremental_isotonic(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return isotonic_from_bins(merged)
 
-    d = stage_batches(spark, sf_dir, *DOC_BATCHES)
-    return fold_stream(spark, d, DOCS_SCHEMA, on_batch, finish)
+    return fold_stream(replay(spark, sf_dir, DOC_BATCHES), on_batch, finish)
 
 
 def incremental_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1090,9 +1043,7 @@ def incremental_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return fold_stream(
-        spark,
-        stage_batches(spark, sf_dir, *DOC_BATCHES),
-        DOCS_SCHEMA,
+        replay(spark, sf_dir, DOC_BATCHES),
         lambda b, st: st.land(
             "topk", _batch_topk(b.select("doc_id", "source", "n_chars"))
         ),
@@ -1131,16 +1082,6 @@ PRIO_RETRACT_RES = 3
 # the BATCH COUNT (not the corpus) is what would require resizing, at
 # ~(K+B)/14 per extra mutable epoch.
 PRIO_RETRACT_B = 20
-
-DOCS_RETRACT_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("source", T.StringType()),
-        T.StructField("n_chars", T.LongType()),
-        T.StructField("sign", T.IntegerType()),
-    ]
-)
-
 
 # EARLY tombstones exercise the pending-tombstone path, LATE ones the
 # frontier-erosion path
@@ -1307,8 +1248,7 @@ def incremental_priority_sample_retract(
             .orderBy("source", "rank")
         )
 
-    d = stage_batches(spark, sf_dir, *PRIO_RETRACT_BATCHES)
-    return fold_stream(spark, d, DOCS_RETRACT_SCHEMA, on_batch, finish)
+    return fold_stream(replay(spark, sf_dir, PRIO_RETRACT_BATCHES), on_batch, finish)
 
 
 # ---------------------------------------------------------------------------
@@ -1316,17 +1256,6 @@ def incremental_priority_sample_retract(
 # stack itself — the GDPR-shaped requirement that deleting a document also
 # updates DEDUP state, because a deleted survivor's kill decisions must
 # not outlive it.
-
-DOCS_ND_RETRACT_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("n_chars", T.LongType()),
-        T.StructField("sign", T.IntegerType()),
-    ]
-)
-
 
 # the priority mirror's source-uniform deletion set: EARLY tombstones
 # exercise the never-ingest path, LATE ones the kill-then-void path
@@ -1506,8 +1435,7 @@ def incremental_near_dup_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", "lang", "n_chars"
         )
 
-    d = stage_batches(spark, sf_dir, *ND_RETRACT_BATCHES)
-    return fold_stream(spark, d, DOCS_ND_RETRACT_SCHEMA, on_batch, finish)
+    return fold_stream(replay(spark, sf_dir, ND_RETRACT_BATCHES), on_batch, finish)
 
 
 def incremental_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1527,9 +1455,7 @@ def incremental_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..plans.llm import dsir_feats, dsir_from_feats
 
     return fold_stream(
-        spark,
-        stage_batches(spark, sf_dir, *DOC_BATCHES),
-        DOCS_SCHEMA,
+        replay(spark, sf_dir, DOC_BATCHES),
         lambda b, st: st.land(
             "feats", dsir_feats(b.select("doc_id", "source", "text"))
         ),
@@ -1612,23 +1538,13 @@ def incremental_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         v = nsw_prep(load(spark, sf_dir, "embeddings"), EMB_DIM)
         return nsw_finish(st.latest("fwd"), v)
 
-    d = stage_batches(spark, sf_dir, *EMB_BATCHES)
-    return fold_stream(spark, d, EMB_SCHEMA, on_batch, finish)
+    return fold_stream(replay(spark, sf_dir, EMB_BATCHES), on_batch, finish)
 
 # ---------------------------------------------------------------------------
 # Retraction-aware ANN-graph maintenance (round 13): vector UN-ingestion
 # for the similarity index itself — deleting an embedding must also repair
 # the NSW graph, because a deleted vector's edges must not outlive it and
 # the neighbors it crowded out of a degree cap must be RE-ELECTED.
-
-EMB_RETRACT_SCHEMA = T.StructType(
-    [
-        T.StructField("vec_id", T.LongType()),
-        T.StructField("embedding", T.ArrayType(T.FloatType())),
-        T.StructField("label", T.IntegerType()),
-        T.StructField("sign", T.IntegerType()),
-    ]
-)
 
 ANN_COMPACT_EVERY = 2  # fold the pair/vector state every N epochs
 
@@ -1732,5 +1648,4 @@ def incremental_ann_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
         v = nsw_prep(surviving, EMB_DIM)
         return nsw_finish(fwd_top_m(pairs), v)
 
-    d = stage_batches(spark, sf_dir, *EMB_RETRACT_BATCHES)
-    return fold_stream(spark, d, EMB_RETRACT_SCHEMA, on_batch, finish)
+    return fold_stream(replay(spark, sf_dir, EMB_RETRACT_BATCHES), on_batch, finish)

@@ -18,23 +18,12 @@ from __future__ import annotations
 
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..plans.relational import RETRACT_MOD, RETRACT_RES
 from ..plans.tables import load
 from ..session import tune_session
-from .staging import Batches, stage_batches
-
-EVENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.LongType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
-)
+from .staging import Batches, replay
 
 EVENTS_BATCHES = Batches("events", None, ("whole", ()))
 # the watermark replay; its newest-first order also proves the order-free
@@ -87,17 +76,14 @@ class Landing:
         return self.spark.read.parquet(f"{p}/batch={max(eps)}") if eps else None
 
 
-def fold_stream(
-    spark: SparkSession, stage_dir: str, schema: T.StructType, on_batch, finish
-) -> DataFrame:
-    """Replay ``stage_dir`` as a maxFilesPerTrigger=1 parquet file stream
-    into ``on_batch(batch_df, landing)`` (one call per micro-batch, with
-    ``landing.epoch`` set), then return ``finish(landing)`` materialized by
-    a tracked local checkpoint — the one lifecycle of every incremental
-    materialized view.
+def fold_stream(stream: DataFrame, on_batch, finish) -> DataFrame:
+    """Run ``stream`` (a ``staging.replay``) into ``on_batch(batch_df,
+    landing)`` (one call per micro-batch, with ``landing.epoch`` set), then
+    return ``finish(landing)`` materialized by a tracked local checkpoint —
+    the one lifecycle of every incremental materialized view.
 
-    The landing dir is unique per call and sits next to ``stage_dir``, not
-    under it (the file source lists its dir recursively). The stream's
+    The landing dir is a fresh temporary dir of its own, never under a
+    stage dir (the file source lists its dir recursively). The stream's
     checkpoint lives inside it, and it is removed on every exit path, so a
     returned result never depends on files a later call deletes and a
     failed run leaves nothing behind.
@@ -108,11 +94,13 @@ def fold_stream(
     post-shuffle stages are coalesced like any batch query's."""
     import math
     import shutil
+    import tempfile
 
     from ..operators.checkpoints import tracked_local_checkpoint
 
+    spark = stream.sparkSession
     tune_session(spark)
-    st = Landing(spark, f"{stage_dir.rstrip('/')}_fold_{uuid.uuid4().hex[:8]}")
+    st = Landing(spark, tempfile.mkdtemp(prefix="spark_graft_fold_"))
 
     def _batch(batch_df: DataFrame, epoch_id: int) -> None:
         st.epoch = epoch_id
@@ -120,11 +108,7 @@ def fold_stream(
 
     try:
         q = (
-            spark.readStream.schema(schema)
-            .format("parquet")
-            .option("maxFilesPerTrigger", "1")
-            .load(stage_dir)
-            .writeStream.foreachBatch(_batch)
+            stream.writeStream.foreachBatch(_batch)
             .option("checkpointLocation", st.path("_checkpoint"))
             .start()
         )
@@ -140,12 +124,7 @@ def fold_stream(
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune_session(spark)
-    return (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .format("parquet")
-        .load(stage_batches(spark, sf_dir, *EVENTS_BATCHES))
-    )
+    return replay(spark, sf_dir, EVENTS_BATCHES)
 
 
 def with_event_time(df: DataFrame) -> DataFrame:
@@ -231,14 +210,7 @@ def late_data_drop_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     <= final watermark). Both effects are deterministic given the staged
     order, so the result is value-checked against a batch oracle that
     replays the same watermark algebra."""
-    tune_session(spark)
-    d = stage_batches(spark, sf_dir, *LATE_BATCHES)
-    src = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(d)
-    )
+    src = replay(spark, sf_dir, LATE_BATCHES)
     ev = with_event_time(src).withWatermark("event_time", "1 hour")
     agg = ev.groupBy(F.window("event_time", "1 hour")).agg(
         F.count(F.lit(1)).alias("n"),
@@ -275,14 +247,7 @@ def watermarked_dedup_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     still runs the watermark-scoped stateful operator. At scale the same
     plan holds with a horizon-sized delay (state ∝ keys per horizon).
     """
-    tune_session(spark)
-    d = stage_batches(spark, sf_dir, *LATE_BATCHES)
-    src = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(d)
-    )
+    src = replay(spark, sf_dir, LATE_BATCHES)
     ev = with_event_time(src).withWatermark("event_time", "35 days")
     deduped = ev.dropDuplicatesWithinWatermark(["user_id", "event_type"])
     agg = deduped.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_users"))
@@ -323,9 +288,7 @@ def foreach_batch_last_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return fold_stream(
-        spark,
-        stage_batches(spark, sf_dir, *LATE_BATCHES),
-        EVENTS_SCHEMA,
+        replay(spark, sf_dir, LATE_BATCHES),
         lambda b, st: st.land("events", b),
         finish,
     )
@@ -597,8 +560,7 @@ def incremental_cms_user_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("cms_est") - F.col("exact_freq")).alias("overcount"),
         )
 
-    d = stage_batches(spark, sf_dir, *LATE_BATCHES)
-    return fold_stream(spark, d, EVENTS_SCHEMA, on_batch, finish)
+    return fold_stream(replay(spark, sf_dir, LATE_BATCHES), on_batch, finish)
 
 
 def incremental_topk_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -645,8 +607,7 @@ def incremental_topk_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    d = stage_batches(spark, sf_dir, *LATE_BATCHES)
-    return fold_stream(spark, d, EVENTS_SCHEMA, on_batch, finish)
+    return fold_stream(replay(spark, sf_dir, LATE_BATCHES), on_batch, finish)
 
 
 QUANT_BIN_WIDTH = 5.0
@@ -724,8 +685,7 @@ def incremental_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             out = out.unionByName(r)
         return out
 
-    d = stage_batches(spark, sf_dir, *LATE_BATCHES)
-    return fold_stream(spark, d, EVENTS_SCHEMA, on_batch, finish)
+    return fold_stream(replay(spark, sf_dir, LATE_BATCHES), on_batch, finish)
 
 
 def incremental_quantile_value(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -782,8 +742,7 @@ def incremental_quantile_value(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    d = stage_batches(spark, sf_dir, *LATE_BATCHES)
-    return fold_stream(spark, d, EVENTS_SCHEMA, on_batch, finish)
+    return fold_stream(replay(spark, sf_dir, LATE_BATCHES), on_batch, finish)
 
 
 def markov_batch_partial(
@@ -892,8 +851,7 @@ def incremental_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return markov_stationary_from_counts(c0, st.landed("types").distinct())
 
-    d = stage_batches(spark, sf_dir, *TIME_BATCHES)
-    return fold_stream(spark, d, EVENTS_SCHEMA, on_batch, finish)
+    return fold_stream(replay(spark, sf_dir, TIME_BATCHES), on_batch, finish)
 
 
 # ---------------------------------------------------------------------------
@@ -925,17 +883,6 @@ MARKOV_RETRACT_BATCHES = Batches(
 # (src, dst) counts and the rows leave the buffer — so state is
 # W·arrival-rate-bounded, not stream-length-bounded.
 MARKOV_RETRACT_W_NS = 12 * 24 * 3600 * 1_000_000_000
-
-MARKOV_RETRACT_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("ts", T.LongType()),
-        T.StructField("event_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("sign", T.IntegerType()),
-    ]
-)
-
 
 def markov_retract_freeze(
     merged: DataFrame, prev_lastfin: DataFrame | None, frontier_ns: int
@@ -1057,5 +1004,4 @@ def incremental_markov_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return markov_stationary_from_counts(c0, states)
 
-    d = stage_batches(spark, sf_dir, *MARKOV_RETRACT_BATCHES)
-    return fold_stream(spark, d, MARKOV_RETRACT_SCHEMA, on_batch, finish)
+    return fold_stream(replay(spark, sf_dir, MARKOV_RETRACT_BATCHES), on_batch, finish)

@@ -31,11 +31,11 @@ boundaries; that tradeoff is documented here and deliberately not taken.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..plans.relational import RETRACT_MOD, RETRACT_RES
 from .events_stream import Landing, fold_stream
-from .staging import Batches, stage_batches
+from .staging import Batches, replay
 
 
 def _int_count_guarded(c_big):
@@ -51,18 +51,6 @@ def _int_count_guarded(c_big):
             )
         ).cast("int")
     )
-
-
-ORDERS_SCHEMA = T.StructType(
-    [
-        T.StructField("o_orderkey", T.LongType()),
-        T.StructField("o_custkey", T.LongType()),
-        T.StructField("o_orderstatus", T.StringType()),
-        T.StructField("o_totalprice", T.DoubleType()),
-        T.StructField("o_orderdate", T.TimestampType()),
-        T.StructField("o_orderpriority", T.StringType()),
-    ]
-)
 
 
 # the adversarial-order pytest re-runs the merge on shuffled partials
@@ -111,9 +99,7 @@ def incremental_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..plans.relational import rfm_from_per_customer
 
     return fold_stream(
-        spark,
-        stage_batches(spark, sf_dir, *ORDER_BATCHES),
-        ORDERS_SCHEMA,
+        replay(spark, sf_dir, ORDER_BATCHES),
         lambda b, st: st.land("partials", rfm_partial(b)),
         lambda st: rfm_from_per_customer(rfm_merge_partials(st.landed("partials"))),
     )
@@ -167,14 +153,6 @@ def rfm_from_per_customer_partials_check(
     return rfm_from_per_customer(per)
 
 
-LINEITEM_PAIR_SCHEMA = T.StructType(
-    [
-        T.StructField("l_orderkey", T.LongType()),
-        T.StructField("l_partkey", T.LongType()),
-    ]
-)
-
-
 LINEITEM_BATCHES = Batches(
     "lineitem", ("l_orderkey", "l_partkey"), ("key_terciles", ("l_orderkey",))
 )
@@ -201,9 +179,7 @@ def _incremental_from_pair_state(spark: SparkSession, sf_dir: str, kernel) -> Da
         )
 
     return fold_stream(
-        spark,
-        stage_batches(spark, sf_dir, *LINEITEM_BATCHES),
-        LINEITEM_PAIR_SCHEMA,
+        replay(spark, sf_dir, LINEITEM_BATCHES),
         lambda b, st: st.land("pairs", copurchase_pairs(b)),
         finish,
     )
@@ -261,8 +237,7 @@ def incremental_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return quantile_sketch_from(xs)
 
-    d = stage_batches(spark, sf_dir, *ORDER_BATCHES)
-    return fold_stream(spark, d, ORDERS_SCHEMA, on_batch, finish)
+    return fold_stream(replay(spark, sf_dir, ORDER_BATCHES), on_batch, finish)
 
 
 def incremental_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -329,12 +304,6 @@ def incremental_core_numbers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _incremental_from_pair_state(spark, sf_dir, core_numbers_from_pairs)
 
 
-RETRACT_SCHEMA = T.StructType(
-    [
-        T.StructField("o_totalprice", T.DoubleType()),
-        T.StructField("sign", T.IntegerType()),
-    ]
-)
 _ORDER_CANCEL = ("cancel", ("o_orderkey",), RETRACT_MOD, RETRACT_RES)
 ORDERS_RETRACT_BATCHES = Batches("orders", ("o_totalprice",), _ORDER_CANCEL)
 
@@ -483,18 +452,9 @@ def incremental_quantile_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return quantile_sketch_from(xs)
 
-    d = stage_batches(spark, sf_dir, *ORDERS_RETRACT_BATCHES)
-    return fold_stream(spark, d, RETRACT_SCHEMA, on_batch, finish)
+    return fold_stream(replay(spark, sf_dir, ORDERS_RETRACT_BATCHES), on_batch, finish)
 
 
-RFM_RETRACT_SCHEMA = T.StructType(
-    [
-        T.StructField("o_custkey", T.LongType()),
-        T.StructField("o_orderdate", T.TimestampType()),
-        T.StructField("o_totalprice", T.DoubleType()),
-        T.StructField("sign", T.IntegerType()),
-    ]
-)
 RFM_RETRACT_BATCHES = Batches(
     "orders", ("o_custkey", "o_orderdate", "o_totalprice"), _ORDER_CANCEL
 )
@@ -553,19 +513,7 @@ def incremental_rfm_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return rfm_from_per_customer(per)
 
-    d = stage_batches(spark, sf_dir, *RFM_RETRACT_BATCHES)
-    return fold_stream(spark, d, RFM_RETRACT_SCHEMA, on_batch, finish)
-
-
-LINEITEM_OLS_SCHEMA = T.StructType(
-    [
-        T.StructField("l_orderkey", T.LongType()),
-        T.StructField("l_returnflag", T.StringType()),
-        T.StructField("l_quantity", T.DoubleType()),
-        T.StructField("l_discount", T.DoubleType()),
-        T.StructField("l_extendedprice", T.DoubleType()),
-    ]
-)
+    return fold_stream(replay(spark, sf_dir, RFM_RETRACT_BATCHES), on_batch, finish)
 
 
 LINEITEM_OLS_BATCHES = Batches(
@@ -623,23 +571,10 @@ def incremental_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
         return ols_solve_from_moments(merged)
 
     return fold_stream(
-        spark,
-        stage_batches(spark, sf_dir, *LINEITEM_OLS_BATCHES),
-        LINEITEM_OLS_SCHEMA,
+        replay(spark, sf_dir, LINEITEM_OLS_BATCHES),
         lambda b, st: st.land("moments", _moments(b)),
         finish,
     )
-
-
-LINEITEM_BOOT_SCHEMA = T.StructType(
-    [
-        T.StructField("l_orderkey", T.LongType()),
-        T.StructField("l_linenumber", T.IntegerType()),
-        T.StructField("l_returnflag", T.StringType()),
-        T.StructField("l_discount", T.DoubleType()),
-        T.StructField("l_extendedprice", T.DoubleType()),
-    ]
-)
 
 
 # l_linenumber: the pseudo-Poisson draws hash the full row identity
@@ -676,9 +611,7 @@ def incremental_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
         st.land("reps", boot_rep_partial(li))
 
     return fold_stream(
-        spark,
-        stage_batches(spark, sf_dir, *LINEITEM_BOOT_BATCHES),
-        LINEITEM_BOOT_SCHEMA,
+        replay(spark, sf_dir, LINEITEM_BOOT_BATCHES),
         on_batch,
         lambda st: bootstrap_ci_from_partials(st.landed("exact"), st.landed("reps")),
     )
@@ -706,9 +639,7 @@ def incremental_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return fold_stream(
-        spark,
-        stage_batches(spark, sf_dir, *LINEITEM_BATCHES),
-        LINEITEM_PAIR_SCHEMA,
+        replay(spark, sf_dir, LINEITEM_BATCHES),
         on_batch,
         lambda st: kmv_from_values(st.landed("kmins")),
     )
@@ -727,15 +658,6 @@ def incremental_two_hop_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..plans.relational import two_hop_from_pairs
 
     return _incremental_from_pair_state(spark, sf_dir, two_hop_from_pairs)
-
-
-LINEITEM_RETRACT_SCHEMA = T.StructType(
-    [
-        T.StructField("l_orderkey", T.LongType()),
-        T.StructField("l_partkey", T.LongType()),
-        T.StructField("sign", T.IntegerType()),
-    ]
-)
 
 
 # order-atomic, so per-batch SIGNED pair partials are exact
@@ -795,8 +717,9 @@ def incremental_shortest_path_retract(spark: SparkSession, sf_dir: str) -> DataF
         )
         return shortest_path_from_pairs(net)
 
-    d = stage_batches(spark, sf_dir, *LINEITEM_RETRACT_BATCHES)
-    return fold_stream(spark, d, LINEITEM_RETRACT_SCHEMA, on_batch, finish)
+    return fold_stream(
+        replay(spark, sf_dir, LINEITEM_RETRACT_BATCHES), on_batch, finish
+    )
 
 
 def _incremental_from_daily_state(
@@ -825,9 +748,7 @@ def _incremental_from_daily_state(
         )
 
     return fold_stream(
-        spark,
-        stage_batches(spark, sf_dir, *ORDER_BATCHES),
-        ORDERS_SCHEMA,
+        replay(spark, sf_dir, ORDER_BATCHES),
         lambda b, st: st.land("daily", daily_revenue_partial(b)),
         finish,
     )
@@ -914,9 +835,7 @@ def incremental_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return fold_stream(
-        spark,
-        stage_batches(spark, sf_dir, *ORDER_BATCHES),
-        ORDERS_SCHEMA,
+        replay(spark, sf_dir, ORDER_BATCHES),
         lambda b, st: st.land("per_cust", customer_cents_partial(b)),
         finish,
     )
@@ -934,9 +853,7 @@ def incremental_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..plans.relational import km_from_spans, km_span_partial
 
     return fold_stream(
-        spark,
-        stage_batches(spark, sf_dir, *ORDER_BATCHES),
-        ORDERS_SCHEMA,
+        replay(spark, sf_dir, ORDER_BATCHES),
         lambda b, st: st.land("spans", km_span_partial(b)),
         lambda st: km_from_spans(st.landed("spans")),
     )
@@ -953,13 +870,6 @@ def incremental_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _incremental_from_daily_state(spark, sf_dir, kendall_from_daily)
 
 
-SEAS_RETRACT_SCHEMA = T.StructType(
-    [
-        T.StructField("o_totalprice", T.DoubleType()),
-        T.StructField("o_orderdate", T.TimestampType()),
-        T.StructField("sign", T.IntegerType()),
-    ]
-)
 SEAS_RETRACT_BATCHES = Batches("orders", ("o_totalprice", "o_orderdate"), _ORDER_CANCEL)
 
 
@@ -1033,8 +943,7 @@ def incremental_seasonal_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return seasonal_from_daily(merged.select("dn", "cents"))
 
-    d = stage_batches(spark, sf_dir, *SEAS_RETRACT_BATCHES)
-    return fold_stream(spark, d, SEAS_RETRACT_SCHEMA, on_batch, finish)
+    return fold_stream(replay(spark, sf_dir, SEAS_RETRACT_BATCHES), on_batch, finish)
 
 
 def _incremental_from_seg_daily_state(
@@ -1093,8 +1002,7 @@ def _incremental_from_seg_daily_state(
         merged, _ = tracked_local_checkpoint(merged)
         return kernel(merged)
 
-    d = stage_batches(spark, sf_dir, *ORDER_BATCHES)
-    return fold_stream(spark, d, ORDERS_SCHEMA, on_batch, finish)
+    return fold_stream(replay(spark, sf_dir, ORDER_BATCHES), on_batch, finish)
 
 
 def incremental_theil_sen_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -5,8 +5,9 @@ A mirror streams a ``Batches`` spec: the ``cols`` projection of one lake
 table (every column when None), cut by a ``split`` — a ``(kind, key,
 *args)`` tuple naming one of the split kinds below, ``key`` being the
 total order (or key column) it cuts on. ``stage_batches`` writes the
-batches with ascending mtimes in file-name order, so a maxFilesPerTrigger=1
-parquet file stream replays them as micro-batches in exactly that order.
+batches with ascending mtimes in file-name order, and ``replay`` returns
+the maxFilesPerTrigger=1 parquet file stream that replays them as
+micro-batches in exactly that order, typed from the lake table's schema.
 
 The stage dir is keyed on the table's files (``plans.tables._fingerprint``,
 the table identity the schema cache uses) and on the spec, not on the
@@ -27,7 +28,11 @@ import uuid
 from functools import reduce
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
+
+from ..operators.checkpoints import release, tracked_local_checkpoint
+from ..plans.tables import _fingerprint, load
+from ..session import tune_session
 
 # staging root; bump the version suffix when the staged representation
 # changes (v2 = ts canonicalized to int64 epoch nanos at stage time; v3 =
@@ -36,22 +41,46 @@ _STAGE_ROOT = "/tmp/spark_graft_stream_v3"
 
 
 class Batches(NamedTuple):
-    """What one mirror streams: ``stage_batches(spark, sf_dir, *spec)``."""
+    """What one mirror streams: ``replay(spark, sf_dir, spec)``."""
 
     table: str
     cols: tuple[str, ...] | None
     split: tuple
 
 
-def _slices(df: DataFrame, key: tuple[str, ...], bounds) -> list[DataFrame]:
-    """Rows of ``df`` ranked on the total order ``key`` (1-based), one
-    slice per (lo, hi] rank range of ``bounds``."""
+class _Source:
+    """One staging call's projection ``df`` and the total order (or key
+    column) ``key`` its split cuts on. ``ranked`` runs the global
+    single-partition sort at most once, into a tracked checkpoint that the
+    row count and every slice read; ``release`` frees it after the
+    writes."""
+
+    def __init__(self, df: DataFrame, key: tuple[str, ...]) -> None:
+        self.df, self.key = df, key
+        self._ranked: tuple[DataFrame, int, set[int]] | None = None
+
+    def ranked(self) -> tuple[DataFrame, int]:
+        """``df`` with its 1-based rank on ``key`` as ``rn``, and its rows."""
+        if self._ranked is None:
+            w = Window.orderBy(*self.key)
+            out, ids = tracked_local_checkpoint(
+                self.df.withColumn("rn", F.row_number().over(w))
+            )
+            self._ranked = out, out.count(), ids
+        return self._ranked[:2]
+
+    def release(self) -> None:
+        if self._ranked is not None:
+            release(self.df.sparkSession, self._ranked[2])
+
+
+def _cut(ranked: DataFrame, bounds) -> list[DataFrame]:
+    """One slice of ``ranked`` per (lo, hi] rank range of ``bounds``."""
     rn = F.col("rn")
-    ranked = df.withColumn("rn", F.row_number().over(Window.orderBy(*key)))
     return [ranked.filter((rn > lo) & (rn <= hi)).drop("rn") for lo, hi in bounds]
 
 
-def _rank(df: DataFrame, key: tuple[str, ...], n: int = 3) -> list[DataFrame]:
+def _rank(src: _Source, n: int = 3) -> list[DataFrame]:
     """``n`` slices of the GLOBAL ``key`` order, cut at ⌊i·rows/n⌋: every
     row of batch i+1 sorts strictly after every row of batch i. In the doc
     and order terciles, id-ordered arrival makes every a<b pair land in b's
@@ -60,12 +89,12 @@ def _rank(df: DataFrame, key: tuple[str, ...], n: int = 3) -> list[DataFrame]:
     per-user LAST event) only merges correctly when batches arrive in
     event-time order — the opposite of ``_late``, which replays
     newest-first to prove order-freeness."""
-    rows = df.count()
+    ranked, rows = src.ranked()
     cuts = [i * rows // n for i in range(n + 1)]
-    return _slices(df, key, zip(cuts, cuts[1:]))
+    return _cut(ranked, zip(cuts, cuts[1:]))
 
 
-def _late(df: DataFrame, key: tuple[str, ...]) -> list[DataFrame]:
+def _late(src: _Source) -> list[DataFrame]:
     """Three batches for watermark semantics, on the ``key`` order:
 
       01 — the newer half MINUS the single globally-newest row,
@@ -80,12 +109,12 @@ def _late(df: DataFrame, key: tuple[str, ...]) -> list[DataFrame]:
     batch 03 is fully dropped under BOTH the documented semantics and the
     observed lagged one — keeping the oracle deterministic. Batch 02's own
     row can never be late: its window ends above every candidate watermark."""
-    rows = df.count()
+    ranked, rows = src.ranked()
     half = rows // 2
-    return _slices(df, key, [(half, rows - 1), (rows - 1, rows), (0, half)])
+    return _cut(ranked, [(half, rows - 1), (rows - 1, rows), (0, half)])
 
 
-def _key_terciles(df: DataFrame, key: tuple[str, ...]) -> list[DataFrame]:
+def _key_terciles(src: _Source) -> list[DataFrame]:
     """Terciles of the distinct ``key[0]`` values. The cut points come from
     approxQuantile (relativeError=0 → exact, computed distributed): TWO
     scalars reach the driver instead of every distinct key. ORDER-ATOMIC:
@@ -93,26 +122,26 @@ def _key_terciles(df: DataFrame, key: tuple[str, ...]) -> list[DataFrame]:
     straddle a batch — the transactional unit a lineitem source actually
     emits, and the property that makes per-batch co-purchase pair counting
     exact."""
-    k = F.col(key[0])
-    lo, hi = df.select(k).distinct().approxQuantile(key[0], [1 / 3, 2 / 3], 0.0)
+    df, k = src.df, F.col(src.key[0])
+    lo, hi = df.select(k).distinct().approxQuantile(src.key[0], [1 / 3, 2 / 3], 0.0)
     return [df.filter(k <= lo), df.filter((k > lo) & (k <= hi)), df.filter(k > hi)]
 
 
-def _mod3(df: DataFrame, key: tuple[str, ...]) -> list[DataFrame]:
+def _mod3(src: _Source) -> list[DataFrame]:
     """Three batches by ``key[0]`` MODULO 3, arriving 1, 2, 0 —
     deliberately NOT id-ordered, so a pair's higher id routinely arrives
     before its lower id and the kill logic must be arrival-order
     independent (the pytest and oracle would catch a second-member-only
     formulation)."""
-    return [df.filter(F.col(key[0]) % 3 == m) for m in (1, 2, 0)]
+    return [src.df.filter(F.col(src.key[0]) % 3 == m) for m in (1, 2, 0)]
 
 
-def _whole(df: DataFrame, key: tuple[str, ...]) -> list[DataFrame]:
+def _whole(src: _Source) -> list[DataFrame]:
     """The whole table as one file: the parquet file-stream source needs a
     directory. For events the staged copy IS the canonical form (ts as
     int64 epoch nanos), so the stream schema is stable whatever the lake's
     physical ts type."""
-    return [df]
+    return [src.df]
 
 
 def _signed(df: DataFrame, sign: int) -> DataFrame:
@@ -120,7 +149,7 @@ def _signed(df: DataFrame, sign: int) -> DataFrame:
 
 
 def _cancel(
-    df: DataFrame, key: tuple[str, ...], mod: int, res: int, terciles: str = "rank"
+    src: _Source, mod: int, res: int, terciles: str = "rank"
 ) -> list[DataFrame]:
     """Four batches: the three ``terciles`` slices as +1 INSERT rows plus
     a CANCELLATIONS batch carrying the same rows at sign -1 for every row
@@ -128,14 +157,12 @@ def _cancel(
     retractions arrive BEFORE the inserts they cancel (transient negative
     net counts mid-stream: the adversarial schedule a signed-sum state
     must shrug off)."""
-    lo, mid, hi = (_signed(s, 1) for s in _SPLITS[terciles](df, key))
-    cancel = _signed(df.filter(F.col(key[0]) % mod == res), -1)
+    lo, mid, hi = (_signed(s, 1) for s in _SPLITS[terciles](src))
+    cancel = _signed(src.df.filter(F.col(src.key[0]) % mod == res), -1)
     return [lo, cancel, mid, hi]
 
 
-def _adversarial(
-    df: DataFrame, key: tuple[str, ...], n: int, mod: int, res: int
-) -> list[DataFrame]:
+def _adversarial(src: _Source, n: int, mod: int, res: int) -> list[DataFrame]:
     """The shared adversarial-tombstone schedule of the retraction mirrors
     (markov / priority-sample / near-dup / ANN): ``n`` row-count slices of
     the ``key`` order, cut at the nearest row to i·rows/n, as +1 inserts;
@@ -143,10 +170,10 @@ def _adversarial(
     scheduled by parity of (id DIV mod) — EVEN one batch EARLY
     (delete-before-insert), ODD one batch LATE (delete-after-insert);
     boundary slices fold their edge tombstones into their own batch."""
-    rows = df.count()
+    ranked, rows = src.ranked()
     cuts = [round(i * rows / n) for i in range(n + 1)]
-    slices = _slices(df, key, zip(cuts, cuts[1:]))
-    ident = F.col(key[-1])
+    slices = _cut(ranked, zip(cuts, cuts[1:]))
+    ident = F.col(src.key[-1])
 
     def tomb(s: DataFrame, early: bool) -> DataFrame:
         parity = (ident / mod).cast("bigint") % 2
@@ -167,6 +194,9 @@ def _adversarial(
         out.append(reduce(DataFrame.unionByName, parts))
     return out
 
+
+# the split kinds whose batches carry a ``sign`` column
+_SIGNED = ("cancel", "adversarial")
 
 _SPLITS = {
     "rank": _rank,
@@ -209,10 +239,8 @@ def stage_batches(
     split), the content digests the table's file fingerprint. An existing
     content dir is reused; staging writes into a scratch dir renamed into
     place, so a content dir that exists is complete. Every other content
-    dir of the slot is removed; the ``*_fold_*`` landing dirs that
-    ``fold_stream`` keeps beside a stage dir are left alone."""
-    from ..plans.tables import _fingerprint, load
-
+    dir of the slot is removed."""
+    tune_session(spark)
     kind, key, *args = split
     slot = f"{_STAGE_ROOT}/{_digest((sf_dir, table, cols, split))}"
     fp = _fingerprint(spark, f"{sf_dir}/{table}.parquet")
@@ -221,18 +249,46 @@ def stage_batches(
         df = load(spark, sf_dir, table)
         if cols is not None:
             df = df.select(*dict.fromkeys((*key, *cols)))
+        src = _Source(df, key)
         tmp = f"{_STAGE_ROOT}/tmp_{uuid.uuid4().hex}"
-        for i, b in enumerate(_SPLITS[kind](df, key, *args)):
-            if cols is not None:
-                b = b.select(*cols, *[c for c in b.columns if c == "sign"])
-            f = f"{tmp}/{i + 1:02d}.parquet"
-            _write_single(b, f)
-            os.utime(f, (1_700_000_000 + 100 * i, 1_700_000_000 + 100 * i))
+        try:
+            for i, b in enumerate(_SPLITS[kind](src, *args)):
+                if cols is not None:
+                    b = b.select(*cols, *[c for c in b.columns if c == "sign"])
+                f = f"{tmp}/{i + 1:02d}.parquet"
+                _write_single(b, f)
+                os.utime(f, (1_700_000_000 + 100 * i, 1_700_000_000 + 100 * i))
+        finally:
+            src.release()
         try:
             os.rename(tmp, d)
         except OSError:  # a concurrent call staged the same content first
             shutil.rmtree(tmp, ignore_errors=True)
     for old in glob.glob(f"{slot}_*"):
-        if old != d and "_fold_" not in old:
+        if old != d:
             shutil.rmtree(old, ignore_errors=True)
     return d
+
+
+def replay(spark: SparkSession, sf_dir: str, spec: Batches) -> DataFrame:
+    """``spec`` staged by ``stage_batches`` and replayed as a
+    maxFilesPerTrigger=1 parquet file stream: one micro-batch per staged
+    file, in file-name order.
+
+    The stream's schema is the one staging writes: the table's ``cols``
+    projection (every column when None), plus ``sign int`` for the signed
+    splits, every field nullable as parquet reads it back. It comes from
+    ``plans.tables.load``, whose schema cache is keyed on the table's
+    files, so a warm call runs no Spark job."""
+    d = stage_batches(spark, sf_dir, *spec)
+    table = load(spark, sf_dir, spec.table)
+    fields = [table.schema[c] for c in spec.cols or table.columns]
+    if spec.split[0] in _SIGNED:
+        fields.append(T.StructField("sign", T.IntegerType()))
+    schema = T.StructType([T.StructField(f.name, f.dataType) for f in fields])
+    return (
+        spark.readStream.schema(schema)
+        .format("parquet")
+        .option("maxFilesPerTrigger", "1")
+        .load(d)
+    )

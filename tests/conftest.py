@@ -15,11 +15,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 # guarantee it). tune_session() honors the same knob, so per-query
 # re-tuning keeps it.
 os.environ.setdefault("SPARK_GRAFT_SHUFFLE_PARTITIONS", "8")
-# The engine's 64g driver default lets the one long-lived test JVM grow its
-# heap instead of collecting; on a 16 GB host the kernel OOM-kills it
-# partway through the suite and every later test fails. The full suite
-# passes with a 6g heap.
-os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
 
 from air_traffic_data_pipeline_spark.session import get_spark
 

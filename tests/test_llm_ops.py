@@ -53,6 +53,34 @@ def test_minhash_pairs_are_real_near_dups(spark):
         assert r.jaccard >= 0.2
 
 
+@pytest.mark.parametrize(
+    "query",
+    [llm.minhash_near_dup_pairs, llm.contamination_check, llm.lm_perplexity],
+    ids=["doc_tbl", "contam_sh", "lm_per"],
+)
+def test_persisted_tables_follow_a_lake_rewritten_in_place(spark, tmp_path, query):
+    """The per-lake persisted tables are keyed on the lake's documents
+    files, not its path: after documents.parquet is overwritten in place the
+    query gives what the same lake gives at a fresh path."""
+    import shutil
+
+    from conftest import SF_ORACLE
+
+    def rows(sf_dir):
+        return sorted(map(tuple, query(spark, str(sf_dir)).collect()), key=repr)
+
+    lake, fresh = tmp_path / "lake", tmp_path / "fresh"
+    shutil.copytree(SF, lake)
+    before = rows(lake)
+    shutil.copy(f"{SF_ORACLE}/documents.parquet", lake / "documents.parquet")
+    after = rows(lake)
+    shutil.copytree(lake, fresh)
+    try:
+        assert after == rows(fresh) != before
+    finally:
+        llm.clear_caches()
+
+
 def test_cosine_matches_numpy(spark):
     import numpy as np
 

@@ -269,50 +269,54 @@ def test_foreach_batch_result_survives_a_later_call(spark):
     assert sorted(a.collect()) == sorted(b.collect())
 
 
-def _fold_dirs(stage):
-    import glob
+def _replay_xs(spark, lake):
+    """A one-column lake table {1, 2} replayed as two rank batches, and
+    its stage dir."""
+    from air_traffic_data_pipeline_spark.streaming.staging import (
+        Batches,
+        replay,
+        stage_batches,
+    )
 
-    return glob.glob(f"{stage}_fold_*")
-
-
-def _stage_xs(spark, lake):
-    """A one-column lake table {1, 2} staged as two rank batches."""
-    from air_traffic_data_pipeline_spark.streaming.staging import stage_batches
-
+    spec = Batches("xs", None, ("rank", ("x",), 2))
     schema = T.StructType([T.StructField("x", T.LongType())])
     spark.createDataFrame([(1,), (2,)], schema).coalesce(1).write.parquet(
         str(lake / "xs.parquet")
     )
-    return schema, stage_batches(spark, str(lake), "xs", None, ("rank", ("x",), 2))
+    return replay(spark, str(lake), spec), stage_batches(spark, str(lake), *spec)
 
 
 def test_fold_stream_removes_landing_dir(spark, tmp_path):
     """fold_stream leaves nothing on disk: not after a successful run (the
     checkpointed result still reads), and not after an on_batch that
     raises."""
+    import os
     import shutil
 
     from air_traffic_data_pipeline_spark.streaming.events_stream import fold_stream
+    from air_traffic_data_pipeline_spark.streaming.staging import _STAGE_ROOT
 
-    schema, stage = _stage_xs(spark, tmp_path)
-    out = fold_stream(
-        spark,
-        stage,
-        schema,
-        lambda b, st: st.land("xs", b),
-        lambda st: st.landed("xs"),
-    )
-    assert not _fold_dirs(stage)
+    stream, stage = _replay_xs(spark, tmp_path)
+    roots = []
+
+    def land(b, st):
+        roots.append(st.root)
+        st.land("xs", b)
+
+    out = fold_stream(stream, land, lambda st: st.landed("xs"))
+    assert len(set(roots)) == 1 and not os.path.exists(roots[0])
+    assert not roots[0].startswith(_STAGE_ROOT)  # no stage dir lists it
     assert sorted(r.x for r in out.collect()) == [1, 2]
     assert out.columns == ["x"]  # the `batch` partition column is dropped
 
     def boom(b, st):
-        st.land("xs", b)
+        land(b, st)
         raise ValueError("on_batch failed")
 
     with pytest.raises(Exception, match="on_batch failed"):
-        fold_stream(spark, stage, schema, boom, lambda st: st.landed("xs"))
-    assert not _fold_dirs(stage)
+        fold_stream(stream, boom, lambda st: st.landed("xs"))
+    assert roots[-1] != roots[0] and not os.path.exists(roots[-1])
+    assert sorted(os.listdir(stage)) == ["01.parquet", "02.parquet"]
     shutil.rmtree(stage)
 
 
@@ -324,7 +328,7 @@ def test_fold_stream_batch_plans_run_with_aqe(spark, tmp_path):
 
     from air_traffic_data_pipeline_spark.streaming.events_stream import fold_stream
 
-    schema, stage = _stage_xs(spark, tmp_path)
+    stream, stage = _replay_xs(spark, tmp_path)
     seen = []
 
     def on_batch(b, st):
@@ -334,7 +338,7 @@ def test_fold_stream_batch_plans_run_with_aqe(spark, tmp_path):
         seen.append((b.sparkSession.conf.get("spark.sql.adaptive.enabled"), plan))
         st.land("agg", agg)
 
-    fold_stream(spark, stage, schema, on_batch, lambda st: st.landed("agg"))
+    fold_stream(stream, on_batch, lambda st: st.landed("agg"))
     shutil.rmtree(stage)
     assert len(seen) == 2
     for conf, plan in seen:
@@ -385,7 +389,7 @@ def test_stage_batches_restages_a_lake_rewritten_in_place(spark, tmp_path):
 
     dirs = [stage_batches(spark, str(p), *ORDER_BATCHES) for p in (lake, fresh)]
     slot = dirs[0].rsplit("_", 1)[0]
-    assert [p for p in glob.glob(f"{slot}_*") if "_fold_" not in p] == [dirs[0]]
+    assert glob.glob(f"{slot}_*") == [dirs[0]]
     for d in dirs:
         shutil.rmtree(d)
 
@@ -402,11 +406,13 @@ def test_stage_batches_split_contract(spark, name):
     from conftest import SF_SMOKE
 
     from air_traffic_data_pipeline_spark.plans.tables import load
-    from air_traffic_data_pipeline_spark.streaming.staging import stage_batches
+    from air_traffic_data_pipeline_spark.streaming.staging import replay, stage_batches
 
     spec = _staging_specs()[name]
     d = stage_batches(spark, SF_SMOKE, *spec)
     assert stage_batches(spark, SF_SMOKE, *spec) == d  # unchanged lake: reused
+    # the stream's declared schema is the one staging wrote
+    assert replay(spark, SF_SMOKE, spec).schema == spark.read.parquet(d).schema
     files = sorted(glob.glob(f"{d}/*.parquet"))
     mtimes = [os.stat(f).st_mtime_ns for f in files]
     assert mtimes == sorted(set(mtimes))
@@ -504,20 +510,13 @@ def test_trigger_available_now_drains_and_stops(spark):
 
     from air_traffic_data_pipeline_spark.plans.tables import load
     from air_traffic_data_pipeline_spark.streaming.events_stream import (
-        EVENTS_SCHEMA,
         LATE_BATCHES,
         with_event_time,
     )
-    from air_traffic_data_pipeline_spark.streaming.staging import stage_batches
+    from air_traffic_data_pipeline_spark.streaming.staging import replay
 
     sf = "/root/testdata/sf0.001"
-    d = stage_batches(spark, sf, *LATE_BATCHES)  # 3 staged files -> 3 micro-batches
-    src = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(d)
-    )
+    src = replay(spark, sf, LATE_BATCHES)  # 3 staged files -> 3 micro-batches
     agg = (
         with_event_time(src)
         .groupBy("event_type")
