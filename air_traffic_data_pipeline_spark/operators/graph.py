@@ -44,43 +44,9 @@ def bellman_ford(
 
     ``edges`` must already be directed the way you mean it (symmetrize
     before calling for undirected graphs)."""
-    from .checkpoints import release, tracked_local_checkpoint
-
-    spark = edges.sparkSession
-    # materialize the edge list once — every round joins it, and without
-    # the checkpoint round k would recompute the (possibly expensive) edge
-    # derivation k times (measured 16 s -> ~8 s on the sf0.1 co-purchase
-    # graph, whose edges come from a lineitem self-join).
-    e, _ = tracked_local_checkpoint(
-        edges.select(
-            F.col(src).alias("e_src"),
-            F.col(dst).alias("e_dst"),
-            F.col(weight).alias("e_w"),
-        ),
-    )
-    dist, dist_ids = tracked_local_checkpoint(
-        sources.select(
-            F.col(source_col).alias("source"),
-            F.col(source_col).alias("node"),
-            F.lit(0.0).alias("dist"),
-        ),
-    )
-    for _ in range(rounds):
-        # the frontier is (|sources| x |reached nodes|)-sized — broadcast it
-        # so the (usually much larger) edge table never shuffles; drop the
-        # hint if sources x nodes outgrows executor memory
-        relaxed = (
-            F.broadcast(dist).join(e, dist["node"] == e["e_src"])
-            .select("source", F.col("e_dst").alias("node"), (F.col("dist") + F.col("e_w")).alias("dist"))
-        )
-        new_dist, new_ids = tracked_local_checkpoint(
-            dist.unionByName(relaxed)
-            .groupBy("source", "node")
-            .agg(F.min("dist").alias("dist")),
-        )
-        release(spark, dist_ids)
-        dist, dist_ids = new_dist, new_ids
-    return dist
+    return bellman_ford_snapshots(
+        edges, sources, [rounds], src, dst, weight, source_col
+    )[rounds]
 
 
 def label_propagation(
@@ -316,6 +282,10 @@ def bellman_ford_snapshots(
     if not snapshot_rounds:
         raise ValueError("snapshot_rounds must name at least one round")
     spark = edges.sparkSession
+    # materialize the edge list once — every round joins it, and without
+    # the checkpoint round k would recompute the (possibly expensive) edge
+    # derivation k times (measured 16 s -> ~8 s on the sf0.1 co-purchase
+    # graph, whose edges come from a lineitem self-join).
     e, _ = tracked_local_checkpoint(
         edges.select(
             F.col(src).alias("e_src"),
@@ -335,6 +305,9 @@ def bellman_ford_snapshots(
     if 0 in wanted:
         snaps[0] = dist
     for k in range(1, wanted[-1] + 1):
+        # the frontier is (|sources| x |reached nodes|)-sized — broadcast it
+        # so the (usually much larger) edge table never shuffles; drop the
+        # hint if sources x nodes outgrows executor memory
         relaxed = (
             F.broadcast(dist).join(e, dist["node"] == e["e_src"])
             .select("source", F.col("e_dst").alias("node"), (F.col("dist") + F.col("e_w")).alias("dist"))

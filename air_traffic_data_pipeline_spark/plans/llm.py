@@ -354,6 +354,131 @@ def _band_rows(sig: DataFrame) -> DataFrame:
     )
 
 
+# --- near-duplicate pair builders -------------------------------------------
+# The dedup family builds its pairs through these four: band_pairs (every
+# band-key blocker's candidates), verified_pairs (the shingle-array Jaccard
+# verify), token_overlap (every exact shared-token count) and jaccard6 (the
+# rounded ratio they report).
+
+NEAR_DUP_JACCARD_MIN = 0.2  # minhash verify threshold (batch and streaming)
+
+
+def band_pairs(
+    a: DataFrame, b: DataFrame | None = None, carry: tuple[str, ...] = ()
+) -> DataFrame:
+    """Distinct candidate pairs (doc_a < doc_b) of (doc_id, band, key) rows
+    that share a band key — an equi-join on (band, key), never all-pairs.
+    ``b=None`` pairs ``a`` with itself; otherwise doc_a comes from ``a``
+    and doc_b from ``b``. Each ``carry`` column c of the band rows rides
+    along as c_a / c_b."""
+    return (
+        a.alias("a").join(
+            (a if b is None else b).alias("b"),
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.key") == F.col("b.key"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            *[F.col(f"a.{c}").alias(f"{c}_a") for c in carry],
+            *[F.col(f"b.{c}").alias(f"{c}_b") for c in carry],
+        )
+        .distinct()
+    )
+
+
+def jaccard6(
+    n_common: str | Column = "n_common",
+    n_a: str | Column = "n_a",
+    n_b: str | Column = "n_b",
+) -> Column:
+    """n_common / (n_a + n_b - n_common) in doubles, rounded to 6 dp."""
+    n_common, n_a, n_b = (
+        F.col(c) if isinstance(c, str) else c for c in (n_common, n_a, n_b)
+    )
+    return F.round(
+        n_common.cast("double") / (n_a + n_b - n_common).cast("double"), 6
+    )
+
+
+def verified_pairs(a_tbl: DataFrame, b_tbl: DataFrame, cand: DataFrame) -> DataFrame:
+    """Candidate pairs verified by exact shingle Jaccard >= NEAR_DUP_JACCARD_MIN,
+    from the per-doc ``sh_arr`` arrays of two doc tables (doc_a's from
+    ``a_tbl``, doc_b's from ``b_tbl``): (doc_a, doc_b, n_common, n_a, n_b,
+    jaccard). array_intersect on the joined arrays — no shuffle on the raw
+    shingles and no (doc_a, doc_b) re-aggregation. No broadcast hint on
+    cand: with a high duplicate rate the band-candidate set is
+    corpus-order, so an unconditional broadcast would OOM the executors at
+    100 TB; AQE sees the runtime size and still picks a broadcast join
+    when it is small (verified in the plan test)."""
+    a_side = a_tbl.select(F.col("doc_id").alias("doc_a"), F.col("sh_arr").alias("arr_a"))
+    b_side = b_tbl.select(F.col("doc_id").alias("doc_b"), F.col("sh_arr").alias("arr_b"))
+    n_a, n_b = F.size("arr_a"), F.size("arr_b")
+    return (
+        a_side.join(cand, "doc_a")
+        .join(b_side, "doc_b")
+        .withColumn("n_common", F.size(F.array_intersect("arr_a", "arr_b")).cast("long"))
+        .withColumn("jaccard", jaccard6("n_common", n_a, n_b))
+        .filter(F.col("jaccard") >= NEAR_DUP_JACCARD_MIN)
+        .select("doc_a", "doc_b", "n_common", n_a.alias("n_a"), n_b.alias("n_b"), "jaccard")
+    )
+
+
+def token_overlap(rows: DataFrame, cand: DataFrame | None = None) -> DataFrame:
+    """Exact shared-token counts (doc_a, doc_b, n_common, n_a, n_b) over a
+    distinct (doc_id, token) frame, n_a / n_b being each doc's token
+    count. Without ``cand``: every pair (doc_a < doc_b) sharing a token,
+    by a token-keyed self-join (the bounded-sample exact kernel). With
+    ``cand`` (doc_a, doc_b): only those pairs, joined against the rows of
+    candidate docs alone (semi-join pruning). Either way a pair that
+    shares no token is absent. The per-doc counts read the unpruned rows,
+    so a blocker that already aggregated them (the prefix filter's sizes)
+    shares that aggregate."""
+    tok = rows.columns[1]
+    counts = rows.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    if cand is not None:
+        ids = (
+            cand.select(F.col("doc_a").alias("doc_id"))
+            .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
+            .distinct()
+        )
+        rows = rows.join(ids, "doc_id", "left_semi")
+        common = cand.join(
+            rows.select(F.col("doc_id").alias("doc_a"), tok), "doc_a"
+        ).join(
+            rows.select(F.col("doc_id").alias("_doc_b"), F.col(tok).alias("_tok_b")),
+            (F.col("_doc_b") == F.col("doc_b")) & (F.col("_tok_b") == F.col(tok)),
+        )
+    else:
+        common = (
+            rows.select(F.col("doc_id").alias("doc_a"), tok)
+            .join(rows.select(F.col("doc_id").alias("doc_b"), tok), tok)
+            .filter(F.col("doc_a") < F.col("doc_b"))
+        )
+    return (
+        common.groupBy("doc_a", "doc_b")
+        .agg(F.count(F.lit(1)).alias("n_common"))
+        .join(counts.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a")), "doc_a")
+        .join(counts.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b")), "doc_b")
+        .select("doc_a", "doc_b", "n_common", "n_a", "n_b")
+    )
+
+
+def char5_grams(d: DataFrame) -> DataFrame:
+    """Distinct (doc_id, g) character-5-gram rows of a (doc_id, text) frame
+    (a text shorter than 5 chars is its own single gram)."""
+    return d.select(
+        "doc_id",
+        F.explode(
+            F.transform(
+                F.sequence(F.lit(1), F.greatest(F.length("text") - 4, F.lit(1))),
+                lambda i: F.substring(F.col("text"), i, 5),
+            )
+        ).alias("g"),
+    ).distinct()
+
+
 def minhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full MinHash->LSH->verify near-dup pipeline.
 
@@ -372,46 +497,8 @@ def minhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     never OOMs) or swap for a checkpoint.
     """
     doc_tbl = _minhash_doc_tbl(spark, sf_dir)
-    bands = _band_rows(doc_tbl)
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    # Exact-verify via the per-doc shingle arrays from the same aggregate:
-    # join the candidate list against the doc->array table twice and
-    # array_intersect — no shuffle on the raw shingle strings and no
-    # (doc_a, doc_b) re-aggregation. No broadcast hint on cand: with a high
-    # duplicate rate the band-candidate set is corpus-order, so an
-    # unconditional broadcast would OOM the executors at 100 TB; AQE sees
-    # the runtime size and still picks a broadcast join when it is small
-    # (verified in the plan test).
-    a_side = doc_tbl.select(F.col("doc_id").alias("doc_a"), F.col("sh_arr").alias("arr_a"))
-    b_side = doc_tbl.select(F.col("doc_id").alias("doc_b"), F.col("sh_arr").alias("arr_b"))
-    n_common = F.size(F.array_intersect(F.col("arr_a"), F.col("arr_b"))).cast("long")
-    out = (
-        a_side.join(cand, "doc_a")
-        .join(b_side, "doc_b")
-        .withColumn("n_common", n_common)
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common").cast("double")
-                / (F.size("arr_a") + F.size("arr_b") - F.col("n_common")).cast("double"),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= 0.2)
-        .select("doc_a", "doc_b", "jaccard")
-    )
-    return out
+    cand = band_pairs(_band_rows(doc_tbl))
+    return verified_pairs(doc_tbl, doc_tbl, cand).select("doc_a", "doc_b", "jaccard")
 
 
 _MINHASH_PAIRS_SQL = f"""
@@ -571,9 +658,9 @@ SIMHASH_HAM_MAX = 4
 
 def _simhash_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The simhash CANDIDATE set (doc_a < doc_b, with both packed hashes
-    for downstream hamming verification) — the share-a-16-bit-lane
-    blocking stage alone, shared by the production near-dup path and the
-    blocking-cost eval."""
+    simhash_a / simhash_b for downstream hamming verification) — the
+    share-a-16-bit-lane blocking stage alone, shared by the production
+    near-dup path and the blocking-cost eval."""
     sh = _simhash_lanes(spark, sf_dir)
     bands = sh.select(
         "doc_id",
@@ -589,24 +676,8 @@ def _simhash_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ]
             )
         ).alias("nb"),
-    ).select("doc_id", "simhash", F.col("nb.band").alias("band"), F.col("nb.key").alias("key"))
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
-        )
-        .distinct()
-    )
+    ).select("doc_id", "simhash", "nb.band", "nb.key")
+    return band_pairs(bands, carry=("simhash",))
 
 
 def simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -620,7 +691,7 @@ def simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     popcount(xor) on the packed 64-bit values. The oracle runs the identical
     prefilter+verify, making the approximation value-checked."""
     cand = _simhash_candidate_pairs(spark, sf_dir)
-    ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))).cast("bigint")
+    ham = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))).cast("bigint")
     return (
         cand.withColumn("hamming", ham)
         .filter(F.col("hamming") <= SIMHASH_HAM_MAX)
@@ -760,15 +831,7 @@ def _srp_candidate_pairs(per: DataFrame, stats: DataFrame | None = None) -> Data
     the blocking stage alone, shared by the production near-dup path and
     the blocking-cost eval. ``stats`` threads a prebuilt doc-stats frame
     through to the band derivation (see ``_srp_band_rows``)."""
-    bands = _srp_band_rows(per, stats)
-    a = bands.select(F.col("doc_id").alias("doc_a"), "band", "key")
-    b = bands.select(F.col("doc_id").alias("doc_b"), "band", "key")
-    return (
-        a.join(b, ["band", "key"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
+    return band_pairs(_srp_band_rows(per, stats))
 
 
 def srp_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -940,29 +1003,18 @@ def hamming_key_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.lit(b).alias("band"),
                         F.substring(
                             F.col("k"), b * HAM_BAND_LEN + 1, HAM_BAND_LEN
-                        ).alias("bkey"),
+                        ).alias("key"),
                     )
                     for b in range(HAM_BANDS)
                 ]
             )
         ).alias("nb"),
-    ).select("doc_id", "k", F.col("nb.band").alias("band"), F.col("nb.bkey").alias("bkey"))
-    a = bands.select(
-        F.col("doc_id").alias("doc_a"), F.col("k").alias("ka"), "band", "bkey"
-    )
-    b = bands.select(
-        F.col("doc_id").alias("doc_b"), F.col("k").alias("kb"), "band", "bkey"
-    )
-    cand = (
-        a.join(b, ["band", "bkey"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "ka", "kb")
-        .distinct()
-    )
+    ).select("doc_id", "k", "nb.band", "nb.key")
+    cand = band_pairs(bands, carry=("k",))
     ham = sum(
         (
             F.when(
-                F.substring(F.col("ka"), i, 1) != F.substring(F.col("kb"), i, 1),
+                F.substring(F.col("k_a"), i, 1) != F.substring(F.col("k_b"), i, 1),
                 1,
             ).otherwise(0)
             for i in range(1, HAM_KEY_LEN + 1)
@@ -1029,36 +1081,8 @@ def ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact character-5-gram Jaccard for all pairs in a small id range —
     the exact-verification kernel the LSH pipelines approximate."""
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 40)
-    grams = d.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.greatest(F.length("text") - 4, F.lit(1))),
-                lambda i: F.substring(F.col("text"), i, 5),
-            )
-        ).alias("g"),
-    ).distinct()
-    counts = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = grams.select(F.col("doc_id").alias("doc_a"), "g")
-    b = grams.select(F.col("doc_id").alias("doc_b"), "g")
-    common = (
-        a.join(b, "g")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    return (
-        common.join(counts.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a")), "doc_a")
-        .join(counts.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b")), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.col("n_common").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common")).cast("double"),
-                6,
-            ).alias("jaccard"),
-        )
+    return token_overlap(char5_grams(d)).select(
+        "doc_a", "doc_b", jaccard6().alias("jaccard")
     )
 
 
@@ -1142,54 +1166,14 @@ def sorted_neighborhood_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition (the llm_global_shard_plan discipline). Pairs crossing a
     block boundary differ in their first two normalized chars and are by
     definition not prefix-adjacent — the documented, bounded recall trade
-    every blocking strategy makes. Gram verification explodes 5-grams for
-    CANDIDATE docs only (semi-join pruning), joins gram-keyed, and the
-    jaccard is one divide of exact integer counts."""
+    every blocking strategy makes. Gram verification (token_overlap) joins
+    the 5-grams of CANDIDATE docs only (semi-join pruning), gram-keyed,
+    and the jaccard is one divide of exact integer counts."""
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     cand = _sn_candidate_pairs(spark, sf_dir, docs=d)
-    ids = cand.select(F.col("doc_a").alias("doc_id")).unionByName(
-        cand.select(F.col("doc_b").alias("doc_id"))
-    ).distinct()
-    grams = (
-        d.join(ids, "doc_id", "left_semi")
-        .select(
-            "doc_id",
-            F.explode(
-                F.transform(
-                    F.sequence(
-                        F.lit(1), F.greatest(F.length("text") - 4, F.lit(1))
-                    ),
-                    lambda i: F.substring(F.col("text"), i, 5),
-                )
-            ).alias("g"),
-        )
-        .distinct()
-    )
-    counts = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    common = (
-        cand.join(grams.select(F.col("doc_id").alias("doc_a"), "g"), "doc_a")
-        .join(
-            grams.select(F.col("doc_id").alias("gb_id"), F.col("g").alias("g2")),
-            (F.col("gb_id") == F.col("doc_b")) & (F.col("g2") == F.col("g")),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    jac = F.round(
-        F.col("n_common").cast("double")
-        / (F.col("n_a") + F.col("n_b") - F.col("n_common")).cast("double"),
-        6,
-    )
     return (
-        common.join(
-            counts.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a")),
-            "doc_a",
-        )
-        .join(
-            counts.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b")),
-            "doc_b",
-        )
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
+        token_overlap(char5_grams(d), cand)
+        .select("doc_a", "doc_b", jaccard6().alias("jaccard"))
         .filter(F.col("jaccard") >= SN_JACCARD_MIN)
         .orderBy("doc_a", "doc_b")
     )
@@ -1262,44 +1246,21 @@ def sn_dedup_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") < lim)
         .select("doc_id", "text")
     )
-    grams = d.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.greatest(F.length("text") - 4, F.lit(1))),
-                lambda i: F.substring(F.col("text"), i, 5),
-            )
-        ).alias("g"),
-    ).distinct()
-    counts = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a = grams.select(F.col("doc_id").alias("doc_a"), "g")
-    b = grams.select(F.col("doc_id").alias("doc_b"), "g")
-    common = (
-        a.join(b, "g")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    jac = F.round(
-        F.col("n_common").cast("double")
-        / (F.col("n_a") + F.col("n_b") - F.col("n_common")).cast("double"),
-        6,
-    )
     truth = (
-        common.join(
-            counts.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a")),
-            "doc_a",
-        )
-        .join(
-            counts.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b")),
-            "doc_b",
-        )
-        .filter(jac >= SN_JACCARD_MIN)
+        token_overlap(char5_grams(d))
+        .filter(jaccard6() >= SN_JACCARD_MIN)
         .select("doc_a", "doc_b")
     )
-    pred = sorted_neighborhood_dup(spark, sf_dir).filter(
-        (F.col("doc_a") < lim) & (F.col("doc_b") < lim)
-    ).select("doc_a", "doc_b")
+    return _pr_row(truth, sorted_neighborhood_dup(spark, sf_dir), lim)
+
+
+def _pr_row(truth: DataFrame, pairs: DataFrame, lim: int) -> DataFrame:
+    """One row scoring predicted ``pairs`` (restricted to doc ids < lim)
+    against ``truth``: n_truth, n_pred, n_tp and the NULL-guarded rounded
+    precision and recall."""
+    pred = pairs.filter((F.col("doc_a") < lim) & (F.col("doc_b") < lim)).select(
+        "doc_a", "doc_b"
+    )
     tp = truth.join(pred, ["doc_a", "doc_b"]).select("doc_a")
     stats = (
         truth.agg(F.count(F.lit(1)).cast("bigint").alias("n_truth"))
@@ -1480,37 +1441,17 @@ def prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates before gram counting."""
     sh = _shingle_rows(spark, sf_dir)
     sz = sh.groupBy("doc_id").agg(F.count(F.lit(1)).cast("bigint").alias("sz"))
-    cand = _pf_candidate_pairs(sh, sz)
-    ids = (
-        cand.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
+    scored = token_overlap(sh, _pf_candidate_pairs(sh, sz)).filter(
+        F.lit(PF_T_DEN) * F.col("n_common")
+        >= F.lit(PF_T_NUM) * (F.col("n_a") + F.col("n_b") - F.col("n_common"))
     )
-    csh = sh.join(ids, "doc_id", "left_semi")
-    common = (
-        cand.join(csh.select(F.col("doc_id").alias("doc_a"), "s"), "doc_a")
-        .join(
-            csh.select(F.col("doc_id").alias("pb_id"), F.col("s").alias("s2")),
-            (F.col("pb_id") == F.col("doc_b")) & (F.col("s2") == F.col("s")),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_common"))
-    )
-    out = (
-        common.join(sz.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a")), "doc_a")
-        .join(sz.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b")), "doc_b")
-        .filter(
-            F.lit(PF_T_DEN) * F.col("n_common")
-            >= F.lit(PF_T_NUM) * (F.col("sz_a") + F.col("sz_b") - F.col("n_common"))
-        )
-    )
-    jac = F.round(
-        F.col("n_common").cast("double")
-        / (F.col("sz_a") + F.col("sz_b") - F.col("n_common")).cast("double"),
-        6,
-    )
-    return out.select(
-        "doc_a", "doc_b", "n_common", "sz_a", "sz_b", jac.alias("jaccard")
+    return scored.select(
+        "doc_a",
+        "doc_b",
+        "n_common",
+        F.col("n_a").alias("sz_a"),
+        F.col("n_b").alias("sz_b"),
+        jaccard6().alias("jaccard"),
     ).orderBy("doc_a", "doc_b")
 
 
@@ -1589,7 +1530,7 @@ def blocking_cost_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth quantifies exactly how much metric mismatch costs.
 
     All candidate generators are the PRODUCTION code paths
-    (_band_rows/_pf_candidate_pairs/_sn_candidate_pairs/
+    (band_pairs over _band_rows/_pf_candidate_pairs/_sn_candidate_pairs/
     _simhash_candidate_pairs/_srp_candidate_pairs — not
     re-implementations), so the audit measures what actually ships.
     Verified counts are candidate ∩ truth (the common metric makes
@@ -1611,17 +1552,8 @@ def blocking_cost_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n_docs = sz.agg(F.count(F.lit(1)).cast("bigint").alias("nd"))
     n_truth = truth.agg(F.count(F.lit(1)).cast("bigint").alias("nt"))
-    bands = _band_rows(_minhash_doc_tbl(spark, sf_dir))
-    a = bands.select(F.col("doc_id").alias("doc_a"), "band", "key")
-    b = bands.select(F.col("doc_id").alias("doc_b"), "band", "key")
-    mh_cand = (
-        a.join(b, ["band", "key"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
     strategies = [
-        ("minhash_lsh", mh_cand),
+        ("minhash_lsh", band_pairs(_band_rows(_minhash_doc_tbl(spark, sf_dir)))),
         ("prefix_filter", _pf_candidate_pairs(sh, sz)),
         ("sorted_neighborhood", _sn_candidate_pairs(spark, sf_dir)),
         (
@@ -1845,37 +1777,13 @@ def blocking_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand0, _ = tracked_local_checkpoint(
         _pf_candidate_pairs(sh, sz, t_num=lo_num, t_den=lo_den)
     )
-    ids = (
-        cand0.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(cand0.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    csh = sh.join(ids, "doc_id", "left_semi")
-    scored = (
-        cand0.join(csh.select(F.col("doc_id").alias("doc_a"), "s"), "doc_a")
-        .join(
-            csh.select(F.col("doc_id").alias("pb_id"), F.col("s").alias("s2")),
-            (F.col("pb_id") == F.col("doc_b")) & (F.col("s2") == F.col("s")),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_common"))
-        .join(
-            sz.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a")),
-            "doc_a",
-        )
-        .join(
-            sz.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b")),
-            "doc_b",
-        )
-        .select("doc_a", "doc_b", "n_common", "sz_a", "sz_b")
-    )
-    scored, _ = tracked_local_checkpoint(scored)
+    scored, _ = tracked_local_checkpoint(token_overlap(sh, cand0))
 
     def ok(n: int, d: int):
         # exact-integer J >= n/d on (possibly null) joined score columns;
         # a candidate absent from `scored` shares no shingle -> not true
         return F.lit(d) * F.col("n_common") >= F.lit(n) * (
-            F.col("sz_a") + F.col("sz_b") - F.col("n_common")
+            F.col("n_a") + F.col("n_b") - F.col("n_common")
         )
 
     truth, _ = tracked_local_checkpoint(
@@ -1889,19 +1797,8 @@ def blocking_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     truth = F.broadcast(truth)
-    bands = _band_rows(_minhash_doc_tbl(spark, sf_dir))
-    mh_cand = (
-        bands.select(F.col("doc_id").alias("doc_a"), "band", "key")
-        .join(
-            bands.select(F.col("doc_id").alias("doc_b"), "band", "key"),
-            ["band", "key"],
-        )
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
     fixed = [
-        ("minhash_lsh", mh_cand),
+        ("minhash_lsh", band_pairs(_band_rows(_minhash_doc_tbl(spark, sf_dir)))),
         ("sorted_neighborhood", _sn_candidate_pairs(spark, sf_dir)),
         (
             "simhash",
@@ -6857,47 +6754,16 @@ def minhash_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     directions cost nothing extra — the intersect is already computed.
     """
     doc_tbl = _minhash_doc_tbl(spark, sf_dir)
-    bands = _band_rows(doc_tbl)
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
+    pairs = verified_pairs(doc_tbl, doc_tbl, band_pairs(_band_rows(doc_tbl)))
+    contain = lambda n: F.round(  # noqa: E731
+        F.col("n_common").cast("double") / F.col(n).cast("double"), 6
     )
-    a_side = doc_tbl.select(F.col("doc_id").alias("doc_a"), F.col("sh_arr").alias("arr_a"))
-    b_side = doc_tbl.select(F.col("doc_id").alias("doc_b"), F.col("sh_arr").alias("arr_b"))
-    n_common = F.size(F.array_intersect(F.col("arr_a"), F.col("arr_b"))).cast("long")
-    dbl = lambda c: c.cast("double")  # noqa: E731
-    return (
-        a_side.join(cand, "doc_a")
-        .join(b_side, "doc_b")
-        .withColumn("n_common", n_common)
-        .withColumn(
-            "jaccard",
-            F.round(
-                dbl(F.col("n_common"))
-                / dbl(F.size("arr_a") + F.size("arr_b") - F.col("n_common")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= 0.2)
-        .select(
-            "doc_a",
-            "doc_b",
-            "jaccard",
-            F.round(dbl(F.col("n_common")) / dbl(F.size("arr_a")), 6).alias(
-                "containment_a"
-            ),
-            F.round(dbl(F.col("n_common")) / dbl(F.size("arr_b")), 6).alias(
-                "containment_b"
-            ),
-        )
+    return pairs.select(
+        "doc_a",
+        "doc_b",
+        "jaccard",
+        contain("n_a").alias("containment_a"),
+        contain("n_b").alias("containment_b"),
     )
 
 
@@ -8153,29 +8019,12 @@ def image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array(
                 *[F.substring("phash", s, ln) for s, ln in IMG_PHASH_BANDS]
             )
-        ).alias("band_id", "band_val"),
+        ).alias("band", "key"),
     )
-    a = bands.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("phash").alias("ph_a"),
-        "band_id",
-        "band_val",
-    )
-    b = bands.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("phash").alias("ph_b"),
-        "band_id",
-        "band_val",
-    )
-    cand = (
-        a.join(b, ["band_id", "band_val"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "ph_a", "ph_b")
-        .distinct()
-    )
+    cand = band_pairs(bands, carry=("phash",))
     ham = sum(
         F.when(
-            F.substring("ph_a", i + 1, 1) != F.substring("ph_b", i + 1, 1), 1
+            F.substring("phash_a", i + 1, 1) != F.substring("phash_b", i + 1, 1), 1
         ).otherwise(0)
         for i in range(16)
     ).cast("bigint")
@@ -8233,51 +8082,51 @@ def dedup_pr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline unchanged. Output is one row of exact counts + two rounded
     ratios (NULL-guarded when a side is empty).
     """
-    lim = DEDUP_EVAL_MAX_ID
-    sh = _shingle_rows(spark, sf_dir).filter(F.col("doc_id") < lim)
-    counts = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.select(F.col("doc_id").alias("doc_a"), "s")
-    b = sh.select(F.col("doc_id").alias("doc_b"), "s")
-    common = (
-        a.join(b, "s")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
+    return _pr_row(
+        _dedup_eval_truth(spark, sf_dir),
+        minhash_near_dup_pairs(spark, sf_dir),
+        DEDUP_EVAL_MAX_ID,
     )
-    jac = F.col("n_common").cast("double") / (
-        F.col("n_a") + F.col("n_b") - F.col("n_common")
-    ).cast("double")
-    truth = (
-        common.join(
-            counts.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a")),
-            "doc_a",
-        )
-        .join(
-            counts.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b")),
-            "doc_b",
-        )
-        .filter(F.round(jac, 6) >= 0.2)
+
+
+def _dedup_eval_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact ground truth of the DEDUP_EVAL_MAX_ID evals: every pair of
+    sample docs whose shingle Jaccard rounds to >= NEAR_DUP_JACCARD_MIN."""
+    sh = _shingle_rows(spark, sf_dir).filter(F.col("doc_id") < DEDUP_EVAL_MAX_ID)
+    return (
+        token_overlap(sh)
+        .filter(jaccard6() >= NEAR_DUP_JACCARD_MIN)
         .select("doc_a", "doc_b")
     )
-    pred = minhash_near_dup_pairs(spark, sf_dir).filter(
+
+
+def _dedup_eval_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Contingency cells (c, g, n_cg) of the DEDUP_EVAL_MAX_ID sample:
+    c = component of the banded pipeline's pairs, g = component of the
+    exact truth, n_cg = docs in both; a doc in no pair is its own cluster
+    on that side."""
+    from ..operators.components import connected_components
+
+    lim = DEDUP_EVAL_MAX_ID
+    pred_pairs = minhash_near_dup_pairs(spark, sf_dir).filter(
         (F.col("doc_a") < lim) & (F.col("doc_b") < lim)
     ).select("doc_a", "doc_b")
-    tp = truth.join(pred, ["doc_a", "doc_b"]).select("doc_a")
-    stats = (
-        truth.agg(F.count(F.lit(1)).alias("n_truth"))
-        .crossJoin(pred.agg(F.count(F.lit(1)).alias("n_pred")))
-        .crossJoin(tp.agg(F.count(F.lit(1)).alias("n_tp")))
+    docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < lim).select("doc_id")
+    gold = connected_components(
+        _dedup_eval_truth(spark, sf_dir), src="doc_a", dst="doc_b"
+    ).select(F.col("node").alias("doc_id"), F.col("comp").alias("g"))
+    pred = connected_components(pred_pairs, src="doc_a", dst="doc_b").select(
+        F.col("node").alias("doc_id"), F.col("comp").alias("c")
     )
-    ratio = lambda num, den: F.when(  # noqa: E731
-        F.col(den) > 0,
-        F.round(F.col(num).cast("double") / F.col(den).cast("double"), 6),
-    )
-    return stats.select(
-        "n_truth",
-        "n_pred",
-        "n_tp",
-        ratio("n_tp", "n_pred").alias("precision"),
-        ratio("n_tp", "n_truth").alias("recall"),
+    return (
+        docs.join(pred, "doc_id", "left")
+        .join(gold, "doc_id", "left")
+        .select(
+            F.coalesce(F.col("c"), F.col("doc_id")).alias("c"),
+            F.coalesce(F.col("g"), F.col("doc_id")).alias("g"),
+        )
+        .groupBy("c", "g")
+        .agg(F.count(F.lit(1)).alias("n_cg"))
     )
 
 
@@ -8339,58 +8188,7 @@ def bcubed_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cell table is bounded by the sample; components use the
     O(diameter) label-propagation operator.
     """
-    from ..operators.components import connected_components
-
-    lim = DEDUP_EVAL_MAX_ID
-    sh = _shingle_rows(spark, sf_dir).filter(F.col("doc_id") < lim)
-    counts = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.select(F.col("doc_id").alias("doc_a"), "s")
-    b = sh.select(F.col("doc_id").alias("doc_b"), "s")
-    common = (
-        a.join(b, "s")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    jac = F.col("n_common").cast("double") / (
-        F.col("n_a") + F.col("n_b") - F.col("n_common")
-    ).cast("double")
-    truth = (
-        common.join(
-            counts.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a")),
-            "doc_a",
-        )
-        .join(
-            counts.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b")),
-            "doc_b",
-        )
-        .filter(F.round(jac, 6) >= 0.2)
-        .select("doc_a", "doc_b")
-    )
-    pred_pairs = minhash_near_dup_pairs(spark, sf_dir).filter(
-        (F.col("doc_a") < lim) & (F.col("doc_b") < lim)
-    ).select("doc_a", "doc_b")
-    docs = (
-        load(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < lim)
-        .select("doc_id")
-    )
-    gold = connected_components(truth, src="doc_a", dst="doc_b").select(
-        F.col("node").alias("doc_id"), F.col("comp").alias("g")
-    )
-    pred = connected_components(pred_pairs, src="doc_a", dst="doc_b").select(
-        F.col("node").alias("doc_id"), F.col("comp").alias("c")
-    )
-    assign = (
-        docs.join(pred, "doc_id", "left")
-        .join(gold, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("c"), F.col("doc_id")).alias("c"),
-            F.coalesce(F.col("g"), F.col("doc_id")).alias("g"),
-        )
-    )
-    cells = assign.groupBy("c", "g").agg(F.count(F.lit(1)).alias("n_cg"))
+    cells = _dedup_eval_cells(spark, sf_dir)
     nc = cells.groupBy("c").agg(F.sum("n_cg").alias("n_c"))
     ng = cells.groupBy("g").agg(F.sum("n_cg").alias("n_g"))
     terms = cells.join(nc, "c").join(ng, "g").select(
@@ -8403,7 +8201,7 @@ def bcubed_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.sum("r_mu"), F.lit(0)).cast("bigint").alias("r_micro"),
         F.coalesce(F.sum("n_cg"), F.lit(0)).cast("bigint").alias("n_docs"),
     )
-    sizes = assign.agg(
+    sizes = cells.agg(
         F.countDistinct("c").cast("bigint").alias("n_pred_clusters"),
         F.countDistinct("g").cast("bigint").alias("n_gold_clusters"),
     )
@@ -8517,57 +8315,7 @@ def cluster_agreement_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: shares the bounded-sample components with bcubed_eval;
     everything past the cell table is alphabet-sized arithmetic.
     """
-    from ..operators.components import connected_components
-
-    lim = DEDUP_EVAL_MAX_ID
-    sh = _shingle_rows(spark, sf_dir).filter(F.col("doc_id") < lim)
-    counts = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.select(F.col("doc_id").alias("doc_a"), "s")
-    b = sh.select(F.col("doc_id").alias("doc_b"), "s")
-    common = (
-        a.join(b, "s")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    jac = F.col("n_common").cast("double") / (
-        F.col("n_a") + F.col("n_b") - F.col("n_common")
-    ).cast("double")
-    truth = (
-        common.join(
-            counts.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a")),
-            "doc_a",
-        )
-        .join(
-            counts.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b")),
-            "doc_b",
-        )
-        .filter(F.round(jac, 6) >= 0.2)
-        .select("doc_a", "doc_b")
-    )
-    pred_pairs = minhash_near_dup_pairs(spark, sf_dir).filter(
-        (F.col("doc_a") < lim) & (F.col("doc_b") < lim)
-    ).select("doc_a", "doc_b")
-    docs = (
-        load(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < lim)
-        .select("doc_id")
-    )
-    gold = connected_components(truth, src="doc_a", dst="doc_b").select(
-        F.col("node").alias("doc_id"), F.col("comp").alias("g")
-    )
-    pred = connected_components(pred_pairs, src="doc_a", dst="doc_b").select(
-        F.col("node").alias("doc_id"), F.col("comp").alias("c")
-    )
-    assign = (
-        docs.join(pred, "doc_id", "left")
-        .join(gold, "doc_id", "left")
-        .select(
-            F.coalesce(F.col("c"), F.col("doc_id")).alias("c"),
-            F.coalesce(F.col("g"), F.col("doc_id")).alias("g"),
-        )
-    )
-    cells = assign.groupBy("c", "g").agg(F.count(F.lit(1)).alias("n_cg"))
+    cells = _dedup_eval_cells(spark, sf_dir)
     # choose-2 sums: all exact BIGINT (integer div — n(n-1) is even)
     ch2 = lambda col: F.expr(f"({col} * ({col} - 1)) div 2")  # noqa: E731
     cell_s = cells.agg(
@@ -9706,29 +9454,14 @@ def audio_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array(
                 *[F.substring("envelope", st, ln) for st, ln in AUDIO_ENV_BANDS]
             )
-        ).alias("band_id", "band_val"),
+        ).alias("band", "key"),
     )
-    a = bands.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("envelope").alias("env_a"),
-        "band_id",
-        "band_val",
-    )
-    b = bands.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("envelope").alias("env_b"),
-        "band_id",
-        "band_val",
-    )
-    cand = (
-        a.join(b, ["band_id", "band_val"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "env_a", "env_b")
-        .distinct()
-    )
+    cand = band_pairs(bands, carry=("envelope",))
     ham = sum(
         F.when(
-            F.substring("env_a", i + 1, 1) != F.substring("env_b", i + 1, 1), 1
+            F.substring("envelope_a", i + 1, 1)
+            != F.substring("envelope_b", i + 1, 1),
+            1,
         ).otherwise(0)
         for i in range(8)
     ).cast("bigint")

@@ -32,82 +32,6 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 # them automatically (self-pruning: no hand-editing after the driver
 # re-records them).
 _FORCE_RECHECK: dict[str, int] = {
-    "llm_simhash": 3,  # r3: 16-bit simhash -> 64-bit, banded 4x16
-    "llm_simhash_near_dup": 3,  # r3: same rework
-    "llm_ann_ivf_topk": 3,  # r3: deterministic centroids + new value oracle
-    "llm_multimodal_decode": 3,  # r3: real WAV/BMP byte-format parse
-    "llm_multimodal_meta": 3,  # r3: payloads regenerated in real byte formats
-    "llm_multimodal_frames": 3,  # r3: same payload change
-    # r4: minhash lanes moved from two salted md5s to one sha256 digest
-    # (every signature value changes) — all lane consumers re-enter
-    "llm_minhash_signatures": 4,
-    "llm_minhash_near_dup_pairs": 4,
-    "llm_near_dup_survivors": 4,
-    "llm_dedup_clusters": 4,
-    "llm_cluster_survivors": 4,
-    "llm_curation_pipeline": 4,
-    "llm_minhash_jaccard_est": 4,
-    "llm_minhash_band_stats": 4,
-    "llm_lsh_sensitivity": 4,
-    "stream_incremental_near_dup": 4,
-    # r4: bounded-population subcell split changes the kill set
-    # r6: cell-assignment extracted to _semdedup_cell_rows (plan-identical
-    # refactor, bitwise-verified locally — re-entered on principle)
-    "llm_semdedup_cells": 6,
-    # r7: ADVICE fixes change values/plans — hash-gate delimiter, overflow
-    # clamp, banded final skyline pass (the r7 repeated-spans island-merge
-    # entries were superseded by the r8 ones below)
-    "llm_lang_temperature_sample": 7,
-    "llm_length_bucketing": 7,
-    "rel_skyline_frontier": 7,
-    # r7: scoring/top-k extracted to bm25_rank_from for the streaming
-    # incremental index (plan-identical refactor, bitwise-verified locally
-    # — re-entered on principle)
-    "llm_bm25_topk": 7,
-    # r8: winnow helpers parameterized by (k, gap) for the K-sensitivity
-    # sweep — defaults reproduce the canonical pipeline bitwise (verified
-    # via oracle_check on every consumer); re-entered on principle
-    "llm_winnow_fingerprints": 8,
-    "llm_repeated_spans": 8,
-    "llm_span_scrub_apply": 8,
-    "stream_incremental_repeated_spans": 8,
-    # r8: scoring kernels extracted for the new streaming mirrors
-    # (rfm_from_per_customer / token_budget_from_per_source) — bitwise
-    # verified via oracle_check; re-entered on principle
-    "rel_rfm_segments": 8,
-    "llm_token_budget_plan": 8,
-    "llm_gopher_rules": 8,
-    "llm_readability_score": 8,
-    # r8 (late): lm_token_logprob's pairs/scoring split into shared kernels
-    # for the composed-pipeline streaming mirror (plan-identical refactor,
-    # bitwise-verified via oracle_check) — downstream consumers whose own
-    # source did not change re-enter on principle
-    "llm_lm_ppl_filter": 8,
-    "llm_filter_agreement": 8,
-    # r12: _pf_candidate_pairs gained t_num/t_den threshold params for the
-    # blocking threshold sweep (defaults preserve behavior exactly; both
-    # consumers re-verified bitwise via oracle_check) — re-enter on principle
-    "llm_prefix_filter_join": 12,
-    "llm_blocking_cost_eval": 12,
-    # r12: theil-sen exact audit branch moved from the percentile UDAF to
-    # distributed selection (_exact_median_by_selection) — same multiset
-    # median, both consumers re-verified bitwise via oracle_check
-    "rel_theil_sen_sampled": 12,
-    "stream_incremental_theil_sen_sampled": 12,
-    # r12: _priority_sample_sql / _markov_sql gained a `where` param for
-    # the retraction mirrors' survivor oracles (defaults preserve behavior
-    # exactly; consumers re-verified bitwise) — re-enter on principle
-    "llm_priority_sample": 12,
-    "stream_incremental_priority_sample": 12,
-    "rel_markov_stationary": 12,
-    "stream_incremental_markov": 12,
-    # r12 (late): compact_signed_state hardened to the exclude-current /
-    # tmp+_SUCCESS-recovery protocol (replay of a compaction epoch no
-    # longer loses the fold) — all four consumers re-verified bitwise
-    "stream_incremental_quantile_retract": 12,
-    "stream_incremental_rfm_retract": 12,
-    "stream_incremental_seasonal_retract": 12,
-    "stream_incremental_shortest_path_retract": 12,
     # r15: gen_grid rows in Weyl order, one-select radius join (same cells, same dist_m bits)
     "noise_grid_flagship": 15,
     "noise_grid_bounds": 15,
@@ -118,6 +42,13 @@ _FORCE_RECHECK: dict[str, int] = {
     # r15: pretrain_release_accounting reads the survivor set once (same counts and sums)
     "llm_pretrain_pipeline_v2": 15,
     "stream_incremental_pipeline_v2": 15,
+    # r15: near-dup pair builders (band_pairs / token_overlap) — own source
+    # unchanged; srp's band join is now alias-style (same operator tree),
+    # exact_dup_clusters reads prefix_filter_join through a checkpoint
+    "llm_srp_near_dup": 15,
+    "llm_exact_dup_clusters": 15,
+    # r15: bellman_ford is bellman_ford_snapshots(..., [rounds])[rounds]
+    "rel_shortest_path": 15,
 }
 
 
@@ -125,7 +56,7 @@ def _query_src_hash(fn: object) -> str | None:
     """md5 of the query function's source text — the change signal behind
     the git-aware recheck. Direct source only: a helper edited in another
     function does NOT bump consumers' hashes (cover those with
-    _FORCE_RECHECK, as the r7 island-merge entry does)."""
+    _FORCE_RECHECK; ``tools/plan_fingerprints.py --diff`` lists them)."""
     import hashlib
     import inspect
 

@@ -24,9 +24,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .events_stream import Landing, fold_stream
 from .staging import Batches, replay
 
-JACCARD_MIN = 0.2  # same verify threshold as plans.llm.minhash_near_dup_pairs
-
-
 # three doc_id terciles in id order: every a<b pair lands in b's batch
 DOC_BATCHES = Batches("documents", None, ("rank", ("doc_id",), 3))
 
@@ -34,7 +31,7 @@ DOC_BATCHES = Batches("documents", None, ("rank", ("doc_id",), 3))
 def incremental_near_dup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Survivors after streaming incremental near-dup dedup — bitwise equal
     to the one-shot ``near_dup_survivors`` (its SQL is the oracle)."""
-    from ..plans.llm import _band_rows, doc_tbl_from
+    from ..plans.llm import _band_rows, band_pairs, doc_tbl_from, verified_pairs
     from ..plans.tables import load
 
     def on_batch(batch_df: DataFrame, st: Landing) -> None:
@@ -48,39 +45,8 @@ def incremental_near_dup_survivors(spark: SparkSession, sf_dir: str) -> DataFram
         all_tbl = st.landed("doc_tbl")
         # candidates: any band shared between an incoming doc (b side) and
         # any earlier-id doc already present (corpus or same batch)
-        a = _band_rows(all_tbl).alias("a")
-        b = _band_rows(batch_tbl).alias("b")
-        cand = (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.key") == F.col("b.key"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-            .distinct()
-        )
-        a_side = all_tbl.select(F.col("doc_id").alias("doc_a"), F.col("sh_arr").alias("arr_a"))
-        b_side = batch_tbl.select(F.col("doc_id").alias("doc_b"), F.col("sh_arr").alias("arr_b"))
-        n_common = F.size(F.array_intersect(F.col("arr_a"), F.col("arr_b"))).cast("long")
-        kills = (
-            a_side.join(cand, "doc_a")
-            .join(b_side, "doc_b")
-            .withColumn("n_common", n_common)
-            .withColumn(
-                "jaccard",
-                F.round(
-                    F.col("n_common").cast("double")
-                    / (
-                        F.size("arr_a") + F.size("arr_b") - F.col("n_common")
-                    ).cast("double"),
-                    6,
-                ),
-            )
-            .filter(F.col("jaccard") >= JACCARD_MIN)
-            .select("doc_b")
-            .distinct()
-        )
+        cand = band_pairs(_band_rows(all_tbl), _band_rows(batch_tbl))
+        kills = verified_pairs(all_tbl, batch_tbl, cand).select("doc_b").distinct()
         st.land("kills", kills)
 
     def finish(st: Landing) -> DataFrame:
@@ -888,6 +854,7 @@ def incremental_srp_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         SRP_COS_MIN,
         _srp_band_rows,
         _srp_bucket_counts,
+        band_pairs,
     )
 
     def on_batch(batch_df: DataFrame, st: Landing) -> None:
@@ -896,16 +863,7 @@ def incremental_srp_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         bands_b = st.current("bands")
         bands_all = st.landed("bands")
         per_all = st.landed("per")
-        cand = (
-            bands_all.select(F.col("doc_id").alias("doc_a"), "band", "key")
-            .join(
-                bands_b.select(F.col("doc_id").alias("doc_b"), "band", "key"),
-                ["band", "key"],
-            )
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_a", "doc_b")
-            .distinct()
-        )
+        cand = band_pairs(bands_all, bands_b)
         ssq = per_all.groupBy("doc_id").agg(
             F.sum(F.col("c") * F.col("c")).cast("bigint").alias("ssq")
         )
@@ -1343,9 +1301,9 @@ def incremental_near_dup_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     already dead are dropped (never-ingest path); the batch's doc table
     lands; candidates join the batch against ALL landed signatures MINUS
     the dead (a deleted doc stops killing future arrivals immediately);
-    verified J >= JACCARD_MIN pairs land as edges. Emission: survivors =
-    (documents − dead) anti-join {doc_b of edges whose doc_a is not
-    dead}. The resurrection pytest pins a real victim whose only killer
+    verified J >= NEAR_DUP_JACCARD_MIN pairs land as edges. Emission:
+    survivors = (documents − dead) anti-join {doc_b of edges whose doc_a
+    is not dead}. The resurrection pytest pins a real victim whose only killer
     is deleted.
 
     At 100 TB: dead set is deletion-contract-sized; dead docs' signature
@@ -1354,7 +1312,7 @@ def incremental_near_dup_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     → drop, the signed compactor's crash discipline), so state is
     surviving-rows-sized; everything else is the insert-only mirror's
     banded state."""
-    from ..plans.llm import _band_rows, doc_tbl_from
+    from ..plans.llm import _band_rows, band_pairs, doc_tbl_from, verified_pairs
     from ..plans.tables import load
 
     def on_batch(batch_df: DataFrame, st: Landing) -> None:
@@ -1376,45 +1334,8 @@ def incremental_near_dup_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
         st.land("doc_tbl", doc_tbl_from(ins))
         batch_tbl = st.current("doc_tbl")
         all_tbl = st.landed("doc_tbl").join(dead, "doc_id", "left_anti")
-        a = _band_rows(all_tbl).alias("a")
-        b = _band_rows(batch_tbl).alias("b")
-        cand = (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.key") == F.col("b.key"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-            )
-            .distinct()
-        )
-        a_side = all_tbl.select(
-            F.col("doc_id").alias("doc_a"), F.col("sh_arr").alias("arr_a")
-        )
-        b_side = batch_tbl.select(
-            F.col("doc_id").alias("doc_b"), F.col("sh_arr").alias("arr_b")
-        )
-        n_common = F.size(F.array_intersect("arr_a", "arr_b")).cast("long")
-        edges = (
-            a_side.join(cand, "doc_a")
-            .join(b_side, "doc_b")
-            .withColumn("n_common", n_common)
-            .withColumn(
-                "jaccard",
-                F.round(
-                    F.col("n_common").cast("double")
-                    / (
-                        F.size("arr_a") + F.size("arr_b") - F.col("n_common")
-                    ).cast("double"),
-                    6,
-                ),
-            )
-            .filter(F.col("jaccard") >= JACCARD_MIN)
-            .select("doc_a", "doc_b")
-        )
+        cand = band_pairs(_band_rows(all_tbl), _band_rows(batch_tbl))
+        edges = verified_pairs(all_tbl, batch_tbl, cand).select("doc_a", "doc_b")
         st.land("edges", edges)
         if st.epoch % ND_COMPACT_EVERY == 1:
             compact_dead_state(spark, st.path("doc_tbl"), dead, st.epoch)

@@ -5,6 +5,7 @@ from __future__ import annotations
 import math
 
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from air_traffic_data_pipeline_spark.functions.vectors import cosine, to_double
@@ -51,6 +52,75 @@ def test_minhash_pairs_are_real_near_dups(spark):
     assert len(pairs) > 0, "synthetic corpus contains near-dups; none found"
     for r in pairs:
         assert r.jaccard >= 0.2
+
+
+_tokens = st.frozensets(st.sampled_from("abcdef"), min_size=1, max_size=5)
+
+
+@settings(max_examples=5, deadline=None)
+@given(
+    docs=st.dictionaries(st.integers(0, 9), _tokens, min_size=1, max_size=6),
+    picks=st.lists(st.tuples(st.integers(0, 9), st.integers(0, 9)), max_size=8),
+)
+def test_token_overlap_matches_set_arithmetic(spark, docs, picks):
+    """token_overlap, all-pairs and candidate mode, equals Python set
+    intersection/union on random small docs; jaccard6 is the rounded
+    |A ∩ B| / |A ∪ B|. A pair that shares no token is absent."""
+    rows = spark.createDataFrame(
+        [(d, t) for d, toks in docs.items() for t in toks], "doc_id long, s string"
+    )
+
+    def want(pairs):
+        return {
+            (a, b): (len(docs[a] & docs[b]), len(docs[a]), len(docs[b]),
+                     _r6(len(docs[a] & docs[b]) / len(docs[a] | docs[b])))
+            for a, b in pairs
+            if docs[a] & docs[b]
+        }
+
+    def got(df):
+        return {
+            (r.doc_a, r.doc_b): (r.n_common, r.n_a, r.n_b, r.j)
+            for r in df.select("*", llm.jaccard6().alias("j")).collect()
+        }
+
+    ids = sorted(docs)
+    assert got(llm.token_overlap(rows)) == want(
+        [(a, b) for a in ids for b in ids if a < b]
+    )
+    cand = sorted({(min(p), max(p)) for p in picks if p[0] != p[1] and set(p) <= set(ids)})
+    cand_df = spark.createDataFrame(cand, "doc_a long, doc_b long")
+    assert got(llm.token_overlap(rows, cand_df)) == want(cand)
+
+
+_band_row = st.tuples(st.integers(0, 8), st.integers(0, 2), st.sampled_from("xyz"))
+
+
+@settings(max_examples=5, deadline=None)
+@given(
+    left=st.lists(_band_row, max_size=12),
+    right=st.lists(_band_row, max_size=12),
+)
+def test_band_pairs_matches_brute_force(spark, left, right):
+    """band_pairs equals a brute-force scan for pairs (doc_a < doc_b) that
+    share a (band, key): self-join and two-sided, each pair once, carried
+    columns taken from the doc_a / doc_b row."""
+    schema = "doc_id long, band int, key string, c long"
+
+    def frame(rows):
+        return spark.createDataFrame([(d, b, k, 10 * d) for d, b, k in rows], schema)
+
+    def want(xs, ys):
+        return {
+            (a, b) for a, ba, ka in xs for b, bb, kb in ys
+            if a < b and (ba, ka) == (bb, kb)
+        }
+
+    self_pairs = [(r.doc_a, r.doc_b) for r in llm.band_pairs(frame(left)).collect()]
+    assert sorted(self_pairs) == sorted(want(left, left))
+    two = llm.band_pairs(frame(left), frame(right), carry=("c",)).collect()
+    assert sorted((r.doc_a, r.doc_b) for r in two) == sorted(want(left, right))
+    assert all((r.c_a, r.c_b) == (10 * r.doc_a, 10 * r.doc_b) for r in two)
 
 
 @pytest.mark.parametrize(
@@ -379,29 +449,7 @@ def test_simhash_banding_prunes_candidates(spark):
     sh = llm._simhash_lanes(spark, SF)
     n_docs = sh.count()
     all_pairs = n_docs * (n_docs - 1) // 2
-    bands = sh.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), F.col(f"sh{b}").alias("key"))
-                    for b in range(llm.SIMHASH_LANES)
-                ]
-            )
-        ).alias("nb"),
-    ).select("doc_id", F.col("nb.band").alias("band"), F.col("nb.key").alias("key"))
-    a, b = bands.alias("a"), bands.alias("b")
-    n_cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select("a.doc_id", "b.doc_id")
-        .distinct()
-        .count()
-    )
+    n_cand = llm._simhash_candidate_pairs(spark, SF).count()
     # sf0.001: ~6% of pairs are near-dups by construction; require the
     # banding to prune well below the all-pairs quadratic blowup.
     assert n_cand < 0.25 * all_pairs, (n_cand, all_pairs)
